@@ -7,32 +7,48 @@ instead:
 
 1. **Plans** leaf extraction from the DataFrame schema: leaves sharing
    the same repetition context (chain of array/map explosions) are
-   grouped so each context costs exactly ONE Spark job.
-2. Runs **one wide aggregation per context** computing, for every leaf
-   at once: counts, null/empty counts, min/max, (approximate)
-   quartiles, distinct cardinality, and the failure count of every
-   candidate string conversion (bool word-pairs, int bases o/d/x,
-   float, datetime formats) — a single pass, fully JVM-side,
-   whole-stage-codegen'd, with map-side partial aggregation and no
-   shuffle of row data (only the scalar agg state).
-3. Classifies each leaf **driver-side from the aggregates** (KB-sized)
+   grouped so each context is profiled by one set of jobs.
+2. Runs **phase A**, a wide aggregation per context computing, for
+   every leaf at once: counts, null/empty counts, min/max, string
+   length ranges, quartiles (mergeable KLL sketches,
+   ``kll_sketch_agg_double``) and distinct cardinality (DataSketches
+   HLL, ``hll_sketch_agg``) — fully JVM-side, map-side partial
+   aggregation, no shuffle of row data (only the scalar agg state).
+3. Builds per context ONE frequency-compressed ``(leaf, value,
+   count)`` relation — structa's native column multiset,
+   ``groupBy(leaf, value).count()`` — over the leaves whose phase-A
+   HLL estimate says their values repeat (in exact mode also every
+   string leaf). It is persisted once, and its consumers read each
+   DISTINCT value once instead of once per occurrence:
+
+   * phase B: the failure count of every candidate string conversion
+     (bool word pairs, int bases o/d/x, float, datetime formats);
+   * top-k / bottom-k frequency samples;
+   * per-position character sets of fixed-width strings, feeding the
+     CharClass induction in :mod:`structa_spark.chars`;
+   * exact-mode lexicographic string quartiles.
+
+   Near-unique leaves stream phase B and the char-set job over the
+   input instead. So does every leaf of a context whose relation
+   holds fewer than ``_SHARED_RELATION_MIN`` values: on a small input
+   a job wave of its own costs more than it saves, so the relation is
+   not persisted and only top-k and the quartiles read it.
+4. Classifies each leaf **driver-side from the aggregates** (KB-sized)
    using the reference's threshold semantics: ``bad_threshold`` over
    occurrences, ``empty_threshold`` for blank strings,
    ``null_threshold`` for nulls, the numeric tower Bool < Int < Float,
    the numeric-timestamp heuristic over min/max, and the
    record-vs-table ``field_threshold`` duality.
-4. Optionally runs one extra *small* job per context for top-k
-   frequency samples (unpivot -> groupBy -> windowed top-k: ONE
-   shuffle for all leaves together) and one for per-position character
-   classes of fixed-width strings (unpivot -> posexplode -> ONE
-   shuffle), feeding the CharClass induction in
-   :mod:`structa_spark.chars`.
 
-At 100 TB none of this materializes data on the driver: every job
-reduces to per-leaf scalars, quartiles use mergeable GK sketches
-(``percentile_approx``), distincts use HLL++
-(``approx_count_distinct``), and pattern induction can be run on a
-``df.sample`` (``pattern_sample``) without changing semantics.
+Per context that is at most three waves of Spark jobs — phase A, the
+relation, its consumers — all submitted to one worker pool, so the
+contexts overlap. None of this materializes data on the driver: every
+job reduces to per-leaf scalars, and pattern induction on the
+streaming path can run on a ``df.sample`` (``pattern_sample``). The
+relation is persisted on the executors with one row per distinct
+value of its leaves; the HLL gate admits a leaf with under 90%
+distinct values, so a leaf just under the gate puts nearly all of its
+occurrences into the relation's shuffle.
 """
 
 from __future__ import annotations
@@ -44,6 +60,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from . import conversions
 from .chars import induce_pattern
@@ -85,16 +102,20 @@ class AnalyzerConfig:
     # error, ~3 KB serialized). 0 disables carrying sketches (and
     # hands quartiles to percentile_approx/quantile_accuracy above).
     kll_k: int = 200
-    # HLL++ relative standard deviation for approx_count_distinct in
-    # sketch mode. Tight (0.5%) because the uniqueness flag is derived
-    # from it: a loose default-rsd (5%) sketch can't distinguish
-    # "unique" from "2% duplicated" at all. ~32 KB of registers per
-    # column sketch — still negligible against executor memory.
+    # target relative standard error of the DataSketches HLL distinct
+    # estimate in sketch mode (sets its lgK, see _hll_lg_k). Tight
+    # (0.5%) because the uniqueness flag is derived from it: a loose
+    # default-rsd (5%) sketch can't distinguish "unique" from "2%
+    # duplicated" at all. ~32 KB of registers per column sketch —
+    # still negligible against executor memory.
     distinct_rsd: float = 0.005
     top_k: int = 3                  # frequency sample size
     collect_samples: bool = True    # run the top-k frequency job
     induce_patterns: bool = True    # run the char-pattern job
-    pattern_sample: Optional[float] = None  # sample fraction at scale
+    # sample fraction for the streaming char-set job at scale; leaves
+    # in the value-count relation read each distinct value once and
+    # need no sample
+    pattern_sample: Optional[float] = None
     # numeric-timestamp heuristic window (reference analyzer.py:742-770)
     # plan wide homogeneous structs (> field_threshold fields, one
     # common type) as ONE unpivoted (key, value) context instead of
@@ -102,14 +123,6 @@ class AnalyzerConfig:
     # record-vs-table decision then happens at assembly time via
     # _maybe_table — same result, unboundedly many jobs on wide docs)
     unpivot_tables: bool = True
-    # the analyzer makes several passes over the input; when the
-    # input is a SMALL local file set (single-row-group parquet
-    # caps scan parallelism at one task per file), repartition to the
-    # cluster's parallelism and cache before analyzing. The byte gate
-    # makes this self-disabling at scale: a 100 TB table streams,
-    # a 10 MB file decodes once instead of once per job.
-    cache_small_input: bool = True
-    cache_input_max_bytes: int = 1 << 30
     epoch: str = "unix"             # unix | excel | custom
     epoch_base: Optional[_dt.datetime] = None   # base for epoch='custom'
     scale: float = 1.0              # units -> seconds multiplier
@@ -407,16 +420,18 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
     return exprs
 
 
-def _candidate_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig,
-                         lmin: int, lmax: int) -> List[Column]:
+def _candidate_agg_exprs(key: str, c: Column, weight: Column, row: Dict,
+                         cfg: AnalyzerConfig) -> List[Column]:
     """Phase-B aggregation: conversion-candidate failure counts for one
-    length-eligible string leaf (reference only attempts conversions
-    when max length <= 30, structa/analyzer.py:642-669). Candidates
-    whose length range cannot overlap the column's are skipped entirely
-    — a long-text column costs zero regex evaluations, and e.g. a
-    1-char flag column never attempts any datetime parse."""
-    c = F.expr(leaf.expr)
-    k = leaf.key
+    length-eligible string leaf ``key`` whose values are ``c``, each
+    value weighing ``weight`` occurrences (reference only attempts
+    conversions when max length <= 30, structa/analyzer.py:642-669).
+    Candidates whose length range cannot overlap the column's phase-A
+    ``lmin``/``lmax`` are skipped entirely — a long-text column costs
+    zero regex evaluations, and e.g. a 1-char flag column never
+    attempts any datetime parse."""
+    lmin = row.get(f"{key}__lmin") or 0
+    lmax = row.get(f"{key}__lmax")
     nonblank = c.isNotNull() & (c != "")
     exprs: List[Column] = []
     numeric_alive = False
@@ -424,15 +439,15 @@ def _candidate_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig,
         if not cand.possible(lmin, lmax):
             continue
         exprs.append(
-            F.sum(F.when(nonblank & ~cand.ok(c), 1).otherwise(0))
-            .alias(f"{k}__fail__{cand.name}"))
+            F.sum(F.when(nonblank & ~cand.ok(c), weight).otherwise(0))
+            .alias(f"{key}__fail__{cand.name}"))
         if cand.kind in ("int", "float"):
             numeric_alive = True
     if numeric_alive:
         # numeric min/max for str-of-number stats + timestamp heuristic
         dnum = F.when(nonblank, c.try_cast("double"))
-        exprs += [F.min(dnum).alias(f"{k}__nmin"),
-                  F.max(dnum).alias(f"{k}__nmax")]
+        exprs += [F.min(dnum).alias(f"{key}__nmin"),
+                  F.max(dnum).alias(f"{key}__nmax")]
     return exprs
 
 
@@ -625,94 +640,87 @@ def _maybe_numeric_timestamp(node: Node, cfg: AnalyzerConfig) -> Node:
 # auxiliary jobs: top-k samples and pattern induction
 # ---------------------------------------------------------------------------
 
-def _counted_values(ctx: _Context, keys: Dict[str, _Leaf]) -> DataFrame:
-    """The shared frequency relation: one row per DISTINCT (leaf,
-    value) across the given leaves — built once per context so top-k
-    sampling and exact-mode string quartiles don't each rescan the
-    input (they consume disjoint projections of the same counts)."""
+def _unpivot(df: DataFrame, keys: Dict[str, _Leaf]) -> DataFrame:
+    """``(k, v)`` rows: one per non-null occurrence of each given leaf,
+    the value rendered as a string."""
     pairs = [
         F.struct(F.lit(key).alias("k"),
                  F.expr(leaf.expr).cast("string").alias("v"))
         for key, leaf in keys.items()
     ]
-    unp = (ctx.df.select(F.explode(F.array(*pairs)).alias("p"))
-           .select("p.k", "p.v").where(F.col("v").isNotNull()))
-    return unp.groupBy("k", "v").agg(F.count("*").alias("n"))
+    return (df.select(F.explode(F.array(*pairs)).alias("p"))
+            .select("p.k", "p.v").where(F.col("v").isNotNull()))
 
 
-def _collect_topk(ctx: _Context, string_keys: Dict[str, _Leaf],
-                  cfg: AnalyzerConfig,
-                  counted: Optional[DataFrame] = None
-                  ) -> Tuple[Dict[str, List[Tuple[str, int]]],
-                             Dict[str, List[Tuple[str, int]]]]:
-    """ONE job for all leaves of a context: unpivot to (name, value),
-    group, windowed top-k AND bottom-k by count (the reference's
-    sample display shows the 3 most and 3 least frequent values,
-    types.py:142-163 — both ranks come out of the same shuffle).
-    Scale note: the shuffle key is (leaf, value) — the same
-    cardinality structa's per-column Counter would see, but
-    distributed and combiner-compressed map-side."""
-    if not string_keys or not cfg.collect_samples:
-        return {}, {}
+def _counted_values(ctx: _Context, keys: Dict[str, _Leaf]) -> DataFrame:
+    """The frequency relation ``(k, v, n)``: one row per DISTINCT
+    (leaf, value) across the given leaves, ``n`` its occurrence count
+    (structa's frequency-compressed column, PAPER.md §1.1). Every
+    consumer below reads a projection of it."""
+    return _unpivot(ctx.df, keys).groupBy("k", "v").agg(
+        F.count("*").alias("n"))
+
+
+def _topk_query(counted: DataFrame, keys: Dict[str, _Leaf],
+                cfg: AnalyzerConfig) -> DataFrame:
+    """Top-k AND bottom-k values by count of every leaf in ``keys``
+    (the reference's sample display shows the 3 most and 3 least
+    frequent values, types.py:142-163) as ``(side, k, v, n)`` rows.
+    Each side is its own single-window ``row_number() <= top_k``
+    query: a lone rank filter lets Spark plan a partial
+    WindowGroupLimit below the exchange, so each map task ships at
+    most ``top_k`` rows per leaf and side. One filter over two windows
+    (``rt <= k OR rb <= k``) cannot be limited that way."""
     from pyspark.sql.window import Window
 
-    if counted is None:
-        counted = _counted_values(ctx, string_keys)
-    else:
-        counted = counted.where(
-            F.col("k").isin(list(string_keys)))
-    w_top = Window.partitionBy("k").orderBy(F.desc("n"), F.asc("v"))
-    w_bot = Window.partitionBy("k").orderBy(F.asc("n"), F.desc("v"))
-    ranked = (counted
-              .withColumn("rt", F.row_number().over(w_top))
-              .withColumn("rb", F.row_number().over(w_bot))
-              .where((F.col("rt") <= cfg.top_k)
-                     | (F.col("rb") <= cfg.top_k)))
+    counted = counted.where(F.col("k").isin(list(keys)))
+    sides = []
+    for side, order in (("top", (F.desc("n"), F.asc("v"))),
+                        ("bottom", (F.asc("n"), F.desc("v")))):
+        w = Window.partitionBy("k").orderBy(*order)
+        sides.append(counted
+                     .withColumn("r", F.row_number().over(w))
+                     .where(F.col("r") <= cfg.top_k)
+                     .select(F.lit(side).alias("side"), "k", "v", "n"))
+    return sides[0].unionByName(sides[1])
+
+
+def _collect_topk(counted: DataFrame, keys: Dict[str, _Leaf],
+                  cfg: AnalyzerConfig
+                  ) -> Tuple[Dict[str, List[Tuple[str, int]]],
+                             Dict[str, List[Tuple[str, int]]]]:
+    """ONE job for all sampled leaves of a context: top-k and bottom-k
+    samples, both in most-common order (like the tail of
+    ``Counter.most_common()``)."""
     out: Dict[str, List[Tuple[str, int]]] = {}
     bot: Dict[str, List[Tuple[str, int]]] = {}
-    for r in ranked.collect():
-        if r["rt"] <= cfg.top_k:
-            out.setdefault(r["k"], []).append((r["v"], r["n"]))
-        if r["rb"] <= cfg.top_k:
-            bot.setdefault(r["k"], []).append((r["v"], r["n"]))
-    for v in out.values():
-        v.sort(key=lambda t: (-t[1], t[0]))
-    for v in bot.values():
-        # most-common order, like the tail of Counter.most_common()
+    for r in _topk_query(counted, keys, cfg).collect():
+        side = out if r["side"] == "top" else bot
+        side.setdefault(r["k"], []).append((r["v"], r["n"]))
+    for v in (*out.values(), *bot.values()):
         v.sort(key=lambda t: (-t[1], t[0]))
     return out, bot
 
 
 def _collect_string_quartiles(
-        ctx: _Context, string_keys: Dict[str, _Leaf],
-        cfg: AnalyzerConfig,
-        counted: Optional[DataFrame] = None
+        counted: DataFrame, string_keys: Dict[str, _Leaf]
 ) -> Dict[str, Tuple[str, str, str]]:
     """Lexicographic q1/q2/q3 for string leaves — the reference
     computes quartiles for ANY sortable type by a sorted-distinct
     cumulative walk (reference: structa/types.py:182-207); this is
     that walk as ONE distributed job for all string leaves of a
-    context: unpivot -> groupBy(leaf, value).count() -> per-leaf
-    cumulative count over the value ordering -> first value whose
-    preceding-cumulative reaches each quartile index (remainder
-    falls back to max, exactly the reference's tail rule).
+    context over the frequency relation: per-leaf cumulative count
+    over the value ordering -> first value whose preceding-cumulative
+    reaches each quartile index (remainder falls back to max, exactly
+    the reference's tail rule).
 
-    Scale shape: the shuffle carries one row per DISTINCT (leaf,
-    value) — the same cardinality the reference's per-column Counter
-    holds in driver RAM, but distributed and combiner-compressed. The
-    cumulative window partitions by leaf, so one extremely-high-
+    The cumulative window partitions by leaf, so one extremely-high-
     cardinality column serializes into one task; exact mode is the
     oracle path — sketch mode skips string quartiles (numeric ones
-    use the mergeable GK sketch instead)."""
-    if not string_keys or not cfg.exact:
-        return {}
+    use the mergeable KLL sketch instead)."""
     from pyspark.sql.window import Window
 
-    if counted is None:
-        counted = _counted_values(ctx, string_keys)
-    else:
-        counted = counted.where(
-            F.col("k").isin(list(string_keys)))
+    counted = counted.where(F.col("k").isin(list(string_keys)))
     w_ord = (Window.partitionBy("k").orderBy("v")
              .rowsBetween(Window.unboundedPreceding, -1))
     w_all = Window.partitionBy("k")
@@ -732,23 +740,12 @@ def _collect_string_quartiles(
     return {r["k"]: (r["q1"], r["q2"], r["q3"]) for r in agg.collect()}
 
 
-def _collect_patterns(ctx: _Context, fixed_leaves: Dict[str, _Leaf],
-                      cfg: AnalyzerConfig) -> Dict[str, list]:
-    """ONE job: per-position char sets of fixed-width string leaves
-    (posexplode + collect_set; reference analyzer.py:685-719)."""
-    if not fixed_leaves or not cfg.induce_patterns:
-        return {}
-    df = ctx.df
-    if cfg.pattern_sample:
-        df = df.sample(cfg.pattern_sample, seed=42)
-    pairs = [
-        F.struct(F.lit(key).alias("k"),
-                 F.expr(leaf.expr).cast("string").alias("v"))
-        for key, leaf in fixed_leaves.items()
-    ]
-    unp = (df.select(F.explode(F.array(*pairs)).alias("p"))
-           .select("p.k", "p.v").where(F.col("v").isNotNull()))
-    chars = (unp
+def _collect_patterns(values: DataFrame) -> Dict[str, list]:
+    """ONE job: per-position char sets of the fixed-width string leaves
+    in ``(k, v)`` rows (posexplode + collect_set; reference
+    analyzer.py:685-719). The sets are the same whether ``values``
+    holds every occurrence or each distinct value once."""
+    chars = (values
              .select("k", F.posexplode(F.split(F.col("v"), "")).alias(
                  "pos", "ch"))
              .where(F.col("ch") != "")
@@ -756,6 +753,62 @@ def _collect_patterns(ctx: _Context, fixed_leaves: Dict[str, _Leaf],
     out: Dict[str, list] = {}
     for r in chars.collect():
         out.setdefault(r["k"], []).append((r["pos"], set(r["chars"])))
+    return out
+
+
+# Values (phase-A cards) a context's value-count relation must hold to
+# be persisted and shared by phase B and the char sets; see
+# _relation_leaves.
+_SHARED_RELATION_MIN = 100_000
+
+
+def _relation_leaves(ctx: _Context, row: Dict, cfg: AnalyzerConfig
+                     ) -> Tuple[Dict[str, _Leaf], Dict[str, _Leaf], bool]:
+    """``(sampled, relation, shared)`` for a context after its phase
+    A: the leaves worth a top-k sample (collected unless
+    ``collect_samples`` is off); the leaves of its value-count
+    relation — the sampled ones plus, in exact mode, every string
+    leaf (for its lexicographic quartiles); and whether the relation
+    is big enough to share. A shared relation is persisted and also
+    feeds phase B and the char sets of its leaves; below
+    ``_SHARED_RELATION_MIN`` values the per-job cost of a wave of its
+    own outweighs what it saves, so top-k and quartiles each
+    recompute it and every leaf streams phase B and the char sets."""
+    def worth_sampling(leaf: _Leaf) -> bool:
+        # a frequency sample only means something when values repeat;
+        # skipping near-unique columns (key columns) by their HLL
+        # estimate keeps the relation proportional to the REPEATED
+        # values only — at 100 TB this is the difference between
+        # shuffling every key once and shuffling a few hundred
+        # distinct values
+        card = row.get(f"{leaf.key}__card") or 0
+        distinct = row.get(f"{leaf.key}__distinct") or 0
+        return card <= 10_000 or distinct < 0.9 * card
+
+    sampled = {
+        leaf.key: leaf for leaf in ctx.leaves
+        if isinstance(leaf.dtype, (T.StringType, T.BooleanType,
+                                   T.LongType, T.IntegerType))
+        and worth_sampling(leaf)
+    }
+    relation = dict(sampled)
+    if cfg.exact:
+        relation.update({leaf.key: leaf for leaf in ctx.leaves
+                         if isinstance(leaf.dtype, T.StringType)})
+    values = sum(row.get(f"{k}__card") or 0 for k in relation)
+    return sampled, relation, bool(relation) and values >= _SHARED_RELATION_MIN
+
+
+def _fixed_width(strings: Dict[str, _Leaf], row: Dict,
+                 cfg: AnalyzerConfig) -> Dict[str, _Leaf]:
+    """The string leaves whose phase-A lengths are one width in
+    ``(0, max_pattern_len]`` — the pattern-induction candidates."""
+    out = {}
+    for key, leaf in strings.items():
+        lmin = row.get(f"{key}__lmin")
+        if (lmin and lmin == row.get(f"{key}__lmax")
+                and lmin <= cfg.max_pattern_len):
+            out[key] = leaf
     return out
 
 
@@ -775,7 +828,7 @@ class Profile:
     def render(self, opts=None) -> str:
         out = self.root.render(opts)
         if not self.config.exact and self._has_quartile_less_string():
-            # sketch mode computes numeric quartiles with mergeable GK
+            # sketch mode computes numeric quartiles with mergeable KLL
             # sketches, but lexicographic string quartiles have no
             # mergeable sketch — they are exact-mode only, so say so
             # instead of leaving the range silently bare
@@ -932,10 +985,11 @@ def _phase_a_row(df: DataFrame, leaves: List[_Leaf],
     return row
 
 
-def _phase_b_row(df: DataFrame, leaves: List[_Leaf], row: Dict,
-                 cfg: AnalyzerConfig) -> Dict:
-    """Phase B: length-gated conversion-candidate scoring; returns the
-    extra scalar columns ({} when no string leaf is eligible)."""
+def _phase_b_chunks(leaves: List[_Leaf], row: Dict, cfg: AnalyzerConfig):
+    """The string leaves phase B scores — non-empty, max length <=
+    ``max_numeric_len`` — in chunks: candidate counts are regex-heavy
+    (~15 exprs per leaf), so chunk tighter than phase A to keep the
+    generated classes bounded."""
     eligible = []
     for leaf in leaves:
         if not isinstance(leaf.dtype, T.StringType):
@@ -944,17 +998,36 @@ def _phase_b_row(df: DataFrame, leaves: List[_Leaf], row: Dict,
         lmax = row.get(f"{leaf.key}__lmax")
         if card and lmax is not None and lmax <= cfg.max_numeric_len:
             eligible.append(leaf)
+    return _chunked(eligible, max(1, _CHUNK_LEAVES // 2))
+
+
+def _phase_b_row(df: DataFrame, leaves: List[_Leaf], row: Dict,
+                 cfg: AnalyzerConfig) -> Dict:
+    """Phase B over the input rows, one candidate test per occurrence;
+    returns the extra scalar columns ({} when no string leaf is
+    eligible)."""
     out: Dict = {}
-    # candidate counts are regex-heavy: ~15 exprs per leaf, so chunk
-    # tighter than phase A to keep the generated classes bounded
-    for chunk in _chunked(eligible, max(1, _CHUNK_LEAVES // 2)):
-        cand_exprs: List[Column] = []
-        for leaf in chunk:
-            cand_exprs.extend(_candidate_agg_exprs(
-                leaf, cfg, row.get(f"{leaf.key}__lmin") or 0,
-                row.get(f"{leaf.key}__lmax")))
-        if cand_exprs:
-            out.update(df.agg(*cand_exprs).collect()[0].asDict())
+    for chunk in _phase_b_chunks(leaves, row, cfg):
+        exprs = [e for leaf in chunk for e in _candidate_agg_exprs(
+            leaf.key, F.expr(leaf.expr), F.lit(1), row, cfg)]
+        if exprs:
+            out.update(df.agg(*exprs).collect()[0].asDict())
+    return out
+
+
+def _phase_b_counted(counted: DataFrame, leaves: List[_Leaf], row: Dict,
+                     cfg: AnalyzerConfig) -> Dict:
+    """Phase B over the frequency relation: each distinct value is
+    tested once and a failure weighs its count ``n``, so every sum
+    equals :func:`_phase_b_row`'s per-occurrence count."""
+    out: Dict = {}
+    for chunk in _phase_b_chunks(leaves, row, cfg):
+        exprs = [e for leaf in chunk for e in _candidate_agg_exprs(
+            leaf.key, F.when(F.col("k") == leaf.key, F.col("v")),
+            F.col("n"), row, cfg)]
+        if exprs:
+            mine = counted.where(F.col("k").isin([lf.key for lf in chunk]))
+            out.update(mine.agg(*exprs).collect()[0].asDict())
     return out
 
 
@@ -1030,16 +1103,21 @@ def _input_bytes(df: DataFrame) -> Optional[int]:
     return total
 
 
-def _prepare_input(df: DataFrame, cfg: AnalyzerConfig):
+# Inputs up to this many bytes of local files are cached before
+# analysis (see _prepare_input); the gate makes caching self-disabling
+# at scale: a 100 TB table streams, a 10 MB file decodes once instead
+# of once per job.
+_CACHE_INPUT_MAX_BYTES = 1 << 30
+
+
+def _prepare_input(df: DataFrame):
     """Size-gated cache of the analyzer's input: the profile makes
     several passes, so a small file set is repartitioned to the
     session's parallelism (single-row-group parquet otherwise pins
     every pass to one scan task) and persisted; anything big, remote
     or non-file streams unchanged. Returns (df, cached?)."""
-    if not cfg.cache_small_input:
-        return df, False
     nbytes = _input_bytes(df)
-    if nbytes is None or nbytes > cfg.cache_input_max_bytes:
+    if nbytes is None or nbytes > _CACHE_INPUT_MAX_BYTES:
         return df, False
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
@@ -1060,35 +1138,29 @@ def _prepare_input(df: DataFrame, cfg: AnalyzerConfig):
                 par, F.xxhash64(*[F.col(c) for c in df.columns]))
         except Exception:  # un-hashable column type: keep round-robin
             df = df.repartition(par)
-    df = df.persist()
-    # NOT materialized here: the old dedicated count() paid a full
-    # scan+persist pass before any analysis job ran. _analyze now
-    # runs the FIRST phase-A agg job as a synchronous barrier when
-    # the input was cached — that job's scan materializes the cache
-    # as a side effect (one pass instead of two), and only then does
-    # the concurrent wave launch, so jobs never race an
-    # unmaterialized cache into recomputing partitions.
-    return df, True
+    return df.persist(), True
 
 
 def analyze(df: DataFrame, config: Optional[AnalyzerConfig] = None,
             **kwargs) -> Profile:
     """Profile a DataFrame into a typed summary tree.
 
-    One wide agg per repetition context + at most two auxiliary jobs
-    (top-k samples, char patterns) per context.
+    Per repetition context: the phase-A aggregate jobs, one
+    value-count relation and its consumer jobs (top-k samples, phase
+    B, char patterns, exact string quartiles); leaves outside the
+    relation, and every leaf of a small context, stream phase B and
+    char patterns over the input.
     """
     cfg = config or AnalyzerConfig(**kwargs)
-    prep, cached = _prepare_input(df, cfg)
+    prep, cached = _prepare_input(df)
     try:
-        return _analyze(prep, cfg, materialize_first=cached)
+        return _analyze(prep, cfg)
     finally:
         if cached:
             prep.unpersist()
 
 
-def _analyze(df: DataFrame, cfg: AnalyzerConfig,
-             materialize_first: bool = False) -> Profile:
+def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
     contexts, array_srcs, table_structs = _plan(df, cfg)
 
     # whitespace stripping (reference analyzer.py:633-638) applies to
@@ -1104,19 +1176,14 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig,
     topk: Dict[str, List[Tuple[str, int]]] = {}
     botk: Dict[str, List[Tuple[str, int]]] = {}
     str_q: Dict[str, Tuple[str, str, str]] = {}
+    patterns: Dict[str, list] = {}
+    in_relation: set = set()
+    # every value-count relation persisted by a pool task; unpersisted
+    # once the pool has drained, also when a job failed
+    relations: List[DataFrame] = []
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
     from concurrent.futures import wait as _fwait
 
-    # two-wave concurrent job submission ACROSS contexts: every
-    # context's phase-A jobs launch immediately (each splits into a
-    # codegen and a sketch job internally); as each phase A lands, its
-    # dependent jobs (top-k, phase-B candidates, string quartiles) are
-    # fanned out without waiting for the other contexts. Total
-    # wall-clock is the critical path of the slowest context, not the
-    # sum over contexts — at toy scale this hides per-job scheduling
-    # latency, at scale it keeps the cluster busy across the small
-    # tail stages.
-    ctx_by_id = {ctx.id: ctx for ctx in contexts}
     # cap concurrency: each agg job compiles a generated class, and
     # compiling many simultaneously can exhaust the JVM heap. Phase A
     # chunks every context to <= _CHUNK_LEAVES leaves per job and
@@ -1129,6 +1196,7 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig,
     widest = max((len(c.leaves) + len(c.length_leaves)
                   for c in contexts), default=0)
     n_workers = 2 if (widest > 128 or len(contexts) > 64) else 4
+    spark = df.sparkSession
 
     def _agg_job(d: DataFrame, build) -> Dict:
         # the builder runs HERE, inside the pool task: Column
@@ -1137,115 +1205,103 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig,
         # already executing
         return d.agg(*build()).collect()[0].asDict()
 
-    with ThreadPoolExecutor(max_workers=n_workers) as pool:
-        a_futs = {}
-        remaining: Dict[int, int] = {}
-        ctx_groups = []
-        for ctx in contexts:
-            groups = _phase_a_job_builders(
-                ctx.leaves, ctx.length_leaves, cfg)
-            remaining[ctx.id] = len(groups)
-            rows[ctx.id] = {"__rows__": None}
-            ctx_groups.append((ctx, groups))
-        if materialize_first and ctx_groups:
-            # the input was freshly persisted but NOT materialized
-            # (_prepare_input): run the root context's first phase-A
-            # job as a barrier — its scan materializes the cache as
-            # a side effect, folding the old dedicated count() pass
-            # into real analysis work; everything after it reads the
-            # in-memory columnar relation, never racing the cache
-            # into recomputing partitions
-            ctx0, groups0 = ctx_groups[0]
-            fut0 = pool.submit(_agg_job, ctx0.df, groups0[0])
-            a_futs[fut0] = ctx0.id
-            fut0.result()
-            ctx_groups[0] = (ctx0, groups0[1:])
-        for ctx, groups in ctx_groups:
-            for build in groups:
-                a_futs[pool.submit(_agg_job, ctx.df, build)] = ctx.id
-        dep_futs = []
-        pending = set(a_futs)
-        while pending:
-            done, pending = _fwait(pending, return_when=FIRST_COMPLETED)
-            for fut in done:
-                ctx = ctx_by_id[a_futs[fut]]
-                rows[ctx.id].update(fut.result())
+    def _materialize(ctx: _Context, keys: Dict[str, _Leaf]) -> DataFrame:
+        rel = _counted_values(ctx, keys).persist()
+        relations.append(rel)
+        rel.count()
+        return rel
+
+    # Every job runs as a task of ONE pool, fanned out by this thread
+    # as the results it depends on land — no task waits on another, so
+    # a context's wall-clock is its own critical path (phase A ->
+    # relation -> consumers) and the contexts overlap. `landed` maps a
+    # pending future to the callback that folds its result in; the
+    # callbacks all run on this thread.
+    landed = {}
+    remaining: Dict[int, int] = {}
+    try:
+        with ThreadPoolExecutor(max_workers=n_workers) as pool:
+
+            def submit(then, fn, *args):
+                # pool threads run with the caller's Spark local
+                # properties (job group, description, scheduler
+                # pool). A fresh capture per task: the wrapper
+                # installs its one Properties copy as the thread's
+                # own, and concurrent queries writing their SQL
+                # execution id into a shared copy would clobber each
+                # other.
+                inherit = inheritable_thread_target(spark)
+                if inherit is not spark:    # pinned-thread mode is on
+                    fn = inherit(fn)
+                landed[pool.submit(fn, *args)] = then
+
+            def topk_landed(top_bottom):
+                topk.update(top_bottom[0])
+                botk.update(top_bottom[1])
+
+            def relation_landed(ctx, sampled, keys, row, shared, rel):
+                strings = {k: lf for k, lf in keys.items()
+                           if isinstance(lf.dtype, T.StringType)}
+                if sampled and cfg.collect_samples:
+                    submit(topk_landed, _collect_topk, rel, sampled, cfg)
+                if strings and cfg.exact:
+                    submit(str_q.update, _collect_string_quartiles,
+                           rel, strings)
+                if not shared:
+                    return
+                if strings:
+                    submit(rows[ctx.id].update, _phase_b_counted,
+                           rel, list(strings.values()), row, cfg)
+                fixed = _fixed_width(strings, row, cfg)
+                if fixed and cfg.induce_patterns:
+                    submit(patterns.update, _collect_patterns,
+                           rel.where(F.col("k").isin(list(fixed))))
+
+            def phase_a_landed(ctx, part):
+                rows[ctx.id].update(part)
                 remaining[ctx.id] -= 1
                 if remaining[ctx.id]:
-                    continue
+                    return
                 # this context's phase A is complete: fan out its
-                # dependent jobs without waiting for other contexts
-                row = rows[ctx.id]
+                # dependent jobs without waiting for other contexts.
+                # The tasks read a snapshot, as this thread keeps
+                # folding phase-B results into rows[ctx.id].
+                row = dict(rows[ctx.id])
+                sampled, keys, shared = _relation_leaves(ctx, row, cfg)
+                if shared:
+                    in_relation.update(keys)
+                streaming = [lf for lf in ctx.leaves
+                             if lf.key not in in_relation]
+                submit(rows[ctx.id].update, _phase_b_row,
+                       ctx.df, streaming, row, cfg)
+                if shared:
+                    submit(lambda rel: relation_landed(
+                        ctx, sampled, keys, row, True, rel),
+                        _materialize, ctx, keys)
+                elif keys:
+                    relation_landed(ctx, sampled, keys, row, False,
+                                    _counted_values(ctx, keys))
 
-                def worth_sampling(leaf: _Leaf, row=row) -> bool:
-                    # a frequency sample only means something when
-                    # values repeat; skipping near-unique columns (key
-                    # columns) keeps the top-k shuffle proportional to
-                    # the REPEATED values only — at 100 TB this is the
-                    # difference between shuffling every key once and
-                    # shuffling a few hundred distinct values
-                    card = row.get(f"{leaf.key}__card") or 0
-                    distinct = row.get(f"{leaf.key}__distinct") or 0
-                    return card <= 10_000 or distinct < 0.9 * card
-
-                sampleable = {
-                    leaf.key: leaf for leaf in ctx.leaves
-                    if isinstance(leaf.dtype,
-                                  (T.StringType, T.BooleanType,
-                                   T.LongType, T.IntegerType))
-                    and worth_sampling(leaf)
-                }
-                string_leaves = {
-                    leaf.key: leaf for leaf in ctx.leaves
-                    if isinstance(leaf.dtype, T.StringType)
-                }
-                # in exact mode both the top-k job and the string-
-                # quartile job consume groupBy(leaf, value) counts;
-                # build that relation ONCE over the union of their
-                # leaves and run both consumers in one pool task —
-                # materializing the cache before the first consumer,
-                # because two tasks racing an unmaterialized cache
-                # would each recompute it (the very scan this saves)
-                if (cfg.exact and cfg.collect_samples
-                        and sampleable and string_leaves):
-                    def _shared_value_stats(ctx=ctx,
-                                            sampleable=sampleable,
-                                            string_leaves=string_leaves):
-                        shared = _counted_values(
-                            ctx, {**string_leaves, **sampleable}
-                        ).persist()
-                        try:
-                            shared.count()
-                            t, b = _collect_topk(
-                                ctx, sampleable, cfg, shared)
-                            q = _collect_string_quartiles(
-                                ctx, string_leaves, cfg, shared)
-                            return t, b, q
-                        finally:
-                            shared.unpersist()
-
-                    tq_fut = pool.submit(_shared_value_stats)
-                    q_fut = None
-                else:
-                    tq_fut = pool.submit(
-                        _collect_topk, ctx, sampleable, cfg)
-                    q_fut = pool.submit(_collect_string_quartiles,
-                                        ctx, string_leaves, cfg)
-                dep_futs.append((
-                    ctx.id, tq_fut,
-                    pool.submit(_phase_b_row, ctx.df, ctx.leaves,
-                                row, cfg),
-                    q_fut))
-        for cid, tq_fut, b_fut, q_fut in dep_futs:
-            if q_fut is None:
-                t, b, q = tq_fut.result()
-            else:
-                t, b = tq_fut.result()
-                q = q_fut.result()
-            topk.update(t)
-            botk.update(b)
-            rows[cid].update(b_fut.result())
-            str_q.update(q)
+            # phase A of every context launches at once, also on a
+            # freshly persisted input: concurrent jobs on a cache that
+            # is not yet materialized still build it once
+            for ctx in contexts:
+                builders = _phase_a_job_builders(
+                    ctx.leaves, ctx.length_leaves, cfg)
+                remaining[ctx.id] = len(builders)
+                rows[ctx.id] = {"__rows__": None}
+                for build in builders:
+                    submit(lambda part, ctx=ctx: phase_a_landed(ctx, part),
+                           _agg_job, ctx.df, build)
+            while landed:
+                done, _ = _fwait(landed, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    landed.pop(fut)(fut.result())
+    finally:
+        # the `with` exit has waited for every running task, so no
+        # job reads a relation any more
+        for rel in relations:
+            rel.unpersist()
 
     # classify every leaf
     leaf_nodes: Dict[Tuple[str, ...], Node] = {}
@@ -1274,7 +1330,8 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig,
                 card=row.get(f"{k}__card") or 0,
                 min=row.get(f"{k}__min"), max=row.get(f"{k}__max"))
 
-    # second pass: induce char patterns for fixed-width plain strings
+    # char patterns apply to fixed-width plain strings only: relation
+    # leaves already have their char sets; the others stream now
     for ctx in contexts:
         fixed = {}
         for leaf in ctx.leaves:
@@ -1283,11 +1340,17 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig,
                     and node.lengths.fixed and node.lengths.min
                     and 0 < node.lengths.min <= cfg.max_pattern_len):
                 fixed[leaf.key] = leaf
-        for key, positions in _collect_patterns(ctx, fixed, cfg).items():
-            leaf = fixed[key]
-            node = leaf_nodes[leaf.path]
-            leaf_nodes[leaf.path] = replace(
-                node, pattern=tuple(induce_pattern(positions)))
+        stream = {k: lf for k, lf in fixed.items() if k not in in_relation}
+        if stream and cfg.induce_patterns:
+            src = ctx.df
+            if cfg.pattern_sample:
+                src = src.sample(cfg.pattern_sample, seed=42)
+            patterns.update(_collect_patterns(_unpivot(src, stream)))
+        for key, leaf in fixed.items():
+            if key in patterns:
+                leaf_nodes[leaf.path] = replace(
+                    leaf_nodes[leaf.path],
+                    pattern=tuple(induce_pattern(patterns[key])))
 
     # tuple induction: fixed-width short arrays -> positional tuples
     tuple_nodes = _induce_tuples(contexts, array_srcs, length_stats, cfg)

@@ -176,6 +176,37 @@ def test_profile_jobs_stay_whole_stage_codegen(spark):
     assert "*(" in plan, "no WholeStageCodegen span:\n" + plan[:1500]
 
 
+def test_profile_topk_limits_before_the_exchange(spark):
+    # each side of the analyzer's top-k / bottom-k query is a single
+    # `row_number() <= top_k` window, so Spark plans a PARTIAL
+    # WindowGroupLimit under the exchange: every map task ships at
+    # most top_k rows per leaf instead of every distinct value
+    import structa_spark.analyzer as A
+    df = load_table(spark, SF, "lineitem")
+    cfg = A.AnalyzerConfig()
+    contexts, _arrs, _tabs = A._plan(df, cfg)
+    ctx = contexts[0]
+    keys = {lf.key: lf for lf in ctx.leaves}
+    q = A._topk_query(A._counted_values(ctx, keys), keys, cfg)
+    q.collect()                   # resolve AQE to the final plan
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("== Initial Plan ==")[0].split("\n")
+    partial = [i for i, ln in enumerate(lines)
+               if "WindowGroupLimit" in ln and "Partial" in ln]
+    assert len(partial) == 2, "\n".join(lines)
+
+    def depth(ln):
+        return len(ln) - len(ln.lstrip(" :+-"))
+
+    for i in partial:
+        # the nearest shallower Exchange above the partial limit is
+        # its ancestor in the tree string
+        above = [j for j in range(i) if "Exchange" in lines[j]
+                 and depth(lines[j]) < depth(lines[i])]
+        assert above, "no exchange above the partial limit:\n" + \
+            "\n".join(lines)
+
+
 def test_phase_a_builders_match_eager_jobs(spark):
     # round 11 defers the phase-A Column construction into the pool
     # workers; round 12 pins the expectations INDEPENDENTLY of the
