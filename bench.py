@@ -5,25 +5,18 @@
 Prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-The suite covers each engine pillar at its *scale path* (LSH/approx
-variants, not the quadratic oracle paths):
-  profile_lineitem   - the structure-inference engine itself
-  q1/q3/q5           - agg + broadcast joins on the fact table
-  window_topk        - partitioned window
-  minhash_candidates - LSH near-dup candidate pairs (documents)
-  simhash_pairs      - simhash bucketed near-dups
-  token_stats        - text analysis scan
-  cosine_topk        - brute-force ANN baseline (broadcast queries)
-  neardup_lsh        - SRP-bucketed embedding near-dups
-  decontaminate      - eval-set n-gram overlap (broadcast eval side)
-  unigram_nll        - unigram-LM perplexity proxy (one-plan join)
-  semantic_dedup     - SemDeDup cluster + within-cluster drop
-  (+ repetition, passage_dedup, pq_adc_topk, training_manifest,
-   tfidf — the corpus-pipeline scale paths)
+The suite is every query declared with a ``bench="<label>"`` in
+``structa_spark/queries.py`` (``register(..., bench=...)`` for a
+registered query, ``bench_only(...)`` for a scale path or profile
+that is not one). Each engine pillar runs at its *scale path*
+(LSH/approx variants, not the quadratic oracle paths).
 """
 
+import functools
+import hashlib
 import json
 import os
+import re
 import sys
 import time
 
@@ -31,6 +24,57 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# a timed pass waits (bounded) while the 1-minute loadavg exceeds this
+MAX_LOADAVG = 10.0
+# the row-count ladder: the sf0.01 tier beside the main scale factor,
+# and the optional local sf1 fixture above it (scripts/gen_sf1.py)
+LADDER_DIR = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.01")
+LADDER_UP_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "spark-warehouse", "sf1")
+# wall-clock budget of the whole sf1 tier (about 200 s measured)
+LADDER_UP_BUDGET = 300.0
+# extra passes for each doc-length op whose exponent reads > 1.0
+DOCLEN_RETRIES = 4
+
+
+def make_suite(spark, sf_dir):
+    """``{label: build}`` for every bench-declared query at ``sf_dir``,
+    in declaration order. ``build()`` returns the query's DataFrame or
+    Profile; ``_count`` runs it. Building the suite runs nothing."""
+    from structa_spark.queries import BENCH
+    return {label: functools.partial(fn, spark, sf_dir)
+            for label, fn in BENCH.items()}
+
+
+def _count(res):
+    """The timed action: a DataFrame's ``count()``, or a profile's row
+    count (its jobs ran while it was built)."""
+    from pyspark.sql import DataFrame
+    return res.count() if isinstance(res, DataFrame) else res.row_count
+
+
+def _plan_fingerprint(df):
+    """md5 of the OPTIMIZED plan with the session's counters normalized
+    out, so the same query reads the same wherever it sits in the suite
+    order. A relation cached by an earlier query still shows in the
+    plan, with its execution state."""
+    s = df._jdf.queryExecution().optimizedPlan().toString()
+    s = re.sub(r"#\d+", "#", s)          # expression IDs
+    s = re.sub(r"@[0-9a-f]+", "@", s)    # object addresses
+    s = re.sub(r"(lambda \w+)_\d+", r"\1_", s)  # lambda variable names
+    s = re.sub(r"plan_id=\d+", "plan_id=", s)   # cached physical plans
+    return hashlib.md5(s.encode()).hexdigest()[:16]
+
+
+def _fingerprint(res):
+    """A DataFrame's plan fingerprint. A profile runs a multi-job
+    inference loop, not one DataFrame, so its fingerprint is the md5
+    of the RENDERED profile: stable across boxes, and it changes when
+    the inference pipeline changes."""
+    from pyspark.sql import DataFrame
+    if isinstance(res, DataFrame):
+        return _plan_fingerprint(res)
+    return "render:" + hashlib.md5(res.render().encode()).hexdigest()[:16]
 
 
 def main():
@@ -53,282 +97,7 @@ def main():
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
-    from structa_spark import analyze
-    from structa_spark.operators import dedup, similarity, text
-    from structa_spark.queries import (
-        asof_purchase_click, bigram_nll, c4_line_clean,
-        ccnet_perplexity_buckets, contamination_check,
-        corpus_filter_report,
-        cosine_topk, decoded_media_stats, decompressed_text_stats,
-        gopher_dup_fractions, gopher_quality_flags, hybrid_rrf_topk,
-        kn_bigram_nll,
-        int8_topk_search, json_props_stats, mixed_resample_counts,
-        audio_envelope_hashes, diverse_sample_by_cluster,
-        image_dhash_values, nb_lang_confusion,
-        passage_dedup_summary, pq_adc_topk, q1_pricing_summary,
-        repetition_ngram_profile, scrub_eval_spans,
-        fuzzy_contamination_pairs,
-        q3_top_orders, q5_nation_revenue, repetition_signals,
-        rollup_nation_year, semantic_dedup_summary, sessionize_events,
-        dsir_resample_topk,
-        source_curation_report, source_curation_report_v2,
-        source_token_jsd, span_dedup_texts,
-        tfidf_top_terms, token_stats_by_lang, top_orders_per_customer,
-        training_manifest, unigram_nll, windowed_event_stats,
-        host_curation_report, host_policy_filter,
-        image_dedup_keep, audio_dedup_keep,
-        bloom_contamination_flags, host_pagerank,
-        cms_heavy_hitters,
-        longest_dup_span_report, unigram_tokenizer_vocab,
-        audio_spectral_features, host_policy_v2,
-        image_entropy_stats, unigram_encode_fertility,
-        quality_gopher_calibration, embedding_health_report,
-        host_hits_scores, audio_clipping_stats,
-        wordpiece_merge_candidates, video_frame_index,
-        encoding_quality_report, source_vocab_overlap,
-        heaps_vocab_growth,
-        pdf_extracted_text, video_dup_groups, audio_mfcc_features,
-        docx_extracted_text, markdown_extracted_text,
-        blocklist_screen, doremi_domain_weights,
-        matryoshka_recall_at_k, office_extracted_text,
-        fim_split_coords, bitext_margin_pairs, jpeg_quality_screen,
-        epub_extracted_text, pptx_extracted_text,
-        xlsx_extracted_text, quality_classifier_scores,
-        audio_vad_segments, code_quality_flags, pii_card_scan,
-        latex_extracted_text, bm25_topk, video_scene_cuts,
-        html_link_extract, host_boilerplate_clean,
-        robots_policy_check, hard_negative_topk, mojibake_repair,
-        alpha_lang_weights, audio_resample, sentence_align_beads,
-        pii_iban_scan, anchor_text_profile,
-        ipynb_extracted_cells, subtitle_extracted_cues,
-        code_license_screen, preference_pairs,
-        chat_template_render, kmeans_cluster_profile,
-        weighted_sample_by_source, length_bucket_batches,
-        confusable_spoof_screen, html_table_extract,
-    )
-    from structa_spark.sources.tables import load_table
-
-    def make_suite(sf_dir):
-        def bench_profile():
-            p = analyze(load_table(spark, sf_dir, "lineitem"))
-            return p.row_count
-
-        def bench_profile_docs():
-            p = analyze(load_table(spark, sf_dir, "documents"))
-            return p.row_count
-
-        # the profile entries run a multi-job inference loop, not one
-        # DataFrame — their fingerprint is the md5 of the RENDERED
-        # profile (a result fingerprint: stable across boxes, changes
-        # when the inference pipeline changes), so every suite entry
-        # carries SOME drift-attribution handle
-        def _profile_fp(table):
-            import hashlib as _h
-            p = analyze(load_table(spark, sf_dir, table))
-            return "render:" + _h.md5(
-                p.render().encode()).hexdigest()[:16]
-
-        bench_profile._fp = lambda: _profile_fp("lineitem")
-        bench_profile_docs._fp = lambda: _profile_fp("documents")
-
-        def df_thunk(build):
-            def thunk():
-                return build().count()
-            thunk._df = build
-            return thunk
-
-        bench_minhash = df_thunk(lambda: dedup.minhash_candidates(
-            load_table(spark, sf_dir, "documents")))
-        bench_simhash = df_thunk(
-            lambda: dedup.simhash_near_duplicates(
-                load_table(spark, sf_dir, "documents")))
-        bench_neardup_lsh = df_thunk(
-            lambda: similarity.embedding_near_duplicates(
-                load_table(spark, sf_dir, "embeddings"),
-                threshold=0.9, use_lsh=True))
-
-        def _containment_df():
-            # the SCALE path: LSH candidates verified with
-            # array_intersect over the full table — never the
-            # labeled quadratic oracle slice the registry query uses
-            d = load_table(spark, sf_dir, "documents")
-            cands = dedup.minhash_candidates(d)
-            return dedup.containment_pairs(
-                d, threshold=0.5, candidates=cands)
-
-        bench_containment = df_thunk(_containment_df)
-        # full-table winnowing overlap (the registry query pins a
-        # 150-doc oracle slice; the scale path runs the whole
-        # corpus with the stop-gram posting cap engaged)
-        bench_winnow = df_thunk(lambda: dedup.winnow_overlap_pairs(
-            load_table(spark, sf_dir, "documents"),
-            min_shared=8, max_postings=100))
-
-        def run_df(fn):
-            def thunk():
-                return fn(spark, sf_dir).count()
-            # expose the DataFrame builder so the warm-up pass can
-            # fingerprint the optimized plan without re-running the
-            # (possibly model-building) query a second time
-            thunk._df = lambda: fn(spark, sf_dir)
-            return thunk
-
-        return {
-            "profile_lineitem": bench_profile,
-            "profile_documents": bench_profile_docs,
-            "json_props": run_df(json_props_stats),
-            "q1": run_df(q1_pricing_summary),
-            "q3": run_df(q3_top_orders),
-            "q5": run_df(q5_nation_revenue),
-            "window_topk": run_df(top_orders_per_customer),
-            "asof_join": run_df(asof_purchase_click),
-            "sessionize": run_df(sessionize_events),
-            "windowed_stats": run_df(windowed_event_stats),
-            "rollup": run_df(rollup_nation_year),
-            "minhash_candidates": bench_minhash,
-            "simhash_pairs": bench_simhash,
-            "token_stats": run_df(token_stats_by_lang),
-            "cosine_topk": run_df(cosine_topk),
-            "neardup_lsh": bench_neardup_lsh,
-            "repetition": run_df(repetition_signals),
-            "passage_dedup": run_df(passage_dedup_summary),
-            "pq_adc_topk": run_df(pq_adc_topk),
-            "training_manifest": run_df(training_manifest),
-            "tfidf": run_df(tfidf_top_terms),
-            "decontaminate": run_df(contamination_check),
-            "unigram_nll": run_df(unigram_nll),
-            "semantic_dedup": run_df(semantic_dedup_summary),
-            # newest retrieval / dedup / pipeline paths
-            "int8_topk": run_df(int8_topk_search),
-            "hybrid_rrf": run_df(hybrid_rrf_topk),
-            "containment": bench_containment,
-            "mixed_resample": run_df(mixed_resample_counts),
-            "decoded_media": run_df(decoded_media_stats),
-            "bigram_nll": run_df(bigram_nll),
-            "decompress": run_df(decompressed_text_stats),
-            "nb_confusion": run_df(nb_lang_confusion),
-            "span_dedup": run_df(span_dedup_texts),
-            "curation_report": run_df(source_curation_report),
-            "winnow_overlap": bench_winnow,
-            "token_jsd": run_df(source_token_jsd),
-            "dsir_select": run_df(dsir_resample_topk),
-            "scrub_spans": run_df(scrub_eval_spans),
-            "fuzzy_decontam": run_df(fuzzy_contamination_pairs),
-            "ngram_profile": run_df(repetition_ngram_profile),
-            "image_dhash": run_df(image_dhash_values),
-            "audio_envhash": run_df(audio_envelope_hashes),
-            "diverse_sample": run_df(diverse_sample_by_cluster),
-            "curation_v2": run_df(source_curation_report_v2),
-            "c4_line_clean": run_df(c4_line_clean),
-            "gopher_dup": run_df(gopher_dup_fractions),
-            "gopher_quality": run_df(gopher_quality_flags),
-            "filter_report": run_df(corpus_filter_report),
-            "ccnet_buckets": run_df(ccnet_perplexity_buckets),
-            "kn_bigram_nll": run_df(kn_bigram_nll),
-            "host_report": run_df(host_curation_report),
-            "host_filter": run_df(host_policy_filter),
-            "image_dedup_keep": run_df(image_dedup_keep),
-            "audio_dedup_keep": run_df(audio_dedup_keep),
-            "bloom_decontam": run_df(bloom_contamination_flags),
-            "host_pagerank": run_df(host_pagerank),
-            "cms_hitters": run_df(cms_heavy_hitters),
-            # round-9 paths: the ladder's tiered span aggs, the
-            # capped-vocab EM trainer, the DFT screen through the
-            # real decoder, the composed two-signal host gate
-            "span_ladder": run_df(longest_dup_span_report),
-            "unigram_vocab": run_df(unigram_tokenizer_vocab),
-            "audio_spectral": run_df(audio_spectral_features),
-            "host_policy_v2": run_df(host_policy_v2),
-            "image_entropy": run_df(image_entropy_stats),
-            "unigram_encode": run_df(unigram_encode_fertility),
-            "quality_calib": run_df(quality_gopher_calibration),
-            "embed_health": run_df(embedding_health_report),
-            # late round-9 paths: the two-sided link signal, the
-            # recording-defect battery, the likelihood-argmax
-            # tokenizer step, the sample-table frame sampler
-            "host_hits": run_df(host_hits_scores),
-            "audio_clipping": run_df(audio_clipping_stats),
-            "wordpiece_step": run_df(wordpiece_merge_candidates),
-            "video_frames": run_df(video_frame_index),
-            "encoding_screen": run_df(encoding_quality_report),
-            "vocab_overlap": run_df(source_vocab_overlap),
-            "heaps_growth": run_df(heaps_vocab_growth),
-            # round-10 paths: the PDF landing zone, MJPEG frame
-            # dedup, the mel-cepstral audio rung
-            "pdf_extract": run_df(pdf_extracted_text),
-            "video_dedup": run_df(video_dup_groups),
-            "audio_mfcc": run_df(audio_mfcc_features),
-            # late round-10 paths: office/markdown ingest, the
-            # safety lexicon scan, DoReMi reweighting, the
-            # prefix-truncation recall read-out
-            "docx_extract": run_df(docx_extracted_text),
-            "markdown_extract": run_df(markdown_extracted_text),
-            "blocklist": run_df(blocklist_screen),
-            "doremi": run_df(doremi_domain_weights),
-            "matryoshka": run_df(matryoshka_recall_at_k),
-            "office_extract": run_df(office_extracted_text),
-            "fim_coords": run_df(fim_split_coords),
-            "bitext_margin": run_df(bitext_margin_pairs),
-            "jpeg_quality": run_df(jpeg_quality_screen),
-            # round-11 paths: the remaining office containers and
-            # the book-corpus EPUB walk (chapters cleaned JVM-side)
-            "epub_extract": run_df(epub_extracted_text),
-            "pptx_extract": run_df(pptx_extracted_text),
-            "xlsx_extract": run_df(xlsx_extracted_text),
-            # the trained logistic quality gate (12 full-batch steps
-            # + corpus-wide scoring, the DCLM-shape filter)
-            "quality_classifier": run_df(quality_classifier_scores),
-            # energy-gated VAD segmentation through the WAV decoder
-            "audio_vad": run_df(audio_vad_segments),
-            # the code-corpus line-geometry screen and the
-            # Luhn-validated card scan (both single codegen scans)
-            "code_quality": run_df(code_quality_flags),
-            "pii_cards": run_df(pii_card_scan),
-            # the arXiv LaTeX landing zone (pure regexp codegen)
-            "latex_extract": run_df(latex_extracted_text),
-            # late round-11 paths: lexical retrieval (integer-micro
-            # BM25), shot-boundary detection through the MJPEG
-            # decode, and crawl link extraction into the host graph
-            "bm25_topk": run_df(bm25_topk),
-            "video_scene_cuts": run_df(video_scene_cuts),
-            "html_links": run_df(html_link_extract),
-            # host-template line removal (the RefinedWeb/CCNet
-            # boilerplate stage), the robots.txt policy fold, and
-            # contrastive hard-negative mining
-            "host_boilerplate": run_df(host_boilerplate_clean),
-            "robots_policy": run_df(robots_policy_check),
-            "hard_negatives": run_df(hard_negative_topk),
-            "mojibake_repair": run_df(mojibake_repair),
-            # temperature sampling beside UniMax, and sample-rate
-            # conversion through the real WAV decode
-            "alpha_weights": run_df(alpha_lang_weights),
-            "audio_resample": run_df(audio_resample),
-            # Gale-Church bitext beads (per-pair integer DP in the
-            # Arrow batch)
-            "sentence_align": run_df(sentence_align_beads),
-            # the mod-97 HOF fold and the inbound anchor-text signal
-            "iban_scan": run_df(pii_iban_scan),
-            "anchor_text": run_df(anchor_text_profile),
-            # round-11 SFT/ingest additions: notebook cell explode
-            # (from_json, outputs pruned in the parser), subtitle
-            # cue parse, the SPDX license gate, max-margin DPO
-            # pairs, ChatML render+structure, and the 3-iteration
-            # Lloyd's k-means trainer behind the IVF seeds
-            "ipynb_cells": run_df(ipynb_extracted_cells),
-            "subtitle_cues": run_df(subtitle_extracted_cues),
-            "license_screen": run_df(code_license_screen),
-            "preference_pairs": run_df(preference_pairs),
-            "chat_render": run_df(chat_template_render),
-            "kmeans_profile": run_df(kmeans_cluster_profile),
-            # A-ES weighted sampling, padded-batch coordinates, the
-            # homoglyph skeleton screen, and HTML table explode
-            "weighted_sample": run_df(weighted_sample_by_source),
-            "length_buckets": run_df(length_bucket_batches),
-            "confusable": run_df(confusable_spoof_screen),
-            "html_tables": run_df(html_table_extract),
-        }
-
-    suite = make_suite(SF_DIR)
+    suite = make_suite(spark, SF_DIR)
 
     # warm the JVM once so timings measure the queries, not session
     # startup: load the parquet vectorized reader, codegen/Janino,
@@ -357,14 +126,6 @@ def main():
     # IDs normalized out) is hashed into the artifact so a future
     # timing drift on "unchanged code" is instantly attributable:
     # fingerprint changed => the plan changed; unchanged => box noise.
-    import hashlib
-    import re as _re
-
-    def _plan_fingerprint(df):
-        s = df._jdf.queryExecution().optimizedPlan().toString()
-        s = _re.sub(r"#\d+", "#", s)          # expression IDs
-        s = _re.sub(r"@[0-9a-f]+", "@", s)    # object addresses
-        return hashlib.md5(s.encode()).hexdigest()[:16]
 
     # Per-query parallelism signal (round 12, VERDICT r11 item 2):
     # at sf0.1 nearly every query sits on the session floor, so the
@@ -408,20 +169,12 @@ def main():
     fingerprints = {}
     task_counts = {}
     if os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1") != "0":
-        for name in suite:
-            fn = suite[name]
+        for name, build in suite.items():
             wm = _max_stage_id()
             try:
-                if hasattr(fn, "_df"):
-                    df = fn._df()
-                    fingerprints[name] = _plan_fingerprint(df)
-                    df.count()
-                elif hasattr(fn, "_fp"):
-                    # result fingerprint (profile entries): the call
-                    # doubles as the warm-up execution
-                    fingerprints[name] = fn._fp()
-                else:
-                    fn()
+                res = build()
+                fingerprints[name] = _fingerprint(res)
+                _count(res)
             except Exception:
                 pass  # the timed passes report the error properly
             mt = _max_tasks_since(wm)
@@ -450,13 +203,12 @@ def main():
     # rounds <= 10, and all raw passes ship for transparency.
     #
     # Each pass is additionally GATED on the 1-minute loadavg: a pass
-    # does not start while external load exceeds
-    # $SPARK_GRAFT_MAX_LOADAVG (default 10 — driver reruns above that
-    # are methodology noise by the established adjudication protocol);
-    # the gate waits up to ~2 min, then proceeds and records the
-    # violation. The loadavg sampled before every query of every pass
-    # ships in the artifact so any future drift is adjudicable
-    # without a separate remeasure run.
+    # does not start while external load exceeds MAX_LOADAVG (driver
+    # reruns above that are methodology noise by the established
+    # adjudication protocol); the gate waits up to ~2 min, then
+    # proceeds and records the violation. The loadavg sampled before
+    # every query of every pass ships in the artifact so any future
+    # drift is adjudicable without a separate remeasure run.
     #
     # Pass ORDER alternates (forward / reversed / half-rotated): in a
     # single long-lived driver session, later queries inherit JVM/GC
@@ -467,7 +219,6 @@ def main():
     # position effect across passes so the per-query minimum compares
     # across rounds even as the suite grows.
     N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    MAX_LOAD = float(os.environ.get("SPARK_GRAFT_MAX_LOADAVG", "10"))
 
     def _loadavg():
         try:
@@ -479,7 +230,7 @@ def main():
         """Wait (bounded) for external load to drain before a pass."""
         for _ in range(6):
             load = _loadavg()
-            if load is None or load <= MAX_LOAD:
+            if load is None or load <= MAX_LOADAVG:
                 return load
             time.sleep(20)
         return _loadavg()
@@ -529,15 +280,13 @@ def main():
         run_load = {}
         run_spin = {}
         for name in order:
-            fn = suite[name]
             run_load[name] = _loadavg()
             run_spin[name] = _spin_ms()
             t0 = time.time()
             try:
-                res = fn()
+                res = _count(suite[name]())
                 run[name] = round(time.time() - t0, 3)
-                if name not in emitted and isinstance(res, int):
-                    emitted[name] = res
+                emitted.setdefault(name, res)
             except Exception as exc:  # one bad query must not zero it
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 run[name] = None
@@ -589,7 +338,7 @@ def main():
         "spin_ms_per_query": all_spins,
         "rows_emitted": emitted,
         "max_tasks_per_stage": task_counts,
-        "max_loadavg_gate": MAX_LOAD,
+        "max_loadavg_gate": MAX_LOADAVG,
         "runs": [round(sum(t for t in run.values() if t is not None), 3)
                  for run in all_runs],
         "sf": SF_DIR,
@@ -607,7 +356,6 @@ def main():
     # LOW); anything trending clearly above ~1.3 is the 100x alarm —
     # super-linearity caught by trend, not eyeball.
     import math
-    import re
 
     def _sf_of(d):
         m = re.search(r"sf([0-9.]+)", os.path.basename(d.rstrip("/")))
@@ -616,22 +364,16 @@ def main():
         except ValueError:
             return None
 
-    ladder_dir = os.environ.get("SPARK_GRAFT_LADDER_DIR",
-                                "/root/testdata/sf0.01")
-    sf_main, sf_small = _sf_of(SF_DIR), _sf_of(ladder_dir)
-    if (os.environ.get("SPARK_GRAFT_BENCH_LADDER", "1") != "0"
-            and os.path.isdir(ladder_dir)
+    sf_main, sf_small = _sf_of(SF_DIR), _sf_of(LADDER_DIR)
+    if (os.path.isdir(LADDER_DIR)
             and sf_main and sf_small and sf_main > sf_small):
-        small_suite = make_suite(ladder_dir)
         small = {}
         small_emitted = {}
-        for name, fn in small_suite.items():
+        for name, build in make_suite(spark, LADDER_DIR).items():
             t0 = time.time()
             try:
-                res = fn()
+                small_emitted[name] = _count(build())
                 small[name] = round(time.time() - t0, 3)
-                if isinstance(res, int):
-                    small_emitted[name] = res
             except Exception:
                 small[name] = None
         ratio = sf_main / sf_small
@@ -641,7 +383,7 @@ def main():
             for name in suite
             if times.get(name) and small.get(name)}
         out["ladder"] = {
-            "sf_dir": ladder_dir,
+            "sf_dir": LADDER_DIR,
             "scale_ratio": ratio,
             "queries": small,
             "rows_emitted": small_emitted,
@@ -654,36 +396,26 @@ def main():
     # exponent into a least-squares fit and exercising AQE at real
     # partition counts. Skipped silently when the fixture is absent
     # (fresh clones) — the two-point ladder above still reports.
-    up_dir = os.environ.get(
-        "SPARK_GRAFT_LADDER_UP_DIR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     "spark-warehouse", "sf1"))
-    sf_up = _sf_of(up_dir)
+    sf_up = _sf_of(LADDER_UP_DIR)
     if (os.environ.get("SPARK_GRAFT_BENCH_LADDER_UP", "1") != "0"
-            and os.path.isdir(up_dir)
+            and os.path.isdir(LADDER_UP_DIR)
             and sf_main and sf_up and sf_up > sf_main):
-        up_suite = make_suite(up_dir)
         up = {}
         up_emitted = {}
-        # wall-clock budget for the whole tier (measured ~200s for
-        # the full suite at sf1): once exceeded, the remaining
+        # once the tier's wall-clock budget is spent, the remaining
         # queries record as skipped rather than risking the driver's
         # bench window — partial 3-point evidence beats a lost round
-        up_budget = float(os.environ.get(
-            "SPARK_GRAFT_LADDER_UP_BUDGET", "300"))
         tier_t0 = time.time()
         skipped = []
-        for name, fn in up_suite.items():
-            if time.time() - tier_t0 > up_budget:
+        for name, build in make_suite(spark, LADDER_UP_DIR).items():
+            if time.time() - tier_t0 > LADDER_UP_BUDGET:
                 skipped.append(name)
                 up[name] = None
                 continue
             t0 = time.time()
             try:
-                res = fn()
+                up_emitted[name] = _count(build())
                 up[name] = round(time.time() - t0, 3)
-                if isinstance(res, int):
-                    up_emitted[name] = res
             except Exception:
                 up[name] = None
         # per-query least-squares slope of log(t) on log(sf) over
@@ -707,7 +439,7 @@ def main():
                         sum((x - mx) * (y - my)
                             for x, y in zip(xs, ys)) / denom, 2)
         out["ladder_up"] = {
-            "sf_dir": up_dir,
+            "sf_dir": LADDER_UP_DIR,
             "sf": sf_up,
             "queries": up,
             "rows_emitted": up_emitted,
@@ -725,6 +457,7 @@ def main():
     # the exponent is log(t_big/t_small)/log(4). Linear operators read
     # ~<=1.0; anything trending toward 2.0 is a quadratic gram shape.
     if os.environ.get("SPARK_GRAFT_BENCH_DOCLEN", "1") != "0":
+        from structa_spark.operators import dedup, text
         from structa_spark.operators import sampling as _sampling
 
         def _docs(n_docs, n_tokens):
@@ -820,12 +553,10 @@ def main():
         # passes). A REAL quadratic (~2.0) keeps failing no matter
         # how many minimums are taken; pre/post-retry exponents ship
         # in the artifact so the adjustment is auditable.
-        retries = int(os.environ.get("SPARK_GRAFT_DOCLEN_RETRIES",
-                                     "4"))
         flagged = sorted(n for n, e in doclen_exp.items() if e > 1.0)
         pre_retry = {n: doclen_exp[n] for n in flagged}
         for name in flagged:
-            for _ in range(retries):
+            for _ in range(DOCLEN_RETRIES):
                 for n_tok, df in frames.items():
                     t0 = time.time()
                     try:
@@ -849,7 +580,7 @@ def main():
             "exponents": doclen_exp,
             "retry": {
                 "flagged": flagged,
-                "extra_passes_each": retries,
+                "extra_passes_each": DOCLEN_RETRIES,
                 "pre_retry_exponents": pre_retry,
                 "post_retry_exponents": {
                     n: doclen_exp.get(n) for n in flagged},

@@ -43,12 +43,10 @@ instead:
 Per context that is at most three waves of Spark jobs — phase A, the
 relation, its consumers — all submitted to one worker pool, so the
 contexts overlap. None of this materializes data on the driver: every
-job reduces to per-leaf scalars, and pattern induction on the
-streaming path can run on a ``df.sample`` (``pattern_sample``). The
-relation is persisted on the executors with one row per distinct
-value of its leaves; the HLL gate admits a leaf with under 90%
-distinct values, so a leaf just under the gate puts nearly all of its
-occurrences into the relation's shuffle.
+job reduces to per-leaf scalars. The relation is persisted on the
+executors with one row per distinct value of its leaves; the HLL gate
+admits a leaf with under 90% distinct values, so a leaf just under the
+gate puts nearly all of its occurrences into the relation's shuffle.
 """
 
 from __future__ import annotations
@@ -87,47 +85,35 @@ class AnalyzerConfig:
     merge_threshold: float = 0.5    # record-collapse similarity gate
     max_numeric_len: int = 30       # only try conversions on short strings
     strip_whitespace: bool = False  # trim strings before analysis
-    max_pattern_len: int = 64       # induce patterns up to this width
     exact: bool = False             # exact quartiles/distincts (oracle mode)
-    # percentile_approx accuracy (~1/err). PRECEDENCE: used only when
-    # kll_k == 0 (and exact is False) — with a KLL sketch enabled the
-    # displayed quartiles read from that sketch (fixed ~1.65% rank
-    # error at k=200) so merge_profiles folds the very numbers shown,
-    # and this knob is ignored. Set kll_k=0 to get the
-    # accuracy-tunable percentile_approx path (profiles then carry no
-    # mergeable quantile state).
-    quantile_accuracy: int = 1000
-    # KLL-doubles sketch parameter for the mergeable quantile summary
-    # carried in Stats.qsketches (k=200 -> ~1.65% worst-case rank
-    # error, ~3 KB serialized). 0 disables carrying sketches (and
-    # hands quartiles to percentile_approx/quantile_accuracy above).
-    kll_k: int = 200
-    # target relative standard error of the DataSketches HLL distinct
-    # estimate in sketch mode (sets its lgK, see _hll_lg_k). Tight
-    # (0.5%) because the uniqueness flag is derived from it: a loose
-    # default-rsd (5%) sketch can't distinguish "unique" from "2%
-    # duplicated" at all. ~32 KB of registers per column sketch —
-    # still negligible against executor memory.
-    distinct_rsd: float = 0.005
-    top_k: int = 3                  # frequency sample size
-    collect_samples: bool = True    # run the top-k frequency job
-    induce_patterns: bool = True    # run the char-pattern job
-    # sample fraction for the streaming char-set job at scale; leaves
-    # in the value-count relation read each distinct value once and
-    # need no sample
-    pattern_sample: Optional[float] = None
-    # numeric-timestamp heuristic window (reference analyzer.py:742-770)
     # plan wide homogeneous structs (> field_threshold fields, one
     # common type) as ONE unpivoted (key, value) context instead of
     # per-field contexts; False forces the per-field plan (the
     # record-vs-table decision then happens at assembly time via
     # _maybe_table — same result, unboundedly many jobs on wide docs)
     unpivot_tables: bool = True
+    # numeric-timestamp heuristic window (reference analyzer.py:742-770)
     epoch: str = "unix"             # unix | excel | custom
     epoch_base: Optional[_dt.datetime] = None   # base for epoch='custom'
     scale: float = 1.0              # units -> seconds multiplier
     min_timestamp: Optional[_dt.datetime] = None   # default: now - 20y
     max_timestamp: Optional[_dt.datetime] = None   # default: now + 10y
+
+
+_TOP_K = 3                  # top-k / bottom-k frequency sample size
+_MAX_PATTERN_LEN = 64       # induce char patterns up to this width
+# KLL-doubles sketch parameter for the mergeable quantile summary
+# carried in Stats.qsketches (k=200 -> ~1.65% worst-case rank error,
+# ~3 KB serialized); sketch-mode quartiles read from the same sketch,
+# so merge_profiles folds the very numbers shown
+_KLL_K = 200
+# target relative standard error of the DataSketches HLL distinct
+# estimate in sketch mode (sets its lgK, see _hll_lg_k). Tight (0.5%)
+# because the uniqueness flag is derived from it: a loose 5% sketch
+# can't distinguish "unique" from "2% duplicated" at all. ~32 KB of
+# registers per column sketch — still negligible against executor
+# memory.
+_DISTINCT_RSD = 0.005
 
 
 # ---------------------------------------------------------------------------
@@ -380,7 +366,7 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
             # NULL, and distinct counts must ignore nulls.
             hc = F.when(c.isNotNull(), F.xxhash64(c))
         exprs = [F.hll_sketch_estimate(
-            F.hll_sketch_agg(hc, F.lit(_hll_lg_k(cfg.distinct_rsd))))
+            F.hll_sketch_agg(hc, F.lit(_hll_lg_k(_DISTINCT_RSD))))
             .alias(f"{k}__distinct")]
 
     dt = leaf.dtype
@@ -393,7 +379,7 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
         if cfg.exact:
             exprs.append(F.percentile(qc, F.lit([0.25, 0.5, 0.75]))
                          .alias(f"{k}__q"))
-        elif cfg.kll_k:
+        else:
             # ONE quantile aggregate per leaf: the displayed quartiles
             # read from the same mergeable KLL sketch that
             # merge_profiles folds (Spark collapses the semantically
@@ -402,8 +388,7 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
             # same imperative work twice. KLL k=200 carries ~1.65%
             # rank error, the sketch's documented accuracy for both
             # the single-shard and the shard-fold path.
-            sk = F.kll_sketch_agg_double(qc.cast("double"),
-                                         F.lit(cfg.kll_k))
+            sk = F.kll_sketch_agg_double(qc.cast("double"), F.lit(_KLL_K))
             # the count() gate keeps an all-null column from calling
             # get_quantile on an empty sketch (which raises); the
             # CaseWhen branch is lazy, so the result stays NULL like
@@ -413,10 +398,6 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
                 F.kll_sketch_get_quantile_double(
                     sk, F.lit([0.25, 0.5, 0.75]))).alias(f"{k}__q"))
             exprs.append(sk.alias(f"{k}__qsk"))
-        else:
-            exprs.append(F.percentile_approx(
-                qc, F.lit([0.25, 0.5, 0.75]),
-                F.lit(cfg.quantile_accuracy)).alias(f"{k}__q"))
     return exprs
 
 
@@ -489,7 +470,7 @@ def _classify_leaf(leaf: _Leaf, row: Dict, cfg: AnalyzerConfig,
         min=row.get(f"{k}__min"), max=row.get(f"{k}__max"),
         unique=bool(distinct == card) if cfg.exact else
         bool(distinct
-             and distinct >= (1.0 - 3 * cfg.distinct_rsd) * card),
+             and distinct >= (1.0 - 3 * _DISTINCT_RSD) * card),
     )
     q = row.get(f"{k}__q")
     if q is not None:
@@ -574,7 +555,7 @@ def _numeric_stats(row: Dict, k: str, card: int, typ) -> Stats:
     try:
         lo = typ(lo) if lo is not None else None
         hi = typ(hi) if hi is not None else None
-    except (TypeError, ValueError):
+    except (TypeError, ValueError, OverflowError):
         lo = hi = None
     return Stats(card=card, min=lo, max=hi)
 
@@ -661,15 +642,14 @@ def _counted_values(ctx: _Context, keys: Dict[str, _Leaf]) -> DataFrame:
         F.count("*").alias("n"))
 
 
-def _topk_query(counted: DataFrame, keys: Dict[str, _Leaf],
-                cfg: AnalyzerConfig) -> DataFrame:
+def _topk_query(counted: DataFrame, keys: Dict[str, _Leaf]) -> DataFrame:
     """Top-k AND bottom-k values by count of every leaf in ``keys``
     (the reference's sample display shows the 3 most and 3 least
     frequent values, types.py:142-163) as ``(side, k, v, n)`` rows.
-    Each side is its own single-window ``row_number() <= top_k``
+    Each side is its own single-window ``row_number() <= _TOP_K``
     query: a lone rank filter lets Spark plan a partial
     WindowGroupLimit below the exchange, so each map task ships at
-    most ``top_k`` rows per leaf and side. One filter over two windows
+    most ``_TOP_K`` rows per leaf and side. One filter over two windows
     (``rt <= k OR rb <= k``) cannot be limited that way."""
     from pyspark.sql.window import Window
 
@@ -680,13 +660,12 @@ def _topk_query(counted: DataFrame, keys: Dict[str, _Leaf],
         w = Window.partitionBy("k").orderBy(*order)
         sides.append(counted
                      .withColumn("r", F.row_number().over(w))
-                     .where(F.col("r") <= cfg.top_k)
+                     .where(F.col("r") <= _TOP_K)
                      .select(F.lit(side).alias("side"), "k", "v", "n"))
     return sides[0].unionByName(sides[1])
 
 
-def _collect_topk(counted: DataFrame, keys: Dict[str, _Leaf],
-                  cfg: AnalyzerConfig
+def _collect_topk(counted: DataFrame, keys: Dict[str, _Leaf]
                   ) -> Tuple[Dict[str, List[Tuple[str, int]]],
                              Dict[str, List[Tuple[str, int]]]]:
     """ONE job for all sampled leaves of a context: top-k and bottom-k
@@ -694,7 +673,7 @@ def _collect_topk(counted: DataFrame, keys: Dict[str, _Leaf],
     ``Counter.most_common()``)."""
     out: Dict[str, List[Tuple[str, int]]] = {}
     bot: Dict[str, List[Tuple[str, int]]] = {}
-    for r in _topk_query(counted, keys, cfg).collect():
+    for r in _topk_query(counted, keys).collect():
         side = out if r["side"] == "top" else bot
         side.setdefault(r["k"], []).append((r["v"], r["n"]))
     for v in (*out.values(), *bot.values()):
@@ -765,8 +744,7 @@ _SHARED_RELATION_MIN = 100_000
 def _relation_leaves(ctx: _Context, row: Dict, cfg: AnalyzerConfig
                      ) -> Tuple[Dict[str, _Leaf], Dict[str, _Leaf], bool]:
     """``(sampled, relation, shared)`` for a context after its phase
-    A: the leaves worth a top-k sample (collected unless
-    ``collect_samples`` is off); the leaves of its value-count
+    A: the leaves worth a top-k sample; the leaves of its value-count
     relation — the sampled ones plus, in exact mode, every string
     leaf (for its lexicographic quartiles); and whether the relation
     is big enough to share. A shared relation is persisted and also
@@ -799,15 +777,14 @@ def _relation_leaves(ctx: _Context, row: Dict, cfg: AnalyzerConfig
     return sampled, relation, bool(relation) and values >= _SHARED_RELATION_MIN
 
 
-def _fixed_width(strings: Dict[str, _Leaf], row: Dict,
-                 cfg: AnalyzerConfig) -> Dict[str, _Leaf]:
+def _fixed_width(strings: Dict[str, _Leaf], row: Dict) -> Dict[str, _Leaf]:
     """The string leaves whose phase-A lengths are one width in
-    ``(0, max_pattern_len]`` — the pattern-induction candidates."""
+    ``(0, _MAX_PATTERN_LEN]`` — the pattern-induction candidates."""
     out = {}
     for key, leaf in strings.items():
         lmin = row.get(f"{key}__lmin")
         if (lmin and lmin == row.get(f"{key}__lmax")
-                and lmin <= cfg.max_pattern_len):
+                and lmin <= _MAX_PATTERN_LEN):
             out[key] = leaf
     return out
 
@@ -1242,8 +1219,8 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
             def relation_landed(ctx, sampled, keys, row, shared, rel):
                 strings = {k: lf for k, lf in keys.items()
                            if isinstance(lf.dtype, T.StringType)}
-                if sampled and cfg.collect_samples:
-                    submit(topk_landed, _collect_topk, rel, sampled, cfg)
+                if sampled:
+                    submit(topk_landed, _collect_topk, rel, sampled)
                 if strings and cfg.exact:
                     submit(str_q.update, _collect_string_quartiles,
                            rel, strings)
@@ -1252,8 +1229,8 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
                 if strings:
                     submit(rows[ctx.id].update, _phase_b_counted,
                            rel, list(strings.values()), row, cfg)
-                fixed = _fixed_width(strings, row, cfg)
-                if fixed and cfg.induce_patterns:
+                fixed = _fixed_width(strings, row)
+                if fixed:
                     submit(patterns.update, _collect_patterns,
                            rel.where(F.col("k").isin(list(fixed))))
 
@@ -1338,14 +1315,11 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
             node = leaf_nodes.get(leaf.path)
             if (isinstance(node, StrT) and not isinstance(node, URLT)
                     and node.lengths.fixed and node.lengths.min
-                    and 0 < node.lengths.min <= cfg.max_pattern_len):
+                    and 0 < node.lengths.min <= _MAX_PATTERN_LEN):
                 fixed[leaf.key] = leaf
         stream = {k: lf for k, lf in fixed.items() if k not in in_relation}
-        if stream and cfg.induce_patterns:
-            src = ctx.df
-            if cfg.pattern_sample:
-                src = src.sample(cfg.pattern_sample, seed=42)
-            patterns.update(_collect_patterns(_unpivot(src, stream)))
+        if stream:
+            patterns.update(_collect_patterns(_unpivot(ctx.df, stream)))
         for key, leaf in fixed.items():
             if key in patterns:
                 leaf_nodes[leaf.path] = replace(
@@ -1498,7 +1472,7 @@ def classify_values(values: Sequence[str], cfg: AnalyzerConfig) -> Node:
 
     lens = {len(v) for v in values}
     pattern = None
-    if len(lens) == 1 and 0 < next(iter(lens)) <= cfg.max_pattern_len:
+    if len(lens) == 1 and 0 < next(iter(lens)) <= _MAX_PATTERN_LEN:
         width = next(iter(lens))
         pos_sets = [(i, {v[i] for v in values}) for i in range(width)]
         pattern = tuple(induce_pattern(pos_sets))

@@ -16,7 +16,7 @@ Conventions that make the cross-engine hash compare deterministic:
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Optional, Tuple
+from typing import Any, Callable, Dict, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,10 +33,34 @@ QuerySpec = Tuple[Callable[[SparkSession, str], DataFrame], Optional[str]]
 
 REGISTRY: Dict[str, QuerySpec] = {}
 
+# bench.py's headline suite: label -> ``fn(spark, sf_dir)``, in
+# declaration order. An entry returns a DataFrame (bench times its
+# ``count()``) or a Profile (bench times the profile itself).
+BENCH: Dict[str, Callable[[SparkSession, str], Any]] = {}
 
-def register(name: str, oracle: Optional[str] = None):
+
+def register(name: str, oracle: Optional[str] = None,
+             bench: Optional[str] = None):
+    """Register query ``name`` with its DuckDB ``oracle``; ``bench``
+    also puts it in the headline suite under that label."""
     def deco(fn):
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} registered twice")
+        if bench is not None:
+            bench_only(bench)(fn)
         REGISTRY[name] = (fn, oracle)
+        return fn
+    return deco
+
+
+def bench_only(label: str):
+    """Put ``fn`` in the headline suite under ``label`` without
+    registering it as a query: the scale paths whose registered twin
+    pins a bounded oracle slice, and the profiles."""
+    def deco(fn):
+        if label in BENCH:
+            raise ValueError(f"bench label {label!r} declared twice")
+        BENCH[label] = fn
         return fn
     return deco
 
@@ -87,7 +111,7 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
-""")
+""", bench="q1")
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape. Scale: single hash-agg on a 6-value grouping
     key — map-side partial agg reduces the shuffle to ~nothing."""
@@ -115,7 +139,7 @@ WHERE c.c_mktsegment = 'BUILDING'
 GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
 ORDER BY revenue DESC, o_key
 LIMIT 10
-""")
+""", bench="q3")
 def q3_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape. Scale: customer is the small side -> broadcast;
     orders⋈lineitem shuffles on orderkey only. Filter pushed to scan."""
@@ -145,7 +169,7 @@ FROM region r JOIN nation n   ON n.n_regionkey = r.r_regionkey
 WHERE r.r_name = 'ASIA'
 GROUP BY n.n_name
 ORDER BY revenue DESC, n_name
-""")
+""", bench="q5")
 def q5_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape. Scale: region/nation/supplier are dimension
     tables -> all broadcast; the fact table shuffles once for the
@@ -175,7 +199,7 @@ SELECT * FROM (
   FROM orders)
 WHERE rnk <= 3
 ORDER BY o_custkey, rnk
-""")
+""", bench="window_topk")
 def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window top-k per group; one shuffle on the partition key."""
     o = _t(spark, sf_dir, "orders")
@@ -230,6 +254,21 @@ def user_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # profiler surface (the structa-semantics operators, survey §2.3-2.4)
 # ===========================================================================
+
+@bench_only("profile_lineitem")
+def profile_lineitem(spark: SparkSession, sf_dir: str):
+    """The structure-inference engine itself: a sketch-mode profile
+    of the lineitem table."""
+    from .analyzer import analyze
+    return analyze(_t(spark, sf_dir, "lineitem"))
+
+
+@bench_only("profile_documents")
+def profile_documents(spark: SparkSession, sf_dir: str):
+    """A sketch-mode profile of the long-text documents table."""
+    from .analyzer import analyze
+    return analyze(_t(spark, sf_dir, "documents"))
+
 
 _LI_NUM_COLS = ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
                 "l_quantity", "l_extendedprice", "l_discount", "l_tax"]
@@ -700,6 +739,13 @@ def simhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("doc_id"))
 
 
+@bench_only("simhash_pairs")
+def simhash_pairs_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scale path: simhash bucketed near-duplicate pairs over the
+    whole documents table."""
+    return dedup.simhash_near_duplicates(_t(spark, sf_dir, "documents"))
+
+
 # ===========================================================================
 # text analysis
 # ===========================================================================
@@ -722,7 +768,7 @@ SELECT lang, count(*) AS n_docs,
        round(avg(n_tokens), 4) AS avg_tokens,
        round(avg(n_chars_m), 4) AS avg_chars
 FROM d GROUP BY lang ORDER BY lang
-""")
+""", bench="token_stats")
 def token_stats_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting over the corpus — a single scan + small-key agg."""
     d = _t(spark, sf_dir, "documents")
@@ -887,7 +933,7 @@ pred AS (
 )
 SELECT lang, pred_label, CAST(count(*) AS BIGINT) AS n_docs
 FROM pred WHERE rn = 1 GROUP BY 1, 2 ORDER BY 1, 2
-""")
+""", bench="nb_confusion")
 def nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A LEARNED document classifier, values-checked end to end:
     multinomial Naive Bayes trained on the corpus's own (lang, text)
@@ -998,7 +1044,7 @@ SELECT w.doc_id,
        CAST(coalesce(a.max_dup, 0) AS INT) AS max_dup_span,
        coalesce(a.max_dup, 0) >= 16 AS drop_doc
 FROM words w LEFT JOIN agg a USING (doc_id) ORDER BY w.doc_id
-""")
+""", bench="span_ladder")
 def longest_dup_span_report(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Variable-length exact substring dedup (the longest-duplicate
@@ -1064,7 +1110,7 @@ SELECT b.doc_id, CAST(len(b.wt) AS BIGINT) AS n_tokens_before,
        COALESCE(r.n_tokens_after, 0) AS n_tokens_after,
        COALESCE(r.text_dedup, '') AS text_dedup
 FROM base b LEFT JOIN reb r USING (doc_id) ORDER BY b.doc_id
-""")
+""", bench="span_dedup")
 def span_dedup_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring dedup APPLIED, values-checked down to the rebuilt
     strings: every duplicated word 5-gram span keeps only its global
@@ -1154,6 +1200,15 @@ def winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (dedup.winnow_overlap_pairs(
                 d, k=8, w=4, min_shared=8, max_postings=40)
             .orderBy("doc_a", "doc_b"))
+
+
+@bench_only("winnow_overlap")
+def winnow_overlap_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scale path: winnowing overlap over the whole corpus with the
+    stop-gram posting cap engaged (the registered query pins a
+    150-document oracle slice)."""
+    return dedup.winnow_overlap_pairs(
+        _t(spark, sf_dir, "documents"), min_shared=8, max_postings=100)
 
 
 @register("reflm_nll", oracle="""
@@ -1286,7 +1341,7 @@ SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
        min(avg_nll) AS bucket_min_nll,
        max(avg_nll) AS bucket_max_nll
 FROM b GROUP BY 1, 2 ORDER BY lang, bucket
-""")
+""", bench="ccnet_buckets")
 def ccnet_perplexity_buckets(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """CCNet's head/middle/tail perplexity bucketing (Wenzek et al.
@@ -1375,7 +1430,7 @@ JOIN ctx USING (w1)
 JOIN pred USING (w2)
 CROSS JOIN b
 GROUP BY 1 ORDER BY 1
-""")
+""", bench="kn_bigram_nll")
 def kn_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated Kneser-Ney bigram perplexity (the KenLM
     smoothing CCNet's filter runs), values-checked model component
@@ -1407,7 +1462,7 @@ SELECT gt.grp AS source, CAST(ng.ngrp AS BIGINT) AS n_tokens,
                     + (1 - sum(ct.ctot / tot.n))), 6) AS jsd_bits
 FROM gt JOIN ct USING (token) JOIN ng USING (grp) CROSS JOIN tot
 GROUP BY 1, ng.ngrp ORDER BY 1
-""")
+""", bench="token_jsd")
 def source_token_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source Jensen-Shannon divergence (bits) between the
     source's unigram token distribution and the whole corpus's —
@@ -1528,7 +1583,7 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
        round(avg(dup_frac), 4) AS avg_span_dup,
        CAST(sum(mismatch) AS BIGINT) AS n_lang_mismatch
 FROM per GROUP BY source ORDER BY source
-""")
+""", bench="curation_report")
 def source_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed per-source curation dashboard a data team reads
     before admitting a crawl source: document volume, average
@@ -1617,7 +1672,7 @@ WITH scored AS (
   FROM scored)
 SELECT query_id, vec_id, cosine, rank FROM ranked WHERE rank <= 3
 ORDER BY query_id, rank
-""")
+""", bench="cosine_topk")
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-3 for 5 query vectors. Plan:
     broadcast(queries) x corpus -> window top-k; corpus never
@@ -1642,7 +1697,7 @@ WITH scored AS (
   FROM (SELECT * FROM scored WHERE cosine < 0.95))
 SELECT query_id, vec_id, label, cosine, rank
 FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
-""")
+""", bench="hard_negatives")
 def hard_negative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining for 8 anchors: the top-5 most similar
     OTHER-label vectors below the 0.95 near-dup ceiling — the
@@ -1676,6 +1731,14 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("id_a", "id_b"))
 
 
+@bench_only("neardup_lsh")
+def neardup_lsh_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scale path: SRP-bucketed embedding near-duplicates (cosine >=
+    0.9) over the whole embeddings table."""
+    return similarity.embedding_near_duplicates(
+        _t(spark, sf_dir, "embeddings"), threshold=0.9, use_lsh=True)
+
+
 # ===========================================================================
 # temporal operators: as-of join, interval join, tumbling windows,
 # sessionization — absent from the reference (survey §2.7) but required
@@ -1689,7 +1752,7 @@ FROM (SELECT * FROM events WHERE event_type = 'purchase') p
 ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
   ON p.user_id = c.user_id AND c.ts <= p.ts
 ORDER BY purchase_id
-""")
+""", bench="asof_join")
 def asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase matched to the latest click at or
     before it (same user). Spark-first plan: NOT an inequality join
@@ -1753,7 +1816,7 @@ SELECT date_trunc('day', ts)          AS window_start,
 FROM events
 GROUP BY 1, 2
 ORDER BY 1, 2
-""")
+""", bench="windowed_stats")
 def windowed_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-day windows over the event stream (batch twin of
     streaming.windowed_event_stats). ``F.window`` aligns to the epoch,
@@ -1846,7 +1909,7 @@ SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
 FROM numbered
 GROUP BY user_id, session_id
 ORDER BY user_id, session_start
-""")
+""", bench="sessionize")
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min timeout) in batch — the SQL-
     checkable twin of streaming.sessionize. One shuffle on user_id;
@@ -1876,7 +1939,7 @@ FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
               JOIN nation n   ON n.n_nationkey = c.c_nationkey
 GROUP BY ROLLUP (n.n_name, year(o.o_orderdate))
 ORDER BY nation, o_year
-""")
+""", bench="rollup")
 def rollup_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup (nation, year) -> nation -> grand total.
     Dimension joins broadcast; the rollup is one shuffle with
@@ -2019,7 +2082,7 @@ SELECT event_type,
 FROM events
 GROUP BY event_type
 ORDER BY event_type
-""")
+""", bench="json_props")
 def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured column: the JSON-string props field is parsed
     with a sample-inferred schema (operators/semistructured.py) and
@@ -2154,7 +2217,7 @@ SELECT source, doc_id, weight, sample_score,
        CAST(sample_rank AS INTEGER) AS sample_rank
 FROM r WHERE sample_rank <= 3
 ORDER BY source, sample_rank
-""")
+""", bench="weighted_sample")
 def weighted_sample_by_source(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Weighted sampling without replacement, values-checked:
@@ -2193,7 +2256,7 @@ SELECT doc_id, length, bucket_len,
        CAST(floor(rn / cap) AS BIGINT) AS batch_idx,
        rn % cap AS pos_in_batch
 FROM r ORDER BY doc_id
-""")
+""", bench="length_buckets")
 def length_bucket_batches(spark: SparkSession,
                           sf_dir: str) -> DataFrame:
     """Dynamic-batching coordinates, values-checked: bucket every
@@ -2228,7 +2291,7 @@ SELECT doc_id,
                      AND regexp_matches(w, '[аеорсхуіѕјοαν]')))
             AS BIGINT) AS n_spoofed_words
 FROM s ORDER BY doc_id
-""")
+""", bench="confusable")
 def confusable_spoof_screen(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Homoglyph-spoofing screen, values-checked by FULL replay (no
@@ -2262,7 +2325,7 @@ UNION ALL SELECT doc_id, 0, 1, 0, FALSE,
 UNION ALL SELECT doc_id, 0, 1, 1, FALSE,
        CAST(doc_id AS VARCHAR) FROM documents
 ORDER BY doc_id, table_idx, row_idx, col_idx
-""")
+""", bench="html_tables")
 def html_table_extract(spark: SparkSession,
                        sf_dir: str) -> DataFrame:
     """HTML table ingestion, values-checked: each document's text
@@ -2530,7 +2593,7 @@ SELECT list_id,
        CAST(sum(CASE WHEN rn <= 25 THEN 1 ELSE 0 END) AS BIGINT)
            AS n_kept
 FROM ranked GROUP BY 1 ORDER BY 1
-""")
+""", bench="diverse_sample")
 def diverse_sample_by_cluster(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Diversity-capped sampling, values-checked: assign every
@@ -2645,7 +2708,7 @@ SELECT b.doc_id, b.n_tokens, b.distinct_token_frac,
        ELSE 0.0 END AS top_bigram_frac
 FROM base b LEFT JOIN top t USING (doc_id)
 ORDER BY b.doc_id
-""")
+""", bench="repetition")
 def repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filters per document: type/token ratio
     (pure expression, no shuffle) and most-frequent-bigram coverage
@@ -2691,7 +2754,7 @@ SELECT doc_id,
        CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT)
            AS n_dropped
 FROM ranked GROUP BY doc_id ORDER BY doc_id
-""")
+""", bench="passage_dedup")
 def passage_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Passage-level corpus dedup, summarized per document: chunk
     every document into 32-token passages (shuffle-free posexplode),
@@ -2869,7 +2932,7 @@ WITH cw AS (
   FROM scored)
 SELECT query_id, vec_id, adc_score, rank
 FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
-""")
+""", bench="pq_adc_topk")
 def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric-distance PQ search, value-checked: top-5 by ADC
     dot-product score for 3 query vectors. With dot as the metric the
@@ -3081,7 +3144,7 @@ SELECT x_id, y_id, cosine, margin FROM (
                                ORDER BY margin DESC, y_id) AS r
   FROM m) WHERE r = 1
 ORDER BY x_id
-""")
+""", bench="bitext_margin")
 def bitext_margin_pairs(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """Margin-based bitext mining (the LASER/CCMatrix ratio-margin
@@ -3154,7 +3217,7 @@ SELECT x.query_id,
 FROM exact x LEFT JOIN trunc t
   ON t.query_id = x.query_id AND t.vec_id = x.vec_id
 GROUP BY 1 ORDER BY 1
-""")
+""", bench="matryoshka")
 def matryoshka_recall_at_k(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     """MEASURED recall@5 of MATRYOSHKA-TRUNCATED search (first 16 of
@@ -3321,7 +3384,7 @@ WHERE round(s.q, 4) >= 0.5 AND r.distinct_token_frac >= 0.3
   AND s.n_tokens BETWEEN 10 AND 5000
   AND h.host NOT IN ('h3.com', 'h8.com')
 ORDER BY s.doc_id
-""")
+""", bench="training_manifest")
 def training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pipeline, composed end to end: URL -> host blocklist gate
     (the RefinedWeb-style source-reputation stage, applied FIRST so
@@ -3448,7 +3511,7 @@ WITH toks AS (
   FROM scored)
 SELECT doc_id, token, tfidf, rank
 FROM ranked WHERE rank <= 3 ORDER BY doc_id, rank
-""")
+""", bench="tfidf")
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 characteristic terms per document by tf-idf — keyword
     extraction, value-checked. The doc id keys the tf aggregation (no
@@ -3531,7 +3594,7 @@ ranked AS (
   FROM totals)
 SELECT query_id, doc_id, score_micros, rank
 FROM ranked WHERE rank <= 5 ORDER BY query_id, rank
-""")
+""", bench="bm25_topk")
 def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-5 retrieval for four keyword queries — the
     lexical-search rung of the retrieval pillar (the reference has no
@@ -3694,7 +3757,7 @@ SELECT doc_id, n_lines, max_line_len, avg_line_len,
        (max_line_len <= 120 AND avg_line_len <= 80.0
         AND alnum_frac >= 0.5) AS code_keep
 FROM m ORDER BY doc_id
-""")
+""", bench="code_quality")
 def code_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """StarCoder/BigCode-style code-file quality screen,
     values-checked: each document becomes a three-line synthetic
@@ -3751,7 +3814,7 @@ SELECT doc_id, CAST(len(cands) AS INT) AS n_digit_runs,
        CAST(len(valid) AS INT) AS n_luhn_valid,
        len(valid) > 0 AS has_card
 FROM v ORDER BY doc_id
-""")
+""", bench="pii_cards")
 def pii_card_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Luhn-validated payment-card scan, values-checked: each
     document gets a synthetic 16-digit run whose check digit is
@@ -3775,7 +3838,7 @@ def pii_card_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("quality_classifier_scores",
-          oracle=_logistic_sql(12, 256, 2.0))
+          oracle=_logistic_sql(12, 256, 2.0), bench="quality_classifier")
 def quality_classifier_scores(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """The trained discriminative quality filter (DCLM/fastText
@@ -3818,7 +3881,7 @@ WITH ev AS (
 SELECT doc_id, CAST(count(*) AS BIGINT) AS n_hits
 FROM co JOIN ev USING (s)
 GROUP BY doc_id ORDER BY doc_id
-""")
+""", bench="decontaminate")
 def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Test-set decontamination: corpus documents sharing a word
     3-shingle with the held-out eval slice (doc_id < 20 stands in
@@ -3882,7 +3945,7 @@ SELECT d.doc_id,
        coalesce(a.contaminated, FALSE) AS contaminated
 FROM (SELECT doc_id FROM documents WHERE doc_id >= 20) d
 LEFT JOIN agg a USING (doc_id) ORDER BY d.doc_id
-""")
+""", bench="bloom_decontam")
 def bloom_contamination_flags(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Bloom-filter decontamination gate (the Dolma "BFF" shape,
@@ -4080,7 +4143,7 @@ SELECT doc_id,
        '[\\x00-\\x08\\x0b\\x0c\\x0e-\\x1f]', '', 'g')) = 0)
       AS encoding_ok
 FROM aug ORDER BY doc_id
-""")
+""", bench="encoding_screen")
 def encoding_quality_report(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Encoding-health + script-mix screen, values-checked on
@@ -4139,7 +4202,7 @@ FROM inter i
 JOIN counts ca ON ca.source = i.source_a
 JOIN counts cb ON cb.source = i.source_b
 ORDER BY source_a, source_b
-""")
+""", bench="vocab_overlap")
 def source_vocab_overlap(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
     """Pairwise vocabulary-set Jaccard between sources — the
@@ -4314,7 +4377,7 @@ SELECT doc_id,
        len(regexp_extract_all(array_to_string(kept, chr(10)),
                               '[.!?]')) >= 3 AS page_keep
 FROM ln ORDER BY doc_id
-""")
+""", bench="c4_line_clean")
 def c4_line_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4's LINE-level rules (Raffel et al. 2020 §2.2's other half),
     values-checked down to the rebuilt page text: the corpus has no
@@ -4431,7 +4494,7 @@ SELECT doc_id, n_words, mean_word_len, symbol_ratio,
         AND alpha_word_frac >= 0.8
         AND stopword_hits >= 2) AS gopher_quality_keep
 FROM m ORDER BY doc_id
-""")
+""", bench="gopher_quality")
 def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher's page-quality rule battery (Rae et al. 2021 Table A1,
     the non-repetition half), values-checked rule by rule on derived
@@ -4540,7 +4603,7 @@ SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
        min(q) AS min_q, max(q) AS max_q
 FROM b GROUP BY bucket ORDER BY bucket
 """.replace("{Q_F}", _quality_f_sql('text,'))
-   .replace("{Q_Q}", _QUALITY_Q_SQL))
+   .replace("{Q_Q}", _QUALITY_Q_SQL), bench="quality_calib")
 def quality_gopher_calibration(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Cross-filter threshold calibration: the composite C4-ish
@@ -4662,7 +4725,7 @@ SELECT doc_id, dup_line_frac, dup_line_char_frac,
         AND dup_line_char_frac <= 0.20
         AND dup_para_char_frac <= 0.20) AS gopher_keep
 FROM fr ORDER BY doc_id
-""")
+""", bench="gopher_dup")
 def gopher_dup_fractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher's duplicate-line / duplicate-paragraph repetition
     fractions (Rae et al. 2021, Table A1), values-checked on derived
@@ -4859,7 +4922,7 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                       AND dup_keep THEN 1.0 ELSE 0.0 END), 4)
            AS all_keep_rate
 FROM per GROUP BY source ORDER BY source
-""")
+""", bench="filter_report")
 def corpus_filter_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ASSEMBLED curation verdict: one derived page per document
     runs the entire quality battery — C4 page rules, C4 line rules,
@@ -4955,7 +5018,7 @@ SELECT d.doc_id, CAST(n.n AS INT) AS n,
 FROM t d CROSS JOIN (VALUES (2), (3), (4)) n(n)
 LEFT JOIN top t ON t.doc_id = d.doc_id AND t.n = n.n
 ORDER BY d.doc_id, n.n
-""")
+""", bench="ngram_profile")
 def repetition_ngram_profile(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """Gopher's top-n-gram repetition filter at n = 2, 3, 4 in one
@@ -4987,7 +5050,7 @@ SELECT doc_id, eval_id,
 FROM inter JOIN evs USING (eval_id)
 WHERE n_inter / (n_co + n_ev - n_inter) >= 0.05
 ORDER BY doc_id, eval_id
-""")
+""", bench="fuzzy_decontam")
 def fuzzy_contamination_pairs(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """Paraphrase-level decontamination, values-checked: per (corpus
@@ -5055,7 +5118,7 @@ SELECT f.source, CAST(count(*) AS BIGINT) AS n_docs,
             AS BIGINT) AS n_fuzzy_contaminated
 FROM flags f LEFT JOIN contam c USING (doc_id)
 GROUP BY f.source ORDER BY f.source
-""")
+""", bench="curation_v2")
 def source_curation_report_v2(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     """The round-6 additions composed into the per-source dashboard:
@@ -5146,7 +5209,7 @@ SELECT b.doc_id, CAST(len(b.wt) AS BIGINT) AS n_tokens_before,
 FROM base b
 LEFT JOIN reb r USING (doc_id) LEFT JOIN nh h USING (doc_id)
 ORDER BY b.doc_id
-""")
+""", bench="scrub_spans")
 def scrub_eval_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURGICAL decontamination, values-checked down to the rebuilt
     strings: every corpus word 5-gram span that also occurs in the
@@ -5221,7 +5284,7 @@ SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_tokens,
        round(sum(tf * -ln(c / n)) / sum(tf), 4) AS avg_nll
 FROM tf JOIN cnt USING (token) CROSS JOIN tot
 GROUP BY doc_id ORDER BY doc_id
-""")
+""", bench="unigram_nll")
 def unigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document average negative log-likelihood under the
     corpus's own unigram LM — the cheap perplexity proxy for quality
@@ -5284,7 +5347,7 @@ SELECT doc_id, n_tokens, n_hits,
        round(n_hits / CAST(n_tokens AS DOUBLE), 6) <= 0.02
            AS blocklist_keep
 FROM agg ORDER BY doc_id
-""")
+""", bench="blocklist")
 def blocklist_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Safety/NSFW lexicon gate, values-checked: per-document hit
     counts against a blocklist (two terms present in the synthetic
@@ -5322,7 +5385,7 @@ SELECT doc_id, CAST(n AS BIGINT) AS n_chars,
             THEN CAST(n - greatest(s1, s2) AS BIGINT)
             END AS suffix_len
 FROM base ORDER BY doc_id
-""")
+""", bench="fim_coords")
 def fim_split_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fill-in-the-middle training-transform coordinates,
     values-checked: the per-document FIM draw (rate 0.5) and both
@@ -5373,7 +5436,7 @@ WITH toks AS (
 SELECT source, n_tokens, mean_nll, excess_nll,
        round(raw / sum(raw) OVER (), 6) AS doremi_weight
 FROM e ORDER BY source
-""")
+""", bench="doremi")
 def doremi_domain_weights(spark: SparkSession,
                           sf_dir: str) -> DataFrame:
     """DoReMi one-step domain reweighting, values-checked end to
@@ -5452,7 +5515,7 @@ SELECT cluster,
             AS BIGINT) AS n_dropped
 FROM a1 LEFT JOIN dropped d USING (vec_id)
 GROUP BY cluster ORDER BY cluster
-""")
+""", bench="semantic_dedup")
 def semantic_dedup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): one Lloyd's refinement from the
     first-4-vectors seed (the deterministic k-means convention shared
@@ -5598,7 +5661,7 @@ FROM pairc pc
 JOIN symc lc ON lc.symbol = pc.left_sym
 JOIN symc rc ON rc.symbol = pc.right_sym
 ORDER BY score DESC, left_sym, right_sym LIMIT 20
-""")
+""", bench="wordpiece_step")
 def wordpiece_merge_candidates(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Top-20 WordPiece merge candidates: the argmax table of one
@@ -5715,7 +5778,7 @@ _UNIGRAM_TRAIN_CTES = """toks AS (
 WITH RECURSIVE {_UNIGRAM_TRAIN_CTES}
 SELECT s AS piece, n_uses, logp
 FROM model ORDER BY n_uses DESC, piece
-""")
+""", bench="unigram_vocab")
 def unigram_tokenizer_vocab(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Unigram-LM (SentencePiece-style) tokenizer vocabulary trained
@@ -5809,7 +5872,7 @@ SELECT nd.lang, CAST(nd.n_docs AS BIGINT) AS n_docs,
              THEN CAST(per.n_unk AS DOUBLE) / per.n_words
              ELSE 0.0 END, 4) AS unk_rate
 FROM nd LEFT JOIN per USING (lang) ORDER BY nd.lang
-""")
+""", bench="unigram_encode")
 def unigram_encode_fertility(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     """The trained unigram tokenizer APPLIED at corpus scale:
@@ -5956,7 +6019,7 @@ SELECT source,
        CAST(count(*) AS BIGINT) AS n_in,
        CAST(sum(copies) AS BIGINT) AS n_out
 FROM c GROUP BY 1 ORDER BY source
-""")
+""", bench="mixed_resample")
 def mixed_resample_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The mixture pipeline realized end-to-end: alpha=0.5 weights ->
     per-source rates -> deterministic replication/downsampling
@@ -6054,7 +6117,7 @@ SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
        CAST(sz AS BIGINT) AS n_bytes
 FROM cum WHERE frame_idx % 5 = 0
 ORDER BY media_id, frame_idx
-""")
+""", bench="video_frames")
 def video_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame index + every-5th-frame sampling through the REAL
     ISO-BMFF sample-table walk — the byte-range selection step a
@@ -6359,6 +6422,14 @@ def lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_true long, n_candidates long, n_caught long, recall double")
 
 
+@bench_only("minhash_candidates")
+def minhash_candidates_scale(spark: SparkSession,
+                             sf_dir: str) -> DataFrame:
+    """Scale path: MinHash LSH near-duplicate candidate pairs over
+    the whole documents table."""
+    return dedup.minhash_candidates(_t(spark, sf_dir, "documents"))
+
+
 @register("split_counts_by_lang", oracle=f"""
 WITH s AS (
   SELECT lang,
@@ -6420,6 +6491,15 @@ def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id_a", "id_b"))
 
 
+@bench_only("containment")
+def containment_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Scale path: LSH candidates verified with array_intersect over
+    the whole documents table, never the quadratic oracle slice."""
+    d = _t(spark, sf_dir, "documents")
+    return dedup.containment_pairs(
+        d, threshold=0.5, candidates=dedup.minhash_candidates(d))
+
+
 @register("embedding_health_report", oracle="""
 WITH v AS (
   SELECT floor(sqrt(list_sum(list_transform(
@@ -6459,7 +6539,7 @@ SELECT s.n AS n_vectors, CAST(64 AS INT) AS dim,
                        * 1000000 + 0.5) / 1000000
             ELSE 0.0 END AS isotropy
 FROM s, mu
-""")
+""", bench="embed_health")
 def embedding_health_report(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Embedding-corpus health screen: norm band, zero-norm (failed
@@ -6556,7 +6636,7 @@ FROM (SELECT *, row_number() OVER (PARTITION BY query_id
           ORDER BY cosine DESC, vec_id) AS rank
       FROM rescored)
 WHERE rank <= 3 ORDER BY query_id, rank
-""")
+""", bench="int8_topk")
 def int8_topk_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage quantized retrieval, value-checked end to end:
     integer-dot shortlist (exact int64 — byte-replayable in any
@@ -6609,7 +6689,7 @@ SELECT query_id, vec_id, rrf_score, n_lists,
 FROM (SELECT *, row_number() OVER (PARTITION BY query_id
           ORDER BY rrf_score DESC, vec_id) AS rank FROM fused)
 WHERE rank <= 5 ORDER BY query_id, rank
-""")
+""", bench="hybrid_rrf")
 def hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via reciprocal-rank fusion: the exact float
     cosine top-10 and the int8 coarse top-10 fuse with 1/(60+rank)
@@ -6725,7 +6805,7 @@ jpg AS (
 SELECT * FROM png UNION ALL SELECT * FROM wav
 UNION ALL SELECT * FROM gif UNION ALL SELECT * FROM jpg
 ORDER BY media_id
-""")
+""", bench="decoded_media")
 def decoded_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL pixel/sample decode, values-checked end to end: build
     genuine PNG files (gradient pixels, row filters cycling through
@@ -6860,7 +6940,7 @@ bits AS (
 SELECT media_id,
        CAST(sum(v * (CAST(1 AS BIGINT) << b)) AS BIGINT) AS dhash
 FROM bits GROUP BY 1 ORDER BY 1
-""")
+""", bench="image_dhash")
 def image_dhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual image dHash, values-checked END TO END through the
     real codec path: generate gradient PNGs (same formula and ids as
@@ -7024,7 +7104,7 @@ SELECT n.media_id,
        CAST(n.k AS INT) AS n_buckets_used
 FROM n JOIN vsum USING (media_id) JOIN ent USING (media_id)
 ORDER BY n.media_id
-""")
+""", bench="image_entropy")
 def image_entropy_stats(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """Pixel-distribution quality screen, values-checked END TO END
@@ -7162,7 +7242,7 @@ def _mjpeg_cluster_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("video_dup_groups", oracle=_VIDEO_GROUPS_CTE + """
 SELECT media_id, group_id FROM grp ORDER BY media_id
-""")
+""", bench="video_dedup")
 def video_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end VIDEO dedup decision, values-checked through the
     full container x codec x graph composition: generate 4-member
@@ -7238,7 +7318,7 @@ SELECT media_id, CAST(frame_idx AS INT) AS frame_idx,
        CAST(hamming AS INT) AS hamming, hamming > 3 AS is_cut
 FROM lagd WHERE hamming IS NOT NULL
 ORDER BY media_id, frame_idx
-""")
+""", bench="video_scene_cuts")
 def video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shot-boundary detection through the REAL container x codec
     path: the shared 240-video MJPEG fixture decodes frame by frame
@@ -7446,7 +7526,7 @@ def _media_dedup_keep(spark: SparkSession, sf_dir: str,
 
 
 @register("image_dedup_keep", oracle=_media_keep_best_sql(
-    _IMAGE_GROUPS_CTE))
+    _IMAGE_GROUPS_CTE), bench="image_dedup_keep")
 def image_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image dedup TERMINATED in a keep/drop decision — the endpoint
     a curation pipeline actually ships: the image_dup_groups spine
@@ -7497,7 +7577,7 @@ bits AS (
 SELECT media_id,
        CAST(sum(v * (CAST(1 AS BIGINT) << b)) AS BIGINT) AS env_hash
 FROM bits GROUP BY 1 ORDER BY 1
-""")
+""", bench="audio_envhash")
 def audio_envelope_hashes(spark: SparkSession,
                           sf_dir: str) -> DataFrame:
     """Audio energy-envelope hash, values-checked END TO END through
@@ -7639,7 +7719,7 @@ FROM ids i
 LEFT JOIN tot t USING (media_id)
 LEFT JOIN roll r USING (media_id)
 ORDER BY media_id
-""")
+""", bench="audio_spectral")
 def audio_spectral_features(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Spectral centroid + rolloff, values-checked END TO END through
@@ -7686,7 +7766,7 @@ SELECT doc_id,
        CAST(8 * (1 + doc_id % 3) AS INT) AS width,
        CAST(8 AS INT) AS height
 FROM documents WHERE doc_id % 4 = 3 ORDER BY doc_id
-""")
+""", bench="jpeg_quality")
 def jpeg_quality_screen(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """No-decode JPEG compression-quality screen, values-checked:
@@ -7798,7 +7878,7 @@ SELECT i.media_id, CAST(i.n AS BIGINT) AS n_samples,
 FROM ids i LEFT JOIN mf ON mf.media_id = i.media_id
 GROUP BY i.media_id, i.n, i.m
 ORDER BY i.media_id
-""")
+""", bench="audio_mfcc")
 def audio_mfcc_features(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """MFCCs, values-checked END TO END through the real WAV
@@ -7870,7 +7950,7 @@ UNION ALL
 SELECT media_id, NULL, NULL, NULL, NULL
 FROM ids WHERE media_id % 50 = 0
 ORDER BY media_id, out_idx
-""")
+""", bench="audio_resample")
 def audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-rate conversion (8 kHz -> 6 kHz, the corpus-to-model
     normalization step), values-checked END TO END through the real
@@ -7961,7 +8041,7 @@ SELECT a.media_id, a.n_samples, a.peak, a.rms, a.clipped_frac,
        coalesce(r.max_silence_run, 0) AS max_silence_run
 FROM agg a LEFT JOIN runs r USING (media_id)
 ORDER BY a.media_id
-""")
+""", bench="audio_clipping")
 def audio_clipping_stats(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
     """Clipping / silence / RMS-level screen, values-checked END TO
@@ -8051,7 +8131,7 @@ SELECT media_id,
        floor(CAST(least((end_frame + 1) * 50, n) AS DOUBLE) / 8000
              * 1e6 + 0.5) / 1e6 AS end_s
 FROM segs ORDER BY media_id, seg_idx
-""")
+""", bench="audio_vad")
 def audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Energy-gated voice-activity segmentation, values-checked END
     TO END through the real WAV decoder — the pre-transcription step
@@ -8264,7 +8344,7 @@ def _audio_cluster_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("audio_dedup_keep", oracle=_media_keep_best_sql(
-    _AUDIO_GROUPS_CTE))
+    _AUDIO_GROUPS_CTE), bench="audio_dedup_keep")
 def audio_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio dedup TERMINATED in a keep/drop decision — the audio
     twin of image_dedup_keep: the audio_dup_groups spine (real WAV
@@ -8376,7 +8456,7 @@ SELECT doc_id, n_feats, logw,
            (({md5_long_sql("CAST(doc_id AS VARCHAR) || 'dsir'")})
             % 1000000 + 1) / 1000001.0)), 4) AS score
 FROM dlw ORDER BY score DESC, doc_id LIMIT 25
-""")
+""", bench="dsir_select")
 def dsir_resample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR's Gumbel-top-k selection, values-checked: the noised
     score (``logw/tau`` plus deterministic md5-draw Gumbel noise) and
@@ -8420,7 +8500,7 @@ FROM tf
 JOIN cb USING (bg)
 JOIN cl ON string_split(tf.bg, ' ')[1] = cl.w1, v
 GROUP BY tf.doc_id ORDER BY doc_id
-""")
+""", bench="bigram_nll")
 def bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM perplexity proxy, values-checked: the full smoothed
     conditional model — per-doc bigram frequencies, corpus bigram
@@ -8660,7 +8740,7 @@ SELECT t.token, CAST(t.c AS BIGINT) AS exact_count,
        CAST(e.e - t.c AS BIGINT) AS overshoot
 FROM top t JOIN est e USING (token)
 ORDER BY exact_count DESC, token
-""")
+""", bench="cms_hitters")
 def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min Sketch heavy hitters, verified against exact counts:
     build the 4 x 1024 relational CMS over corpus token frequencies
@@ -8717,7 +8797,7 @@ SELECT lang, n_docs, n_tokens,
        floor(CAST(pow_micros AS DOUBLE) / t * 1000000.0 + 0.5)
          / 1000000.0 AS weight
 FROM pm CROSS JOIN tot ORDER BY lang
-""")
+""", bench="alpha_weights")
 def alpha_lang_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature (alpha=0.3) sampling weights per language — the
     mT5 multilingual mixing rule, beside UniMax so a manifest can
@@ -8917,7 +8997,7 @@ SELECT CAST(n AS BIGINT) AS n_points,
                   / ((n * sxx - sx * sx) * (n * syy - sy * sy))
              END, 4) + 0.0 AS r2
 FROM s
-""")
+""", bench="heaps_growth")
 def heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law vocabulary-growth fit (V = K*T^beta over ten
     corpus prefixes in id order) — the growth-side companion to
@@ -9044,7 +9124,7 @@ SELECT doc_id AS media_id,
        CAST(length(text) AS BIGINT) AS n_chars,
        md5(text) AS text_md5
 FROM documents ORDER BY media_id
-""")
+""", bench="decompress")
 def decompressed_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-payload ingestion, values-checked end to end: each
     document's text is compressed executor-side with a rotating
@@ -9130,7 +9210,7 @@ SELECT doc_id, 1, 'http://hub.example.com/', 'hub',
        'hub.example.com'
 FROM documents
 ORDER BY doc_id, link_idx
-""")
+""", bench="html_links")
 def html_link_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link extraction, values-checked: each document's text is
     wrapped in an HTML page carrying two anchors whose hrefs derive
@@ -9191,7 +9271,7 @@ SELECT doc_id, 2, '1:1',
        array_to_string(list_slice(wt, 7, 9), ' '), 0
 FROM d
 ORDER BY doc_id, bead_no
-""")
+""", bench="sentence_align")
 def sentence_align_beads(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
     """Gale-Church sentence alignment, values-checked on the bead
@@ -9228,7 +9308,7 @@ SELECT doc_id,
        CASE WHEN doc_id % 4 IN (0, 2) THEN 1 ELSE 0 END AS n_valid,
        doc_id % 4 IN (0, 2) AS has_iban
 FROM documents ORDER BY doc_id
-""")
+""", bench="iban_scan")
 def pii_iban_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IBAN PII scan, values-checked: documents get a suffix cycling
     through a checksum-VALID German IBAN, the same IBAN with wrong
@@ -9269,7 +9349,7 @@ ranked AS (
   FROM per)
 SELECT dst_host, token, CAST(n AS BIGINT) AS n, rank
 FROM ranked WHERE rank <= 2 ORDER BY dst_host, rank
-""")
+""", bench="anchor_text")
 def anchor_text_profile(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """Anchor-text host profile — what the WEB says a host is about,
@@ -9391,7 +9471,7 @@ SELECT doc_id,
                     ELSE ' plain tail' END AS clean_text,
        doc_id % 3 = 0 AS was_fixed
 FROM documents ORDER BY doc_id
-""")
+""", bench="mojibake_repair")
 def mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Double-encoding repair (the ftfy staple), values-checked on
     the recovered strings: every third document gets a tail of
@@ -9426,7 +9506,7 @@ SELECT doc_id, '/tmp/x', FALSE FROM documents
 UNION ALL
 SELECT doc_id, '/home', TRUE FROM documents
 ORDER BY doc_id, path
-""")
+""", bench="robots_policy")
 def robots_policy_check(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """robots.txt crawl-policy evaluation, values-checked: each
@@ -9477,7 +9557,7 @@ SELECT doc_id,
             '\\s+', ' ', 'g')) || ' see docs item second a b')
             AS BIGINT) AS n_chars
 FROM documents ORDER BY doc_id
-""")
+""", bench="markdown_extract")
 def markdown_extracted_text(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Markdown text extraction, values-checked: each document's
@@ -9509,7 +9589,7 @@ SELECT doc_id,
        CAST(length('Intro ' || trim(regexp_replace(text, '\\s+', ' ',
             'g')) || ' is 100% sure end') AS BIGINT) AS n_chars
 FROM documents ORDER BY doc_id
-""")
+""", bench="latex_extract")
 def latex_extracted_text(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
     """LaTeX text extraction — the arXiv-dump landing zone —
@@ -9545,7 +9625,7 @@ SELECT doc_id,
             || ')') + 1 AS BIGINT) AS n_chars,
        1 AS n_text_streams
 FROM documents ORDER BY doc_id
-""")
+""", bench="pdf_extract")
 def pdf_extracted_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF ingestion, values-checked end to end: each document's text
     (plus a parens-bearing second line, so escape handling is on the
@@ -9591,7 +9671,7 @@ SELECT doc_id,
            AS docx_text,
        2 AS n_paragraphs
 FROM documents ORDER BY doc_id
-""")
+""", bench="docx_extract")
 def docx_extracted_text(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """DOCX ingestion, values-checked end to end: each document's
@@ -9636,7 +9716,7 @@ SELECT doc_id,
            || '>' AS office_text,
        2 AS n_paragraphs
 FROM documents ORDER BY doc_id
-""")
+""", bench="office_extract")
 def office_extracted_text(spark: SparkSession,
                           sf_dir: str) -> DataFrame:
     """Mixed office-format ingestion through ONE dispatching
@@ -9679,7 +9759,7 @@ SELECT doc_id,
            || 'end & ch' || CAST(doc_id AS VARCHAR) AS epub_text,
        2 AS n_chapters
 FROM documents ORDER BY doc_id
-""")
+""", bench="epub_extract")
 def epub_extracted_text(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """EPUB ingestion — the book-corpus landing zone — values-checked
@@ -9726,7 +9806,7 @@ SELECT doc_id,
            || '>' AS pptx_text,
        2 AS n_slides
 FROM documents ORDER BY doc_id
-""")
+""", bench="pptx_extract")
 def pptx_extracted_text(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """PPTX ingestion, values-checked end to end: each document's
@@ -9769,7 +9849,7 @@ SELECT doc_id,
            || '>' AS xlsx_text,
        2 AS n_strings
 FROM documents ORDER BY doc_id
-""")
+""", bench="xlsx_extract")
 def xlsx_extracted_text(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """XLSX ingestion, values-checked end to end: each document's
@@ -9860,7 +9940,7 @@ UNION ALL
 SELECT doc_id, 1, 'code', 'python', 'print(''ok'')'
 FROM documents
 ORDER BY doc_id, cell_idx
-""")
+""", bench="ipynb_cells")
 def ipynb_extracted_cells(spark: SparkSession,
                           sf_dir: str) -> DataFrame:
     """Jupyter-notebook ingestion, values-checked end to end: each
@@ -9897,7 +9977,7 @@ SELECT doc_id, 1, 62250, 63750,
        'second cue line1' || chr(10) || 'line2'
 FROM documents
 ORDER BY doc_id, cue_idx
-""")
+""", bench="subtitle_cues")
 def subtitle_extracted_cues(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """Subtitle (SRT/WebVTT) ingestion, values-checked end to end:
@@ -9942,7 +10022,7 @@ SELECT doc_id,
             WHEN 4 THEN 'proprietary' END AS license_family,
        doc_id % 5 IN (0, 3) AS license_ok
 FROM documents ORDER BY doc_id
-""")
+""", bench="license_screen")
 def code_license_screen(spark: SparkSession,
                         sf_dir: str) -> DataFrame:
     """License gate for code corpora, values-checked: each document
@@ -9993,7 +10073,7 @@ FROM ranked c JOIN ranked j
   ON c.source = j.source AND j.r = c.n + 1 - c.r
 WHERE c.r <= c.n / 2.0 AND round(c.q - j.q, 4) >= 0.05
 ORDER BY c.source, pair_idx
-""")
+""", bench="preference_pairs")
 def preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DPO preference-pair construction, values-checked: score every
     document with the composite quality formula, then within each
@@ -10028,7 +10108,7 @@ SELECT doc_id,
        TRUE AS roles_ok, TRUE AS alternation_ok,
        TRUE AS ends_assistant
 FROM documents ORDER BY doc_id
-""")
+""", bench="chat_render")
 def chat_template_render(spark: SparkSession,
                          sf_dir: str) -> DataFrame:
     """SFT conversation shaping, values-checked: each document
@@ -10118,7 +10198,8 @@ GROUP BY cid ORDER BY cluster_id""")
     return "".join(parts)
 
 
-@register("kmeans_cluster_profile", oracle=_kmeans_oracle_sql())
+@register("kmeans_cluster_profile", oracle=_kmeans_oracle_sql(),
+          bench="kmeans_profile")
 def kmeans_cluster_profile(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     """Offline k-means training, values-checked through THREE full
@@ -10261,7 +10342,7 @@ verdict AS (
 @register("host_boilerplate_clean", oracle="""
 SELECT doc_id, text AS clean_text, 3 AS n_lines, 2 AS n_removed
 FROM documents ORDER BY doc_id
-""")
+""", bench="host_boilerplate")
 def host_boilerplate_clean(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     """Host-level template-chrome removal, values-checked on the
@@ -10292,7 +10373,7 @@ WITH f AS ({_quality_f_sql('text,')}),
 {_HOST_REP_SQL}
 SELECT host, n_docs, keep_rate, dup_rate, host_keep
 FROM verdict ORDER BY host
-""")
+""", bench="host_report")
 def host_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Host/domain-level source curation — the RefinedWeb/C4
     reputation stage that runs BEFORE content filters: extract the
@@ -10340,7 +10421,7 @@ SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
        round(avg(CASE WHEN host_keep THEN 1.0 ELSE 0.0 END), 4)
            AS kept_rate
 FROM gated GROUP BY source ORDER BY source
-""")
+""", bench="host_filter")
 def host_policy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reputation gate APPLIED: broadcast the #hosts-row
     host_policy_verdict back onto the corpus (left join, absent
@@ -10427,7 +10508,7 @@ nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
 r0 AS (SELECT v, 1.0 / nn.n AS r FROM nodes, nn),
 {_pagerank_sql(3)}
 SELECT v AS host, round(r, 6) AS rank FROM r3 ORDER BY host
-""")
+""", bench="host_pagerank")
 def host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link-graph host authority — PageRank over the crawl's
     host-to-host link graph (Page et al. 1999; the ranking Common
@@ -10500,7 +10581,7 @@ SELECT rep.host, rep.n_docs, rep.keep_rate, rep.dup_rate,
            AS host_keep
 FROM rep LEFT JOIN r3 ON r3.v = rep.host
 ORDER BY rep.host
-""")
+""", bench="host_policy_v2")
 def host_policy_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed two-signal host gate: content reputation
     (host_curation_report's keep/dup rates) JOINED with link-graph
@@ -10594,7 +10675,7 @@ nodes AS (
 SELECT a3.v AS host, round(a3.a, 6) AS authority,
        round(h3.h, 6) AS hub
 FROM a3 JOIN h3 ON h3.v = a3.v ORDER BY host
-""")
+""", bench="host_hits")
 def host_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs and authorities over the same synthetic host link
     graph as host_pagerank (Kleinberg 1999) — the two-sided signal

@@ -136,9 +136,8 @@ def _spread(spark: SparkSession, df: DataFrame, path: str,
     # unigram vocab trainer 2.4x slower spread, epub codec 2x faster
     # spread). The per-row cost varies ~1000x across consumers, so no
     # table-level rows-per-task floor can decide this; the call site
-    # that knows the work opts in. The env var remains a global kill
-    # switch for deployments whose layout makes the gate moot.
-    if not spread or os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
+    # that knows the work opts in.
+    if not spread:
         return df
     key = _SPREAD_KEYS.get(name)
     if key is None:

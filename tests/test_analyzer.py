@@ -45,6 +45,18 @@ def test_bad_nums_zero_threshold(spark):
     assert isinstance(node, StrT) and not isinstance(node, StrReprT)
 
 
+@pytest.mark.parametrize("exact", [True, False])
+def test_int_strings_with_overflowing_float_bound(spark, exact):
+    # "0001e999" reads as a float that overflows to inf, so the max no
+    # int can hold: the column still classifies, and its bounds are
+    # dropped like any other unconvertible bound
+    vals = [f"{i:08d}" for i in range(1000)] + ["0001e999"]
+    node = leaf(analyze(df_of(spark, vals), exact=exact))
+    assert isinstance(node, StrReprT) and node.pattern == "d"
+    assert isinstance(node.inner, IntT)
+    assert node.inner.stats.min is None and node.inner.stats.max is None
+
+
 # -- F3: mostly-blank ------------------------------------------------------
 
 def test_mostly_blank_default(spark):

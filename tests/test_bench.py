@@ -9,6 +9,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -54,3 +56,40 @@ def test_bench_end_to_end_toy_scale(tmp_path):
     # the full-result artifact is the stdout JSON, byte-equivalent —
     # stdout truncation can no longer lose the medians/ladder blocks
     assert json.loads(full.read_text()) == out
+
+
+def test_suite_is_declared_once_in_the_registry(spark):
+    # the suite is built from the bench labels in structa_spark/queries.py
+    # without running any entry; it keeps every query of the committed
+    # round-12 artifact, and a label cannot be declared a second time
+    import bench
+    from structa_spark import queries
+    suite = bench.make_suite(spark, "/root/testdata/sf0.001")
+    with open(os.path.join(REPO, "BENCH_r12.json")) as fh:
+        committed = json.load(fh)["parsed"]["queries"]
+    assert len(committed) == 114
+    assert set(committed) <= set(suite), sorted(set(committed) - set(suite))
+    label = next(iter(suite))
+    with pytest.raises(ValueError, match="declared twice"):
+        queries.register("not_a_query", bench=label)(lambda spark, sf: None)
+    assert "not_a_query" not in queries.REGISTRY
+    with pytest.raises(ValueError, match="declared twice"):
+        queries.bench_only(label)(lambda spark, sf: None)
+    with pytest.raises(ValueError, match="registered twice"):
+        queries.register(next(iter(queries.REGISTRY)))(lambda spark, sf: None)
+    assert set(queries.BENCH) == set(suite)
+
+
+def test_plan_fingerprint_ignores_session_counters(spark):
+    # lambda variable names carry a session-wide counter, so without
+    # normalization a query's fingerprint depended on how many
+    # higher-order functions the queries before it had built
+    import bench
+    from pyspark.sql import functions as F
+
+    def build():
+        return spark.range(3).select(
+            F.transform(F.array("id"), lambda x: x + 1).alias("a"))
+
+    first = bench._plan_fingerprint(build())
+    assert bench._plan_fingerprint(build()) == first

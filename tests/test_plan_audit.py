@@ -183,11 +183,10 @@ def test_profile_topk_limits_before_the_exchange(spark):
     # most top_k rows per leaf instead of every distinct value
     import structa_spark.analyzer as A
     df = load_table(spark, SF, "lineitem")
-    cfg = A.AnalyzerConfig()
-    contexts, _arrs, _tabs = A._plan(df, cfg)
+    contexts, _arrs, _tabs = A._plan(df, A.AnalyzerConfig())
     ctx = contexts[0]
     keys = {lf.key: lf for lf in ctx.leaves}
-    q = A._topk_query(A._counted_values(ctx, keys), keys, cfg)
+    q = A._topk_query(A._counted_values(ctx, keys), keys)
     q.collect()                   # resolve AQE to the final plan
     plan = q._jdf.queryExecution().executedPlan().toString()
     lines = plan.split("== Initial Plan ==")[0].split("\n")
