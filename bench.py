@@ -57,13 +57,50 @@ def _plan_fingerprint(df):
     """md5 of the OPTIMIZED plan with the session's counters normalized
     out, so the same query reads the same wherever it sits in the suite
     order. A relation cached by an earlier query still shows in the
-    plan, with its execution state."""
-    s = df._jdf.queryExecution().optimizedPlan().toString()
+    plan, but only as its initial physical plan, whether or not it has
+    been materialized."""
+    s = _initial_plans(df._jdf.queryExecution().optimizedPlan().toString())
     s = re.sub(r"#\d+", "#", s)          # expression IDs
     s = re.sub(r"@[0-9a-f]+", "@", s)    # object addresses
     s = re.sub(r"(lambda \w+)_\d+", r"\1_", s)  # lambda variable names
     s = re.sub(r"plan_id=\d+", "plan_id=", s)   # cached physical plans
     return hashlib.md5(s.encode()).hexdigest()[:16]
+
+
+_SECTION = re.compile(r"^( *)\+- == (Final|Current|Initial) Plan ==$")
+_ADAPTIVE = re.compile(r"([+:])- AdaptiveSparkPlan")
+
+
+def _initial_plans(plan):
+    """``plan`` with every adaptive plan printed as it is before it
+    runs. Once a cached relation has run, its ``AdaptiveSparkPlan``
+    prints a ``== Final Plan ==`` (mid-run: ``== Current Plan ==``)
+    section of query stages, then an ``== Initial Plan ==`` section,
+    each indented by its own depth and without the tree guides of the
+    nodes above it. The rewrite drops the first section and prints the
+    second as the adaptive plan's child, guides included."""
+    out = []
+    sections = []   # [first column of the section, child guides, kept, root]
+    for line in plan.split("\n"):
+        while sections and (len(line) <= sections[-1][0]
+                            or line[:sections[-1][0]].strip()):
+            sections.pop()
+        if sections and not sections[-1][2]:
+            continue
+        m = _SECTION.match(line)
+        if m:
+            a = _ADAPTIVE.search(out[-1])   # the line above: the plan
+            guides = "" if a is None else (
+                out[-1][:a.start()] + ("   " if a.group(1) == "+" else ":  "))
+            sections.append([len(m.group(1)) + 3, guides,
+                             m.group(2) == "Initial", True])
+            continue
+        if sections:
+            body, guides, _, root = sections[-1]
+            line = guides + ("+- " if root else "   ") + line[body:]
+            sections[-1][3] = False
+        out.append(line)
+    return re.sub(r"isFinalPlan=\w+", "isFinalPlan=", "\n".join(out))
 
 
 def _fingerprint(res):

@@ -26,6 +26,7 @@ Everything is built-in column expressions — no Python UDFs anywhere.
 
 from __future__ import annotations
 
+import re
 from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -36,16 +37,40 @@ from ..functions.hashing import (
 )
 
 
+# a physical plan node that runs Spark jobs before its first task can
+# be scheduled: a shuffle or broadcast exchange, or the adaptive wrapper
+# (present only over exchanges and subqueries)
+_SHUFFLED = re.compile(r"^[\s:+-]*(?:AdaptiveSparkPlan|\w*Exchange)\b",
+                       re.MULTILINE)
+
+
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Spread a low-partition input (one small file) across the
     cluster's cores before CPU-heavy per-row work. A no-op whenever the
-    scan already yields >= defaultParallelism partitions — i.e. at any
+    input already yields >= defaultParallelism partitions — i.e. at any
     real scale — so this only rescues the small-file case where one
-    task would otherwise do all the hashing."""
-    sc = df.sparkSession.sparkContext
-    n = df.rdd.getNumPartitions()
-    if n < sc.defaultParallelism:
-        return df.repartition(sc.defaultParallelism)
+    task would otherwise do all the hashing.
+
+    Scale shape: deciding launches no Spark job. Without an exchange
+    in the physical plan, the partition count is the scan's split
+    count (read without running anything). With one, counting would
+    run every AQE query stage upstream and throw the result away, so
+    the post-shuffle count is predicted the way AQE sizes it: the
+    optimizer's size estimate over the session's advisory partition
+    size."""
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    qe = df._jdf.queryExecution()
+    if _SHUFFLED.search(qe.executedPlan().toString()) is None:
+        n = df.rdd.getNumPartitions()
+    else:
+        size = int(str(qe.optimizedPlan().stats().sizeInBytes()))
+        conf = spark._jsparkSession.sessionState().conf()
+        advisory = conf.getConf(spark._jvm.org.apache.spark.sql.internal
+                                .SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES())
+        n = -(-size // advisory)
+    if n < cores:
+        return df.repartition(cores)
     return df
 
 
@@ -502,6 +527,22 @@ def connected_components(edges: DataFrame, id_col: str = "doc_id",
     return labels
 
 
+def _family_labels(df: DataFrame, text_col: str, id_col: str,
+                   shingle_k: int, jaccard_threshold: float,
+                   use_lsh: bool, max_iter: int = 50) -> DataFrame:
+    """``(id, label)`` for every document with at least one verified
+    near-dup edge, label = the family's minimum id: LSH candidates ->
+    exact Jaccard verification -> :func:`connected_components`. The
+    relation is checkpointed, so a plan built on it does not repeat
+    ``df``'s plan."""
+    cand = (minhash_candidates(df, text_col, id_col, shingle_k)
+            if use_lsh else None)
+    edges = (jaccard_pairs(df, text_col, id_col, shingle_k,
+                           threshold=jaccard_threshold, candidates=cand)
+             .select("id_a", "id_b"))
+    return connected_components(edges, id_col, max_iter)
+
+
 def near_duplicate_groups(df: DataFrame, text_col: str = "text",
                           id_col: str = "doc_id", shingle_k: int = 3,
                           jaccard_threshold: float = 0.5,
@@ -517,12 +558,8 @@ def near_duplicate_groups(df: DataFrame, text_col: str = "text",
     never enter the label loop: only docs with at least one verified
     edge are relabeled, so the iterative work is proportional to the
     duplicate subset, not the corpus."""
-    cand = (minhash_candidates(df, text_col, id_col, shingle_k)
-            if use_lsh else None)
-    edges = (jaccard_pairs(df, text_col, id_col, shingle_k,
-                           threshold=jaccard_threshold, candidates=cand)
-             .select("id_a", "id_b"))
-    labels = connected_components(edges, id_col, max_iter)
+    labels = _family_labels(df, text_col, id_col, shingle_k,
+                            jaccard_threshold, use_lsh, max_iter)
     dup_groups = labels.select(F.col("id").alias(id_col),
                                F.col("label").alias("group_id"))
     # singletons keep their own id as group
@@ -709,22 +746,23 @@ def dedup_corpus(df: DataFrame, text_col: str = "text",
                  use_lsh: bool = True) -> DataFrame:
     """The end-user dedup endpoint: keep exactly one document per
     near-duplicate family — the group's minimum id, a deterministic
-    canonical choice — and every singleton. Composition of
-    :func:`near_duplicate_groups` with a semi-join back onto the
-    corpus, so the returned DataFrame carries ALL original columns.
+    canonical choice — and every singleton; rows with a null id are
+    dropped. The returned DataFrame carries ALL original columns.
 
-    Scale shape: the group relation is (id, group_id) — two longs per
-    document — and the keeper set is one id per group; both are tiny
-    next to the corpus, and the final semi-join broadcasts or
-    shuffles only ids, never text."""
-    groups = near_duplicate_groups(
-        df, text_col, id_col, shingle_k, jaccard_threshold,
-        use_lsh=use_lsh)
-    # group_id IS the component's minimum id (connected_components'
-    # min-label invariant; singletons carry their own id), so the
-    # keeper set is simply the distinct labels
-    keep = groups.select(F.col("group_id").alias(id_col)).distinct()
-    return df.join(keep, id_col, "left_semi")
+    Scale shape: the family labels are a checkpointed (id, label)
+    relation over the documents that have an edge — two longs per
+    duplicate, tiny next to the corpus. A document survives unless its
+    family's minimum id is not its own, so the result is ONE anti-join
+    of the corpus against the labelled losers: ``df`` appears once in
+    the returned plan, and only ids move, never text."""
+    labels = _family_labels(df, text_col, id_col, shingle_k,
+                            jaccard_threshold, use_lsh)
+    # the label IS the family's minimum id (connected_components'
+    # min-label invariant), so every other labelled member is a loser
+    losers = (labels.where(F.col("label") != F.col("id"))
+              .select(F.col("id").alias(id_col)))
+    return (df.where(F.col(id_col).isNotNull())
+            .join(losers, id_col, "left_anti"))
 
 
 def tune_lsh_params(threshold: float, n_perm: int = 16,
@@ -1456,18 +1494,23 @@ def dedup_corpus_best(df: DataFrame, score_col: str,
     Null scores are coalesced to -inf, so a null-scored document
     survives only when its whole group is null-scored.
 
-    Scale shape: identical to :func:`dedup_corpus` — the group
-    relation plus an (id, score) projection are a few columns per
-    document; the per-group argmax is ONE aggregation (``max_by`` on
-    a (score, -id) struct: no per-group window sort), and the final
-    semi-join moves ids, never text."""
-    groups = near_duplicate_groups(
-        df, text_col, id_col, shingle_k, jaccard_threshold,
-        use_lsh=use_lsh)
+    Scale shape: as :func:`dedup_corpus`, plus one (id, score)
+    projection joined to the labelled documents only — singletons are
+    never scored. The per-family argmax is ONE aggregation
+    (``max_by`` on a (score, -id) struct: no per-group window sort),
+    and the corpus is anti-joined against the labelled losers, so
+    ``df`` appears twice in the returned plan and only ids and scores
+    move, never text."""
+    groups = (_family_labels(df, text_col, id_col, shingle_k,
+                             jaccard_threshold, use_lsh)
+              .select(F.col("id").alias(id_col),
+                      F.col("label").alias("group_id")))
     keep = keep_best_per_group(
         groups, df.select(id_col, score_col), id_col=id_col,
         score_col=score_col).select(F.col("keep_id").alias(id_col))
-    return df.join(keep, id_col, "left_semi")
+    losers = groups.join(keep, id_col, "left_anti").select(id_col)
+    return (df.where(F.col(id_col).isNotNull())
+            .join(losers, id_col, "left_anti"))
 
 
 def keep_best_per_group(groups: DataFrame, scores: DataFrame,

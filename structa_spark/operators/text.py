@@ -642,12 +642,28 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text",
         stops = F.size(F.array_intersect(
             F.array_distinct(F.transform(tv, F.lower)),
             F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])))
-        return F.struct(
+        return _bind(F.struct(
             n.cast("long").alias("n_words"),
             mean_len.alias("mean_word_len"),
             sym_ratio.alias("symbol_ratio"),
             alpha.alias("alpha_word_frac"),
-            stops.cast("int").alias("stopword_hits"))
+            stops.cast("int").alias("stopword_hits")), tok_keep)
+
+    # each bound struct carries its own part of the verdict, computed
+    # from its bound fields: a filter on the verdict then inlines each
+    # struct once, not once per rule that reads it
+    def tok_keep(v):
+        return v.withField("keep", (
+            (v["n_words"] >= wlo) & (v["n_words"] <= whi)
+            & (v["mean_word_len"] >= mlo) & (v["mean_word_len"] <= mhi)
+            & (v["symbol_ratio"] <= max_symbol_ratio)
+            & (v["alpha_word_frac"] >= min_alpha_word_frac)
+            & (v["stopword_hits"] >= min_stopword_hits)))
+
+    def line_keep(v):
+        return v.withField("keep", (
+            (v["bullet_line_frac"] <= max_bullet_line_frac)
+            & (v["ellipsis_line_frac"] <= max_ellipsis_line_frac)))
 
     def with_lines(lv):
         nl = F.size(lv)
@@ -655,28 +671,21 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text",
             lv, lambda l: l.rlike(r"^\s*[-*•‣▪]")))
         ell = F.size(F.filter(
             lv, lambda l: l.rlike(r"(\.\.\.|…)\s*$")))
-        return F.struct(
+        return _bind(F.struct(
             F.when(nl > 0, F.round(bullet / nl, 4))
             .otherwise(F.lit(0.0)).alias("bullet_line_frac"),
             F.when(nl > 0, F.round(ell / nl, 4))
-            .otherwise(F.lit(0.0)).alias("ellipsis_line_frac"))
+            .otherwise(F.lit(0.0)).alias("ellipsis_line_frac")), line_keep)
 
-    out = (df.withColumn("__w", _bind(tokens(t), with_toks))
-           .withColumn("__ln", _bind(F.split(t, r"\n"), with_lines))
-           .select(*df.columns,
-                   "__w.n_words", "__w.mean_word_len",
-                   "__w.symbol_ratio", "__w.alpha_word_frac",
-                   "__w.stopword_hits",
-                   "__ln.bullet_line_frac", "__ln.ellipsis_line_frac"))
-    keep = ((F.col("n_words") >= wlo) & (F.col("n_words") <= whi)
-            & (F.col("mean_word_len") >= mlo)
-            & (F.col("mean_word_len") <= mhi)
-            & (F.col("symbol_ratio") <= max_symbol_ratio)
-            & (F.col("bullet_line_frac") <= max_bullet_line_frac)
-            & (F.col("ellipsis_line_frac") <= max_ellipsis_line_frac)
-            & (F.col("alpha_word_frac") >= min_alpha_word_frac)
-            & (F.col("stopword_hits") >= min_stopword_hits))
-    return out.withColumn("gopher_quality_keep", keep)
+    return (df.withColumn("__w", _bind(tokens(t), with_toks))
+            .withColumn("__ln", _bind(F.split(t, r"\n"), with_lines))
+            .select(*df.columns,
+                    "__w.n_words", "__w.mean_word_len",
+                    "__w.symbol_ratio", "__w.alpha_word_frac",
+                    "__w.stopword_hits",
+                    "__ln.bullet_line_frac", "__ln.ellipsis_line_frac",
+                    (F.col("__w.keep") & F.col("__ln.keep"))
+                    .alias("gopher_quality_keep")))
 
 
 def gopher_dup_fractions(df: DataFrame, id_col: str = "doc_id",
@@ -3338,6 +3347,24 @@ def _round6(x: float) -> float:
     return math.copysign(math.floor(abs(x) * 1e6 + 0.5), x) / 1e6
 
 
+def _r6v(v):
+    """Vectorized half-away-from-zero 6-dp round — the same three IEEE
+    ops as :func:`_round6` / Spark ROUND, elementwise."""
+    import numpy as np
+    return np.copysign(np.floor(np.abs(v) * 1e6 + 0.5), v) / 1e6
+
+
+def _sigmoid(z):
+    """Elementwise logistic ``1 / (1 + e^-z)`` over a float64 array.
+    The exponent is clipped at the float64 limit (about 709.78): past
+    it ``e^-z`` overflows to inf, and numpy warns, while the clipped
+    value is below 1e-308 and rounds to the same 0.0 on the 6-dp
+    grid."""
+    import numpy as np
+    limit = np.log(np.finfo(np.float64).max)
+    return 1.0 / (1.0 + np.exp(np.minimum(-z, limit)))
+
+
 def _hashed_lift_features(df: DataFrame, n_buckets: int,
                           id_col: str, text_col: str) -> DataFrame:
     """Hashed-token "bucket lift" features for the logistic quality
@@ -3463,11 +3490,6 @@ def logistic_quality_train(df: DataFrame, label_col: str = "label",
     import numpy as np
     import pandas as pd
 
-    def _r6v(v):
-        # vectorized half-away-from-zero 6-dp round — the same three
-        # IEEE ops as _round6 / Spark ROUND, elementwise
-        return np.copysign(np.floor(np.abs(v) * 1e6 + 0.5), v) / 1e6
-
     w = [0.0] * n_buckets
     b = 0.0
     for _ in range(iters):
@@ -3508,7 +3530,7 @@ def logistic_quality_train(df: DataFrame, label_col: str = "label",
                     else np.zeros(nb)
                 msum = np.where(lens > 0, msum, 0.0)
                 m = _r6v(msum)
-                p = _r6v(1.0 / (1.0 + np.exp(-(m + bias))))
+                p = _r6v(_sigmoid(m + bias))
                 r = p - y
                 rterms = _r6v(np.repeat(r, lens) * flatx)
                 g = np.bincount(flatb, weights=rterms,

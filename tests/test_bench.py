@@ -93,3 +93,24 @@ def test_plan_fingerprint_ignores_session_counters(spark):
 
     first = bench._plan_fingerprint(build())
     assert bench._plan_fingerprint(build()) == first
+
+    # a consumer of a persisted relation reads the same before and
+    # after the relation has run (its adaptive plan then prints query
+    # stages), here also with the relation cached inside another one
+    inner = (spark.range(50).groupBy((F.col("id") % 5).alias("k"))
+             .agg(F.sum("id").alias("s")).persist())
+    outer = (inner.join(spark.range(10).withColumnRenamed("id", "k"), "k")
+             .groupBy("s").count().persist())
+    try:
+        def consumer():
+            return outer.where("s > 0").join(
+                inner.select(F.col("k").alias("kk")),
+                F.col("s") == F.col("kk"))
+
+        cold = bench._plan_fingerprint(consumer())
+        inner.count()
+        outer.count()
+        assert bench._plan_fingerprint(consumer()) == cold
+    finally:
+        outer.unpersist()
+        inner.unpersist()

@@ -825,6 +825,52 @@ def test_dedup_corpus_keeps_one_per_family(docs, spark):
     assert set(out.columns) == set(docs.columns)
 
 
+def test_dedup_corpus_reads_its_input_once(spark, tmp_path):
+    # every operator downstream of dedup inherits its plan: the
+    # family labels are checkpointed, so the corpus scan must appear
+    # once, in the anti-join, not again inside the survivor set
+    dup = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [(1, dup), (2, dup + " iota"), (3, "unrelated words here")]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string") \
+        .write.parquet(path)
+    out = dedup.dedup_corpus(spark.read.parquet(path),
+                             jaccard_threshold=0.5, use_lsh=False)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation [") == 1, plan
+    assert sorted(r.doc_id for r in out.collect()) == [1, 3]
+
+
+def test_dedup_corpus_drops_null_ids(spark):
+    dup = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [(None, dup), (None, "a lone document with no id at all"),
+            (4, dup), (7, "unrelated words here")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    kept = sorted(r.doc_id for r in dedup.dedup_corpus(
+        df, jaccard_threshold=0.5, use_lsh=False).collect())
+    assert kept == [4, 7]
+    best = sorted(r.doc_id for r in dedup.dedup_corpus_best(
+        df.withColumn("n", F.length("text")), score_col="n",
+        jaccard_threshold=0.5, use_lsh=False).collect())
+    assert best == [4, 7]
+
+
+def test_ensure_parallelism_runs_no_job_on_a_shuffled_input(spark):
+    # counting the partitions of a shuffled input would run every AQE
+    # stage upstream of it; the decision must come from the plan
+    sc = spark.sparkContext
+    shuffled = (spark.createDataFrame(
+        [(i % 7, "x y z") for i in range(200)], "k long, t string")
+        .groupBy("k").count())
+    before = int(sc._jsc.sc().dagScheduler().numTotalJobs())
+    out = dedup.ensure_parallelism(shuffled)
+    assert int(sc._jsc.sc().dagScheduler().numTotalJobs()) == before
+    assert out.rdd.getNumPartitions() == sc.defaultParallelism
+    # a scan with enough splits is left as it is
+    wide = spark.range(0, 1000, numPartitions=sc.defaultParallelism)
+    assert dedup.ensure_parallelism(wide) is wide
+
+
 def test_repetition_signals(spark):
     rows = [
         (0, "a b a b a b"),            # 2 distinct / 6; "a b" x3
@@ -5012,6 +5058,22 @@ def test_audio_vad_segments(spark):
                                    min_frames=2).collect()
     assert [(r.media_id, r.start_frame, r.end_frame)
             for r in long_only] == [(1, 0, 1)]
+
+
+def test_logistic_sigmoid_does_not_overflow():
+    # a margin far below zero used to overflow np.exp (and warn on
+    # every training step); the clipped exponent rounds to the same 0
+    import warnings
+
+    import numpy as np
+
+    from structa_spark.operators.text import _r6v, _sigmoid
+    z = np.array([-800.0, -30.0, 0.0, 30.0, 800.0])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        p = _r6v(_sigmoid(z))
+    assert p[0] == 0.0
+    assert list(p[1:]) == list(_r6v(1.0 / (1.0 + np.exp(-z[1:]))))
 
 
 def test_logistic_quality_classifier(spark):

@@ -341,3 +341,20 @@ def test_decontamination_broadcasts_eval_side(spark):
         fn, _ = REGISTRY[name]
         plan = _plan(fn(spark, SF))
         assert "BroadcastHashJoin" in plan, f"{name}:\n{plan[:1500]}"
+
+
+def test_gopher_filter_binds_each_struct_once(spark):
+    # a filter on the verdict is pushed below the flags projection;
+    # each let-bound struct must enter it once, not once per rule
+    # that reads a field of it (7 token rules, 2 line rules)
+    from structa_spark.operators import text
+    df = spark.createDataFrame([(1, "the cat and the dog\nline two ...")],
+                               "doc_id long, text string")
+    q = text.gopher_quality_flags(df).where(F.col("gopher_quality_keep"))
+    plan = q._jdf.queryExecution().optimizedPlan().toString()
+    pushed = [ln for ln in plan.split("\n") if "Filter" in ln]
+    assert len(pushed) == 1, plan
+    # one alphabetic-word rlike per token struct, one bullet rlike
+    # per line struct
+    assert pushed[0].count("[A-Za-z]") == 1, pushed[0]
+    assert pushed[0].count("^\\s*[-*") == 1, pushed[0]
