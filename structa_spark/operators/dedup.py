@@ -51,24 +51,33 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     real scale — so this only rescues the small-file case where one
     task would otherwise do all the hashing.
 
-    Scale shape: deciding launches no Spark job. Without an exchange
-    in the physical plan, the partition count is the scan's split
-    count (read without running anything). With one, counting would
-    run every AQE query stage upstream and throw the result away, so
-    the post-shuffle count is predicted the way AQE sizes it: the
-    optimizer's size estimate over the session's advisory partition
-    size."""
+    Scale shape: deciding launches no Spark job when every leaf of the
+    plan has a size estimate (file scans, ranges, local relations).
+    Without an exchange in the physical plan, the partition count is
+    the scan's split count (read without running anything). With one,
+    counting would run every AQE query stage upstream and throw the
+    result away, so the post-shuffle count is predicted the way AQE
+    sizes it: the optimizer's size estimate over the session's advisory
+    partition size. A leaf Spark cannot size at all (an RDD-backed
+    relation such as ``createDataFrame`` over a Python list) reports
+    exactly ``spark.sql.defaultSizeInBytes``, which would predict
+    "huge" for any input; such a plan is counted by running it, as
+    before. (A checkpoint keeps the estimate of the plan it cut, so it
+    is sized.)"""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
+    conf = spark._jsparkSession.sessionState().conf()
     qe = df._jdf.queryExecution()
-    if _SHUFFLED.search(qe.executedPlan().toString()) is None:
-        n = df.rdd.getNumPartitions()
-    else:
-        size = int(str(qe.optimizedPlan().stats().sizeInBytes()))
-        conf = spark._jsparkSession.sessionState().conf()
+    plan = qe.optimizedPlan()
+    leaves = plan.collectLeaves()
+    sized = all(int(str(leaves.apply(i).stats().sizeInBytes()))
+                != conf.defaultSizeInBytes() for i in range(leaves.size()))
+    if sized and _SHUFFLED.search(qe.executedPlan().toString()):
         advisory = conf.getConf(spark._jvm.org.apache.spark.sql.internal
                                 .SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES())
-        n = -(-size // advisory)
+        n = -(-int(str(plan.stats().sizeInBytes())) // advisory)
+    else:
+        n = df.rdd.getNumPartitions()
     if n < cores:
         return df.repartition(cores)
     return df

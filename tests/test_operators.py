@@ -855,16 +855,23 @@ def test_dedup_corpus_drops_null_ids(spark):
     assert best == [4, 7]
 
 
-def test_ensure_parallelism_runs_no_job_on_a_shuffled_input(spark):
+def test_ensure_parallelism_runs_no_job_on_a_shuffled_input(spark, tmp_path):
     # counting the partitions of a shuffled input would run every AQE
     # stage upstream of it; the decision must come from the plan
     sc = spark.sparkContext
-    shuffled = (spark.createDataFrame(
-        [(i % 7, "x y z") for i in range(200)], "k long, t string")
-        .groupBy("k").count())
+    path = str(tmp_path / "small")
+    spark.createDataFrame([(i % 7, "x y z") for i in range(200)],
+                          "k long, t string").write.parquet(path)
+    shuffled = spark.read.parquet(path).groupBy("k").count()
     before = int(sc._jsc.sc().dagScheduler().numTotalJobs())
     out = dedup.ensure_parallelism(shuffled)
     assert int(sc._jsc.sc().dagScheduler().numTotalJobs()) == before
+    assert out.rdd.getNumPartitions() == sc.defaultParallelism
+    # an RDD-backed leaf has no size estimate; the small input is still
+    # spread, not taken for a huge one
+    unsized = (spark.createDataFrame([(i % 7,) for i in range(200)], "k long")
+               .groupBy("k").count())
+    out = dedup.ensure_parallelism(unsized)
     assert out.rdd.getNumPartitions() == sc.defaultParallelism
     # a scan with enough splits is left as it is
     wide = spark.range(0, 1000, numPartitions=sc.defaultParallelism)
