@@ -264,20 +264,26 @@ def minhash_bands(df: DataFrame, text_col: str = "text",
     the codegen path (:func:`minhash_signature_df`); banding is a
     cheap unnest of the 16-element signature."""
     sig = minhash_signature_df(df, text_col, id_col, shingle_k)
-    rows_per_band = len(MINHASH_PARAMS) // n_bands
-
-    def bands_of(s):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.concat_ws("_", F.transform(
-                    F.slice(s, b * rows_per_band + 1, rows_per_band),
-                    lambda v: v.cast("string"))).alias("band_key")))
-
     return (sig.select(F.col(id_col),
-                       F.explode(bands_of(F.col("signature"))).alias("bb"))
+                       F.explode(_bands_of(F.col("signature"), n_bands))
+                       .alias("bb"))
             .select(id_col, "bb.band", "bb.band_key"))
+
+
+def _bands_of(sig: Column, n_bands: int) -> Column:
+    """``array<struct<band, band_key>>`` of a MinHash signature
+    array: band ``b``'s key joins its ``rows_per_band`` signature
+    values with ``_``. The batch index (:func:`minhash_bands`) and
+    the streaming probe (``neardup_candidates_stream``) share it, so
+    their keys join exactly."""
+    rows_per_band = len(MINHASH_PARAMS) // n_bands
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        lambda b: F.struct(
+            b.alias("band"),
+            F.concat_ws("_", F.transform(
+                F.slice(sig, b * rows_per_band + 1, rows_per_band),
+                lambda v: v.cast("string"))).alias("band_key")))
 
 
 def minhash_candidates(df: DataFrame, text_col: str = "text",

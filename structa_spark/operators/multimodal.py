@@ -2,7 +2,9 @@
 columns with typed metadata.
 
 The Spark-side contract is real and tested — schemas, Arrow-batched
-``mapInPandas`` pipelines, partition sizing. Decode depth by format:
+per-row pipelines (:func:`structa_spark.functions.rows.map_rows`, one
+``mapInArrow`` shape for every operator here), partition sizing.
+Decode depth by format:
 
 * PNG — REAL pixel decode, stdlib-only (:func:`decode_png_pixels`:
   chunk walk -> zlib inflate -> per-row unfilter, all five filter
@@ -25,18 +27,16 @@ Batch-shape guidance for 100 TB: binary payloads dominate partition
 size, so size ``spark.sql.files.maxPartitionBytes`` for the *decoded*
 footprint (decoded RGB is ~10-50x the JPEG bytes), and prefer
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` around 64-256 for
-image batches so a batch fits executor memory.
+image batches so a ``mapInArrow`` batch fits executor memory.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.rows import map_rows, round_half_up
 
 IMAGE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -204,20 +204,10 @@ def jpeg_quant_stats(df: DataFrame, payload_col: str = "payload",
     no-decode compression-quality screen; payloads never leave the
     executors, non-JPEG rows keep nulls."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                n, qmin, qmax, qsum, w, h = parse_jpeg_quant(payload)
-                out.append((int(mid), n, qmin, qmax, qsum, w, h))
-            yield pd.DataFrame(
-                out, columns=[id_col, "n_tables", "q_min", "q_max",
-                              "q_sum", "width", "height"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, n_tables int, q_min int, "
-                         "q_max int, q_sum long, width int, "
-                         "height int"))
+    return map_rows(
+        df, lambda p: [parse_jpeg_quant(p)],
+        f"{id_col} long, n_tables int, q_min int, q_max int, "
+        "q_sum long, width int, height int", [payload_col], id_col)
 
 
 def png_bytes(width: int, height: int) -> bytes:
@@ -381,23 +371,12 @@ def image_exif_metadata(df: DataFrame, payload_col: str = "payload",
     """Per-image EXIF provenance columns (make/model/orientation/
     datetime) via :func:`parse_exif` — the metadata a pipeline
     groups camera-sourced imagery by (dedup by device+timestamp,
-    orientation-aware preprocessing). Arrow-batched ``mapInPandas``;
+    orientation-aware preprocessing). Arrow-batched ``mapInArrow``;
     payloads stay executor-side; EXIF-less rows keep their id with
     null fields."""
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                mk, md, o, dt = parse_exif(payload)
-                rows.append((int(mid), mk, md, o, dt))
-            out = pd.DataFrame(
-                rows, columns=[id_col, "make", "model",
-                               "orientation", "exif_datetime"])
-            out["orientation"] = out["orientation"].astype("Int32")
-            yield out
-
-    return df.mapInPandas(batches, schema=EXIF_SCHEMA.replace(
-        "media_id", id_col))
+    return map_rows(df, lambda p: [parse_exif(p)],
+                    EXIF_SCHEMA.replace("media_id", id_col),
+                    [payload_col], id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -816,17 +795,8 @@ def image_metadata(df: DataFrame, payload_col: str = "payload",
     produced, not assumed. Payloads stay executor-side; only the
     4-column metadata comes out of the stage."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            meta = [parse_image_header(p) for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "format": [m[0] for m in meta],
-                "width": pd.array([m[1] for m in meta], dtype="Int32"),
-                "height": pd.array([m[2] for m in meta], dtype="Int32"),
-            })
-
-    return df.mapInPandas(batches, schema=IMAGE_META_SCHEMA)
+    return map_rows(df, lambda p: [parse_image_header(p)],
+                    IMAGE_META_SCHEMA, [payload_col], id_col)
 
 
 def parse_audio_header(payload):
@@ -911,21 +881,8 @@ def audio_metadata(df: DataFrame, payload_col: str = "payload",
     duration_s) parsed FROM THE BYTES over Arrow batches; payloads
     stay executor-side, duration derives as a column expression."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            meta = [parse_audio_header(p) for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "codec": [m[0] for m in meta],
-                "sample_rate": pd.array([m[1] for m in meta],
-                                        dtype="Int32"),
-                "n_channels": pd.array([m[2] for m in meta],
-                                       dtype="Int32"),
-                "n_samples": pd.array([m[3] for m in meta],
-                                      dtype="Int64"),
-            })
-
-    out = df.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
+    out = map_rows(df, lambda p: [parse_audio_header(p)],
+                   AUDIO_META_SCHEMA, [payload_col], id_col)
     return out.withColumn(
         "duration_s",
         F.round(F.col("n_samples")
@@ -1008,37 +965,30 @@ def audio_resample_index(df: DataFrame, target_rate: int,
     if target_rate < 1:
         raise ValueError(f"target_rate must be >= 1: {target_rate}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    arr, rate = decode_wav_samples(payload)
-                except DecodeUnavailable:
-                    out.append((int(mid), None, None, None, None))
-                    continue
-                s = arr[:, 0]
-                n_in = len(s)
-                if n_in == 0 or not rate:
-                    out.append((int(mid), None, None, None, None))
-                    continue
-                n_out = (n_in - 1) * target_rate // rate + 1
-                for j in range(0, n_out, every_k):
-                    p = (j * rate) / target_rate
-                    i0 = math.floor(p)
-                    frac = p - i0
-                    s0 = float(s[i0])
-                    s1 = float(s[min(i0 + 1, n_in - 1)])
-                    v = s0 + (s1 - s0) * frac
-                    out.append((int(mid), n_in, n_out, j,
-                                math.floor(v * 1e6 + 0.5) / 1e6))
-            yield pd.DataFrame(
-                out, columns=[id_col, "n_in", "n_out", "out_idx",
-                              "value"])
+    def resample(payload):
+        try:
+            arr, rate = decode_wav_samples(payload)
+        except DecodeUnavailable:
+            return [(None, None, None, None)]
+        s = arr[:, 0]
+        n_in = len(s)
+        if n_in == 0 or not rate:
+            return [(None, None, None, None)]
+        n_out = (n_in - 1) * target_rate // rate + 1
+        out = []
+        for j in range(0, n_out, every_k):
+            p = (j * rate) / target_rate
+            i0 = math.floor(p)
+            frac = p - i0
+            s0 = float(s[i0])
+            s1 = float(s[min(i0 + 1, n_in - 1)])
+            out.append((n_in, n_out, j,
+                        round_half_up(s0 + (s1 - s0) * frac, 6)))
+        return out
 
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, n_in int, n_out int, "
-                         f"out_idx int, value double"))
+    return map_rows(
+        df, resample, f"{id_col} long, n_in int, n_out int, "
+        "out_idx int, value double", [payload_col], id_col)
 
 
 def _fake_decode_feature(payload: bytes, dim: int) -> list:
@@ -1100,7 +1050,7 @@ def extract_features(df: DataFrame, dim: int = 16,
                      precision: str = "float32") -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
-    ``mapInPandas`` keeps the binary data executor-side in Arrow
+    ``mapInArrow`` keeps the binary data executor-side in Arrow
     batches; only the (id, feature) pairs come out — the pattern for
     any decode/resize/frame-sample stage.
 
@@ -1128,29 +1078,18 @@ def extract_features(df: DataFrame, dim: int = 16,
             T.StructField("feat_dim", T.IntegerType()),
         ])
 
-    def decode_or_null(p):
+    def feature(p):
+        if not real_decode:
+            return [(_fake_decode_feature(p, dim), dim)]
         # degrade-to-null contract shared with media_stats /
         # resize_images: ONE malformed or codec-less payload in an
         # Arrow batch must not fail the whole job
         try:
-            return _real_decode_feature(p, dim)
+            return [(_real_decode_feature(p, dim), dim)]
         except DecodeUnavailable:
-            return None
+            return [(None, dim)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if real_decode:
-                feats = [decode_or_null(p) for p in pdf[payload_col]]
-            else:
-                feats = [_fake_decode_feature(p, dim)
-                         for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "feature": feats,
-                "feat_dim": dim,
-            })
-
-    return df.mapInPandas(batches, schema=schema)
+    return map_rows(df, feature, schema, [payload_col], id_col)
 
 
 MEDIA_STATS_SCHEMA = T.StructType([
@@ -1174,34 +1113,26 @@ def media_stats(df: DataFrame, payload_col: str = "payload",
     stage — payload bytes stay executor-side."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                kind, vals = None, None
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    sniffed = _sniff_kind(p)
-                    if sniffed == "wav":
-                        s, _rate = decode_wav_samples(p)
-                        vals = s.astype(np.float64).ravel()
-                        kind = "wav"
-                    elif sniffed is not None:
-                        kind, arr = _decode_image(p)
-                        vals = arr.astype(np.float64).ravel()
-                except DecodeUnavailable:
-                    kind, vals = None, None
-                if vals is None or vals.size == 0:
-                    rows.append((mid, kind, None, None, None, None))
-                else:
-                    rows.append((mid, kind, int(vals.size),
-                                 round(float(vals.mean()), 6),
-                                 float(vals.min()), float(vals.max())))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "kind", "n_values",
-                "v_mean", "v_min", "v_max"])
+    def stats(payload):
+        kind, vals = None, None
+        p = payload or b""
+        try:
+            sniffed = _sniff_kind(p)
+            if sniffed == "wav":
+                s, _rate = decode_wav_samples(p)
+                vals = s.astype(np.float64).ravel()
+                kind = "wav"
+            elif sniffed is not None:
+                kind, arr = _decode_image(p)
+                vals = arr.astype(np.float64).ravel()
+        except DecodeUnavailable:
+            kind, vals = None, None
+        if vals is None or vals.size == 0:
+            return [(kind, None, None, None, None)]
+        return [(kind, int(vals.size), round(float(vals.mean()), 6),
+                 float(vals.min()), float(vals.max()))]
 
-    return df.mapInPandas(batches, schema=MEDIA_STATS_SCHEMA)
+    return map_rows(df, stats, MEDIA_STATS_SCHEMA, [payload_col], id_col)
 
 
 def _sniff_kind(p: bytes):
@@ -1278,28 +1209,15 @@ def resize_images(df: DataFrame, target_w: int, target_h: int,
     come back with a null payload (kept, so join cardinality is
     stable). Output PNGs always parse: ``parse_image_header`` and
     :func:`decode_png_pixels` round-trip them."""
-    import numpy as np
+    def resize(payload):
+        try:
+            _kind, arr = _decode_image(payload or b"")
+        except DecodeUnavailable:
+            return [(None, None, None)]
+        small = _resize_nearest(arr, target_h, target_w)
+        return [(encode_png(small), target_w, target_h)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    _kind, arr = _decode_image(p)
-                    small = _resize_nearest(arr, target_h, target_w)
-                    rows.append((mid, encode_png(small),
-                                 target_w, target_h))
-                except DecodeUnavailable:
-                    rows.append((mid, None, None, None))
-            out = pd.DataFrame(
-                rows, columns=["media_id", "payload",
-                               "width", "height"])
-            out["width"] = pd.array(out["width"], dtype="Int32")
-            out["height"] = pd.array(out["height"], dtype="Int32")
-            yield out
-
-    return df.mapInPandas(batches, schema=RESIZED_SCHEMA)
+    return map_rows(df, resize, RESIZED_SCHEMA, [payload_col], id_col)
 
 
 DECOMPRESSED_SCHEMA = T.StructType([
@@ -1374,22 +1292,16 @@ def decompress_payloads(df: DataFrame, payload_col: str = "payload",
                 raise DecodeUnavailable("trailing bytes after stream")
         return codec, b"".join(out)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    codec, raw = inflate(p)
-                    rows.append((mid, codec, raw.decode(encoding)))
-                except (DecodeUnavailable, OSError, EOFError,
-                        ValueError, lzma.LZMAError, zlib.error,
-                        UnicodeDecodeError):
-                    rows.append((mid, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "codec", "text"])
+    def decompress(payload):
+        try:
+            codec, raw = inflate(payload or b"")
+            return [(codec, raw.decode(encoding))]
+        except (DecodeUnavailable, OSError, EOFError, ValueError,
+                lzma.LZMAError, zlib.error, UnicodeDecodeError):
+            return [(None, None)]
 
-    return df.mapInPandas(batches, schema=DECOMPRESSED_SCHEMA)
+    return map_rows(df, decompress, DECOMPRESSED_SCHEMA, [payload_col],
+                    id_col)
 
 
 def sample_frames(df: DataFrame, every_n: int = 10,
@@ -1428,6 +1340,28 @@ def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
 # video: ISO-BMFF (MP4/MOV) container headers
 # ---------------------------------------------------------------------------
 
+def _bmff_boxes(p: bytes, lo: int, hi: int):
+    """``(type, body_start, end)`` of each ISO-BMFF box in ``p[lo:hi]``:
+    32-bit sizes, 64-bit ``largesize`` when size==1, size==0 meaning
+    to-EOF; the walk stops at the first box that overruns ``hi``."""
+    i = lo
+    while i + 8 <= hi:
+        size = int.from_bytes(p[i:i + 4], "big")
+        btype = p[i + 4:i + 8]
+        body = i + 8
+        if size == 1:
+            if body + 8 > hi:
+                return
+            size = int.from_bytes(p[body:body + 8], "big")
+            body += 8
+        elif size == 0:
+            size = hi - i
+        if size < 8 or i + size > hi:
+            return
+        yield btype, body, i + size
+        i += size
+
+
 def parse_video_header(payload):
     """(container, duration_s_raw, width, height, n_tracks) from raw
     ISO-BMFF bytes — a REAL box walk, no codec libraries: iterate
@@ -1445,35 +1379,17 @@ def parse_video_header(payload):
         return (None, None, None, None, None)
     p = bytes(payload)
 
-    def boxes(lo, hi):
-        i = lo
-        while i + 8 <= hi:
-            size = int.from_bytes(p[i:i + 4], "big")
-            btype = p[i + 4:i + 8]
-            body = i + 8
-            if size == 1:
-                if body + 8 > hi:
-                    return
-                size = int.from_bytes(p[body:body + 8], "big")
-                body += 8
-            elif size == 0:
-                size = hi - i
-            if size < 8 or i + size > hi:
-                return
-            yield btype, body, i + size
-            i += size
-
     container = None
     timescale = duration = None
     width = height = n_tracks = None
-    for btype, lo, hi in boxes(0, len(p)):
+    for btype, lo, hi in _bmff_boxes(p, 0, len(p)):
         if btype == b"ftyp" and hi - lo >= 4:
             brand = p[lo:lo + 4].decode("ascii", "replace").strip()
             container = f"mp4_{brand}"
         elif btype == b"moov":
             n_tracks = 0
             width = height = 0
-            for ctype, clo, chi in boxes(lo, hi):
+            for ctype, clo, chi in _bmff_boxes(p, lo, hi):
                 if ctype == b"mvhd" and chi - clo >= 4:
                     ver = p[clo]
                     if ver == 1 and chi - clo >= 4 + 28:
@@ -1488,7 +1404,7 @@ def parse_video_header(payload):
                             p[clo + 16:clo + 20], "big")
                 elif ctype == b"trak":
                     n_tracks += 1
-                    for t, tlo, thi in boxes(clo, chi):
+                    for t, tlo, thi in _bmff_boxes(p, clo, chi):
                         if t != b"tkhd" or thi - tlo < 4:
                             continue
                         off = 88 if p[tlo] == 1 else 76
@@ -1665,26 +1581,8 @@ def parse_sample_table(payload):
         return (None, None)
     p = bytes(payload)
 
-    def boxes(lo, hi):
-        i = lo
-        while i + 8 <= hi:
-            size = int.from_bytes(p[i:i + 4], "big")
-            btype = p[i + 4:i + 8]
-            body = i + 8
-            if size == 1:
-                if body + 8 > hi:
-                    return
-                size = int.from_bytes(p[body:body + 8], "big")
-                body += 8
-            elif size == 0:
-                size = hi - i
-            if size < 8 or i + size > hi:
-                return
-            yield btype, body, i + size
-            i += size
-
     def find(btype, lo, hi):
-        for t, blo, bhi in boxes(lo, hi):
+        for t, blo, bhi in _bmff_boxes(p, lo, hi):
             if t == btype:
                 return blo, bhi
         return None
@@ -1692,10 +1590,10 @@ def parse_sample_table(payload):
     def u32(at):
         return int.from_bytes(p[at:at + 4], "big")
 
-    for btype, lo, hi in boxes(0, len(p)):
+    for btype, lo, hi in _bmff_boxes(p, 0, len(p)):
         if btype != b"moov":
             continue
-        for ctype, clo, chi in boxes(lo, hi):
+        for ctype, clo, chi in _bmff_boxes(p, lo, hi):
             if ctype != b"trak":
                 continue
             mdia = find(b"mdia", clo, chi)
@@ -1800,34 +1698,20 @@ def video_frame_index(df: DataFrame, payload_col: str = "payload",
     row (cardinality stays stable, the decode-degradation
     convention). Arrow-batched; payload bytes stay executor-side, and
     only the kept frames' index rows cross into the plan."""
-    import math
-
     if every_k < 1:
         raise ValueError(f"every_k must be >= 1: {every_k}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                timescale, frames = parse_sample_table(payload)
-                if not frames:
-                    out.append((int(mid), None, None, None, None))
-                    continue
-                for idx, (ticks, off, nb) in enumerate(frames):
-                    if idx % every_k:
-                        continue
-                    ts_s = math.floor(
-                        ticks / timescale * 1000000.0 + 0.5) \
-                        / 1000000.0
-                    out.append((int(mid), idx, ts_s, off, nb))
-            yield pd.DataFrame(
-                out, columns=[id_col, "frame_idx", "ts_s",
-                              "byte_offset", "n_bytes"])
+    def frame_rows(payload):
+        timescale, frames = parse_sample_table(payload)
+        if not frames:
+            return [(None, None, None, None)]
+        return [(idx, round_half_up(ticks / timescale, 6), off, nb)
+                for idx, (ticks, off, nb) in enumerate(frames)
+                if idx % every_k == 0]
 
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, frame_idx int, "
-                         f"ts_s double, byte_offset long, "
-                         f"n_bytes long"))
+    return map_rows(
+        df, frame_rows, f"{id_col} long, frame_idx int, ts_s double, "
+        "byte_offset long, n_bytes long", [payload_col], id_col)
 
 
 def mjpeg_bytes(frames, media_timescale: int = 1000,
@@ -1884,8 +1768,6 @@ def video_frame_dhash(df: DataFrame, payload_col: str = "payload",
     Scale shape: pure per-row parse + decode inside Arrow batches,
     no shuffle; only ``(id, idx, ts, hash)`` rows cross into the
     plan — never pixels."""
-    import math
-
     if every_k < 1:
         raise ValueError(f"every_k must be >= 1: {every_k}")
     rows_n = 8
@@ -1895,32 +1777,25 @@ def video_frame_dhash(df: DataFrame, payload_col: str = "payload",
         raise ValueError(f"bits must be in [8, 56]: {bits}")
     cols = bits // rows_n + 1
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                timescale, frames = parse_sample_table(p)
-                if not frames:
-                    out.append((int(mid), None, None, None))
-                    continue
-                for idx in range(0, len(frames), every_k):
-                    ticks, off, nb = frames[idx]
-                    try:
-                        _kind, arr = _decode_image(p[off:off + nb])
-                        h = _dhash_of(arr, rows_n, cols)
-                    except DecodeUnavailable:
-                        h = None
-                    ts_s = math.floor(
-                        ticks / timescale * 1000000.0 + 0.5) \
-                        / 1000000.0
-                    out.append((int(mid), idx, ts_s, h))
-            yield pd.DataFrame(
-                out, columns=[id_col, "frame_idx", "ts_s", "dhash"])
+    def frame_hashes(payload):
+        p = payload or b""
+        timescale, frames = parse_sample_table(p)
+        if not frames:
+            return [(None, None, None)]
+        out = []
+        for idx in range(0, len(frames), every_k):
+            ticks, off, nb = frames[idx]
+            try:
+                _kind, arr = _decode_image(p[off:off + nb])
+                h = _dhash_of(arr, rows_n, cols)
+            except DecodeUnavailable:
+                h = None
+            out.append((idx, round_half_up(ticks / timescale, 6), h))
+        return out
 
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, frame_idx int, "
-                         f"ts_s double, dhash long"))
+    return map_rows(
+        df, frame_hashes, f"{id_col} long, frame_idx int, "
+        "ts_s double, dhash long", [payload_col], id_col)
 
 
 def video_scene_cuts(df: DataFrame, payload_col: str = "payload",
@@ -1951,33 +1826,24 @@ def video_scene_cuts(df: DataFrame, payload_col: str = "payload",
         raise ValueError(f"threshold must be >= 0: {threshold}")
     cols = bits // rows_n + 1
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                _timescale, frames = parse_sample_table(p)
-                if not frames:
-                    continue
-                prev = None
-                for idx, (_ticks, off, nb) in enumerate(frames):
-                    try:
-                        _kind, arr = _decode_image(p[off:off + nb])
-                        h = _dhash_of(arr, rows_n, cols)
-                    except DecodeUnavailable:
-                        h = None
-                    if prev is not None and h is not None:
-                        ham = int(bin(prev ^ h).count("1"))
-                        out.append((int(mid), idx, ham,
-                                    ham > threshold))
-                    prev = h
-            yield pd.DataFrame(
-                out, columns=[id_col, "frame_idx", "hamming",
-                              "is_cut"])
+    def cuts(payload):
+        p = payload or b""
+        _timescale, frames = parse_sample_table(p)
+        prev = None
+        for idx, (_ticks, off, nb) in enumerate(frames or ()):
+            try:
+                _kind, arr = _decode_image(p[off:off + nb])
+                h = _dhash_of(arr, rows_n, cols)
+            except DecodeUnavailable:
+                h = None
+            if prev is not None and h is not None:
+                ham = bin(prev ^ h).count("1")
+                yield (idx, ham, ham > threshold)
+            prev = h
 
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, frame_idx int, "
-                         f"hamming int, is_cut boolean"))
+    return map_rows(
+        df, cuts, f"{id_col} long, frame_idx int, hamming int, "
+        "is_cut boolean", [payload_col], id_col)
 
 
 def video_near_duplicates(df: DataFrame, payload_col: str = "payload",
@@ -2046,37 +1912,34 @@ def video_metadata(df: DataFrame, payload_col: str = "payload",
     parsed FROM THE BYTES over Arrow batches; payloads never leave
     the executors, duration rounds to 6 decimals."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            meta = [parse_video_header(p) for p in pdf[payload_col]]
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "container": [m[0] for m in meta],
-                "duration_s": pd.array(
-                    [round(m[1], 6) if m[1] is not None else None
-                     for m in meta], dtype="Float64"),
-                "width": pd.array([m[2] for m in meta],
-                                  dtype="Int32"),
-                "height": pd.array([m[3] for m in meta],
-                                   dtype="Int32"),
-                "n_tracks": pd.array([m[4] for m in meta],
-                                     dtype="Int32"),
-            })
+    def meta(payload):
+        container, dur, w, h, n_tracks = parse_video_header(payload)
+        if dur is not None:
+            dur = round(dur, 6)
+        return [(container, dur, w, h, n_tracks)]
 
-    return df.mapInPandas(batches, schema=VIDEO_META_SCHEMA)
+    return map_rows(df, meta, VIDEO_META_SCHEMA, [payload_col], id_col)
+
+
+def _gray(arr):
+    """Integer grayscale mixdown (``sum // channels``) of an
+    ``(h, w, c)`` image; a 2-D array is already gray."""
+    import numpy as np
+
+    if arr.ndim == 3:
+        arr = arr.astype(np.int64).sum(axis=2) // arr.shape[2]
+    return arr
 
 
 def _dhash_of(arr, rows: int, cols: int) -> int:
     """The dHash core shared by image and video-frame hashing:
-    integer grayscale mixdown (``sum // channels``), nearest-neighbor
+    integer grayscale mixdown (:func:`_gray`), nearest-neighbor
     resize to ``rows x cols``, one bit per horizontal neighbor pair
     (``1`` iff the right pixel is brighter). Integer arithmetic end
     to end, bit-deterministic across platforms."""
     import numpy as np
 
-    if arr.ndim == 3:
-        arr = arr.astype(np.int64).sum(axis=2) // arr.shape[2]
-    small = _resize_nearest(arr, rows, cols).astype(np.int64)
+    small = _resize_nearest(_gray(arr), rows, cols).astype(np.int64)
     diff = (small[:, 1:] > small[:, :-1]).flatten()
     h = 0
     for b in np.nonzero(diff)[0]:
@@ -2107,25 +1970,21 @@ def image_dhash(df: DataFrame, payload_col: str = "payload",
         raise ValueError(f"bits must be a multiple of {rows}: {bits}")
     if not 0 < bits <= 56:
         # bit index bits-1 must stay below 63: the hash column is a
-        # signed int64, so bits=64 would overflow at the Arrow/pandas
+        # signed int64, so bits=64 would overflow at the Arrow
         # long conversion on ~half of all inputs. 56 is the largest
         # multiple of 8 that fits.
         raise ValueError(f"bits must be in [8, 56]: {bits}")
     cols = bits // rows + 1
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    _kind, arr = _decode_image(p)
-                    out.append((int(mid), _dhash_of(arr, rows, cols)))
-                except DecodeUnavailable:
-                    out.append((int(mid), None))
-            yield pd.DataFrame(out, columns=[id_col, "dhash"])
+    def dhash(payload):
+        try:
+            _kind, arr = _decode_image(payload or b"")
+        except DecodeUnavailable:
+            return [(None,)]
+        return [(_dhash_of(arr, rows, cols),)]
 
-    return df.mapInPandas(batches, schema=f"{id_col} long, dhash long")
+    return map_rows(df, dhash, f"{id_col} long, dhash long",
+                    [payload_col], id_col)
 
 
 def image_phash(df: DataFrame, payload_col: str = "payload",
@@ -2159,32 +2018,24 @@ def image_phash(df: DataFrame, payload_col: str = "payload",
     # M[u, y] = cos(pi * (2y + 1) * u / (2n)); coeffs = M p M^T
     M = np.cos(np.pi * (2 * y[None, :] + 1) * u[:, None] / (2 * n))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    _kind, arr = _decode_image(p)
-                    if arr.ndim == 3:
-                        arr = (arr.astype(np.int64).sum(axis=2)
-                               // arr.shape[2])
-                    small = _resize_nearest(arr, n, n) \
-                        .astype(np.float64)
-                    co = M @ small @ M.T
-                    flat = (np.floor(co.flatten()[1:] * 10000.0
-                                     + 0.5) / 10000.0).tolist()
-                    med = sorted(flat)[(len(flat) - 1) // 2]
-                    h = 0
-                    for b, v in enumerate(flat):
-                        if v > med:
-                            h |= 1 << b
-                    out.append((int(mid), h))
-                except DecodeUnavailable:
-                    out.append((int(mid), None))
-            yield pd.DataFrame(out, columns=[id_col, "phash"])
+    def phash(payload):
+        try:
+            _kind, arr = _decode_image(payload or b"")
+        except DecodeUnavailable:
+            return [(None,)]
+        small = _resize_nearest(_gray(arr), n, n).astype(np.float64)
+        co = M @ small @ M.T
+        flat = (np.floor(co.flatten()[1:] * 10000.0 + 0.5)
+                / 10000.0).tolist()
+        med = sorted(flat)[(len(flat) - 1) // 2]
+        h = 0
+        for b, v in enumerate(flat):
+            if v > med:
+                h |= 1 << b
+        return [(h,)]
 
-    return df.mapInPandas(batches, schema=f"{id_col} long, phash long")
+    return map_rows(df, phash, f"{id_col} long, phash long",
+                    [payload_col], id_col)
 
 
 def image_near_duplicates(df: DataFrame, payload_col: str = "payload",
@@ -2229,37 +2080,53 @@ def audio_envelope_hash(df: DataFrame, payload_col: str = "payload",
     if not 0 < bits <= 63:
         # highest diff bit is bits-1; the env_hash column is a signed
         # int64, so bits=64 would set bit 63 and overflow at the
-        # Arrow/pandas long conversion on ~half of all inputs
+        # Arrow long conversion on ~half of all inputs
         raise ValueError(f"bits must be in [1, 63]: {bits}")
     windows = bits + 1
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    samples, _rate = decode_wav_samples(p)
-                    s = np.asarray(samples).astype(np.int64)
-                    if s.ndim == 2:
-                        s = s.sum(axis=1) // s.shape[1]
-                    n = len(s)
-                    if n == 0:
-                        raise DecodeUnavailable("no samples")
-                    idx = (np.arange(n) * windows) // n
-                    e = np.zeros(windows, dtype=np.int64)
-                    np.add.at(e, idx, np.abs(s))
-                    diff = (e[1:] > e[:-1])
-                    h = 0
-                    for b in np.nonzero(diff)[0]:
-                        h |= 1 << int(b)
-                    out.append((int(mid), h))
-                except DecodeUnavailable:
-                    out.append((int(mid), None))
-            yield pd.DataFrame(out, columns=[id_col, "env_hash"])
+    def env_hash(payload):
+        try:
+            samples, _rate = decode_wav_samples(payload or b"")
+        except DecodeUnavailable:
+            return [(None,)]
+        s = np.asarray(samples).astype(np.int64)
+        if s.ndim == 2:
+            s = s.sum(axis=1) // s.shape[1]
+        n = len(s)
+        if n == 0:
+            return [(None,)]
+        idx = (np.arange(n) * windows) // n
+        e = np.zeros(windows, dtype=np.int64)
+        np.add.at(e, idx, np.abs(s))
+        h = 0
+        for b in np.nonzero(e[1:] > e[:-1])[0]:
+            h |= 1 << int(b)
+        return [(h,)]
 
-    return df.mapInPandas(batches,
-                          schema=f"{id_col} long, env_hash long")
+    return map_rows(df, env_hash, f"{id_col} long, env_hash long",
+                    [payload_col], id_col)
+
+
+def _mono_samples(payload):
+    """``(mono samples, sample_rate)`` of a WAV payload through the
+    REAL decoder: integer PCM mixes down in exact int64 (``sum //
+    channels``), IEEE-float WAVs to the float64 channel mean. Raises
+    ``DecodeUnavailable`` for undecodable payloads and empty clips."""
+    import numpy as np
+
+    samples, rate = decode_wav_samples(payload or b"")
+    s = np.asarray(samples)
+    if np.issubdtype(s.dtype, np.floating):
+        s = s.astype(np.float64)
+        if s.ndim == 2:
+            s = s.sum(axis=1) / s.shape[1]
+    else:
+        s = s.astype(np.int64)
+        if s.ndim == 2:
+            s = s.sum(axis=1) // s.shape[1]
+    if len(s) == 0:
+        raise DecodeUnavailable("no samples")
+    return s, rate
 
 
 def audio_zero_crossings(df: DataFrame,
@@ -2285,37 +2152,18 @@ def audio_zero_crossings(df: DataFrame,
     Arrow-batched; payload bytes stay executor-side."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    samples, _rate = decode_wav_samples(p)
-                    s = np.asarray(samples)
-                    if np.issubdtype(s.dtype, np.floating):
-                        s = s.astype(np.float64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) / s.shape[1]
-                    else:
-                        s = s.astype(np.int64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) // s.shape[1]
-                    n = len(s)
-                    if n == 0:
-                        raise DecodeUnavailable("no samples")
-                    k = int(np.count_nonzero(s[:-1] * s[1:] < 0))
-                    zcr = round(k / (n - 1), 6) if n > 1 else 0.0
-                    out.append((int(mid), n, k, zcr))
-                except DecodeUnavailable:
-                    out.append((int(mid), None, None, None))
-            yield pd.DataFrame(
-                out, columns=[id_col, "n_samples", "n_crossings",
-                              "zcr"])
+    def zero_crossings(payload):
+        try:
+            s, _rate = _mono_samples(payload)
+        except DecodeUnavailable:
+            return [(None, None, None)]
+        n = len(s)
+        k = int(np.count_nonzero(s[:-1] * s[1:] < 0))
+        return [(n, k, round(k / (n - 1), 6) if n > 1 else 0.0)]
 
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, n_samples long, "
-                         f"n_crossings long, zcr double"))
+    return map_rows(
+        df, zero_crossings, f"{id_col} long, n_samples long, "
+        "n_crossings long, zcr double", [payload_col], id_col)
 
 
 def audio_clipping_stats(df: DataFrame,
@@ -2363,68 +2211,54 @@ def audio_clipping_stats(df: DataFrame,
 
     import numpy as np
 
-    def _r(x: float, d: int) -> float:
-        return math.floor(x * 10 ** d + 0.5) / 10 ** d
+    def clipping(payload):
+        try:
+            samples, _rate = decode_wav_samples(payload or b"")
+        except DecodeUnavailable:
+            return [(None,) * 5]
+        s = np.asarray(samples)
+        if np.issubdtype(s.dtype, np.floating):
+            fs = 1.0 if full_scale is None else full_scale
+            s = s.astype(np.float64)
+            if s.ndim == 2:
+                s = s.sum(axis=1) / s.shape[1]
+        else:
+            if full_scale is None:
+                fs = (2147483647.0
+                      if s.dtype.itemsize >= 4 else 32767.0)
+            else:
+                fs = full_scale
+            s = s.astype(np.int64)
+            if s.ndim == 2:
+                s = s.sum(axis=1) // s.shape[1]
+        n = len(s)
+        if n == 0:
+            return [(None,) * 5]
+        a = np.abs(s)
+        peak = float(a.max())
+        if not np.issubdtype(np.asarray(samples).dtype, np.integer):
+            peak = round_half_up(peak, 6)
+        if (np.issubdtype(s.dtype, np.integer)
+                and n * float(a.max()) ** 2 < 2 ** 62):
+            # exact int64 square sum, guarded by the worst-case total
+            # n*peak^2 (16-bit PCM always passes; near-full-scale
+            # 32-bit PCM falls to the float path, where int64 np.dot
+            # would silently wrap)
+            ss = float(int(np.dot(s, s)))
+        else:
+            sf64 = s.astype(np.float64)
+            ss = float(np.dot(sf64, sf64))
+        clipped = int(np.count_nonzero(a >= fs))
+        run = max((sum(1 for _ in g)
+                   for z, g in groupby(a <= silence_eps) if z),
+                  default=0)
+        return [(n, peak, round_half_up(math.sqrt(ss / n), 4),
+                 round_half_up(clipped / n, 6), run)]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    samples, _rate = decode_wav_samples(p)
-                    s = np.asarray(samples)
-                    if np.issubdtype(s.dtype, np.floating):
-                        fs = 1.0 if full_scale is None else full_scale
-                        s = s.astype(np.float64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) / s.shape[1]
-                    else:
-                        if full_scale is None:
-                            fs = (2147483647.0
-                                  if s.dtype.itemsize >= 4 else 32767.0)
-                        else:
-                            fs = full_scale
-                        s = s.astype(np.int64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) // s.shape[1]
-                    n = len(s)
-                    if n == 0:
-                        raise DecodeUnavailable("no samples")
-                    a = np.abs(s)
-                    peak = float(a.max())
-                    if not np.issubdtype(
-                            np.asarray(samples).dtype, np.integer):
-                        peak = _r(peak, 6)
-                    if (np.issubdtype(s.dtype, np.integer)
-                            and n * float(a.max()) ** 2 < 2 ** 62):
-                        # exact int64 square sum, guarded by the
-                        # worst-case total n*peak^2 (16-bit PCM always
-                        # passes; near-full-scale 32-bit PCM falls to
-                        # the float path, where int64 np.dot would
-                        # silently wrap)
-                        ss = float(int(np.dot(s, s)))
-                    else:
-                        sf64 = s.astype(np.float64)
-                        ss = float(np.dot(sf64, sf64))
-                    rms = _r(math.sqrt(ss / n), 4)
-                    clipped = int(np.count_nonzero(a >= fs))
-                    run = max((sum(1 for _ in g)
-                               for z, g in groupby(a <= silence_eps)
-                               if z), default=0)
-                    out.append((int(mid), n, peak, rms,
-                                _r(clipped / n, 6), run))
-                except DecodeUnavailable:
-                    out.append((int(mid), None, None, None,
-                                None, None))
-            yield pd.DataFrame(
-                out, columns=[id_col, "n_samples", "peak", "rms",
-                              "clipped_frac", "max_silence_run"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, n_samples long, "
-                         f"peak double, rms double, "
-                         f"clipped_frac double, max_silence_run long"))
+    return map_rows(
+        df, clipping, f"{id_col} long, n_samples long, peak double, "
+        "rms double, clipped_frac double, max_silence_run long",
+        [payload_col], id_col)
 
 
 def audio_vad_segments(df: DataFrame, payload_col: str = "payload",
@@ -2458,69 +2292,46 @@ def audio_vad_segments(df: DataFrame, payload_col: str = "payload",
     / rate, 6)`` (the trailing partial frame ends at the clip edge,
     not past it). Undecodable or all-silent clips emit no rows (a
     segment table, not a per-clip report — join back to the corpus
-    for coverage accounting). Arrow-batched ``mapInPandas``; samples
+    for coverage accounting). Arrow-batched ``mapInArrow``; samples
     stay executor-side, no shuffle."""
-    import math
-
     import numpy as np
 
     if frame_len < 1:
         raise ValueError(f"frame_len must be >= 1: {frame_len}")
 
-    def _r6(x: float) -> float:
-        return math.floor(x * 1e6 + 0.5) / 1e6
+    def segments(payload):
+        try:
+            s, rate = _mono_samples(payload)
+        except DecodeUnavailable:
+            return
+        n = len(s)
+        a = np.abs(s)
+        n_frames = (n + frame_len - 1) // frame_len
+        starts = np.arange(n_frames) * frame_len
+        sums = np.add.reduceat(a, starts)
+        sizes = np.minimum(starts + frame_len, n) - starts
+        voiced = sums > energy_threshold * sizes
+        seg_idx = 0
+        f = 0
+        while f < n_frames:
+            if not voiced[f]:
+                f += 1
+                continue
+            g = f
+            while g + 1 < n_frames and voiced[g + 1]:
+                g += 1
+            if g - f + 1 >= min_frames:
+                end_sample = min((g + 1) * frame_len, n)
+                yield (seg_idx, f, g,
+                       round_half_up(f * frame_len / rate, 6),
+                       round_half_up(end_sample / rate, 6))
+                seg_idx += 1
+            f = g + 1
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    samples, rate = decode_wav_samples(p)
-                    s = np.asarray(samples)
-                    if np.issubdtype(s.dtype, np.floating):
-                        s = s.astype(np.float64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) / s.shape[1]
-                    else:
-                        s = s.astype(np.int64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) // s.shape[1]
-                    n = len(s)
-                    if n == 0:
-                        raise DecodeUnavailable("no samples")
-                except DecodeUnavailable:
-                    continue
-                a = np.abs(s)
-                n_frames = (n + frame_len - 1) // frame_len
-                starts = np.arange(n_frames) * frame_len
-                sums = np.add.reduceat(a, starts)
-                sizes = np.minimum(starts + frame_len, n) - starts
-                voiced = sums > energy_threshold * sizes
-                seg_idx = 0
-                f = 0
-                while f < n_frames:
-                    if not voiced[f]:
-                        f += 1
-                        continue
-                    g = f
-                    while g + 1 < n_frames and voiced[g + 1]:
-                        g += 1
-                    if g - f + 1 >= min_frames:
-                        end_sample = min((g + 1) * frame_len, n)
-                        out.append((int(mid), seg_idx, f, g,
-                                    _r6(f * frame_len / rate),
-                                    _r6(end_sample / rate)))
-                        seg_idx += 1
-                    f = g + 1
-            yield pd.DataFrame(
-                out, columns=[id_col, "seg_idx", "start_frame",
-                              "end_frame", "start_s", "end_s"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, seg_idx int, "
-                         "start_frame int, end_frame int, "
-                         "start_s double, end_s double"))
+    return map_rows(
+        df, segments, f"{id_col} long, seg_idx int, start_frame int, "
+        "end_frame int, start_s double, end_s double", [payload_col],
+        id_col)
 
 
 def image_pixel_stats(df: DataFrame, payload_col: str = "payload",
@@ -2553,50 +2364,30 @@ def image_pixel_stats(df: DataFrame, payload_col: str = "payload",
 
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    _kind, arr = _decode_image(p)
-                    if arr.ndim == 3:
-                        arr = (arr.astype(np.int64).sum(axis=2)
-                               // arr.shape[2])
-                    flat = arr.astype(np.int64).ravel()
-                    n = int(flat.size)
-                    if n == 0:
-                        raise DecodeUnavailable("no pixels")
-                    bucket = (flat * bins) // 256
-                    counts = np.bincount(bucket, minlength=bins)
-                    counts = counts[counts > 0]
-                    terms = 0.0
-                    for c in counts.tolist():
-                        pr = c / n
-                        terms += math.floor(-pr * math.log(pr)
-                                            * 1000000.0 + 0.5) \
-                            / 1000000.0
-                    entropy = math.floor(terms * 10000.0 + 0.5) \
-                        / 10000.0
-                    dom = math.floor(int(counts.max()) / n
-                                     * 10000.0 + 0.5) / 10000.0
-                    mean = math.floor(int(flat.sum()) / n
-                                      * 10000.0 + 0.5) / 10000.0
-                    out.append((int(mid), n, mean, entropy, dom,
-                                int(counts.size)))
-                except DecodeUnavailable:
-                    out.append((int(mid), None, None, None, None,
-                                None))
-            yield pd.DataFrame(
-                out, columns=[id_col, "n_pixels", "mean_gray",
-                              "entropy", "dominant_frac",
-                              "n_buckets_used"])
+    def pixel_stats(payload):
+        try:
+            _kind, arr = _decode_image(payload or b"")
+        except DecodeUnavailable:
+            return [(None,) * 5]
+        flat = _gray(arr).astype(np.int64).ravel()
+        n = int(flat.size)
+        if n == 0:
+            return [(None,) * 5]
+        counts = np.bincount((flat * bins) // 256, minlength=bins)
+        counts = counts[counts > 0]
+        terms = 0.0
+        for c in counts.tolist():
+            pr = c / n
+            terms += round_half_up(-pr * math.log(pr), 6)
+        return [(n, round_half_up(int(flat.sum()) / n, 4),
+                 round_half_up(terms, 4),
+                 round_half_up(int(counts.max()) / n, 4),
+                 int(counts.size))]
 
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, n_pixels long, "
-                         f"mean_gray double, entropy double, "
-                         f"dominant_frac double, "
-                         f"n_buckets_used int"))
+    return map_rows(
+        df, pixel_stats, f"{id_col} long, n_pixels long, "
+        "mean_gray double, entropy double, dominant_frac double, "
+        "n_buckets_used int", [payload_col], id_col)
 
 
 def audio_spectral_features(df: DataFrame,
@@ -2626,65 +2417,40 @@ def audio_spectral_features(df: DataFrame,
     frame_len, centroid, rolloff_bin)``; undecodable payloads yield
     null features (rows kept). Arrow-batched; payload bytes stay
     executor-side."""
-    import math
-
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    samples, _rate = decode_wav_samples(p)
-                    s = np.asarray(samples)
-                    if np.issubdtype(s.dtype, np.floating):
-                        s = s.astype(np.float64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) / s.shape[1]
-                    else:
-                        s = s.astype(np.int64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) // s.shape[1]
-                    n = len(s)
-                    if n == 0:
-                        raise DecodeUnavailable("no samples")
-                    m = min(n, frame)
-                    x = s[:m].astype(np.float64)
-                    kk = np.arange(1, m // 2 + 1, dtype=np.float64)
-                    centroid, roll = 0.0, 0
-                    if kk.size:
-                        t = np.arange(m, dtype=np.float64)
-                        # angle = ((2*pi) * (k*t)) / m — the exact
-                        # op order the SQL twin uses, so the doubles
-                        # entering cos/sin are bit-identical
-                        ang = (2.0 * np.pi) \
-                            * (kk[:, None] * t[None, :]) / m
-                        re = (np.cos(ang) * x[None, :]).sum(axis=1)
-                        im = (np.sin(ang) * x[None, :]).sum(axis=1)
-                        mag = np.floor(np.sqrt(re * re + im * im)
-                                       * 10000.0 + 0.5) / 10000.0
-                        total = float(mag.sum())
-                        if total > 0:
-                            centroid = math.floor(
-                                float((kk * mag).sum()) / total
-                                * 10000.0 + 0.5) / 10000.0
-                            cum = np.cumsum(mag)
-                            idx = int(np.searchsorted(
-                                cum, rolloff_frac * total,
-                                side="left"))
-                            roll = int(kk[min(idx, kk.size - 1)])
-                    out.append((int(mid), n, m, centroid, roll))
-                except DecodeUnavailable:
-                    out.append((int(mid), None, None, None, None))
-            yield pd.DataFrame(
-                out, columns=[id_col, "n_samples", "frame_len",
-                              "centroid", "rolloff_bin"])
+    def spectral(payload):
+        try:
+            s, _rate = _mono_samples(payload)
+        except DecodeUnavailable:
+            return [(None,) * 4]
+        n = len(s)
+        m = min(n, frame)
+        x = s[:m].astype(np.float64)
+        kk = np.arange(1, m // 2 + 1, dtype=np.float64)
+        centroid, roll = 0.0, 0
+        if kk.size:
+            t = np.arange(m, dtype=np.float64)
+            # angle = ((2*pi) * (k*t)) / m — the exact op order the
+            # SQL twin uses, so the doubles entering cos/sin are
+            # bit-identical
+            ang = (2.0 * np.pi) * (kk[:, None] * t[None, :]) / m
+            re = (np.cos(ang) * x[None, :]).sum(axis=1)
+            im = (np.sin(ang) * x[None, :]).sum(axis=1)
+            mag = np.floor(np.sqrt(re * re + im * im) * 10000.0
+                           + 0.5) / 10000.0
+            total = float(mag.sum())
+            if total > 0:
+                centroid = round_half_up(
+                    float((kk * mag).sum()) / total, 4)
+                idx = int(np.searchsorted(
+                    np.cumsum(mag), rolloff_frac * total, side="left"))
+                roll = int(kk[min(idx, kk.size - 1)])
+        return [(n, m, centroid, roll)]
 
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, n_samples long, "
-                         f"frame_len int, centroid double, "
-                         f"rolloff_bin int"))
+    return map_rows(
+        df, spectral, f"{id_col} long, n_samples long, frame_len int, "
+        "centroid double, rolloff_bin int", [payload_col], id_col)
 
 
 def audio_mfcc_features(df: DataFrame, payload_col: str = "payload",
@@ -2726,79 +2492,49 @@ def audio_mfcc_features(df: DataFrame, payload_col: str = "payload",
 
     import numpy as np
 
-    def _r(x: float, d: int) -> float:
-        return math.floor(x * 10 ** d + 0.5) / 10 ** d
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                try:
-                    samples, rate = decode_wav_samples(p)
-                    s = np.asarray(samples)
-                    if np.issubdtype(s.dtype, np.floating):
-                        s = s.astype(np.float64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) / s.shape[1]
-                    else:
-                        s = s.astype(np.int64)
-                        if s.ndim == 2:
-                            s = s.sum(axis=1) // s.shape[1]
-                    n = len(s)
-                    if n == 0:
-                        raise DecodeUnavailable("no samples")
-                    m = min(n, frame)
-                    K = m // 2
-                    if K < 1 or not rate:
-                        out.append((int(mid), n, m)
-                                   + (None,) * n_mfcc)
-                        continue
-                    x = s[:m].astype(np.float64)
-                    kk = np.arange(1, K + 1, dtype=np.float64)
-                    t = np.arange(m, dtype=np.float64)
-                    ang = (2.0 * np.pi) \
-                        * (kk[:, None] * t[None, :]) / m
-                    re = (np.cos(ang) * x[None, :]).sum(axis=1)
-                    im = (np.sin(ang) * x[None, :]).sum(axis=1)
-                    mag = np.floor(np.sqrt(re * re + im * im)
-                                   * 10000.0 + 0.5) / 10000.0
-                    power = mag * mag
-                    # mel band edges as fractional DFT bins
-                    mel_hi = 2595.0 * math.log10(
-                        1.0 + (rate / 2.0) / 700.0)
-                    b = [700.0 * (10.0 ** ((j * mel_hi
-                                            / (n_mels + 1)) / 2595.0)
-                                  - 1.0) * m / rate
-                         for j in range(n_mels + 2)]
-                    logs = []
-                    for j in range(1, n_mels + 1):
-                        w = np.minimum(
-                            (kk - b[j - 1]) / (b[j] - b[j - 1]),
-                            (b[j + 1] - kk) / (b[j + 1] - b[j]))
-                        w = np.maximum(0.0, w)
-                        w = np.floor(w * 1000000.0 + 0.5) / 1000000.0
-                        e = float((w * power).sum())
-                        logs.append(_r(math.log(e + 1.0), 4))
-                    mf = []
-                    for i in range(n_mfcc):
-                        c = sum(logs[j] * math.cos(
-                            math.pi * i * (2 * j + 1)
-                            / (2.0 * n_mels))
-                            for j in range(n_mels))
-                        mf.append(_r(c, 4))
-                    out.append((int(mid), n, m) + tuple(mf))
-                except DecodeUnavailable:
-                    out.append((int(mid), None, None)
-                               + (None,) * n_mfcc)
-            yield pd.DataFrame(
-                out, columns=[id_col, "n_samples", "frame_len"]
-                + [f"mfcc{i}" for i in range(n_mfcc)])
+    def mfcc(payload):
+        try:
+            s, rate = _mono_samples(payload)
+        except DecodeUnavailable:
+            return [(None, None) + (None,) * n_mfcc]
+        n = len(s)
+        m = min(n, frame)
+        K = m // 2
+        if K < 1 or not rate:
+            return [(n, m) + (None,) * n_mfcc]
+        x = s[:m].astype(np.float64)
+        kk = np.arange(1, K + 1, dtype=np.float64)
+        t = np.arange(m, dtype=np.float64)
+        ang = (2.0 * np.pi) * (kk[:, None] * t[None, :]) / m
+        re = (np.cos(ang) * x[None, :]).sum(axis=1)
+        im = (np.sin(ang) * x[None, :]).sum(axis=1)
+        mag = np.floor(np.sqrt(re * re + im * im) * 10000.0
+                       + 0.5) / 10000.0
+        power = mag * mag
+        # mel band edges as fractional DFT bins
+        mel_hi = 2595.0 * math.log10(1.0 + (rate / 2.0) / 700.0)
+        b = [700.0 * (10.0 ** ((j * mel_hi / (n_mels + 1)) / 2595.0)
+                      - 1.0) * m / rate
+             for j in range(n_mels + 2)]
+        logs = []
+        for j in range(1, n_mels + 1):
+            w = np.minimum((kk - b[j - 1]) / (b[j] - b[j - 1]),
+                           (b[j + 1] - kk) / (b[j + 1] - b[j]))
+            w = np.maximum(0.0, w)
+            w = np.floor(w * 1000000.0 + 0.5) / 1000000.0
+            e = float((w * power).sum())
+            logs.append(round_half_up(math.log(e + 1.0), 4))
+        mf = tuple(
+            round_half_up(sum(logs[j] * math.cos(
+                math.pi * i * (2 * j + 1) / (2.0 * n_mels))
+                for j in range(n_mels)), 4)
+            for i in range(n_mfcc))
+        return [(n, m) + mf]
 
     cols = ", ".join(f"mfcc{i} double" for i in range(n_mfcc))
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, n_samples long, "
-                         f"frame_len int, {cols}"))
+    return map_rows(
+        df, mfcc, f"{id_col} long, n_samples long, frame_len int, "
+        f"{cols}", [payload_col], id_col)
 
 
 def audio_near_duplicates(df: DataFrame, payload_col: str = "payload",

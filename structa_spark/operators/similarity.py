@@ -27,15 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ._cache import evict_then_cache, register_cell
+from ..functions.rows import round_half_up
 from .dedup import ensure_parallelism
-
-# one-deep cell for the k-means working set: every Lloyd's iteration
-# re-reads the same vector projection (assignment pass + centroid
-# averages), and without a persist each of the 2*iters+1 jobs re-runs
-# the scan + id-keyed spread that produced it (the tf-cache pattern
-# from operators/text.py)
-_KMEANS_INPUT_CACHE = register_cell("kmeans_input")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -706,23 +699,14 @@ def kmeans_refine(df: DataFrame, centroids: Sequence[Sequence[float]],
     k-row collect: the same driver-sided centroid exchange every
     distributed k-means (including Spark MLlib's) performs.
     """
-    import math
-
-    def _round_half_up(x: float, n: int) -> float:
-        # floor(x * 10^n + 0.5) / 10^n on the BINARY double — three
-        # IEEE ops a SQL oracle replays verbatim. Python's round()
-        # is banker's half-to-even, and a shortest-repr Decimal
-        # detour can round a boundary-straddling mean differently
-        # from the binary value the SQL engine rounds — either would
-        # break the cross-engine replay on a boundary coordinate.
-        s = 10.0 ** n
-        return math.floor(x * s + 0.5) / s
+    from pyspark import StorageLevel
 
     cur = [[float(x) for x in c] for c in centroids]
     # every iteration reads the SAME vector projection twice (assign
-    # + per-cluster averages); persist it once through the shared
-    # one-deep cell so the 2*iters jobs read the in-memory columnar
-    # relation instead of re-running the scan + spread each time.
+    # + per-cluster averages); persist it for the duration of the call
+    # so the 2*iters jobs read the in-memory columnar relation instead
+    # of re-running the scan + spread each time. The call is eager
+    # and returns plain lists, so nothing it persisted outlives it.
     # Projecting to just the vector column first shrinks what is
     # cached and read (guide §2.3: project before heavy reuse). The
     # iteration source then folds to a rows-per-task floor: each
@@ -732,7 +716,18 @@ def kmeans_refine(df: DataFrame, centroids: Sequence[Sequence[float]],
     # (many full partitions) this is a no-op. Averages round to
     # `round_to` decimals after the division, which is what already
     # makes them stable across summation orders (docstring above).
-    src = evict_then_cache(_KMEANS_INPUT_CACHE, df.select(vec_col))
+    cached = df.select(vec_col).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        return _kmeans_iterate(cached, cur, dim, iters, round_to,
+                               vec_col)
+    finally:
+        cached.unpersist(False)
+
+
+def _kmeans_iterate(src: DataFrame, cur, dim: int, iters: int,
+                    round_to: int, vec_col: str):
+    """The Lloyd's iterations of :func:`kmeans_refine` over its
+    persisted vector projection ``src``."""
     n_rows = src.count()
     src = src.coalesce(max(1, min(src.rdd.getNumPartitions(),
                                   (n_rows + 2047) // 2048)))
@@ -802,8 +797,7 @@ def kmeans_refine(df: DataFrame, centroids: Sequence[Sequence[float]],
         nxt = [list(c) for c in cur]
         for kid, dims in by_k.items():
             nxt[kid] = [
-                _round_half_up(float(dims[t][0] / dims[t][1]),
-                               round_to)
+                round_half_up(float(dims[t][0] / dims[t][1]), round_to)
                 if dims.get(t, (0.0, 0))[1]
                 else float(None)        # NULL dimension: same
                                         # TypeError the avg path threw

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import md5_long, universal_hash
+from ..functions.rows import map_rows, round_half_up
 
 # Tiny per-language function-word lists for the n-gram/stopword
 # language heuristic. Deliberately small and frozen: the heuristic is
@@ -1792,6 +1793,37 @@ def bpe_train(df: DataFrame, n_merges: int = 200,
     return merges
 
 
+#: distinct words one task's encode cache holds before it starts over
+#: (bounds executor memory on a long tail of rare words)
+_WORD_CACHE_MAX = 1 << 16
+
+
+def _encode_words(df: DataFrame, encode_word, text_col: str,
+                  id_col: str, out_col: str) -> DataFrame:
+    """``(id, out_col array<string>)``: each row's lowercased
+    whitespace words through ``encode_word``, pieces concatenated in
+    document order — the row map every subword encoder shares. The
+    per-word result is memoized per task, so cost tracks DISTINCT
+    words."""
+    cache = {}
+
+    def encode(text):
+        parts = []
+        for w in (text or "").lower().split():
+            got = cache.get(w)
+            if got is None:
+                if len(cache) >= _WORD_CACHE_MAX:
+                    cache.clear()
+                got = cache[w] = encode_word(w)
+            parts.extend(got)
+        return [(parts,)]
+
+    schema = T.StructType([
+        df.schema[id_col],
+        T.StructField(out_col, T.ArrayType(T.StringType()))])
+    return map_rows(df, encode, schema, [text_col], id_col)
+
+
 def bpe_encode(df: DataFrame, merges,
                text_col: str = "text", id_col: str = "doc_id",
                out_col: str = "bpe_tokens") -> DataFrame:
@@ -1802,37 +1834,13 @@ def bpe_encode(df: DataFrame, merges,
     Scale shape: the merge table is vocabulary-sized and ships once
     per task inside the serialized closure (the broadcast pattern);
     rows never shuffle — encoding is a pure Arrow-batched map over
-    the scan. A per-batch word cache collapses repeated words, so
-    cost tracks DISTINCT words per batch, not token count.
+    the scan. A per-task word cache collapses repeated words, so
+    cost tracks DISTINCT words, not token count.
     """
-    import pandas as pd
-
     ranks = {tuple(p): i for i, p in enumerate(merges)}
-    out_field = T.StructField(out_col, T.ArrayType(T.StringType()))
-    schema = T.StructType(
-        [f for f in df.schema.fields
-         if f.name in (id_col,)] + [out_field])
-
-    def batches(it):
-        for pdf in it:
-            cache = {}
-
-            def enc_word(w):
-                got = cache.get(w)
-                if got is None:
-                    got = _bpe_merge_word(tuple(w) + (BPE_EOW,), ranks)
-                    cache[w] = got
-                return got
-
-            toks = []
-            for text in pdf[text_col]:
-                parts = []
-                for w in (text or "").lower().split():
-                    parts.extend(enc_word(w))
-                toks.append(parts)
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: toks})
-
-    return df.mapInPandas(batches, schema=schema)
+    return _encode_words(
+        df, lambda w: _bpe_merge_word(tuple(w) + (BPE_EOW,), ranks),
+        text_col, id_col, out_col)
 
 
 WORDPIECE_CONT = "##"
@@ -2015,44 +2023,15 @@ def wordpiece_encode(df: DataFrame, vocab,
 
     Scale shape: the vocabulary set ships once per task inside the
     serialized closure (the broadcast pattern); rows never shuffle —
-    encoding is a pure Arrow-batched map with a per-batch word cache,
-    so cost tracks DISTINCT words per batch."""
-    import pandas as pd
-
+    encoding is a pure Arrow-batched map with a per-task word cache,
+    so cost tracks DISTINCT words."""
     pieces = set(vocab)
     max_len = max((len(p) - (len(WORDPIECE_CONT)
                              if p.startswith(WORDPIECE_CONT) else 0)
                    for p in pieces), default=1)
-    out_field = T.StructField(out_col, T.ArrayType(T.StringType()))
-    schema = T.StructType(
-        [f for f in df.schema.fields
-         if f.name in (id_col,)] + [out_field])
-
-    def batches(it):
-        for pdf in it:
-            cache = {}
-            toks = []
-            for text in pdf[text_col]:
-                parts = []
-                for w in (text or "").lower().split():
-                    got = cache.get(w)
-                    if got is None:
-                        got = _wordpiece_encode_word(
-                            w, pieces, max_len, unk)
-                        cache[w] = got
-                    parts.extend(got)
-                toks.append(parts)
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: toks})
-
-    return df.mapInPandas(batches, schema=schema)
-
-
-def _r6(x: float) -> float:
-    """Half-up-toward-+inf rounding to 6 dp on the BINARY double —
-    ``floor(x * 1e6 + 0.5) / 1e6``, three IEEE ops any SQL engine
-    replays verbatim (the pHash rounding discipline)."""
-    import math
-    return math.floor(x * 1000000.0 + 0.5) / 1000000.0
+    return _encode_words(
+        df, lambda w: _wordpiece_encode_word(w, pieces, max_len, unk),
+        text_col, id_col, out_col)
 
 
 def _unigram_viterbi(word, logp, max_piece_len):
@@ -2149,7 +2128,7 @@ def unigram_train(df: DataFrame, vocab_size: int = 200,
 
     def logp_of(weights):
         total = float(sum(weights.values()))
-        return {s: _r6(math.log(v / total))
+        return {s: round_half_up(math.log(v / total), 6)
                 for s, v in weights.items()}
 
     logp = logp_of(scores)
@@ -2189,37 +2168,15 @@ def unigram_encode(df: DataFrame, model,
 
     Scale shape: the model is vocabulary-sized and ships once per
     task inside the closure (the broadcast pattern); rows never
-    shuffle — Arrow-batched map with a per-batch word cache, so cost
-    tracks DISTINCT words per batch (the bpe_encode discipline)."""
-    import pandas as pd
-
+    shuffle — Arrow-batched map with a per-task word cache, so cost
+    tracks DISTINCT words (the bpe_encode discipline)."""
     logp = {p: lp for p, _n, lp in model}
-    out_field = T.StructField(out_col, T.ArrayType(T.StringType()))
-    schema = T.StructType(
-        [f for f in df.schema.fields
-         if f.name in (id_col,)] + [out_field])
 
-    def batches(it):
-        for pdf in it:
-            cache = {}
+    def encode_word(w):
+        got = _unigram_viterbi(w, logp, max_piece_len)
+        return got if got is not None else ["<unk>"]
 
-            def enc_word(w):
-                got = cache.get(w)
-                if got is None:
-                    got = _unigram_viterbi(w, logp, max_piece_len)
-                    got = got if got is not None else ["<unk>"]
-                    cache[w] = got
-                return got
-
-            toks = []
-            for text in pdf[text_col]:
-                parts = []
-                for w in (text or "").lower().split():
-                    parts.extend(enc_word(w))
-                toks.append(parts)
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: toks})
-
-    return df.mapInPandas(batches, schema=schema)
+    return _encode_words(df, encode_word, text_col, id_col, out_col)
 
 
 # one-deep caches of persisted shared relations, owned by the
@@ -2575,63 +2532,51 @@ def align_sentences(df: DataFrame, src_col: str = "src_sents",
     Scale shape: both sentence lists of a document pair live in ONE
     row, so the DP is local to the Arrow batch — no shuffle, O(n*m)
     per pair with n, m in the tens; only bead rows enter the plan."""
-    import pandas as pd
-
     BEADS = [("1:1", 1, 1), ("2:1", 2, 1), ("1:2", 1, 2),
              ("1:0", 1, 0), ("0:1", 0, 1)]
 
-    def batches(it):
-        for pdf in it:
-            out = []
-            for mid, src, tgt in zip(pdf[id_col], pdf[src_col],
-                                     pdf[tgt_col]):
-                s = [str(x) for x in (src if src is not None else [])]
-                t = [str(x) for x in (tgt if tgt is not None else [])]
-                sl = [len(x.split()) for x in s]
-                tl = [len(x.split()) for x in t]
-                n, m = len(s), len(t)
-                INF = 1 << 60
-                d = [[INF] * (m + 1) for _ in range(n + 1)]
-                back = [[None] * (m + 1) for _ in range(n + 1)]
-                d[0][0] = 0
-                for i in range(n + 1):
-                    for j in range(m + 1):
-                        if i == 0 and j == 0:
-                            continue
-                        best, arg = INF, None
-                        for bead, di, dj in BEADS:
-                            if i < di or j < dj:
-                                continue
-                            prev = d[i - di][j - dj]
-                            if prev >= INF:
-                                continue
-                            c = (abs(sum(sl[i - di:i])
-                                     - sum(tl[j - dj:j]))
-                                 + _BEAD_PENALTY[bead])
-                            # strict < keeps the FIRST bead in the
-                            # preference order on ties
-                            if prev + c < best:
-                                best, arg = prev + c, (bead, di, dj, c)
-                        d[i][j], back[i][j] = best, arg
-                beads = []
-                i, j = n, m
-                while (i, j) != (0, 0) and back[i][j] is not None:
-                    bead, di, dj, c = back[i][j]
-                    beads.append((bead,
-                                  " ".join(s[i - di:i]),
-                                  " ".join(t[j - dj:j]), c))
-                    i, j = i - di, j - dj
-                beads.reverse()
-                for k, (bead, st, tt, c) in enumerate(beads):
-                    out.append((int(mid), k, bead, st, tt, c))
-            yield pd.DataFrame(
-                out, columns=[id_col, "bead_no", "bead", "src_text",
-                              "tgt_text", "cost"])
+    def align(src, tgt):
+        s = [str(x) for x in (src if src is not None else [])]
+        t = [str(x) for x in (tgt if tgt is not None else [])]
+        sl = [len(x.split()) for x in s]
+        tl = [len(x.split()) for x in t]
+        n, m = len(s), len(t)
+        INF = 1 << 60
+        d = [[INF] * (m + 1) for _ in range(n + 1)]
+        back = [[None] * (m + 1) for _ in range(n + 1)]
+        d[0][0] = 0
+        for i in range(n + 1):
+            for j in range(m + 1):
+                if i == 0 and j == 0:
+                    continue
+                best, arg = INF, None
+                for bead, di, dj in BEADS:
+                    if i < di or j < dj:
+                        continue
+                    prev = d[i - di][j - dj]
+                    if prev >= INF:
+                        continue
+                    c = (abs(sum(sl[i - di:i]) - sum(tl[j - dj:j]))
+                         + _BEAD_PENALTY[bead])
+                    # strict < keeps the FIRST bead in the preference
+                    # order on ties
+                    if prev + c < best:
+                        best, arg = prev + c, (bead, di, dj, c)
+                d[i][j], back[i][j] = best, arg
+        beads = []
+        i, j = n, m
+        while (i, j) != (0, 0) and back[i][j] is not None:
+            bead, di, dj, c = back[i][j]
+            beads.append((bead, " ".join(s[i - di:i]),
+                          " ".join(t[j - dj:j]), c))
+            i, j = i - di, j - dj
+        beads.reverse()
+        return [(k, *b) for k, b in enumerate(beads)]
 
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, bead_no int, bead string, "
-                         f"src_text string, tgt_text string, "
-                         f"cost int"))
+    return map_rows(
+        df, align, f"{id_col} long, bead_no int, bead string, "
+        "src_text string, tgt_text string, cost int",
+        [src_col, tgt_col], id_col)
 
 
 #: One full UTF-8 byte-sequence, written as the Latin-1 characters
@@ -3824,30 +3769,18 @@ def compression_ratio_screen(df: DataFrame, text_col: str = "text",
     per row, exactly the decompress_payloads posture), no shuffle."""
     import zlib
 
-    import pandas as pd
+    def screen(txt):
+        raw = (txt or "").encode("utf-8")
+        n = len(raw)
+        if n == 0:
+            return [(0, 0, 0.0, True)]
+        c = len(zlib.compress(raw, level))
+        ratio = round_half_up(c / n, 6)
+        return [(n, c, ratio, ratio >= float(min_ratio))]
 
-    def batches(it):
-        for pdf in it:
-            out = []
-            for i, txt in zip(pdf[id_col], pdf[text_col]):
-                raw = (txt or "").encode("utf-8")
-                n = len(raw)
-                if n == 0:
-                    out.append((int(i), 0, 0, 0.0, True))
-                    continue
-                c = len(zlib.compress(raw, level))
-                import math
-                ratio = math.floor(c / n * 1e6 + 0.5) / 1e6
-                out.append((int(i), n, c, ratio,
-                            ratio >= float(min_ratio)))
-            yield pd.DataFrame(
-                out, columns=[id_col, "n_bytes", "n_compressed",
-                              "ratio", "compression_keep"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, n_bytes long, "
-                         "n_compressed long, ratio double, "
-                         "compression_keep boolean"))
+    return map_rows(
+        df, screen, f"{id_col} long, n_bytes long, n_compressed long, "
+        "ratio double, compression_keep boolean", [text_col], id_col)
 
 
 # ---------------------------------------------------------------------------

@@ -10221,10 +10221,9 @@ def kmeans_cluster_profile(spark: SparkSession,
                                      iters=KMEANS_ITERS)
     # member-centroid dot: the winning score falls out of the SAME
     # Arrow assignment pass (bit-identical to the dot() fold), so no
-    # second per-row dot evaluation over the corpus. The input is the
-    # identical vector projection kmeans_refine just persisted
-    # (operators/similarity.py one-deep cell), so this final pass
-    # reads the in-memory relation instead of a fourth scan + spread.
+    # second per-row dot evaluation over the corpus. kmeans_refine
+    # releases its persisted projection before it returns, so this
+    # final pass scans the table again.
     assigned = similarity.ivf_assign(e.select("embedding"), cents,
                                      out_col="cluster_id",
                                      score_col="__dot")

@@ -12,22 +12,24 @@ pretty-print or split tags across the patterns used here) with hard
 caps on the inflated size — a zip bomb yields an error row, never an
 OOM.
 
-Spark shape: pure per-row parse inside Arrow-batched ``mapInPandas``
-(:func:`docx_extract_text`, :func:`office_extract_text`,
-:func:`epub_extract_chapters`); payload bytes stay executor-side, no
-shuffle — the same 100 TB posture as the PDF/WARC/multimodal
-decoders. EPUB chapter XHTML is cleaned JVM-side
-(``text.html_visible_text`` inside an array ``transform``), so the
-HTML hot path never enters Python."""
+Spark shape: pure per-row parse inside Arrow-batched ``mapInArrow``
+(``functions.rows.map_rows``: :func:`docx_extract_text`,
+:func:`office_extract_text`, :func:`epub_extract_chapters`); payload
+bytes stay executor-side, no shuffle — the same 100 TB posture as
+the PDF/WARC/multimodal decoders. EPUB chapter XHTML is cleaned
+JVM-side (``text.html_visible_text`` inside an array ``transform``),
+so the HTML hot path never enters Python."""
 
 from __future__ import annotations
 
 import io
 import re
 import zipfile
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame
+
+from ..functions.rows import map_rows
 
 MAX_XML_BYTES = 1 << 26
 
@@ -92,30 +94,22 @@ def extract_docx_text(payload, max_xml: int = MAX_XML_BYTES
     return ("\n".join(paras), len(paras), err)
 
 
+def _with_n_chars(text, n_units, err):
+    """``(text, n_chars, n_units, error)`` of one extraction result —
+    the row shape of every ``*_extract_text`` operator."""
+    return (text, len(text) if text is not None else None, n_units, err)
+
+
 def docx_extract_text(df: DataFrame, payload_col: str = "payload",
                       id_col: str = "media_id") -> DataFrame:
     """Distributed DOCX text extraction over a binary payload column:
     ``(id, text, n_chars, n_paragraphs, error)``, one row per input
     (failed extractions keep their row with null text). Arrow-batched
-    ``mapInPandas``; payload bytes never leave the executor."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                text, np_, err = extract_docx_text(
-                    bytes(payload) if payload is not None else None)
-                out.append((int(mid), text,
-                            len(text) if text is not None else None,
-                            np_, err))
-            yield pd.DataFrame(
-                out, columns=[id_col, "text", "n_chars",
-                              "n_paragraphs", "error"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, text string, n_chars long, "
-                         "n_paragraphs int, error string"))
+    ``mapInArrow``; payload bytes never leave the executor."""
+    return map_rows(
+        df, lambda p: [_with_n_chars(*extract_docx_text(p))],
+        f"{id_col} long, text string, n_chars long, n_paragraphs int, "
+        "error string", [payload_col], id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -336,51 +330,23 @@ def pptx_extract_text(df: DataFrame, payload_col: str = "payload",
     """Distributed PPTX text extraction over a binary payload column:
     ``(id, text, n_chars, n_slides, error)``, one row per input
     (failed extractions keep their row with null text).
-    Arrow-batched ``mapInPandas``; payload bytes never leave the
+    Arrow-batched ``mapInArrow``; payload bytes never leave the
     executor."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                text, ns, err = extract_pptx_text(
-                    bytes(payload) if payload is not None else None)
-                out.append((int(mid), text,
-                            len(text) if text is not None else None,
-                            ns, err))
-            yield pd.DataFrame(
-                out, columns=[id_col, "text", "n_chars",
-                              "n_slides", "error"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, text string, n_chars long, "
-                         "n_slides int, error string"))
+    return map_rows(
+        df, lambda p: [_with_n_chars(*extract_pptx_text(p))],
+        f"{id_col} long, text string, n_chars long, n_slides int, "
+        "error string", [payload_col], id_col)
 
 
 def xlsx_extract_text(df: DataFrame, payload_col: str = "payload",
                       id_col: str = "media_id") -> DataFrame:
     """Distributed XLSX shared-string extraction over a binary
     payload column: ``(id, text, n_chars, n_strings, error)``, one
-    row per input. Arrow-batched ``mapInPandas``."""
-    import pandas as pd
-
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                text, ns, err = extract_xlsx_text(
-                    bytes(payload) if payload is not None else None)
-                out.append((int(mid), text,
-                            len(text) if text is not None else None,
-                            ns, err))
-            yield pd.DataFrame(
-                out, columns=[id_col, "text", "n_chars",
-                              "n_strings", "error"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, text string, n_chars long, "
-                         "n_strings int, error string"))
+    row per input. Arrow-batched ``mapInArrow``."""
+    return map_rows(
+        df, lambda p: [_with_n_chars(*extract_xlsx_text(p))],
+        f"{id_col} long, text string, n_chars long, n_strings int, "
+        "error string", [payload_col], id_col)
 
 
 def office_extract_text(df: DataFrame, payload_col: str = "payload",
@@ -391,51 +357,34 @@ def office_extract_text(df: DataFrame, payload_col: str = "payload",
     one column, ``(id, kind, text, n_chars, n_paragraphs, error)``
     out, one row per input (``n_paragraphs`` counts the format's
     natural text unit: paragraphs, slides, string items).
-    Arrow-batched ``mapInPandas``."""
-    import pandas as pd
+    Arrow-batched ``mapInArrow``."""
+    extract = {"docx": extract_docx_text, "pptx": extract_pptx_text,
+               "xlsx": extract_xlsx_text, "odt": extract_odt_text}
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload) if payload is not None else None
-                kind = None
-                if p is not None and p[:2] == b"PK":
-                    try:
-                        names = set(zipfile.ZipFile(
-                            io.BytesIO(p)).namelist())
-                        if "word/document.xml" in names:
-                            kind = "docx"
-                        elif any(_SLIDE_NAME.match(n) for n in names):
-                            kind = "pptx"
-                        elif "xl/workbook.xml" in names:
-                            kind = "xlsx"
-                        elif "content.xml" in names:
-                            kind = "odt"
-                    except Exception:
-                        pass
-                if kind == "docx":
-                    text, np_, err = extract_docx_text(p)
-                elif kind == "pptx":
-                    text, np_, err = extract_pptx_text(p)
-                elif kind == "xlsx":
-                    text, np_, err = extract_xlsx_text(p)
-                elif kind == "odt":
-                    text, np_, err = extract_odt_text(p)
-                else:
-                    text, np_, err = (
-                        None, 0, "not a DOCX/ODT/PPTX/XLSX container")
-                out.append((int(mid), kind, text,
-                            len(text) if text is not None else None,
-                            np_, err))
-            yield pd.DataFrame(
-                out, columns=[id_col, "kind", "text", "n_chars",
-                              "n_paragraphs", "error"])
+    def office(p):
+        kind = None
+        if p is not None and p[:2] == b"PK":
+            try:
+                names = set(zipfile.ZipFile(io.BytesIO(p)).namelist())
+                if "word/document.xml" in names:
+                    kind = "docx"
+                elif any(_SLIDE_NAME.match(n) for n in names):
+                    kind = "pptx"
+                elif "xl/workbook.xml" in names:
+                    kind = "xlsx"
+                elif "content.xml" in names:
+                    kind = "odt"
+            except Exception:
+                pass
+        if kind is None:
+            return [(None, None, None, 0,
+                     "not a DOCX/ODT/PPTX/XLSX container")]
+        return [(kind, *_with_n_chars(*extract[kind](p)))]
 
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, kind string, text string, "
-                         "n_chars long, n_paragraphs int, "
-                         "error string"))
+    return map_rows(
+        df, office, f"{id_col} long, kind string, text string, "
+        "n_chars long, n_paragraphs int, error string", [payload_col],
+        id_col)
 
 
 def odt_bytes(text: str, compress: bool = True) -> bytes:
@@ -640,27 +589,17 @@ def epub_extract_chapters(df: DataFrame,
     """Distributed EPUB container walk over a binary payload column:
     ``(id, chapters array<string>, hrefs array<string>, n_chapters,
     error)``, one row per input (failed extractions keep their row
-    with null chapters). Arrow-batched ``mapInPandas``; payload
+    with null chapters). Arrow-batched ``mapInArrow``; payload
     bytes never leave the executor, and the chapter XHTML stays an
     array column so the HTML cleaning composes JVM-side."""
-    import pandas as pd
+    def chapters(p):
+        ch, hr, err = extract_epub_chapters(p)
+        return [(ch, hr, len(ch) if ch is not None else 0, err)]
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                ch, hr, err = extract_epub_chapters(
-                    bytes(payload) if payload is not None else None)
-                out.append((int(mid), ch, hr,
-                            len(ch) if ch is not None else 0, err))
-            yield pd.DataFrame(
-                out, columns=[id_col, "chapters", "hrefs",
-                              "n_chapters", "error"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, chapters array<string>, "
-                         "hrefs array<string>, n_chapters int, "
-                         "error string"))
+    return map_rows(
+        df, chapters, f"{id_col} long, chapters array<string>, "
+        "hrefs array<string>, n_chapters int, error string",
+        [payload_col], id_col)
 
 
 def epub_extract_text(df: DataFrame, payload_col: str = "payload",

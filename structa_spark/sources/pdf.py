@@ -21,7 +21,7 @@ would need the CMap walk and are out of scope (their text extracts,
 but in font-encoding bytes).
 
 Spark shape: parsing is a pure per-row function — ``extract_pdf_text``
-runs inside Arrow-batched ``mapInPandas`` (``pdf_extract_text``) or
+runs inside Arrow-batched ``mapInArrow`` (``pdf_extract_text``) or
 over ``binaryFiles`` partitions (``read_pdf``); payload bytes stay
 executor-side and only the extracted text crosses into the plan. No
 shuffle: a 100 TB crawl of PDFs maps partition-parallel, exactly like
@@ -31,10 +31,12 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from ..functions.rows import map_rows
 
 # per-stream and per-document inflate caps: a 1 KB FlateDecode bomb
 # can inflate 1000x; text extraction never needs unbounded output
@@ -397,26 +399,15 @@ def pdf_extract_text(df: DataFrame, payload_col: str = "payload",
     ``(id, text, n_chars, n_text_streams, error)``, one row per input
     row (failed extractions keep their row with null text — the
     decode-degradation convention of the multimodal operators).
-    Arrow-batched ``mapInPandas``; payload bytes never leave the
+    Arrow-batched ``mapInArrow``; payload bytes never leave the
     executor."""
-    import pandas as pd
+    def text_row(p):
+        text, ns, err = extract_pdf_text(p)
+        return [(text, len(text) if text is not None else None, ns, err)]
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                text, ns, err = extract_pdf_text(
-                    bytes(payload) if payload is not None else None)
-                out.append((int(mid), text,
-                            len(text) if text is not None else None,
-                            ns, err))
-            yield pd.DataFrame(
-                out, columns=[id_col, "text", "n_chars",
-                              "n_text_streams", "error"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, text string, n_chars long, "
-                         "n_text_streams int, error string"))
+    return map_rows(
+        df, text_row, f"{id_col} long, text string, n_chars long, "
+        "n_text_streams int, error string", [payload_col], id_col)
 
 
 def pdf_metadata(df: DataFrame, payload_col: str = "payload",
@@ -425,30 +416,17 @@ def pdf_metadata(df: DataFrame, payload_col: str = "payload",
     column: ``(id, title, author, subject, producer, creation_date,
     n_pages, error)``, one row per input (the EXIF-walk convention —
     failed parses keep their row with nulls). Arrow-batched
-    ``mapInPandas``; payload bytes never leave the executor."""
-    import pandas as pd
+    ``mapInArrow``; payload bytes never leave the executor."""
+    def info_row(p):
+        info, err = extract_pdf_info(p)
+        return [(info.get("title"), info.get("author"),
+                 info.get("subject"), info.get("producer"),
+                 info.get("creationdate"), info.get("n_pages"), err)]
 
-    def batches(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in it:
-            out = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                info, err = extract_pdf_info(
-                    bytes(payload) if payload is not None else None)
-                out.append((int(mid), info.get("title"),
-                            info.get("author"), info.get("subject"),
-                            info.get("producer"),
-                            info.get("creationdate"),
-                            info.get("n_pages"), err))
-            yield pd.DataFrame(
-                out, columns=[id_col, "title", "author", "subject",
-                              "producer", "creation_date", "n_pages",
-                              "error"])
-
-    return df.mapInPandas(
-        batches, schema=(f"{id_col} long, title string, "
-                         "author string, subject string, "
-                         "producer string, creation_date string, "
-                         "n_pages int, error string"))
+    return map_rows(
+        df, info_row, f"{id_col} long, title string, author string, "
+        "subject string, producer string, creation_date string, "
+        "n_pages int, error string", [payload_col], id_col)
 
 
 def read_pdf(spark: SparkSession, path: str) -> DataFrame:

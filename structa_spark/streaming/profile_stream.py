@@ -350,25 +350,13 @@ def neardup_candidates_stream(sdf: DataFrame, index: DataFrame,
     """
     from pyspark.sql import functions as F
 
-    from ..functions.hashing import MINHASH_PARAMS
     from ..operators.dedup import (
-        _bind, minhash_signature_array, word_shingles)
+        _bands_of, _bind, minhash_signature_array, word_shingles)
 
-    rows_per_band = len(MINHASH_PARAMS) // n_bands
     sig = minhash_signature_array(
         word_shingles(F.col(text_col), shingle_k))
-
-    def bands_of(s):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(n_bands - 1)),
-            lambda b: F.struct(
-                b.alias("band"),
-                F.concat_ws("_", F.transform(
-                    F.slice(s, b * rows_per_band + 1, rows_per_band),
-                    lambda v: v.cast("string"))).alias("band_key")))
-
-    inc = (sdf.select(F.col(id_col),
-                      F.explode(_bind(sig, bands_of)).alias("bb"))
+    bands = _bind(sig, lambda s: _bands_of(s, n_bands))
+    inc = (sdf.select(F.col(id_col), F.explode(bands).alias("bb"))
            .select(id_col, F.col("bb.band").alias("band"),
                    F.col("bb.band_key").alias("band_key")))
     idx = index.select("band", "band_key",

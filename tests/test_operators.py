@@ -1198,6 +1198,19 @@ def test_kmeans_refine_moves_centroid_to_mean(spark):
     assert refined == [[6.0, 0.0], [0.0, 6.0]]
 
 
+def test_kmeans_refine_leaves_nothing_persisted(spark):
+    # eager and list-returning: its vector projection must not stay
+    # persisted after the call returns
+    df = spark.createDataFrame(
+        [([0.0, 0.0],), ([0.2, 0.1],), ([10.0, 10.0],), ([9.8, 10.1],)],
+        "embedding array<double>")
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    similarity.kmeans_refine(df, [[0.0, 0.0], [10.0, 10.0]], dim=2,
+                             iters=2)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) \
+        == before
+
+
 def test_kmeans_refine_empty_cluster_keeps_seed(spark):
     rows = [(0, [5.0, 0.0]), (1, [6.0, 0.0])]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
@@ -4197,6 +4210,40 @@ def test_image_phash_invariances_and_nulls(spark):
     # hamming distance to the clipped-contrast variant stays small
     d = bin(got[1] ^ got[3]).count("1")
     assert d <= 12, d
+
+
+@pytest.mark.parametrize("op, payloads", [
+    (lambda df: multimodal.image_phash(df), "png"),
+    (lambda df: multimodal.image_dhash(df, bits=56), "png"),
+    (lambda df: multimodal.audio_envelope_hash(df, bits=63), "wav"),
+], ids=["image_phash", "image_dhash56", "audio_envelope_hash63"])
+def test_hash_exact_beside_an_undecodable_row(spark, op, payloads):
+    # a null hash in the same batch must not turn the hash column into
+    # float64 on its way to Arrow: hashes above 2^53 would round
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    if payloads == "png":
+        good = [multimodal.encode_png(
+            rng.integers(0, 256, (20, 24, 3), dtype=np.uint8))
+            for _ in range(6)]
+    else:
+        good = [multimodal.wav_bytes(
+            8000, 1, 400, samples=rng.integers(
+                -2 ** 15, 2 ** 15, 400, dtype=np.int64)
+            .astype("<i2").tobytes()) for _ in range(6)]
+    rows = list(enumerate(good))
+
+    def hashes(rs):
+        df = spark.createDataFrame(
+            rs, "media_id long, payload binary").coalesce(1)
+        return {r[0]: r[1] for r in op(df).collect()}
+
+    alone = hashes(rows)
+    mixed = hashes(rows + [(99, b"not a payload")])
+    assert any(h > 2 ** 53 for h in alone.values()), alone
+    assert mixed.pop(99) is None
+    assert mixed == alone
 
 
 def test_audio_zero_crossings(spark):
