@@ -141,14 +141,6 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     return F.array_distinct(sh)
 
 
-def char_shingles(text: Column, k: int = 5) -> Column:
-    # Let-bound like word_shingles (normalization runs once, not per
-    # gram) and built on the code-point-array gram builder (substr's
-    # per-position seek is itself quadratic in string length).
-    return F.array_distinct(
-        _bind(normalize_text(text), lambda tv: _char_grams(tv, k)))
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------

@@ -93,16 +93,6 @@ def cms_estimate(queries: DataFrame, counters: DataFrame,
                  .cast("long").alias(out_col)))
 
 
-def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two counter relations built with the same (depth,
-    width): union + re-aggregate — CMS's merge law is plain
-    addition, so merging shards, days or micro-batches is one
-    bounded aggregation (output <= depth * width rows)."""
-    return (a.unionByName(b)
-            .groupBy("row", "bucket")
-            .agg(F.sum("c").cast("long").alias("c")))
-
-
 class CmsStreamFold:
     """Standing Count-Min counters folded over a stream's
     micro-batches — the ``foreachBatch`` ingest monitor that

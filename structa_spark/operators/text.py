@@ -228,19 +228,6 @@ def c4_clean_lines(df: DataFrame, text_col: str = "text",
                     "__c4.page_keep"))
 
 
-def lang_scores(text: Column):
-    """Per-language stopword-hit counts (the n-gram heuristic)."""
-    toks = tokens(F.lower(text))
-
-    def member(words):
-        return lambda x: x.isin(list(words))
-
-    return {
-        lang: F.size(F.filter(toks, member(words)))
-        for lang, words in LANG_STOPWORDS.items()
-    }
-
-
 def lang_id(df: DataFrame, text_col: str = "text",
             out_col: str = "lang_pred") -> DataFrame:
     """Argmax language by stopword hits; deterministic tiebreak on

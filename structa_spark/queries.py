@@ -94,6 +94,41 @@ def _t(spark: SparkSession, sf_dir: str, name: str,
     return load_table(spark, sf_dir, name, spread=spread)
 
 
+def _payloads(docs: DataFrame, make: Callable[..., bytes],
+              *cols: str) -> DataFrame:
+    """The ``(media_id long, payload binary)`` fixture relation of the
+    media and document queries: one payload per row of ``docs``,
+    written executor-side by ``make(doc_id, *cols)``."""
+    from .functions.rows import map_rows
+    return map_rows(
+        docs.select(F.col("doc_id").alias("media_id"), "doc_id", *cols),
+        lambda *vals: [(make(*vals),)], "media_id long, payload binary",
+        ["doc_id", *cols], "media_id")
+
+
+def _gradient_png(i: int) -> bytes:
+    """A ``(8 + i % 7) x (6 + i % 5)`` PNG whose pixel ``(y, x)`` is
+    ``(i + 3y + x) % 256``, its rows cycling through all five PNG
+    filter types, so a decoder must invert every one."""
+    import numpy as np
+    from .operators import multimodal as mm
+    w, h = 8 + i % 7, 6 + i % 5
+    yy, xx = np.mgrid[0:h, 0:w]
+    arr = ((i + 3 * yy + xx) % 256).astype(np.uint8)
+    return mm.encode_png(arr, row_filters=[0, 1, 2, 3, 4])
+
+
+def _ramp_wav(i: int) -> bytes:
+    """A mono 16-bit 8 kHz PCM WAV of ``i % 400 + 1`` samples whose
+    sample ``t`` is ``(7i + 13t) % 401 - 200``."""
+    import numpy as np
+    from .operators import multimodal as mm
+    n = i % 400 + 1
+    samp = np.array([((i * 7 + 13 * t) % 401) - 200 for t in range(n)],
+                    dtype="<i2")
+    return mm.wav_bytes(8000, 1, n, bits=16, samples=samp.tobytes())
+
+
 # ===========================================================================
 # relational surface (joins, windows, set ops, sort/limit — survey §2.7:
 # provided by the DataFrame surface; these are the bench headliners)
@@ -1993,13 +2028,13 @@ FROM steps GROUP BY doc_id ORDER BY media_id
 """)
 def multimodal_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column feature extraction: documents' text encoded to a
-    binary payload column, features via Arrow-batched mapInPandas
-    (deterministic fake decode — the codec seam). The decode is an
-    FNV-1a-style fold over the payload bytes, so the oracle replays
-    it in pure SQL with a recursive CTE (text is ASCII, so byte i of
-    the utf-8 payload == ord of char i+1): any drift in the Arrow
-    plumbing, byte indexing, or accumulator arithmetic value-
-    mismatches on dims 0, 3 and 7."""
+    binary payload column, features via the Arrow row mapper
+    ``functions.rows.map_rows`` (deterministic fake decode — the
+    codec seam). The decode is an FNV-1a-style fold over the payload
+    bytes, so the oracle replays it in pure SQL with a recursive CTE
+    (text is ASCII, so byte i of the utf-8 payload == ord of char
+    i+1): any drift in the Arrow plumbing, byte indexing, or
+    accumulator arithmetic value-mismatches on dims 0, 3 and 7."""
     from .operators.multimodal import extract_features
     docs = (_t(spark, sf_dir, "documents")
             .select(F.col("doc_id").alias("media_id"),
@@ -2026,23 +2061,14 @@ def image_header_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     OF THE BYTES with operators.multimodal.parse_image_header. The
     oracle predicts the parsed values in pure SQL, so any header-walk
     bug (endianness, segment skip, IHDR offset) hash-mismatches."""
-    import pandas as pd
     from .operators import multimodal as mm
     docs = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def build(it):
-        for pdf in it:
-            ids = pdf["doc_id"]
-            payloads = [
-                mm.png_bytes(int(i) % 512 + 16, int(i) % 256 + 16)
-                if int(i) % 2 == 0
-                else mm.jpeg_bytes(int(i) % 512 + 16, int(i) % 256 + 16)
-                for i in ids
-            ]
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def make(i):
+        write = mm.png_bytes if i % 2 == 0 else mm.jpeg_bytes
+        return write(i % 512 + 16, i % 256 + 16)
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return mm.image_metadata(media).orderBy("media_id")
+    return mm.image_metadata(_payloads(docs, make)).orderBy("media_id")
 
 
 @register("cosine_topk_vectorized", oracle=f"""
@@ -3467,24 +3493,15 @@ def audio_header_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators.multimodal.parse_audio_header. The oracle predicts the
     parsed values in pure SQL, so any chunk-walk bug (endianness,
     word alignment, fmt offsets, data-size division) hash-mismatches."""
-    import pandas as pd
     from .operators import multimodal as mm
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     rates = [8000, 16000, 22050, 44100]
 
-    def build(it):
-        for pdf in it:
-            ids = pdf["doc_id"]
-            payloads = [
-                mm.wav_bytes(rates[int(i) % 4], int(i) % 2 + 1,
-                             int(i) % 400 + 1,
-                             junk_chunk=(int(i) % 2 == 1))
-                for i in ids
-            ]
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def make(i):
+        return mm.wav_bytes(rates[i % 4], i % 2 + 1, i % 400 + 1,
+                            junk_chunk=(i % 2 == 1))
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return mm.audio_metadata(media).orderBy("media_id")
+    return mm.audio_metadata(_payloads(docs, make)).orderBy("media_id")
 
 
 @register("tfidf_top_terms", oracle="""
@@ -6063,28 +6080,17 @@ def video_header_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicts the parsed values in pure SQL, so any box-walk bug
     (big-endian sizes, largesize, version offsets, 16.16 fixed
     point, track max) hash-mismatches."""
-    import pandas as pd
     from .operators import multimodal as mm
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     scales = [600, 1000, 90000]
 
-    def build(it):
-        for pdf in it:
-            ids = pdf["doc_id"]
-            payloads = [
-                mm.mp4_bytes(320 + int(i) % 8 * 16,
-                             240 + int(i) % 6 * 16,
-                             (int(i) % 500 + 1) * 100,
-                             scales[int(i) % 3],
-                             n_tracks=int(i) % 2 + 1,
-                             mvhd_v1=(int(i) % 3 == 0),
-                             free_box=(int(i) % 2 == 1))
-                for i in ids
-            ]
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
+    def make(i):
+        return mm.mp4_bytes(320 + i % 8 * 16, 240 + i % 6 * 16,
+                            (i % 500 + 1) * 100, scales[i % 3],
+                            n_tracks=i % 2 + 1, mvhd_v1=(i % 3 == 0),
+                            free_box=(i % 2 == 1))
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return mm.video_metadata(media).orderBy("media_id")
+    return mm.video_metadata(_payloads(docs, make)).orderBy("media_id")
 
 
 @register("video_frame_index", oracle="""
@@ -6136,37 +6142,25 @@ def video_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one Arrow-batched projection, no shuffle; only the
     kept frames' index rows (not payloads) enter the plan."""
-    import pandas as pd
     from .operators import multimodal as mm
     docs = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = i % 50 + 1
-                h = (n + 1) // 2
-                stts = [(h, 100)]
-                if n > h:
-                    stts.append((n - h, 200))
-                kw = dict(samples_per_chunk=i % 3 + 1,
-                          base_offset=4096)
-                if i % 5 == 0:
-                    payload = mm.mp4_frame_index_bytes(
-                        320, 240, 2400, stts, uniform_size=800,
-                        n_samples=n, **kw)
-                else:
-                    sizes = [500 + ((i * 13 + 7 * t) % 900)
-                             for t in range(n)]
-                    payload = mm.mp4_frame_index_bytes(
-                        320, 240, 2400, stts, sample_sizes=sizes,
-                        **kw)
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        n = i % 50 + 1
+        h = (n + 1) // 2
+        stts = [(h, 100)]
+        if n > h:
+            stts.append((n - h, 200))
+        kw = dict(samples_per_chunk=i % 3 + 1, base_offset=4096)
+        if i % 5 == 0:
+            return mm.mp4_frame_index_bytes(
+                320, 240, 2400, stts, uniform_size=800, n_samples=n,
+                **kw)
+        sizes = [500 + ((i * 13 + 7 * t) % 900) for t in range(n)]
+        return mm.mp4_frame_index_bytes(
+            320, 240, 2400, stts, sample_sizes=sizes, **kw)
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return (mm.video_frame_index(media, every_k=5)
+    return (mm.video_frame_index(_payloads(docs, make), every_k=5)
             .orderBy("media_id", "frame_idx"))
 
 
@@ -6829,49 +6823,32 @@ def decoded_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     remain declared DecodeUnavailable (they need real codec
     libraries)."""
     import numpy as np
-    import pandas as pd
     from .operators import jpeg as mjpeg
     from .operators import multimodal as mm
     docs = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                if i % 4 == 0:
-                    w, h = 8 + i % 7, 6 + i % 5
-                    yy, xx = np.mgrid[0:h, 0:w]
-                    arr = ((i + 3 * yy + xx) % 256).astype(np.uint8)
-                    payload = mm.encode_png(
-                        arr, row_filters=[0, 1, 2, 3, 4])
-                elif i % 4 == 1:
-                    n = 40 + i % 25
-                    s = ((i * 13 + np.arange(n) * 7) % 201
-                         - 100).astype("<i2")
-                    payload = mm.wav_bytes(8000, 1, n, bits=16,
-                                           samples=s.tobytes())
-                elif i % 4 == 2:
-                    w, h = 6 + i % 5, 5 + i % 4
-                    yy, xx = np.mgrid[0:h, 0:w]
-                    idx = ((xx + yy) % 4).astype(np.uint8)
-                    pal = np.array(
-                        [[(i * 5 + k * 11 + c) % 256 for c in range(3)]
-                         for k in range(4)], np.uint8)
-                    payload = mm.encode_gif(idx, pal,
-                                            interlace=bool(i % 2))
-                else:
-                    nbx, nby = 1 + i % 3, 1 + i % 2
-                    bv = ((i * 7 + 13 * (np.arange(nby)[:, None]
-                                         * nbx + np.arange(nbx)))
-                          % 256).astype(np.uint8)
-                    arr = np.repeat(np.repeat(bv, 8, 0), 8, 1)
-                    payload = mjpeg.encode_jpeg(arr, quant=1)
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        if i % 4 == 0:
+            return _gradient_png(i)
+        if i % 4 == 1:
+            n = 40 + i % 25
+            s = ((i * 13 + np.arange(n) * 7) % 201 - 100).astype("<i2")
+            return mm.wav_bytes(8000, 1, n, bits=16, samples=s.tobytes())
+        if i % 4 == 2:
+            w, h = 6 + i % 5, 5 + i % 4
+            yy, xx = np.mgrid[0:h, 0:w]
+            idx = ((xx + yy) % 4).astype(np.uint8)
+            pal = np.array(
+                [[(i * 5 + k * 11 + c) % 256 for c in range(3)]
+                 for k in range(4)], np.uint8)
+            return mm.encode_gif(idx, pal, interlace=bool(i % 2))
+        nbx, nby = 1 + i % 3, 1 + i % 2
+        bv = ((i * 7 + 13 * (np.arange(nby)[:, None] * nbx
+                             + np.arange(nbx))) % 256).astype(np.uint8)
+        return mjpeg.encode_jpeg(np.repeat(np.repeat(bv, 8, 0), 8, 1),
+                                 quant=1)
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return mm.media_stats(media).orderBy("media_id")
+    return mm.media_stats(_payloads(docs, make)).orderBy("media_id")
 
 @register("resized_media_stats", oracle="""
 WITH ids AS (SELECT doc_id FROM documents WHERE doc_id % 3 = 0),
@@ -6896,25 +6873,10 @@ def resized_media_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest-neighbor index map ((Y*h)//3, (X*w)//4), so a bug in the
     decoder, the resampler, or the encoder (any stage of the
     round-trip) hash-mismatches."""
-    import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") % 3 == 0))
-
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 8 + i % 7, 6 + i % 5
-                yy, xx = np.mgrid[0:h, 0:w]
-                arr = ((i + 3 * yy + xx) % 256).astype(np.uint8)
-                rows.append((i, mm.encode_png(
-                    arr, row_filters=[0, 1, 2, 3, 4])))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _payloads(docs, _gradient_png)
     resized = mm.resize_images(media, 4, 3)
     return mm.media_stats(resized).orderBy("media_id")
 
@@ -6953,25 +6915,10 @@ def image_dhash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     order all hash-mismatch. The signature width matches the simhash
     pigeonhole (hamming_near_duplicates), which image_near_duplicates
     reuses for sub-quadratic image dedup."""
-    import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") % 3 == 0))
-
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 8 + i % 7, 6 + i % 5
-                yy, xx = np.mgrid[0:h, 0:w]
-                arr = ((i + 3 * yy + xx) % 256).astype(np.uint8)
-                rows.append((i, mm.encode_png(
-                    arr, row_filters=[0, 1, 2, 3, 4])))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _payloads(docs, _gradient_png)
     return mm.image_dhash(media).orderBy("media_id")
 
 
@@ -7035,25 +6982,10 @@ def image_phash_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     resampler, DCT convention, rounding mode or bit order all
     hash-mismatch (cos() differences between engines die in the
     rounding, by design)."""
-    import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") % 3 == 0))
-
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 8 + i % 7, 6 + i % 5
-                yy, xx = np.mgrid[0:h, 0:w]
-                arr = ((i + 3 * yy + xx) % 256).astype(np.uint8)
-                rows.append((i, mm.encode_png(
-                    arr, row_filters=[0, 1, 2, 3, 4])))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _payloads(docs, _gradient_png)
     return mm.image_phash(media).orderBy("media_id")
 
 
@@ -7119,25 +7051,10 @@ def image_entropy_stats(spark: SparkSession,
 
     Scale shape: Arrow-batched decode projection, no shuffle — the
     result is doc-keyed and orderBy is the only exchange."""
-    import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") % 3 == 0))
-
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w, h = 8 + i % 7, 6 + i % 5
-                yy, xx = np.mgrid[0:h, 0:w]
-                arr = ((i + 3 * yy + xx) % 256).astype(np.uint8)
-                rows.append((i, mm.encode_png(
-                    arr, row_filters=[0, 1, 2, 3, 4])))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _payloads(docs, _gradient_png)
     return mm.image_pixel_stats(media).orderBy("media_id")
 
 
@@ -7209,35 +7126,28 @@ def _mjpeg_cluster_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ``_VIDEO_GROUPS_CTE`` (quant=1 makes the JPEG round trip
     exact, so the oracle predicts every decoded pixel)."""
     import numpy as np
-    import pandas as pd
 
     from .operators import multimodal as mm
 
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") < 240))
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                g, m = i // 4, i % 4
-                frames = []
-                for f in range(3):
-                    bv = np.zeros((2, 3), np.int64)
-                    for by in range(2):
-                        for bx in range(3):
-                            v = (g * 7 + f * 31
-                                 + 13 * (by * 3 + bx)) % 256
-                            if f == m % 3 and by * 3 + bx == m % 6:
-                                v = (v + 40) % 256
-                            bv[by, bx] = v
-                    frames.append(np.repeat(np.repeat(
-                        bv.astype(np.uint8), 8, 0), 8, 1))
-                rows.append((i, mm.mjpeg_bytes(frames)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        g, m = i // 4, i % 4
+        frames = []
+        for f in range(3):
+            bv = np.zeros((2, 3), np.int64)
+            for by in range(2):
+                for bx in range(3):
+                    v = (g * 7 + f * 31 + 13 * (by * 3 + bx)) % 256
+                    if f == m % 3 and by * 3 + bx == m % 6:
+                        v = (v + 40) % 256
+                    bv[by, bx] = v
+            frames.append(np.repeat(np.repeat(
+                bv.astype(np.uint8), 8, 0), 8, 1))
+        return mm.mjpeg_bytes(frames)
 
-    return docs.mapInPandas(build, "media_id long, payload binary")
+    return _payloads(docs, make)
 
 
 @register("video_dup_groups", oracle=_VIDEO_GROUPS_CTE + """
@@ -7469,30 +7379,22 @@ def _image_cluster_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode -> dHash -> pigeonhole pairs -> connected components ->
     (media_id, group_id), unordered."""
     import numpy as np
-    import pandas as pd
 
     from .operators import multimodal as mm
 
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") < 320))
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                g, m = i // 4, i % 4
-                w, h = 8 + g % 5, 6 + g % 4
-                yy, xx = np.mgrid[0:h, 0:w]
-                arr = ((g + 1) * 37 * (yy * w + xx + 1)) % 256
-                arr = arr.astype(np.int64)
-                arr[m % h, m % w] = (arr[m % h, m % w] + 40) % 256
-                rows.append((i, mm.encode_png(
-                    arr.astype(np.uint8), row_filters=[0, 1, 2, 3, 4])))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        g, m = i // 4, i % 4
+        w, h = 8 + g % 5, 6 + g % 4
+        yy, xx = np.mgrid[0:h, 0:w]
+        arr = (((g + 1) * 37 * (yy * w + xx + 1)) % 256).astype(np.int64)
+        arr[m % h, m % w] = (arr[m % h, m % w] + 40) % 256
+        return mm.encode_png(arr.astype(np.uint8),
+                             row_filters=[0, 1, 2, 3, 4])
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    pairs = mm.image_near_duplicates(media, max_hamming=3)
+    pairs = mm.image_near_duplicates(_payloads(docs, make), max_hamming=3)
     comp = dedup.connected_components(
         pairs.select("id_a", "id_b"), id_col="media_id")
     # labels join back to the ID SOURCE (docs), not media: the PNG
@@ -7590,25 +7492,9 @@ def audio_envelope_hashes(spark: SparkSession,
     the RIFF walk, PCM reinterpret, mixdown, windowing or bit
     packing hash-mismatches. The signature feeds
     audio_near_duplicates via the shared pigeonhole machinery."""
-    import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = i % 400 + 1
-                samp = np.array(
-                    [((i * 7 + 13 * t) % 401) - 200 for t in range(n)],
-                    dtype="<i2")
-                rows.append((i, mm.wav_bytes(
-                    8000, 1, n, bits=16, samples=samp.tobytes())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _payloads(_t(spark, sf_dir, "documents").select("doc_id"),
+                      _ramp_wav)
     return mm.audio_envelope_hash(media).orderBy("media_id")
 
 
@@ -7647,25 +7533,9 @@ def audio_zcr_features(spark: SparkSession,
     every sample and crossing from the formula (single-sample clips
     take the zero-rate branch), so a drift in the RIFF walk, PCM
     reinterpret, mixdown or the sign rule hash-mismatches."""
-    import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = i % 400 + 1
-                samp = np.array(
-                    [((i * 7 + 13 * t) % 401) - 200 for t in range(n)],
-                    dtype="<i2")
-                rows.append((i, mm.wav_bytes(
-                    8000, 1, n, bits=16, samples=samp.tobytes())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _payloads(_t(spark, sf_dir, "documents").select("doc_id"),
+                      _ramp_wav)
     return mm.audio_zero_crossings(media).orderBy("media_id")
 
 
@@ -7735,25 +7605,9 @@ def audio_spectral_features(spark: SparkSession,
     compare all hash-mismatch. Short clips (< 2 samples per frame)
     take the silent branch; the sub-64-sample clips exercise the
     variable frame length."""
-    import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = i % 400 + 1
-                samp = np.array(
-                    [((i * 7 + 13 * t) % 401) - 200 for t in range(n)],
-                    dtype="<i2")
-                rows.append((i, mm.wav_bytes(
-                    8000, 1, n, bits=16, samples=samp.tobytes())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _payloads(_t(spark, sf_dir, "documents").select("doc_id"),
+                      _ramp_wav)
     return mm.audio_spectral_features(media).orderBy("media_id")
 
 
@@ -7781,27 +7635,18 @@ def jpeg_quality_screen(spark: SparkSession,
     Scale shape: one Arrow-batched byte-slicing projection, no
     decode, no shuffle."""
     import numpy as np
-    import pandas as pd
     from .operators import jpeg as mjpeg
     from .operators import multimodal as mm
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") % 4 == 3))
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                nbx = 1 + i % 3
-                bv = ((i * 7 + 13 * np.arange(nbx)) % 256) \
-                    .astype(np.uint8)[None, :]
-                arr = np.repeat(np.repeat(bv, 8, 0), 8, 1)
-                rows.append((i, mjpeg.encode_jpeg(
-                    arr, quant=1 + i % 4)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        bv = ((i * 7 + 13 * np.arange(1 + i % 3)) % 256) \
+            .astype(np.uint8)[None, :]
+        return mjpeg.encode_jpeg(np.repeat(np.repeat(bv, 8, 0), 8, 1),
+                                 quant=1 + i % 4)
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return (mm.jpeg_quant_stats(media)
+    return (mm.jpeg_quant_stats(_payloads(docs, make))
             .select(F.col("media_id").alias("doc_id"), "n_tables",
                     "q_min", "q_max", "q_sum", "width", "height")
             .orderBy("doc_id"))
@@ -7895,25 +7740,9 @@ def audio_mfcc_features(spark: SparkSession,
 
     Scale shape: one Arrow-batched projection, no shuffle; orderBy
     is the only exchange."""
-    import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
-    docs = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = i % 400 + 1
-                samp = np.array(
-                    [((i * 7 + 13 * t) % 401) - 200 for t in range(n)],
-                    dtype="<i2")
-                rows.append((i, mm.wav_bytes(
-                    8000, 1, n, bits=16, samples=samp.tobytes())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    media = docs.mapInPandas(build, "media_id long, payload binary")
+    media = _payloads(_t(spark, sf_dir, "documents").select("doc_id"),
+                      _ramp_wav)
     return mm.audio_mfcc_features(media).orderBy("media_id")
 
 
@@ -7968,32 +7797,22 @@ def audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: Arrow-batched decode + interpolate, no shuffle;
     only sampled index rows enter the plan — never the waveform."""
     import numpy as np
-    import pandas as pd
 
     from .operators import multimodal as mm
 
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") % 2 == 0))
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                if i % 50 == 0:
-                    rows.append((i, b"junk"))
-                    continue
-                n = 20 + i % 40
-                a = 2 + i % 3
-                samp = np.array([a * t - 100 for t in range(n)],
-                                dtype="<i2")
-                rows.append((i, mm.wav_bytes(
-                    8000, 1, n, bits=16, samples=samp.tobytes())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        if i % 50 == 0:
+            return b"junk"
+        n = 20 + i % 40
+        a = 2 + i % 3
+        samp = np.array([a * t - 100 for t in range(n)], dtype="<i2")
+        return mm.wav_bytes(8000, 1, n, bits=16, samples=samp.tobytes())
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return (mm.audio_resample_index(media, target_rate=6000,
-                                    every_k=7)
+    return (mm.audio_resample_index(_payloads(docs, make),
+                                    target_rate=6000, every_k=7)
             .orderBy("media_id", "out_idx"))
 
 
@@ -8064,34 +7883,27 @@ def audio_clipping_stats(spark: SparkSession,
     Scale shape: one Arrow-batched decode projection, no shuffle;
     the oracle's window/islands live oracle-side only."""
     import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
     docs = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = i % 300 + 1
-                vals = []
-                for t in range(n):
-                    raw = ((i * 11 + 29 * t) % 1001) - 500
-                    if t % 97 < i % 7:
-                        vals.append(0)
-                    elif raw > 450:
-                        vals.append(32767)
-                    elif raw < -450:
-                        vals.append(-32768)
-                    else:
-                        vals.append(raw * 60)
-                samp = np.array(vals, dtype="<i2")
-                rows.append((i, mm.wav_bytes(
-                    8000, 1, n, bits=16, samples=samp.tobytes())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        n = i % 300 + 1
+        vals = []
+        for t in range(n):
+            raw = ((i * 11 + 29 * t) % 1001) - 500
+            if t % 97 < i % 7:
+                vals.append(0)
+            elif raw > 450:
+                vals.append(32767)
+            elif raw < -450:
+                vals.append(-32768)
+            else:
+                vals.append(raw * 60)
+        samp = np.array(vals, dtype="<i2")
+        return mm.wav_bytes(8000, 1, n, bits=16, samples=samp.tobytes())
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return mm.audio_clipping_stats(media).orderBy("media_id")
+    return (mm.audio_clipping_stats(_payloads(docs, make))
+            .orderBy("media_id"))
 
 
 @register("audio_vad_segments", oracle="""
@@ -8151,30 +7963,21 @@ def audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment rows, no shuffle; the oracle's islands live oracle-side
     only."""
     import numpy as np
-    import pandas as pd
     from .operators import multimodal as mm
     docs = _t(spark, sf_dir, "documents").select("doc_id")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                n = i % 600 + 40
-                vals = []
-                for t in range(n):
-                    if (i + t // 50) % 3 == 0:
-                        vals.append(0)
-                    else:
-                        vals.append(
-                            (((i * 11 + 29 * t) % 1001) - 500) * 60)
-                samp = np.array(vals, dtype="<i2")
-                rows.append((i, mm.wav_bytes(
-                    8000, 1, n, bits=16, samples=samp.tobytes())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        n = i % 600 + 40
+        vals = []
+        for t in range(n):
+            if (i + t // 50) % 3 == 0:
+                vals.append(0)
+            else:
+                vals.append((((i * 11 + 29 * t) % 1001) - 500) * 60)
+        samp = np.array(vals, dtype="<i2")
+        return mm.wav_bytes(8000, 1, n, bits=16, samples=samp.tobytes())
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return (mm.audio_vad_segments(media, frame_len=50,
+    return (mm.audio_vad_segments(_payloads(docs, make), frame_len=50,
                                   energy_threshold=1000,
                                   min_frames=1)
             .orderBy("media_id", "seg_idx"))
@@ -8200,27 +8003,19 @@ def image_exif_metadata(spark: SparkSession,
     the inline-vs-offset ASCII handling or the SHORT read
     mismatches. The camera-provenance layer for dedup-by-device and
     orientation-aware preprocessing."""
-    import pandas as pd
-
     from .operators import multimodal as mm
 
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") % 2 == 0))
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                bo = b"II" if i % 4 == 0 else b"MM"
-                app1 = mm.exif_app1_bytes(
-                    f"maker{i % 5}", f"cam{i % 7}", i % 8 + 1,
-                    f"2024:01:{i % 28 + 1:02d} 12:00:00", bo)
-                rows.append((i, b"\xff\xd8" + app1 + b"\xff\xd9"))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        bo = b"II" if i % 4 == 0 else b"MM"
+        app1 = mm.exif_app1_bytes(
+            f"maker{i % 5}", f"cam{i % 7}", i % 8 + 1,
+            f"2024:01:{i % 28 + 1:02d} 12:00:00", bo)
+        return b"\xff\xd8" + app1 + b"\xff\xd9"
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return mm.image_exif_metadata(media).orderBy("media_id")
+    return mm.image_exif_metadata(_payloads(docs, make)).orderBy("media_id")
 
 
 _AUDIO_GROUPS_CTE = """WITH RECURSIVE ids AS (
@@ -8307,31 +8102,22 @@ def _audio_cluster_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode -> envelope hash -> pigeonhole pairs -> connected
     components -> (media_id, group_id), unordered."""
     import numpy as np
-    import pandas as pd
 
     from .operators import multimodal as mm
 
     docs = (_t(spark, sf_dir, "documents").select("doc_id")
             .where(F.col("doc_id") < 320))
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                g, m = i // 4, i % 4
-                n = 50 + (g * 13) % 330
-                samp = np.array(
-                    [(((g + 1) * 7 + 13 * t) % 401) - 200
-                     for t in range(n)], dtype=np.int64)
-                samp[m] += 100
-                rows.append((i, mm.wav_bytes(
-                    8000, 1, n, bits=16,
-                    samples=samp.astype("<i2").tobytes())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        g, m = i // 4, i % 4
+        n = 50 + (g * 13) % 330
+        samp = np.array([(((g + 1) * 7 + 13 * t) % 401) - 200
+                         for t in range(n)], dtype=np.int64)
+        samp[m] += 100
+        return mm.wav_bytes(8000, 1, n, bits=16,
+                            samples=samp.astype("<i2").tobytes())
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    pairs = mm.audio_near_duplicates(media, max_hamming=3)
+    pairs = mm.audio_near_duplicates(_payloads(docs, make), max_hamming=3)
     comp = dedup.connected_components(
         pairs.select("id_a", "id_b"), id_col="media_id")
     # labels join back to the ID SOURCE (docs), not media: the WAV
@@ -9139,31 +8925,22 @@ def decompressed_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import lzma
     import zlib
 
-    import pandas as pd
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i, txt in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                raw = (txt or "").encode("utf-8")
-                # fastest preset per codec: the query's outputs
-                # depend only on the round-tripped TEXT (the sniff
-                # keys on magic bytes, not ratios), and xz/bz2 at
-                # default effort dominated the whole query's runtime
-                payload = [
-                    lambda b: gzip.compress(b, compresslevel=1),
-                    lambda b: zlib.compress(b, 1),
-                    lambda b: bz2.compress(b, compresslevel=1),
-                    lambda b: lzma.compress(b, preset=0),
-                ][i % 4](raw)
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
     from .operators.multimodal import decompress_payloads
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    out = decompress_payloads(media)
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    # fastest preset per codec: the query's outputs depend only on the
+    # round-tripped TEXT (the sniff keys on magic bytes, not ratios),
+    # and xz/bz2 at default effort dominated the whole query's runtime
+    codecs = [
+        lambda b: gzip.compress(b, compresslevel=1),
+        lambda b: zlib.compress(b, 1),
+        lambda b: bz2.compress(b, compresslevel=1),
+        lambda b: lzma.compress(b, preset=0),
+    ]
+
+    def make(i, txt):
+        return codecs[i % 4]((txt or "").encode("utf-8"))
+
+    out = decompress_payloads(_payloads(docs, make, "text"))
     return (out.select("media_id", "codec",
                        F.length("text").cast("long").alias("n_chars"),
                        F.md5(F.encode("text", "utf-8"))
@@ -9638,26 +9415,16 @@ def pdf_extracted_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer, escape, inflate or salvage bug hash-mismatches. This
     is the PDF landing-zone step of a pretraining corpus pipeline;
     all codec work stays inside Arrow batches, no shuffle."""
-    import pandas as pd
-
     from .sources.pdf import pdf_bytes, pdf_extract_text
     docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i, txt in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                body = f"{txt or ''}\n(doc {i})"
-                kw = [dict(), dict(compress=False),
-                      dict(tj_arrays=True), dict(hex_strings=True),
-                      dict(indirect_length=True)][i % 5]
-                rows.append((i, pdf_bytes(
-                    body, truncate_tail=(i % 7 == 0), **kw)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i, txt):
+        kw = [dict(), dict(compress=False), dict(tj_arrays=True),
+              dict(hex_strings=True), dict(indirect_length=True)][i % 5]
+        return pdf_bytes(f"{txt or ''}\n(doc {i})",
+                         truncate_tail=(i % 7 == 0), **kw)
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    out = pdf_extract_text(media)
+    out = pdf_extract_text(_payloads(docs, make, "text"))
     return (out.select(F.col("media_id").alias("doc_id"),
                        F.col("text").alias("pdf_text"),
                        F.col("n_chars"),
@@ -9686,23 +9453,14 @@ def docx_extracted_text(spark: SparkSession,
     entity-unescape bug hash-mismatches. This is the office-document
     landing-zone step beside the PDF one; all codec work stays
     inside Arrow batches, no shuffle."""
-    import pandas as pd
-
     from .sources.office import docx_bytes, docx_extract_text
     docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i, txt in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                body = f"{txt or ''}\npara & <{i}>"
-                rows.append((i, docx_bytes(body,
-                                           compress=bool(i % 2))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i, txt):
+        return docx_bytes(f"{txt or ''}\npara & <{i}>",
+                          compress=bool(i % 2))
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    out = docx_extract_text(media)
+    out = docx_extract_text(_payloads(docs, make, "text"))
     return (out.select(F.col("media_id").alias("doc_id"),
                        F.col("text").alias("docx_text"),
                        F.col("n_paragraphs"))
@@ -9727,26 +9485,16 @@ def office_extracted_text(spark: SparkSession,
     paragraphs either way. The oracle predicts kind and text
     arithmetically — the landing-zone reality where one column
     carries whatever the crawl found."""
-    import pandas as pd
-
     from .sources.office import (
         docx_bytes, odt_bytes, office_extract_text,
     )
     docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i, txt in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                body = f"{txt or ''}\nclose & <{i}>"
-                payload = (docx_bytes(body) if i % 2 == 0
-                           else odt_bytes(body))
-                rows.append((i, payload))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i, txt):
+        write = docx_bytes if i % 2 == 0 else odt_bytes
+        return write(f"{txt or ''}\nclose & <{i}>")
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    out = office_extract_text(media)
+    out = office_extract_text(_payloads(docs, make, "text"))
     return (out.select(F.col("media_id").alias("doc_id"), "kind",
                        F.col("text").alias("office_text"),
                        F.col("n_paragraphs"))
@@ -9776,24 +9524,14 @@ def epub_extracted_text(spark: SparkSession,
     predicts the whitespace-collapsed chapter texts directly, so any
     container, spine-order, tag-strip or entity bug hash-mismatches.
     All codec work stays inside Arrow batches; no shuffle."""
-    import pandas as pd
-
     from .sources.office import epub_bytes, epub_extract_text
     docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i, txt in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                chapters = [f"<p>{txt or ''}</p>",
-                            f"<p>end &amp; ch{i}</p>"]
-                rows.append((i, epub_bytes(chapters,
-                                           compress=bool(i % 2))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i, txt):
+        return epub_bytes([f"<p>{txt or ''}</p>", f"<p>end &amp; ch{i}</p>"],
+                          compress=bool(i % 2))
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    out = epub_extract_text(media)
+    out = epub_extract_text(_payloads(docs, make, "text"))
     return (out.select(F.col("media_id").alias("doc_id"),
                        F.col("text").alias("epub_text"),
                        F.col("n_chapters"))
@@ -9820,23 +9558,14 @@ def pptx_extracted_text(spark: SparkSession,
     exactly the original lines in presentation order. The oracle is
     the plaintext itself, so any zip, slide-order, run-concatenation
     or entity bug hash-mismatches."""
-    import pandas as pd
-
     from .sources.office import pptx_bytes, pptx_extract_text
     docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i, txt in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                body = f"{txt or ''}\nslide & <{i}>"
-                rows.append((i, pptx_bytes(body, lines_per_slide=1,
-                                           compress=bool(i % 2))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i, txt):
+        return pptx_bytes(f"{txt or ''}\nslide & <{i}>", lines_per_slide=1,
+                          compress=bool(i % 2))
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    out = pptx_extract_text(media)
+    out = pptx_extract_text(_payloads(docs, make, "text"))
     return (out.select(F.col("media_id").alias("doc_id"),
                        F.col("text").alias("pptx_text"),
                        F.col("n_slides"))
@@ -9860,23 +9589,13 @@ def xlsx_extracted_text(spark: SparkSession,
     must recover the strings in table order. The oracle is the
     plaintext itself, so any zip, item-order, rich-text-run or
     entity bug hash-mismatches."""
-    import pandas as pd
-
     from .sources.office import xlsx_bytes, xlsx_extract_text
     docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id", "text")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i, txt in zip(pdf["doc_id"], pdf["text"]):
-                i = int(i)
-                rows.append((i, xlsx_bytes(
-                    [txt or "", f"cell & <{i}>"],
-                    compress=bool(i % 2))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i, txt):
+        return xlsx_bytes([txt or "", f"cell & <{i}>"], compress=bool(i % 2))
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    out = xlsx_extract_text(media)
+    out = xlsx_extract_text(_payloads(docs, make, "text"))
     return (out.select(F.col("media_id").alias("doc_id"),
                        F.col("text").alias("xlsx_text"),
                        F.col("n_strings"))
@@ -9907,25 +9626,16 @@ def pdf_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, string unescaping or the page count hash-mismatches.
 
     Scale shape: one Arrow-batched projection, no shuffle."""
-    import pandas as pd
-
     from .sources.pdf import pdf_bytes, pdf_metadata as pdf_meta
     docs = _t(spark, sf_dir, "documents", spread=True).select("doc_id")
 
-    def build(it):
-        for pdf in it:
-            rows = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                info = (None if i % 5 == 4 else
-                        {"Title": f"Report ({i})",
-                         "Author": f"author{i % 7}",
-                         "Producer": "structa_spark"})
-                rows.append((i, pdf_bytes("p", info=info)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def make(i):
+        info = (None if i % 5 == 4 else
+                {"Title": f"Report ({i})", "Author": f"author{i % 7}",
+                 "Producer": "structa_spark"})
+        return pdf_bytes("p", info=info)
 
-    media = docs.mapInPandas(build, "media_id long, payload binary")
-    return (pdf_meta(media)
+    return (pdf_meta(_payloads(docs, make))
             .select(F.col("media_id").alias("doc_id"),
                     "title", "author", "producer", "n_pages")
             .orderBy("doc_id"))

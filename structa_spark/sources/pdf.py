@@ -21,8 +21,9 @@ would need the CMap walk and are out of scope (their text extracts,
 but in font-encoding bytes).
 
 Spark shape: parsing is a pure per-row function — ``extract_pdf_text``
-runs inside Arrow-batched ``mapInArrow`` (``pdf_extract_text``) or
-over ``binaryFiles`` partitions (``read_pdf``); payload bytes stay
+runs through the Arrow row mapper ``functions.rows.map_rows``, over a
+payload column (``pdf_extract_text``) or over the ``binaryFile``
+source's ``content`` column (``read_pdf``); payload bytes stay
 executor-side and only the extracted text crosses into the plan. No
 shuffle: a 100 TB crawl of PDFs maps partition-parallel, exactly like
 the WARC/multimodal decoders."""
@@ -34,7 +35,6 @@ import zlib
 from typing import Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from ..functions.rows import map_rows
 
@@ -393,6 +393,15 @@ def extract_pdf_info(payload) -> Tuple[dict, Optional[str]]:
 # Spark operators
 # ---------------------------------------------------------------------------
 
+# the columns pdf_extract_text and read_pdf emit after their key
+_TEXT_COLS = "text string, n_chars long, n_text_streams int, error string"
+
+
+def _text_row(payload):
+    text, ns, err = extract_pdf_text(payload)
+    return [(text, len(text) if text is not None else None, ns, err)]
+
+
 def pdf_extract_text(df: DataFrame, payload_col: str = "payload",
                      id_col: str = "media_id") -> DataFrame:
     """Distributed PDF text extraction over a binary payload column:
@@ -401,13 +410,8 @@ def pdf_extract_text(df: DataFrame, payload_col: str = "payload",
     decode-degradation convention of the multimodal operators).
     Arrow-batched ``mapInArrow``; payload bytes never leave the
     executor."""
-    def text_row(p):
-        text, ns, err = extract_pdf_text(p)
-        return [(text, len(text) if text is not None else None, ns, err)]
-
-    return map_rows(
-        df, text_row, f"{id_col} long, text string, n_chars long, "
-        "n_text_streams int, error string", [payload_col], id_col)
+    return map_rows(df, _text_row, f"{id_col} long, {_TEXT_COLS}",
+                    [payload_col], id_col)
 
 
 def pdf_metadata(df: DataFrame, payload_col: str = "payload",
@@ -431,24 +435,14 @@ def pdf_metadata(df: DataFrame, payload_col: str = "payload",
 
 def read_pdf(spark: SparkSession, path: str) -> DataFrame:
     """Read PDF files into ``(file, text, n_chars, n_text_streams,
-    error)`` — parallelism is by file via ``binaryFiles``, the
-    XML/YAML/WARC reader posture (crawl dumps ship many files)."""
-    schema = T.StructType([
-        T.StructField("file", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-        T.StructField("n_text_streams", T.IntegerType()),
-        T.StructField("error", T.StringType()),
-    ])
-    rdd = spark.sparkContext.binaryFiles(path)
-
-    def parse(kv):
-        fname, data = kv
-        text, ns, err = extract_pdf_text(bytes(data))
-        return (fname, text,
-                len(text) if text is not None else None, ns, err)
-
-    return spark.createDataFrame(rdd.map(parse), schema)
+    error)`` — one row per file, parallel by file through the
+    ``binaryFile`` source (crawl dumps ship many files), extracted by
+    the same row function as :func:`pdf_extract_text`. A file scan
+    carries a size estimate, so the plan can be sized without running
+    it."""
+    files = spark.read.format("binaryFile").load(path)
+    return map_rows(files, _text_row, f"file string, {_TEXT_COLS}",
+                    ["content"], "path")
 
 
 # ---------------------------------------------------------------------------

@@ -11,13 +11,21 @@ re-expression of the reference's eager whole-file parse
              *file count*, not bytes (survey §7 hard part (e))
 * csv     -> ``spark.read.csv`` with sniffed delimiter/quote/header
 * yaml    -> no built-in source: files are read whole
-             (``wholeTextFiles``) and parsed per-file in EXECUTORS via
-             a mapPartitions YAML parse — parallel by file count, like
+             (``wholeTextFiles``) and parsed per-file in EXECUTORS by
+             a ``flatMap`` YAML parse — parallel by file count, like
              document JSON
-* xml     -> wholeTextFiles + executor-side ElementTree parse to
+* xml     -> ``binaryFiles`` + executor-side ElementTree parse to
              nested dicts (attributes as ``@attr``, text as ``#text``,
              repeated child tags as arrays). The reference declines
              XML (structa/source.py:249-250); this engine reads it.
+
+The YAML and XML readers, and the whole-document re-read of
+scalar-payload JSON, emit each parsed row as a JSON string
+(:func:`_json_rows`) and hand the strings to ``spark.read.json`` so
+Spark's schema inference stays in charge. They keep the RDD file
+readers (``wholeTextFiles``/``binaryFiles``) rather than the
+``binaryFile`` source: ``spark.read.json`` infers a schema only from
+a path or an RDD of strings, not from a column of a DataFrame.
 
 Multi-file analysis = union of per-file reads
 (``unionByName(allowMissingColumns=True)``), the reference's
@@ -131,24 +139,23 @@ def _fallback_if_corrupt(spark: SparkSession, df: DataFrame,
     return _read_json_documents(spark, path)
 
 
+def _json_rows(data):
+    """One JSON string per row of a parsed document: a top-level list
+    flattens to its items, and a scalar item is wrapped in VALUE_COL
+    so the result is a DataFrame."""
+    for item in data if isinstance(data, list) else [data]:
+        if isinstance(item, dict):
+            yield json.dumps(item)
+        else:
+            yield json.dumps({VALUE_COL: item})
+
+
 def _read_json_documents(spark: SparkSession, path: str) -> DataFrame:
     """Whole-document JSON parse in executors (parallel by file
-    count); top-level arrays flatten to rows, scalar items are wrapped
-    in VALUE_COL so the result is a DataFrame."""
+    count); rows as :func:`_json_rows` emits them."""
     rdd = spark.sparkContext.wholeTextFiles(path)
-
-    def parse(kv):
-        import json as _j
-        _, text = kv
-        data = _j.loads(text)
-        items = data if isinstance(data, list) else [data]
-        for it in items:
-            if isinstance(it, dict):
-                yield _j.dumps(it)
-            else:
-                yield _j.dumps({VALUE_COL: it})
-
-    return spark.read.json(rdd.flatMap(parse))
+    return spark.read.json(rdd.flatMap(lambda kv: _json_rows(
+        json.loads(kv[1]))))
 
 
 def read_yaml(spark: SparkSession, path: str,
@@ -168,14 +175,7 @@ def read_yaml(spark: SparkSession, path: str,
 
     def parse(kv):
         import yaml as _y
-        _, text = kv
-        data = _y.safe_load(text)
-        items = data if isinstance(data, list) else [data]
-        for item in items:
-            if isinstance(item, dict):
-                yield json.dumps(item)
-            else:
-                yield json.dumps({VALUE_COL: item})
+        return _json_rows(_y.safe_load(kv[1]))
 
     return spark.read.json(rdd.flatMap(parse))
 
@@ -264,7 +264,6 @@ def read_xml(spark: SparkSession, path: str,
     rdd = spark.sparkContext.binaryFiles(path)
 
     def parse(kv):
-        import json as _j
         import re as _re
         import xml.etree.ElementTree as _ET
         _, content = kv
@@ -283,9 +282,9 @@ def read_xml(spark: SparkSession, path: str,
             except (_ET.ParseError, LookupError):
                 root = None
         if root is None:
-            yield _j.dumps({"_corrupt_xml":
-                            content[:1024].decode("utf-8",
-                                                  errors="replace")})
+            yield json.dumps({"_corrupt_xml":
+                              content[:1024].decode("utf-8",
+                                                    errors="replace")})
             return
 
         list_tags = _xml_list_tags(root)
@@ -296,11 +295,7 @@ def read_xml(spark: SparkSession, path: str,
                      for c in children]
         else:
             items = [_xml_element_to_obj(root, list_tags)]
-        for it in items:
-            if isinstance(it, dict):
-                yield _j.dumps(it)
-            else:
-                yield _j.dumps({VALUE_COL: it})
+        yield from _json_rows(items)
 
     return spark.read.json(rdd.flatMap(parse))
 

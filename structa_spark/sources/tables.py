@@ -17,11 +17,6 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 _NANOS_TS = {"events": ["ts"]}
 
 _NANOS_FLAG = "spark.sql.legacy.parquet.nanosAsLong"
@@ -170,11 +165,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str,
     return _spread(spark, _normalize_ts(spark.read.parquet(path)),
                    path, name, spread)
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -70,16 +70,6 @@ def _gunzip_members_ex(data: bytes, max_bytes: int = 1 << 32):
     return b"".join(out), None
 
 
-def gunzip_members(data: bytes, max_bytes: int = 1 << 32) -> bytes:
-    """Strict variant of :func:`_gunzip_members_ex` — raises
-    ``ValueError`` instead of salvaging (for callers that need
-    all-or-nothing semantics)."""
-    inflated, err = _gunzip_members_ex(data, max_bytes)
-    if err is not None:
-        raise ValueError(err)
-    return inflated
-
-
 def index_gzip_members(stream, max_bytes: int = 1 << 32,
                        read_size: int = 1 << 20):
     """Byte ranges ``[(start, end), ...]`` of the gzip members in a

@@ -4559,10 +4559,45 @@ def test_pdf_extract_text_distributed(spark, tmp_path):
     assert got[3] == (None, None, True)
     assert got[4] == (None, None, True)
 
-    # file-level reader over binaryFiles
+    # file-level reader over the binaryFile source
     (tmp_path / "a.pdf").write_bytes(pdf_bytes("file text"))
     out = read_pdf(spark, str(tmp_path / "*.pdf")).collect()
     assert len(out) == 1 and out[0].text == "file text"
+
+
+def test_read_pdf_rows_match_pdf_extract_text(spark, tmp_path):
+    from structa_spark.sources.pdf import (
+        pdf_bytes, pdf_extract_text, read_pdf,
+    )
+    files = {"a.pdf": pdf_bytes("alpha\n(beta)", tj_arrays=True),
+             "b.pdf": b"junk"}
+    for name, data in files.items():
+        (tmp_path / name).write_bytes(data)
+    got = {r.file.rsplit("/", 1)[-1]: r for r in
+           read_pdf(spark, str(tmp_path)).collect()}
+    assert sorted(got) == ["a.pdf", "b.pdf"]
+    assert got["b.pdf"].text is None and got["b.pdf"].error is not None
+    assert got["a.pdf"].text == "alpha\n(beta)"
+    ids = {1: "a.pdf", 2: "b.pdf"}
+    payloads = spark.createDataFrame(
+        [(i, files[name]) for i, name in ids.items()],
+        "media_id long, payload binary")
+    for r in pdf_extract_text(payloads).collect():
+        assert tuple(got[ids[r.media_id]])[1:] == tuple(r)[1:]
+
+
+def test_ensure_parallelism_runs_no_job_over_read_pdf(spark, tmp_path):
+    # the binaryFile scan under read_pdf carries a size estimate, so
+    # a shuffle over it is sized from the plan, not by running it
+    from structa_spark.sources.pdf import pdf_bytes, read_pdf
+    for i in range(3):
+        (tmp_path / f"{i}.pdf").write_bytes(pdf_bytes(f"doc {i}"))
+    shuffled = read_pdf(spark, str(tmp_path)).groupBy("error").count()
+    sc = spark.sparkContext
+    before = int(sc._jsc.sc().dagScheduler().numTotalJobs())
+    out = dedup.ensure_parallelism(shuffled)
+    assert int(sc._jsc.sc().dagScheduler().numTotalJobs()) == before
+    assert out.rdd.getNumPartitions() == sc.defaultParallelism
 
 
 # -- MJPEG video frame hashing / dedup ---------------------------------------
