@@ -516,8 +516,8 @@ def main():
                 .agg(F.sum("n_spans")).collect(),
             "dsir_features": lambda d: _sampling._hashed_ngram_counts(
                 d, 1024, "doc_id", "text").count(),
-            "bigram_nll": lambda d: text.bigram_logprob(
-                d, persist=False).agg(F.sum("n_bigrams")).collect(),
+            "bigram_nll": lambda d: text.bigram_logprob(d)
+                .agg(F.sum("n_bigrams")).collect(),
             "fingerprint": lambda d: text.fingerprint(d, k=8)
                 .agg(F.sum("fingerprint")).collect(),
             "winnow": lambda d: dedup.winnow_fingerprints(

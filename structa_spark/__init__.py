@@ -21,7 +21,6 @@ from .analyzer import (
     merge_to_fixpoint,
 )
 from .diff import diff_profiles, render_diff
-from .operators._cache import clear_caches, registered_cells
 from .model import (
     BoolT, DateTimeT, Empty, FieldT, FloatT, IntT, ListT, Node, NumReprT,
     RecordT, StrReprT, StrT, TableT, TupleT, URLT, ValueAny, merge,
@@ -30,10 +29,19 @@ from .stats import LengthStats, Stats
 
 __version__ = "0.1.0"
 
+
+def registered_cells() -> dict:
+    """Persisted relations the operators hold between calls, by name:
+    none. Each operator shares its intermediate relations within the
+    plan it returns (Spark reuses the identical exchanges), so no
+    call keeps state for a later one."""
+    return {}
+
+
 __all__ = [
     "AnalyzerConfig", "Profile", "analyze", "merge_profiles",
     "merge_to_fixpoint", "merge", "diff_profiles", "render_diff",
-    "clear_caches", "registered_cells",
+    "registered_cells",
     "Stats", "LengthStats",
     "BoolT", "DateTimeT", "Empty", "FieldT", "FloatT", "IntT", "ListT",
     "Node", "NumReprT", "RecordT", "StrReprT", "StrT", "TableT", "TupleT",

@@ -58,12 +58,14 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     counting would run every AQE query stage upstream and throw the
     result away, so the post-shuffle count is predicted the way AQE
     sizes it: the optimizer's size estimate over the session's advisory
-    partition size. A leaf Spark cannot size at all (an RDD-backed
-    relation such as ``createDataFrame`` over a Python list) reports
-    exactly ``spark.sql.defaultSizeInBytes``, which would predict
-    "huge" for any input; such a plan is counted by running it, as
-    before. (A checkpoint keeps the estimate of the plan it cut, so it
-    is sized.)"""
+    partition size. A leaf whose estimate is at least
+    ``spark.sql.defaultSizeInBytes`` counts as unsized, since it would
+    predict "huge" for any input: an RDD-backed relation such as
+    ``createDataFrame`` over a Python list reports exactly that value,
+    and a checkpoint keeps the estimate of the plan it cut, which
+    inner-join estimates can push past it (the family labels of a
+    3-document corpus report more than 2^63 B). Such a plan is counted
+    by running it."""
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     conf = spark._jsparkSession.sessionState().conf()
@@ -71,7 +73,7 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     plan = qe.optimizedPlan()
     leaves = plan.collectLeaves()
     sized = all(int(str(leaves.apply(i).stats().sizeInBytes()))
-                != conf.defaultSizeInBytes() for i in range(leaves.size()))
+                < conf.defaultSizeInBytes() for i in range(leaves.size()))
     if sized and _SHUFFLED.search(qe.executedPlan().toString()):
         advisory = conf.getConf(spark._jvm.org.apache.spark.sql.internal
                                 .SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES())
@@ -160,13 +162,6 @@ def minhash_signature(shingles: Column,
 
     return [F.array_min(F.transform(shingles, hasher(a, b)))
             for a, b in params]
-
-
-# one-deep cache of scrub_contaminated_spans' tokenized-corpus
-# relation (see operators/_cache for the eviction contract)
-from ._cache import register_cell as _register_cell
-
-_SCRUB_TOKS_CACHE = _register_cell("dedup.scrub_toks")
 
 
 def _bind(value: Column, fn) -> Column:
@@ -1030,8 +1025,7 @@ def drop_duplicated_spans(df: DataFrame, n: int = 5,
 
 def scrub_contaminated_spans(corpus: DataFrame, eval_df: DataFrame,
                              n: int = 5, id_col: str = "doc_id",
-                             text_col: str = "text",
-                             persist: bool = True) -> DataFrame:
+                             text_col: str = "text") -> DataFrame:
     """SURGICAL test-set decontamination: remove from each corpus
     document every word ``n``-gram span that also occurs anywhere in
     the held-out evaluation set, and keep the rest of the document —
@@ -1043,39 +1037,39 @@ def scrub_contaminated_spans(corpus: DataFrame, eval_df: DataFrame,
     :func:`drop_duplicated_spans`. Null text is an empty document.
 
     Returns ``(id, n_tokens_before, n_tokens_after, n_hit_spans,
-    text_clean)`` — every corpus row is present, untouched documents
-    ride through with ``n_hit_spans = 0``.
+    text_clean)`` — every corpus row with a non-null id is present,
+    untouched documents ride through with ``n_hit_spans = 0``. Rows
+    with a null id are dropped (as :func:`dedup_corpus` drops them):
+    no join could carry their scrubbed text back to them.
 
     Scale shape: the eval side is a benchmark — tiny by nature next
     to a 100 TB corpus — so its DISTINCT span set broadcasts and the
     corpus side never shuffles to find hits; hit spans explode to
     (doc, token position) coverage, one doc-keyed anti-join keeps the
     surviving tokens, and reassembly sorts within each document only.
-    The corpus text column TOKENIZES ONCE: the three consumers
+    The corpus is read and tokenized ONCE: the three consumers
     (original-case token positions, lowercased span grams, per-doc
-    token counts) all derive from one persisted ``(id, __toks)``
-    projection (one-deep module cache, same lifecycle as
-    dsir_logweights' feature counts) — without it, column pruning
-    recompiles each branch into its own full corpus scan and the
-    text column is read and split three times. ``persist=False``
-    opts out (the branches then recompute — only sensible when the
-    caller persists upstream). Grams lowercase the bound token
-    array, which is byte-identical to tokenizing lowercased text
-    (lowercasing never creates or removes whitespace), so
-    tokenization cannot drift from the span-dedup family's shared
-    :func:`_span_grams`.
+    token counts) all read one ``(id, __toks)`` projection that ends
+    in a ``repartition`` by id, and Spark reuses that exchange for
+    every consumer. It can because each consumer reads the same
+    columns and none adds a filter Spark would push below the
+    exchange: null ids go before it, and positions come from
+    ``posexplode_outer``, which infers no non-empty-array filter.
+    Grams lowercase the bound token array, which is byte-identical to
+    tokenizing lowercased text (lowercasing never creates or removes
+    whitespace), so tokenization cannot drift from the span-dedup
+    family's shared :func:`_span_grams`.
     """
-    from ._cache import evict_then_cache as _evict_then_cache
     from .text import tokens as _tokens
     from .text import word_ngrams as _word_ngrams
 
     txt = F.coalesce(F.col(text_col), F.lit(""))
-    base = corpus.select(
-        F.col(id_col), _tokens(F.trim(txt)).alias("__toks"))
-    if persist:
-        base = _evict_then_cache(_SCRUB_TOKS_CACHE, base)
-    toks = base.select(
-        F.col(id_col), F.posexplode("__toks").alias("pos", "tok"))
+    base = (corpus.where(F.col(id_col).isNotNull())
+            .select(F.col(id_col), _tokens(F.trim(txt)).alias("__toks"))
+            .repartition(id_col))
+    toks = (base.select(F.col(id_col),
+                        F.posexplode_outer("__toks").alias("pos", "tok"))
+            .where(F.col("pos").isNotNull()))
     ev = _span_grams(eval_df, n, None, text_col).select("g").distinct()
     grams = _word_ngrams(F.transform(F.col("__toks"), F.lower), n)
     spans = base.select(

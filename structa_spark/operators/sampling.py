@@ -215,21 +215,6 @@ def curriculum_shards(df: DataFrame, n_shards: int = 4,
     return df.withColumn("shard", shard.cast("int"))
 
 
-# one-deep cache of dsir_logweights' persisted doc-feature counts —
-# same lifecycle as text._BIGRAM_TF_CACHE (see operators/_cache)
-from ._cache import register_cell as _register_cell
-
-_DSIR_FC_CACHE = _register_cell("sampling.dsir_fc")
-# the raw-model bucket histogram (B rows) and the target-model
-# counts (<= B rows) each have two consumers (their total + the
-# model join); column pruning specializes each consumer's aggregate,
-# which defeats exchange reuse, so without these persists each
-# consumer re-aggregates the cached feature relation / re-scans the
-# target corpus (round 12, the LM type-table discipline)
-_DSIR_CR_CACHE = _register_cell("sampling.dsir_cr")
-_DSIR_CT_CACHE = _register_cell("sampling.dsir_ct")
-
-
 def _hashed_ngram_buckets(df: DataFrame, n_buckets: int,
                           id_col: Optional[str],
                           text_col: str) -> DataFrame:
@@ -245,7 +230,12 @@ def _hashed_ngram_buckets(df: DataFrame, n_buckets: int,
     arr = F.filter(tokens(F.lower(F.col(text_col))),
                    lambda t: t != "")
     feats = F.concat(arr, word_ngrams(arr, 2))
-    bucket = (md5_long(F.col("feat")) % F.lit(n_buckets)).cast("int")
+    # md5_long of a non-null string is never null; the coalesce says
+    # so to Spark, which then infers no null filter on the bucket key
+    # that would differ between the consumers of one feature relation
+    bucket = F.coalesce(
+        (md5_long(F.col("feat")) % F.lit(n_buckets)).cast("int"),
+        F.lit(0))
     keys = [F.col(id_col)] if id_col else []
     return df.select(*keys, F.explode(feats).alias("feat")) \
              .select(*keys, bucket.alias("bucket"))
@@ -272,8 +262,7 @@ def dsir_logweights(df: DataFrame, target_df: DataFrame,
                     n_buckets: int = 1024,
                     id_col: str = "doc_id",
                     text_col: str = "text",
-                    alpha: float = 1.0,
-                    persist: bool = True) -> DataFrame:
+                    alpha: float = 1.0) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR — Xie et al.
     2023, "Data Selection for Language Models via Importance
     Resampling"): score every raw document by how much more likely
@@ -295,16 +284,15 @@ def dsir_logweights(df: DataFrame, target_df: DataFrame,
     Scale shape: both models are ≤ B-row relations (B is a few
     thousand) that fold into the scoring join as ONE broadcast; the
     raw model is an aggregation OF the per-doc feature counts, so the
-    corpus tokenizes ONCE — the (doc, bucket, c) relation is persisted
-    (one-deep module cache, same lifecycle as bigram_logprob's tf)
-    because column pruning would otherwise recompile the model branch
-    and the scoring branch into two full corpus scans. The target
-    corpus is small by construction (a hand-curated seed) and scans
-    once. No all-pairs anything: three bounded shuffles — the
-    (doc, bucket) aggregation, the bucket-keyed model aggregation
-    over the persisted counts, and the final per-doc sum."""
-    from ._cache import evict_then_cache as _evict_then_cache
-
+    corpus tokenizes ONCE: the model branch and the scoring branch
+    read the same (doc, bucket, c) columns, and the bucket key is
+    never null, so no join adds a filter below the relation's
+    exchange and Spark reuses it for both. The target corpus is small
+    by construction (a hand-curated seed) and scans once, its counts
+    shared the same way by their total and the model join. No
+    all-pairs anything: three bounded shuffles — the (doc, bucket)
+    aggregation, the bucket-keyed model aggregation over those
+    counts, and the final per-doc sum."""
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2: {n_buckets}")
     if alpha <= 0:
@@ -312,18 +300,9 @@ def dsir_logweights(df: DataFrame, target_df: DataFrame,
         # every touching document's logw silently NULL
         raise ValueError(f"alpha must be > 0: {alpha}")
     fc = _hashed_ngram_counts(df, n_buckets, id_col, text_col)
-    if persist:
-        fc = _evict_then_cache(_DSIR_FC_CACHE, fc)
     cr = fc.groupBy("bucket").agg(F.sum("c").alias("cr"))
     ct = _hashed_ngram_counts(target_df, n_buckets, None, text_col) \
         .withColumnRenamed("c", "ct")
-    if persist:
-        # both model relations are <= B rows with TWO consumers each
-        # (their scalar total + the model join): persisting them
-        # aggregates the cached feature relation exactly once and
-        # tokenizes the target corpus exactly once
-        cr = _evict_then_cache(_DSIR_CR_CACHE, cr)
-        ct = _evict_then_cache(_DSIR_CT_CACHE, ct)
     tr = cr.agg(F.sum("cr").cast("double").alias("__tr__"))
     tt = ct.agg(F.sum("ct").cast("double").alias("__tt__"))
     a = float(alpha)
@@ -360,8 +339,7 @@ def dsir_resample(df: DataFrame, target_df: DataFrame, k: int,
                   id_col: str = "doc_id",
                   text_col: str = "text",
                   alpha: float = 1.0,
-                  salt: str = "dsir",
-                  persist: bool = True) -> DataFrame:
+                  salt: str = "dsir") -> DataFrame:
     """The selection half of DSIR: draw ``k`` documents without
     replacement with probability ∝ ``exp(logw / tau)`` via the
     Gumbel-top-k trick — ``score = logw/tau + Gumbel(0,1)`` and take
@@ -385,7 +363,7 @@ def dsir_resample(df: DataFrame, target_df: DataFrame, k: int,
         raise ValueError(f"tau must be > 0: {tau}")
     lw = dsir_logweights(df, target_df, n_buckets=n_buckets,
                          id_col=id_col, text_col=text_col,
-                         alpha=alpha, persist=persist)
+                         alpha=alpha)
     u = ((sample_key(F.col(id_col), salt) + F.lit(1))
          / F.lit(float(SAMPLE_MOD + 1)))
     score = (F.col("logw") / F.lit(float(tau))

@@ -909,8 +909,11 @@ def bm25_topk(df: DataFrame, queries, k: int = 5,
     the query terms, never the corpus token count; doc length rides
     along from the same projection, so no join back to the corpus.
     Corpus stats (N, avgdl) are one 1-row scalar broadcast; idf is
-    a #terms-row broadcast. The final top-k is one window keyed by
-    query id — at production query volume the per-query partitions
+    a #terms-row broadcast. The three consumers of the per-doc
+    projection (term frequencies, document frequencies, corpus stats)
+    read different columns of it, so each reads the corpus. The
+    final top-k is one window keyed by query id — at production
+    query volume the per-query partitions
     are small because postings, not documents, bound the candidates
     (cap postings per term for stop-word-ish queries, the same knob
     as the LSH posting cap)."""
@@ -921,16 +924,9 @@ def bm25_topk(df: DataFrame, queries, k: int = 5,
     all_terms = sorted({t for _, t in qrows})
 
     toks = tokens(F.lower(F.col(text_col)))
-    # ONE tokenize pass: uncached, the three consumers below (term
-    # frequencies, document frequencies via tf, corpus stats) each
-    # re-ran the full lower+regexp-split scan of the corpus — three
-    # tokenizations per execution. The per-doc projection is
-    # byte-small (an int plus the query-term hit array, bounded by
-    # postings), so it one-deep caches like the LM tf relations.
     proj = df.select(
         F.col(id_col), F.size(toks).alias("dl"),
         F.filter(toks, lambda x: x.isin(all_terms)).alias("__hits__"))
-    proj = _evict_then_cache(_BM25_DOCS_CACHE, proj)
     hits = proj.select(
         F.col(id_col), F.col("dl"),
         F.explode("__hits__").alias("token"))
@@ -2166,27 +2162,9 @@ def unigram_encode(df: DataFrame, model,
     return _encode_words(df, encode_word, text_col, id_col, out_col)
 
 
-# one-deep caches of persisted shared relations, owned by the
-# central registry (operators/_cache.py — clear_caches() releases
-# them all); the eviction lives with the NEXT call through a cell
-from ._cache import LOCK as _CACHE_LOCK
-from ._cache import evict_then_cache as _evict_then_cache
-from ._cache import register_cell as _register_cell
-
-_BIGRAM_TF_CACHE = _register_cell("text.bigram_tf")
-_BIGRAM_SCORED_TF_CACHE = _register_cell("text.bigram_scored_tf")
-# self-mode bigram-TYPE table (bg, cb, w1): two consumers, persisted
-# so neither re-aggregates the full tf relation (round 12)
-_BIGRAM_PTAB_CACHE = _register_cell("text.bigram_ptab")
-_JSD_GT_CACHE = _register_cell("text.jsd_gt")
-_JSD_NG_CACHE = _register_cell("text.jsd_ng")
-_BM25_DOCS_CACHE = _register_cell("text.bm25_docs")
-
-
 def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
                    text_col: str = "text",
                    alpha: float = 0.5,
-                   persist: bool = True,
                    train_df: DataFrame = None) -> DataFrame:
     """Per-document average negative log-likelihood under a BIGRAM
     language model with add-alpha smoothing — the conditional upgrade
@@ -2210,88 +2188,49 @@ def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
     before any join; the bigram-count table joins on the bigram key
     (AQE skew split covers the head), the left-context table is
     token-vocabulary-sized, and V folds in as a 1-row broadcast.
+    Each relation with several consumers (the tf relation, the
+    model's bigram-count table) is computed once per plan: every
+    consumer reads the same aggregate columns and no join adds a null
+    filter below it (the bigram key is filtered once upstream, the
+    derived ``w1`` key is never null), so Spark reuses the one
+    exchange. The vocabulary count V is a separate pass over its
+    corpus: self mode reads ``df`` twice, cross mode reads ``df``
+    once and ``train_df`` twice.
     Documents with fewer than two tokens have no bigram and are
     absent from the output (score them with the unigram model).
     """
     arr = tokens(F.lower(F.col(text_col)))
-    bg = df.select(F.col(id_col),
-                   F.explode(word_ngrams(arr, 2)).alias("bg"))
-    # w1 lives INSIDE the tf relation so cb and cl are plain
-    # aggregations of it. Column pruning specializes each consumer's
-    # aggregate, which defeats exchange reuse — without a persist the
-    # three consumers (cb, cl, scoring join) recompile to separate
-    # tokenize+explode scans of the corpus. tf is the
-    # frequency-compressed form, orders of magnitude smaller than the
-    # token stream, so it is persisted (memory, spilling to disk) and
-    # all three branches read ONE materialization. SQL cache entries
-    # are NOT garbage-collected by the ContextCleaner (the
-    # CacheManager holds them until an explicit unpersist), and this
-    # function returns a LAZY plan, so it cannot unpersist eagerly
-    # itself; instead each call evicts the PREVIOUS call's cached tf
-    # (a one-deep cache), bounding the session's footprint at one
-    # relation instead of leaking one per call. Unpersisting the
-    # previous relation is always safe — a still-live older plan just
-    # recomputes. `persist=False` opts back into the stateless
-    # recompute-per-branch plan.
+    bg = (df.select(F.col(id_col),
+                    F.explode(word_ngrams(arr, 2)).alias("bg"))
+          .where(F.col("bg").isNotNull()))
     tf = (bg.groupBy(id_col, "bg")
           .agg(F.count(F.lit(1)).alias("tf")))
+    w1 = F.coalesce(F.split("bg", " ").getItem(0), F.lit(""))
 
-    # Model statistics join at the bigram-TYPE level (optimization
-    # round 11): cb and cl attach to the DISTINCT scored bigrams
-    # first, and that (bg, cb, cl) table is the only thing the big
-    # (doc, bigram) relation ever joins — one model join by `bg`
-    # instead of one by `bg` plus one by `w1`. Under auto-broadcast
-    # the old shape also re-scanned the cached tf inside each build
-    # side; past the broadcast threshold it re-shuffled the full
-    # doc-bigram relation per join.
     if train_df is None:
-        # self mode: tf feeds the type table AND the scoring join
-        if persist:
-            tf = _evict_then_cache(_BIGRAM_TF_CACHE, tf)
+        # self mode: tf feeds the bigram-TYPE table (bg, cb, cl) AND
+        # the scoring join, which is its only model join
         ptab = (tf.groupBy("bg").agg(F.sum("tf").alias("cb"))
-                .withColumn("w1", F.split("bg", " ").getItem(0)))
-        if persist:
-            # the (bg, cb, w1) type table has TWO consumers (the cl
-            # aggregation and the scoring join): column pruning
-            # specializes each consumer's bg-aggregate, which defeats
-            # exchange reuse, so without a persist each consumer
-            # re-aggregates the full cached tf — one extra tf-sized
-            # shuffle here, N extra at 100 TB. The type table is
-            # vocabulary-sized; persist it once (guide §2.4).
-            ptab = _evict_then_cache(_BIGRAM_PTAB_CACHE, ptab)
+                .withColumn("w1", w1))
         cl = ptab.groupBy("w1").agg(F.sum("cb").alias("cl"))
-        ptab = ptab.join(cl, "w1").select("bg", "cb", "cl")
+        scored = tf.join(ptab.join(cl, "w1").select("bg", "cb", "cl"),
+                         "bg")
         v_src = df.select(
             F.explode(tokens(F.lower(F.col(text_col)))).alias("t"))
     else:
         # cross mode: the model's bigram-count table feeds cb and
-        # cl; the scored corpus's distinct bigram types LEFT join
-        # them so unseen bigram/context falls back to the smoothing
-        # mass. tf gains a second consumer (the type table), so it
-        # persists through its own one-deep cell. NOTE (round 12):
-        # persisting the train slice's token ARRAYS so tb and v
-        # share one tokenize pass was A/B'd exactly as VERDICT r11
-        # item 5 asked and measured a WASH locally (interleaved
-        # min-of-6: ccnet 2.82 vs 2.80 s, reflm 1.91 vs 1.76 s, the
-        # OLD shape slightly ahead) — the persist's array
-        # materialization costs what the second filter-pushdown scan
-        # costs, and at 100 TB storing the train slice's token
-        # arrays per query call is strictly worse than re-scanning
-        # with lang pushed to the parquet footer. Kept as two scans.
+        # cl; the scored (doc, bigram) rows LEFT join them so unseen
+        # bigram/context falls back to the smoothing mass
         t_arr = tokens(F.lower(F.col(text_col)))
         tb = (train_df.select(
             F.explode(word_ngrams(t_arr, 2)).alias("bg"))
+            .where(F.col("bg").isNotNull())
             .groupBy("bg").agg(F.count(F.lit(1)).alias("cb"))
-            .withColumn("w1", F.split("bg", " ").getItem(0)))
-        if persist:
-            tb = _evict_then_cache(_BIGRAM_TF_CACHE, tb)
-            tf = _evict_then_cache(_BIGRAM_SCORED_TF_CACHE, tf)
+            .withColumn("w1", w1))
         cl = tb.groupBy("w1").agg(F.sum("cb").alias("cl"))
-        stypes = (tf.groupBy("bg").agg(F.count(F.lit(1)))
-                  .withColumn("w1", F.split("bg", " ").getItem(0)))
-        ptab = (stypes.join(tb.select("bg", "cb"), "bg", "left")
-                .join(cl, "w1", "left")
-                .select("bg", "cb", "cl"))
+        scored = (tf.withColumn("w1", w1)
+                  .join(tb.select("bg", "cb"), "bg", "left")
+                  .join(cl, "w1", "left"))
         v_src = train_df.select(
             F.explode(tokens(F.lower(F.col(text_col)))).alias("t"))
     v = (v_src
@@ -2302,8 +2241,7 @@ def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
     clv = F.coalesce(F.col("cl"), F.lit(0))
     p = (cbv + a) / (clv + a * F.col("__v__"))
     nll = F.col("tf") * -F.log(p)
-    return (tf.join(ptab, "bg")
-            .join(F.broadcast(v))
+    return (scored.join(F.broadcast(v))
             .groupBy(id_col)
             .agg(F.sum("tf").cast("long").alias("n_bigrams"),
                  F.round(F.sum(nll) / F.sum("tf"), 4)
@@ -2311,8 +2249,8 @@ def bigram_logprob(df: DataFrame, id_col: str = "doc_id",
 
 
 def kn_bigram_logprob(df: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", d: float = 0.75,
-                      persist: bool = True) -> DataFrame:
+                      text_col: str = "text", d: float = 0.75
+                      ) -> DataFrame:
     """Interpolated Kneser-Ney bigram perplexity (Kneser & Ney 1995;
     Chen & Goodman 1999's interpolated form) — the smoothing KenLM
     ships and CCNet's quality filter actually runs, upgrading the
@@ -2330,17 +2268,18 @@ def kn_bigram_logprob(df: DataFrame, id_col: str = "doc_id",
     >= 1 > d). Returns (id, n_bigrams, avg_nll); documents with
     fewer than two tokens are absent, like bigram_logprob.
 
-    Scale shape: the (doc, bigram) tf relation aggregates FIRST and
-    persists (one-deep module cache); the model side collapses to
-    ONE bigram-TYPE table ``(bg, cb, cl, n1p_fw, n1p_bw)`` — bgc is
-    aggregated once and the context/predecessor statistics join it
-    at the TYPE level, so the big (doc, bigram) relation is touched
-    by exactly one model join (by ``bg``) plus the doc-keyed finale
-    instead of three model joins; B folds in as a 1-row broadcast.
-    (The prior shape joined tf by bg, then w1, then w2: under
-    auto-broadcast each build side re-scanned the cached tf and
-    re-derived bgc, and past the broadcast threshold it re-shuffled
-    the full doc-bigram relation twice more.) No token hot-key
+    Scale shape: the (doc, bigram) tf relation aggregates FIRST; the
+    model side collapses to ONE bigram-TYPE table
+    ``(bg, cb, cl, n1p_fw, n1p_bw)`` — bgc is aggregated once and the
+    context/predecessor statistics join it at the TYPE level, so the
+    big (doc, bigram) relation is touched by exactly one model join
+    (by ``bg``) plus the doc-keyed finale; B folds in as a 1-row
+    broadcast. The input is read ONCE: tf and bgc each end in an
+    exchange that Spark reuses for all their consumers, because
+    every consumer reads the same aggregate columns (counts are
+    ``count("cb")``, never null) and none adds a filter below it (the
+    bigram key is filtered once upstream; ``w1``/``w2`` are never
+    null, so their joins infer no filter). No token hot-key
     anywhere: every aggregation is keyed by bigram, w1 or w2 AFTER
     the (doc, bigram) compression, and P(w2|w1) is evaluated once
     per bigram TYPE, not once per (doc, bigram) row.
@@ -2348,31 +2287,22 @@ def kn_bigram_logprob(df: DataFrame, id_col: str = "doc_id",
     if not 0.0 < d < 1.0:
         raise ValueError(f"discount d must be in (0, 1): {d}")
     arr = tokens(F.lower(F.col(text_col)))
-    bg = df.select(F.col(id_col),
-                   F.explode(word_ngrams(arr, 2)).alias("bg"))
+    bg = (df.select(F.col(id_col),
+                    F.explode(word_ngrams(arr, 2)).alias("bg"))
+          .where(F.col("bg").isNotNull()))
     tf = (bg.groupBy(id_col, "bg")
           .agg(F.count(F.lit(1)).alias("tf")))
-    if persist:
-        tf = _evict_then_cache(_KN_TF_CACHE, tf)
+    w = F.split("bg", " ")
     bgc = (tf.groupBy("bg")
            .agg(F.sum("tf").alias("cb"))
-           .withColumn("w1", F.split("bg", " ").getItem(0))
-           .withColumn("w2", F.split("bg", " ").getItem(1)))
-    if persist:
-        # bgc has FOUR consumers (ctx, pred, btot, the ptab join);
-        # column pruning specializes each one's bg-aggregate, which
-        # defeats exchange reuse, so without a persist every consumer
-        # re-aggregates the full cached tf — the round-11 plan showed
-        # 5 InMemoryTableScans of tf. The type table is
-        # vocabulary-sized; persist it once and the big relation is
-        # aggregated exactly once (guide §2.4).
-        bgc = _evict_then_cache(_KN_BGC_CACHE, bgc)
+           .withColumn("w1", F.coalesce(w.getItem(0), F.lit("")))
+           .withColumn("w2", F.coalesce(w.getItem(1), F.lit(""))))
     ctx = (bgc.groupBy("w1")
            .agg(F.sum("cb").alias("cl"),
-                F.count(F.lit(1)).alias("n1p_fw")))
+                F.count("cb").alias("n1p_fw")))
     pred = (bgc.groupBy("w2")
-            .agg(F.count(F.lit(1)).alias("n1p_bw")))
-    btot = bgc.agg(F.count(F.lit(1)).cast("double").alias("__b__"))
+            .agg(F.count("cb").alias("n1p_bw")))
+    btot = bgc.agg(F.count("cb").cast("double").alias("__b__"))
     dd = F.lit(float(d))
     p = (F.greatest(F.col("cb") - dd, F.lit(0.0)) / F.col("cl")
          + (dd * F.col("n1p_fw") / F.col("cl"))
@@ -2388,15 +2318,8 @@ def kn_bigram_logprob(df: DataFrame, id_col: str = "doc_id",
                  .alias("avg_nll")))
 
 
-# one-deep caches for kn_bigram_logprob's tf and its bigram-TYPE
-# relation (see operators/_cache)
-_KN_TF_CACHE = _register_cell("text.kn_tf")
-_KN_BGC_CACHE = _register_cell("text.kn_bgc")
-
-
 def token_js_divergence(df: DataFrame, group_col: str = "source",
-                        text_col: str = "text",
-                        persist: bool = True) -> DataFrame:
+                        text_col: str = "text") -> DataFrame:
     """Jensen-Shannon divergence (bits) between each corpus slice's
     unigram token distribution and the WHOLE corpus's — the
     information-theoretic drift score of training-data mixture
@@ -2421,16 +2344,19 @@ def token_js_divergence(df: DataFrame, group_col: str = "source",
 
     Scale shape: ONE corpus scan aggregates (group, token) counts;
     that compressed relation feeds the corpus token counts, the
-    per-group totals AND the scoring join, so it is persisted via
-    the one-deep module cache (column pruning would otherwise
-    specialize each consumer into its own corpus scan —
-    ``persist=False`` opts into stateless recompute). The token-keyed
+    per-group totals AND the scoring join, which all read the same
+    columns and add no filter below its exchange, so Spark computes
+    it once and reuses the exchange for every consumer. The token-keyed
     join carries at most one row per (group, token), so skew is
     bounded by the group count per token; group totals and the
     corpus total are broadcast.
     """
+    # the group key is wrapped in a struct, which is never null, so
+    # the join on it infers no null filter that Spark would push into
+    # one consumer of gt only; a null group still counts toward Q and
+    # is dropped from the output by its zero count of group values
     toks = df.select(
-        F.col(group_col).alias("grp"),
+        F.struct(F.col(group_col).alias("g")).alias("grp"),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
     # drop empty-string tokens: text starting with a TAB/newline
     # trims to a leading \s+ separator and split yields "" — the
@@ -2438,16 +2364,8 @@ def token_js_divergence(df: DataFrame, group_col: str = "source",
     gt = (toks.where(F.col("token") != "")
           .groupBy("grp", "token").agg(
               F.count(F.lit(1)).alias("c")))
-    if persist:
-        gt = _evict_then_cache(_JSD_GT_CACHE, gt)
     ct = gt.groupBy("token").agg(F.sum("c").alias("ctot"))
     ng = gt.groupBy("grp").agg(F.sum("c").alias("ngrp"))
-    if persist:
-        # ng (one row per group) has TWO consumers — the corpus
-        # total and the scoring join; persisting it aggregates the
-        # cached (group, token) relation once, not twice (round 12,
-        # the LM type-table discipline)
-        ng = _evict_then_cache(_JSD_NG_CACHE, ng)
     tot = ng.agg(F.sum("ngrp").cast("double").alias("__n__"))
     p = F.col("c") / F.col("ngrp")
     q = F.col("ctot") / F.col("__n__")
@@ -2459,9 +2377,10 @@ def token_js_divergence(df: DataFrame, group_col: str = "source",
            .agg(F.max("ngrp").cast("long").alias("n_tokens"),
                 F.sum(p * F.log2(p / m)).alias("klp"),
                 F.sum(q * F.log2(q / m)).alias("klq_in"),
-                F.sum(q).alias("qmass")))
-    return per.select(
-        F.col("grp").alias(group_col), "n_tokens",
+                F.sum(q).alias("qmass"),
+                F.count("grp.g").alias("__k__")))
+    return per.where(F.col("__k__") > 0).select(
+        F.col("grp.g").alias(group_col), "n_tokens",
         F.round(0.5 * F.col("klp")
                 + 0.5 * (F.col("klq_in") + (1 - F.col("qmass"))),
                 6).alias("jsd_bits"))
@@ -2979,24 +2898,25 @@ def nb_train(df: DataFrame, label_col: str = "lang",
     Scale shape: both outputs are pure groupBy counts over the
     (label, token) explosion — map-side partial aggregation absorbs
     the token hot-keys, and the model is vocabulary x classes, small
-    enough to broadcast for any real label set.
+    enough to broadcast for any real label set. Fitting runs two
+    jobs, like :func:`bpe_train`: both outputs come back
+    materialized (``localCheckpoint``), so scoring reads the model,
+    never the training corpus, however many times it is applied.
+    Spark frees the checkpoints once nothing references the model.
     """
     labeled = df.where(F.col(label_col).isNotNull())
     toks = labeled.select(
         F.col(label_col).alias("label"),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("token"))
     cond = toks.groupBy("label", "token").agg(
-        F.count(F.lit(1)).alias("c"))
+        F.count(F.lit(1)).alias("c")).localCheckpoint()
     classes = (labeled.groupBy(F.col(label_col).alias("label"))
                .agg(F.count(F.lit(1)).alias("n_docs"))
                .join(cond.groupBy("label")
                      .agg(F.sum("c").alias("n_tokens")),
                      "label", "left")
-               .fillna(0, ["n_tokens"]))
+               .fillna(0, ["n_tokens"])).localCheckpoint()
     return cond, classes
-
-
-_NB_COND_CACHE = _register_cell("text.nb_cond")
 
 
 def nb_predict(df: DataFrame, cond: DataFrame, classes: DataFrame,
@@ -3031,38 +2951,6 @@ def nb_predict(df: DataFrame, cond: DataFrame, classes: DataFrame,
     (class-prior argmax). Returns (id, pred_label, score).
     """
     import math
-
-    from pyspark import StorageLevel
-
-    # cond is consumed three times (the classes totals it feeds, the
-    # vocabulary count, and the pivot at score time), and each is a
-    # full pass over the training explosion when cond is the lazy
-    # nb_train plan — persist it so model derivation costs ONE
-    # corpus pass. One-deep module cache, same lifecycle pattern as
-    # bigram_logprob's tf relation (SQL cache entries are not
-    # GC-cleaned; the next call evicts this one's).
-    # drain the one-deep cache — EXCEPT when the cached relation is
-    # this very cond (the train-once-score-many shape: unpersisting
-    # it would throw away the materialization and recompute the
-    # training explosion per call). A previous DIFFERENT model, or
-    # one left behind while the caller pre-cached cond themselves,
-    # is evicted so the bound holds.
-    with _CACHE_LOCK:
-        keep = None
-        while _NB_COND_CACHE:
-            prev = _NB_COND_CACHE.pop()
-            if prev is cond:
-                keep = prev
-                continue
-            try:
-                prev.unpersist(False)
-            except Exception:
-                pass
-        if keep is not None:
-            _NB_COND_CACHE.append(keep)
-        elif not cond.is_cached:
-            cond = cond.persist(StorageLevel.MEMORY_AND_DISK)
-            _NB_COND_CACHE.append(cond)
 
     cls_rows = sorted(classes.collect(), key=lambda r: r.label)
     if not cls_rows:

@@ -1394,11 +1394,11 @@ def ccnet_perplexity_buckets(spark: SparkSession,
     anywhere from tokenization to the cutoff arithmetic
     hash-mismatches.
 
-    Scale shape: the per-doc NLL relation rides bigram_logprob's
-    persisted tf (one corpus tokenize); cutoffs are a #langs-row agg
-    that folds back in as ONE broadcast; the finale is a
-    (lang, bucket)-keyed agg. Docs with < 2 tokens have no bigrams
-    and are absent, exactly like reflm_nll."""
+    Scale shape: the per-doc NLL relation is bigram_logprob's
+    cross-mode scoring (one pass over the scored corpus); cutoffs
+    are a #langs-row agg that folds back in as ONE broadcast; the
+    finale is a (lang, bucket)-keyed agg. Docs with < 2 tokens have
+    no bigrams and are absent, exactly like reflm_nll."""
     d = _t(spark, sf_dir, "documents")
     train = d.where(F.col("lang") == "en")
     nll = text.bigram_logprob(d, train_df=train)
@@ -8931,7 +8931,7 @@ def decompressed_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-tripped TEXT (the sniff keys on magic bytes, not ratios),
     # and xz/bz2 at default effort dominated the whole query's runtime
     codecs = [
-        lambda b: gzip.compress(b, compresslevel=1),
+        lambda b: gzip.compress(b, compresslevel=1, mtime=0),
         lambda b: zlib.compress(b, 1),
         lambda b: bz2.compress(b, compresslevel=1),
         lambda b: lzma.compress(b, preset=0),

@@ -121,6 +121,21 @@ def _esc_xml(s: str) -> str:
             .replace(">", "&gt;"))
 
 
+def _zip_bytes(members, compress: bool, stored=()) -> bytes:
+    """ZIP the ``(name, text)`` members in order, deflated unless
+    ``compress`` is false (names in ``stored`` are always stored).
+    Every member carries one fixed timestamp, so the same document
+    always gives the same bytes."""
+    method = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, data in members:
+            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            zf.writestr(info, data,
+                        zipfile.ZIP_STORED if name in stored else method)
+    return buf.getvalue()
+
+
 def docx_bytes(text: str, compress: bool = True) -> bytes:
     """A minimal structurally-valid DOCX showing ``text`` (one
     ``<w:p>`` per input line, each line split into two ``<w:t>``
@@ -152,13 +167,9 @@ def docx_bytes(text: str, compress: bool = True) -> bytes:
             "openxmlformats.org/officeDocument/2006/relationships/"
             "officeDocument\" Target=\"word/document.xml\"/>"
             "</Relationships>")
-    buf = io.BytesIO()
-    method = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
-    with zipfile.ZipFile(buf, "w", method) as zf:
-        zf.writestr("[Content_Types].xml", ctypes)
-        zf.writestr("_rels/.rels", rels)
-        zf.writestr("word/document.xml", doc)
-    return buf.getvalue()
+    return _zip_bytes([("[Content_Types].xml", ctypes),
+                       ("_rels/.rels", rels),
+                       ("word/document.xml", doc)], compress)
 
 
 # ---------------------------------------------------------------------------
@@ -403,13 +414,9 @@ def odt_bytes(text: str, compress: bool = True) -> bytes:
            "oasis:names:tc:opendocument:xmlns:text:1.0\">"
            "<office:body><office:text>" + "".join(paras)
            + "</office:text></office:body></office:document-content>")
-    buf = io.BytesIO()
-    method = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
-    with zipfile.ZipFile(buf, "w", method) as zf:
-        zf.writestr("mimetype",
-                    "application/vnd.oasis.opendocument.text")
-        zf.writestr("content.xml", doc)
-    return buf.getvalue()
+    return _zip_bytes([("mimetype",
+                        "application/vnd.oasis.opendocument.text"),
+                       ("content.xml", doc)], compress)
 
 
 def pptx_bytes(text: str, compress: bool = True,
@@ -441,19 +448,14 @@ def pptx_bytes(text: str, compress: bool = True,
 
     pres = ("<?xml version=\"1.0\"?><p:presentation xmlns:p=\"http://"
             "schemas.openxmlformats.org/presentationml/2006/main\"/>")
-    buf = io.BytesIO()
-    method = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
-    with zipfile.ZipFile(buf, "w", method) as zf:
-        zf.writestr("[Content_Types].xml",
-                    "<?xml version=\"1.0\"?><Types xmlns=\"http://"
-                    "schemas.openxmlformats.org/package/2006/"
-                    "content-types\"/>")
-        zf.writestr("ppt/presentation.xml", pres)
-        for num in sorted(range(1, len(slides) + 1),
-                          key=lambda k: -k):  # reverse member order
-            zf.writestr(f"ppt/slides/slide{num}.xml",
-                        slide_xml(slides[num - 1]))
-    return buf.getvalue()
+    ctypes = ("<?xml version=\"1.0\"?><Types xmlns=\"http://"
+              "schemas.openxmlformats.org/package/2006/"
+              "content-types\"/>")
+    return _zip_bytes(
+        [("[Content_Types].xml", ctypes), ("ppt/presentation.xml", pres)]
+        + [(f"ppt/slides/slide{num}.xml", slide_xml(slides[num - 1]))
+           for num in range(len(slides), 0, -1)],  # reverse member order
+        compress)
 
 
 def xlsx_bytes(strings, compress: bool = True) -> bytes:
@@ -480,12 +482,8 @@ def xlsx_bytes(strings, compress: bool = True) -> bytes:
     wb = ("<?xml version=\"1.0\"?><workbook xmlns=\"http://schemas."
           "openxmlformats.org/spreadsheetml/2006/main\"><sheets>"
           "<sheet name=\"S1\" sheetId=\"1\"/></sheets></workbook>")
-    buf = io.BytesIO()
-    method = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
-    with zipfile.ZipFile(buf, "w", method) as zf:
-        zf.writestr("xl/workbook.xml", wb)
-        zf.writestr("xl/sharedStrings.xml", sst)
-    return buf.getvalue()
+    return _zip_bytes([("xl/workbook.xml", wb),
+                       ("xl/sharedStrings.xml", sst)], compress)
 
 
 # ---------------------------------------------------------------------------
@@ -648,18 +646,13 @@ def epub_bytes(chapters, compress: bool = True) -> bytes:
                  "container\"><rootfiles><rootfile full-path=\"OEBPS/"
                  "content.opf\" media-type=\"application/oebps-"
                  "package+xml\"/></rootfiles></container>")
-    buf = io.BytesIO()
-    method = zipfile.ZIP_DEFLATED if compress else zipfile.ZIP_STORED
-    with zipfile.ZipFile(buf, "w", method) as zf:
-        zf.writestr("mimetype", "application/epub+zip",
-                    zipfile.ZIP_STORED)
-        zf.writestr("META-INF/container.xml", container)
-        zf.writestr("OEBPS/content.opf", opf)
-        for k, body in enumerate(chapters):
-            zf.writestr(
-                f"OEBPS/ch{k}.xhtml",
-                "<?xml version=\"1.0\"?><html xmlns=\"http://www.w3."
-                "org/1999/xhtml\"><head><title>skip</title></head>"
-                "<body><script>gone()</script>" + body
-                + "</body></html>")
-    return buf.getvalue()
+    return _zip_bytes(
+        [("mimetype", "application/epub+zip"),
+         ("META-INF/container.xml", container),
+         ("OEBPS/content.opf", opf)]
+        + [(f"OEBPS/ch{k}.xhtml",
+            "<?xml version=\"1.0\"?><html xmlns=\"http://www.w3."
+            "org/1999/xhtml\"><head><title>skip</title></head>"
+            "<body><script>gone()</script>" + body + "</body></html>")
+           for k, body in enumerate(chapters)],
+        compress, stored=("mimetype",))

@@ -878,6 +878,24 @@ def test_ensure_parallelism_runs_no_job_on_a_shuffled_input(spark, tmp_path):
     assert dedup.ensure_parallelism(wide) is wide
 
 
+def test_ensure_parallelism_spreads_a_join_over_family_labels(
+        spark, tmp_path):
+    # a checkpoint keeps the estimate of the plan it cut and inner-join
+    # estimates multiply, so the family labels of a 3-row corpus report
+    # more bytes than Long.MaxValue; such a leaf counts as unsized and
+    # the small join over it is still spread
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(
+        [(1, "a b c d e f g h"), (2, "a b c d e f g h"),
+         (3, "x y z w v u t s")],
+        "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+    labels = dedup._family_labels(docs, "text", "doc_id", 3, 0.5, True)
+    joined = docs.join(labels.withColumnRenamed("id", "doc_id"), "doc_id")
+    out = dedup.ensure_parallelism(joined)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
 def test_repetition_signals(spark):
     rows = [
         (0, "a b a b a b"),            # 2 distinct / 6; "a b" x3
@@ -2510,33 +2528,6 @@ def test_stats_add_drops_partial_sketches():
     assert (Stats.empty() + a).qsketches == (b"sk",)
 
 
-def test_bigram_logprob_tf_cache_is_one_deep(spark):
-    from structa_spark.operators import text as t
-    df = spark.createDataFrame(
-        [(i, "the cat sat on the mat") for i in range(4)],
-        "doc_id long, text string")
-    other = spark.createDataFrame(
-        [(9, "completely different words")],
-        "doc_id long, text string")
-    t._BIGRAM_TF_CACHE.clear()
-    r1 = t.bigram_logprob(df).collect()
-    assert len(t._BIGRAM_TF_CACHE) == 1
-    first = t._BIGRAM_TF_CACHE[0]
-    assert first.storageLevel.useMemory
-    # an IDENTICAL plan re-registers: eviction must run BEFORE the
-    # new persist, or the new call's cache entry would be the one
-    # removed (benchmark passes 2..N silently uncached)
-    r2 = t.bigram_logprob(df).collect()
-    assert len(t._BIGRAM_TF_CACHE) == 1
-    assert t._BIGRAM_TF_CACHE[0].storageLevel.useMemory
-    assert sorted(map(tuple, r1)) == sorted(map(tuple, r2))
-    # a DIFFERENT plan evicts the previous relation outright
-    t.bigram_logprob(other).collect()
-    assert len(t._BIGRAM_TF_CACHE) == 1
-    assert t._BIGRAM_TF_CACHE[0].storageLevel.useMemory
-    assert not first.storageLevel.useMemory   # evicted, not leaked
-
-
 def test_token_jsd_identical_and_disjoint_slices(spark):
     import math
     from structa_spark.operators import text as t
@@ -2549,7 +2540,6 @@ def test_token_jsd_identical_and_disjoint_slices(spark):
            t.token_js_divergence(same).collect()}
     assert got["a"].n_tokens == 2 and got["b"].n_tokens == 2
     assert got["a"].jsd_bits == 0.0 and got["b"].jsd_bits == 0.0
-    assert len(t._JSD_GT_CACHE) == 1      # one-deep cache engaged
     # two equal-mass sources with DISJOINT vocabularies: the corpus
     # is the half-half mixture, so per slice
     # JSD = 0.5*log2(4/3) + 0.25*log2(2/3) + 0.25 (hand-derived:
@@ -2743,6 +2733,23 @@ def test_scrub_contaminated_spans(spark):
     assert got[5].n_hit_spans == 0 and got[5].n_tokens_after == 2
 
 
+def test_scrub_contaminated_spans_drops_null_ids(spark):
+    # a null id cannot carry its scrubbed text back to its document:
+    # the row is dropped up front and every other row is unchanged
+    from structa_spark.operators import dedup as dd
+    ev = spark.createDataFrame([(100, "the quick brown fox jumps over")],
+                               "doc_id long, text string")
+    rows = [(1, "intro then the quick brown fox jumps over and more"),
+            (2, "nothing shared with the evaluation set here")]
+    co = spark.createDataFrame(rows, "doc_id long, text string")
+    with_null = spark.createDataFrame(
+        rows + [(None, "a document that has no id at all")],
+        "doc_id long, text string")
+    got = sorted(dd.scrub_contaminated_spans(with_null, ev, n=5).collect())
+    assert got == sorted(dd.scrub_contaminated_spans(co, ev, n=5).collect())
+    assert [r.doc_id for r in got] == [1, 2]
+
+
 def test_review_fixes_null_text_and_modes(spark):
     import math
     from structa_spark.operators import dedup as dd
@@ -2849,27 +2856,28 @@ def test_canonicalize_url_idempotent_and_tracking_free(spark):
                              r.c1), (r.u, r.c1)
 
 
-def test_nb_predict_reuses_model_cache_across_calls(spark):
+def test_nb_model_is_materialized_once(spark, tmp_path):
+    # nb_train fits once: scoring reads the model, never the training
+    # file, however often it is applied, and holds nothing persisted
+    # after it returns
     from structa_spark.operators import text as t
-    df = spark.createDataFrame(
+    path = str(tmp_path / "train")
+    spark.createDataFrame(
         [(1, "cat purr", "feline"), (2, "dog bark", "canine")],
-        "doc_id long, text string, lang string")
-    t._NB_COND_CACHE.clear()
-    cond, classes = t.nb_train(df)
-    t.nb_predict(df, cond, classes).collect()
-    assert len(t._NB_COND_CACHE) == 1
-    cached = t._NB_COND_CACHE[0]
-    assert cached.storageLevel.useMemory
-    # train-once-score-many: a second call with the SAME cond must
-    # keep the materialization, not unpersist-and-recompute it
-    t.nb_predict(df, cond, classes).collect()
-    assert t._NB_COND_CACHE == [cached]
-    assert cached.storageLevel.useMemory
-    # a DIFFERENT model evicts the previous one (one-deep bound)
-    cond2, classes2 = t.nb_train(df.where("doc_id = 1"))
-    t.nb_predict(df, cond2, classes2).collect()
-    assert len(t._NB_COND_CACHE) == 1
-    assert t._NB_COND_CACHE[0] is not cached
+        "doc_id long, text string, lang string").write.parquet(path)
+    cond, classes = t.nb_train(spark.read.parquet(path))
+    for model in (cond, classes):
+        plan = model._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan" not in plan, plan
+    df = spark.createDataFrame([(7, "cat purr purr"), (8, "dog")],
+                               "doc_id long, text string")
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    first = sorted(t.nb_predict(df, cond, classes).collect())
+    second = sorted(t.nb_predict(df, cond, classes).collect())
+    assert first == second
+    assert [r.pred_label for r in first] == ["feline", "canine"]
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) \
+        == before
 
 
 def test_incremental_span_coverage_distinct_precondition(spark):
@@ -2903,23 +2911,19 @@ def test_dsir_logweights_prefer_target_like_docs(spark):
          (3, "the quick brown fox")],
         "doc_id long, text string")
     lw = {r.doc_id: r.logw
-          for r in dsir_logweights(raw, target, n_buckets=256,
-                                   persist=False).collect()}
+          for r in dsir_logweights(raw, target, n_buckets=256).collect()}
     # target-phrased docs must out-score the letter-salad doc
     assert lw[1] > lw[2] and lw[3] > lw[2]
     # resample is deterministic: same inputs -> same selection/scores
-    a = dsir_resample(raw, target, k=2, n_buckets=256,
-                      persist=False).collect()
-    b = dsir_resample(raw, target, k=2, n_buckets=256,
-                      persist=False).collect()
+    a = dsir_resample(raw, target, k=2, n_buckets=256).collect()
+    b = dsir_resample(raw, target, k=2, n_buckets=256).collect()
     assert [(r.doc_id, r.score) for r in a] \
         == [(r.doc_id, r.score) for r in b]
     assert len(a) == 2
     # empty text carries no features and is absent from the weights
     raw2 = spark.createDataFrame([(9, "   ")],
                                  "doc_id long, text string")
-    assert dsir_logweights(raw2, target, n_buckets=256,
-                           persist=False).count() == 0
+    assert dsir_logweights(raw2, target, n_buckets=256).count() == 0
 
 
 def test_dsir_guards_empty_target_and_bad_tau(spark):
@@ -2933,12 +2937,11 @@ def test_dsir_guards_empty_target_and_bad_tau(spark):
     empty_tgt = spark.createDataFrame([(9, "   ")],
                                       "doc_id long, text string")
     with _pytest.raises((Py4JJavaError, PySparkException)):
-        dsir_logweights(raw, empty_tgt, n_buckets=64,
-                        persist=False).collect()
+        dsir_logweights(raw, empty_tgt, n_buckets=64).collect()
     with _pytest.raises(ValueError):
-        dsir_resample(raw, raw, k=1, tau=0.0, persist=False)
+        dsir_resample(raw, raw, k=1, tau=0.0)
     with _pytest.raises(ValueError):
-        dsir_logweights(raw, raw, alpha=0.0, persist=False)
+        dsir_logweights(raw, raw, alpha=0.0)
 
 
 def test_dsir_model_score_matches_one_shot_weights(spark):
@@ -2957,8 +2960,7 @@ def test_dsir_model_score_matches_one_shot_weights(spark):
     scored = {r.doc_id: (r.n_feats, r.logw)
               for r in dsir_score(raw, model).collect()}
     one_shot = {r.doc_id: (r.n_feats, r.logw)
-                for r in dsir_logweights(raw, tgt, n_buckets=256,
-                                         persist=False).collect()}
+                for r in dsir_logweights(raw, tgt, n_buckets=256).collect()}
     # scoring the training corpus against its own frozen model
     # reproduces the one-shot weights (same algebra, same rounding)
     assert scored == one_shot
@@ -3217,7 +3219,7 @@ def test_kn_bigram_logprob(spark):
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {r.doc_id: (r.n_bigrams, r.avg_nll)
-           for r in T.kn_bigram_logprob(df, persist=False).collect()}
+           for r in T.kn_bigram_logprob(df).collect()}
     assert set(got) == {1, 2, 3}
     assert got[1] == got[2]                   # deterministic
     # the repeated-bigram page is far more predictable under the
@@ -3620,30 +3622,28 @@ def test_md5_long_three_way_twins_agree(spark):
     assert got_spark == got_py == got_duck
 
 
-def test_cache_registry_one_deep_and_clear(spark):
-    # the central registry holds every operator family's one-deep
-    # cell; caching a second relation through a cell evicts the
-    # first (unpersisted), and clear_caches releases everything
-    from structa_spark import clear_caches, registered_cells
-    from structa_spark.operators._cache import (
-        evict_then_cache, register_cell)
-
-    clear_caches()
-    for name in ("text.bigram_tf", "text.kn_tf", "text.jsd_gt",
-                 "text.nb_cond", "dedup.scrub_toks"):
-        assert name in registered_cells(), name
-    cell = register_cell("test.scratch")
-    a = spark.range(5)
-    b = spark.range(7)
-    ra = evict_then_cache(cell, a)
-    assert ra.is_cached and cell == [ra]
-    rb = evict_then_cache(cell, b)          # evicts ra first
-    assert rb.is_cached and cell == [rb]
-    assert not ra.is_cached                 # one-deep bound held
-    cleared = clear_caches()
-    assert "test.scratch" in cleared
-    assert not rb.is_cached and cell == []
-    assert registered_cells()["test.scratch"] == 0
+def test_kn_bigram_logprob_interleaved_calls_read_input_once(
+        spark, tmp_path):
+    # a second call builds its own plan and leaves the first one's
+    # alone: the en result, built before the de call and run after it,
+    # reads its input once (every consumer of the shared relations
+    # reuses one exchange)
+    from structa_spark.operators import text as T
+    path = str(tmp_path / "corpus")
+    spark.createDataFrame(
+        [(i, f"the {w} sat on the mat by the {w} door", lang)
+         for i, (w, lang) in enumerate([("cat", "en"), ("dog", "en"),
+                                        ("katze", "de"), ("hund", "de")])],
+        "doc_id long, text string, lang string").write.parquet(path)
+    docs = spark.read.parquet(path)
+    en = T.kn_bigram_logprob(docs.where(F.col("lang") == "en"))
+    de = T.kn_bigram_logprob(docs.where(F.col("lang") == "de"))
+    assert sorted(r.doc_id for r in de.collect()) == [2, 3]
+    assert sorted(r.doc_id for r in en.collect()) == [0, 1]
+    plan = (en._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0])
+    assert plan.count("FileScan") == 1, plan
+    assert "InMemoryTableScan" not in plan
 
 
 # ---------------------------------------------------------------------------
@@ -4948,6 +4948,22 @@ def test_margin_knn_pairs_independent_id_spaces(spark):
         "vec_id long, embedding array<double>")
     got = {r.x_id: r for r in margin_knn_pairs(x, y, k=2).collect()}
     assert got[0].y_id == 0        # the shared-id gold pair wins
+
+
+def test_office_fixture_bytes_ignore_the_clock(monkeypatch):
+    # the same document gives the same archive whatever the time of day
+    import time
+
+    from structa_spark.sources.office import (
+        docx_bytes, epub_bytes, odt_bytes, pptx_bytes, xlsx_bytes)
+    writers = [lambda: docx_bytes("x\ny"), lambda: odt_bytes("x"),
+               lambda: epub_bytes(["<p>x</p>"]),
+               lambda: pptx_bytes("x\ny", lines_per_slide=1),
+               lambda: xlsx_bytes(["x", "y"])]
+    monkeypatch.setattr(time, "time", lambda: 1.0e9)
+    first = [w() for w in writers]
+    monkeypatch.setattr(time, "time", lambda: 1.7e9)
+    assert [w() for w in writers] == first
 
 
 def test_odt_and_office_dispatch(spark):

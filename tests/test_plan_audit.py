@@ -17,6 +17,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from structa_spark.operators import dedup, sampling, text
 from structa_spark.queries import REGISTRY
 from structa_spark.sources.tables import load_table
 
@@ -315,21 +316,66 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
+def _final_scans(df) -> list:
+    """The FileScan lines of the plan AQE settles on once ``df`` has
+    run. A relation that several consumers share through a reused
+    exchange is scanned once; no plan may read a cache."""
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]
+    assert "InMemoryTableScan" not in plan, plan
+    return [ln for ln in plan.split("\n") if "FileScan" in ln]
+
+
 def test_scrub_spans_tokenizes_corpus_once(spark):
-    # scrub_contaminated_spans derives token positions, span grams
-    # AND per-doc counts from ONE persisted (id, __toks) projection —
-    # every consumer must read the cache, not recompile its own
-    # corpus scan + split (three full text scans at 100 TB). The
-    # cached plan's own text (split + parquet scan) reprints under
-    # each InMemoryTableScan, so the assertion is on cache READS:
-    # all three-plus consumer branches hit InMemoryTableScan.
+    # scrub_contaminated_spans derives token positions, span grams AND
+    # per-doc counts from ONE (id, __toks) projection — every consumer
+    # must reuse its exchange, not recompile its own corpus scan +
+    # split (three full text scans at 100 TB). The corpus side is the
+    # scan with the doc_id >= 20 filter.
     fn, _ = REGISTRY["scrub_eval_spans"]
-    plan = _plan(fn(spark, SF))
-    n_cache_reads = plan.count("InMemoryTableScan")
-    assert n_cache_reads >= 3, (
-        f"corpus token projection not cached ({n_cache_reads} cache "
-        f"reads) — each branch re-scans and re-tokenizes the text "
-        f"column:\n{plan[:2000]}")
+    scans = _final_scans(fn(spark, SF))
+    assert len([ln for ln in scans if ">= 20)" in ln]) == 1, scans
+
+
+_CORPUS = f"{SF}/documents.parquet"
+
+# (operator over (corpus, other input), expected scans of each)
+_READS = {
+    "kn_bigram_logprob": (
+        lambda c, o: text.kn_bigram_logprob(c), 1, 0),
+    # self mode: the bigrams, plus the vocabulary count V
+    "bigram_logprob_self": (
+        lambda c, o: text.bigram_logprob(c), 2, 0),
+    # cross mode: the model's bigrams and V each read train_df
+    "bigram_logprob_cross": (
+        lambda c, o: text.bigram_logprob(c, train_df=o), 1, 2),
+    "token_js_divergence": (
+        lambda c, o: text.token_js_divergence(c, group_col="source"),
+        1, 0),
+    "dsir_logweights": (
+        lambda c, o: sampling.dsir_logweights(c, o), 1, 1),
+    "scrub_contaminated_spans": (
+        lambda c, o: dedup.scrub_contaminated_spans(c, o), 1, 1),
+    # its three consumers read different columns of the projection
+    "bm25_topk": (
+        lambda c, o: text.bm25_topk(c, [("q", ["the", "data"])]), 3, 0),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_READS))
+def test_operator_reads_each_input_once_per_relation(spark, tmp_path,
+                                                     name):
+    # each operator shares its intermediate relations through Spark's
+    # exchange reuse: the corpus is read once per relation the
+    # operator really needs, never once per consumer
+    build, n_corpus, n_other = _READS[name]
+    other = str(tmp_path / "other")
+    spark.read.parquet(_CORPUS).where(F.col("doc_id") < 50) \
+        .write.parquet(other)
+    scans = _final_scans(
+        build(spark.read.parquet(_CORPUS), spark.read.parquet(other)))
+    assert sum(_CORPUS in ln for ln in scans) == n_corpus, scans
+    assert sum(other in ln for ln in scans) == n_other, scans
 
 
 def test_decontamination_broadcasts_eval_side(spark):
