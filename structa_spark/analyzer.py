@@ -18,7 +18,7 @@ instead:
    count)`` relation — structa's native column multiset,
    ``groupBy(leaf, value).count()`` — over the leaves whose phase-A
    HLL estimate says their values repeat (in exact mode also every
-   string leaf). It is persisted once, and its consumers read each
+   string leaf). It is persisted, and its consumers read each
    DISTINCT value once instead of once per occurrence:
 
    * phase B: the failure count of every candidate string conversion
@@ -28,11 +28,14 @@ instead:
      CharClass induction in :mod:`structa_spark.chars`;
    * exact-mode lexicographic string quartiles.
 
-   Near-unique leaves stream phase B and the char-set job over the
-   input instead. So does every leaf of a context whose relation
-   holds fewer than ``_SHARED_RELATION_MIN`` values: on a small input
-   a job wave of its own costs more than it saves, so the relation is
-   not persisted and only top-k and the quartiles read it.
+   The relation runs no job of its own: the consumers are submitted
+   as soon as phase A lands, and their concurrent jobs build the
+   cached relation once. Near-unique leaves stream phase B and the
+   char-set job over the input instead. So does every leaf of a
+   context whose relation holds fewer than ``_SHARED_RELATION_MIN``
+   values: on a small input the cache costs more than it saves, so
+   the relation is not persisted and only top-k and the quartiles
+   read it.
 4. Classifies each leaf **driver-side from the aggregates** (KB-sized)
    using the reference's threshold semantics: ``bad_threshold`` over
    occurrences, ``empty_threshold`` for blank strings,
@@ -40,28 +43,39 @@ instead:
    the numeric-timestamp heuristic over min/max, and the
    record-vs-table ``field_threshold`` duality.
 
-Per context that is at most three waves of Spark jobs — phase A, the
-relation, its consumers — all submitted to one worker pool, so the
-contexts overlap. None of this materializes data on the driver: every
-job reduces to per-leaf scalars. The relation is persisted on the
-executors with one row per distinct value of its leaves; the HLL gate
-admits a leaf with under 90% distinct values, so a leaf just under the
-gate puts nearly all of its occurrences into the relation's shuffle.
+A small file input is first repartitioned and copied to the executors
+as a lazy local checkpoint (:func:`_prepare_input`): the repartition
+runs as one job, and the first phase-A jobs fill the copy while they
+aggregate, so no job only builds a cache. Per context that is then two
+waves of Spark jobs — phase A, and the relation's consumers with the
+streaming phase B — all submitted to one worker pool, so the contexts
+overlap; char patterns of streaming leaves and tuple induction follow
+on the calling thread. Every query is sent as SQL text (``selectExpr``,
+``where``, ``F.expr``), not as a Column tree that costs a py4j round
+trip per function call, and every job is described as ``analyze:
+<phase>``.
+None of this materializes data on the driver: every job reduces to
+per-leaf scalars. The relation is persisted on the executors with one
+row per distinct value of its leaves; the HLL gate admits a leaf with
+under 90% distinct values, so a leaf just under the gate puts nearly
+all of its occurrences into the relation's shuffle.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+from contextlib import contextmanager
 from dataclasses import dataclass, field as dc_field, fields as dc_fields, replace
 from typing import Dict, List, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from . import conversions
 from .chars import induce_pattern
+from .conversions import sql_str
 from .model import (
     BoolT, DateTimeT, Empty, FieldT, FloatT, IntT, ListT, Node, RecordT,
     StrReprT, StrT, TableT, TupleT, URLT, ValueAny, merge, record_similarity,
@@ -277,49 +291,45 @@ _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
             T.FloatType, T.DoubleType, T.DecimalType)
 
 
-def _agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
+def _agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[str]:
     """Hash-aggregable phase-A aggregates (count/sum + min/max over
     MUTABLE buffer types). A min/max over a STRING column carries a
     UTF8String aggregation buffer, which HashAggregate cannot hold —
     one such expression demotes the WHOLE agg to an un-codegen'd
-    SortAggregate — so string min/max live in their own job
+    SortAggregate — so string min/max ride the sketch job
     (:func:`_string_minmax_exprs`) and everything here stays inside
     WholeStageCodegen."""
-    c = F.expr(leaf.expr)
-    k = leaf.key
-    exprs = [
-        F.count(c).alias(f"{k}__card"),
-        F.sum(F.when(c.isNull(), 1).otherwise(0)).alias(f"{k}__nulls"),
-    ]
+    c, k = leaf.expr, leaf.key
+    exprs = [f"count({c}) AS `{k}__card`",
+             f"sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS `{k}__nulls`"]
 
     dt = leaf.dtype
     if isinstance(dt, (T.BooleanType, *_NUMERIC, T.TimestampType,
                        T.TimestampNTZType, T.DateType)):
-        exprs += [F.min(c).alias(f"{k}__min"), F.max(c).alias(f"{k}__max")]
+        exprs += [f"min({c}) AS `{k}__min`", f"max({c}) AS `{k}__max`"]
     elif isinstance(dt, T.StringType):
-        ln = F.length(c)
+        url = sql_str(conversions.URL_REGEX)
         exprs += [
-            F.sum(F.when(c == "", 1).otherwise(0)).alias(f"{k}__empty"),
-            F.min(ln).alias(f"{k}__lmin"), F.max(ln).alias(f"{k}__lmax"),
-            F.sum(F.when(c.rlike(conversions.URL_REGEX), 0).otherwise(1))
-             .alias(f"{k}__url_fail"),
+            f"sum(CASE WHEN {c} = '' THEN 1 ELSE 0 END) AS `{k}__empty`",
+            f"min(length({c})) AS `{k}__lmin`",
+            f"max(length({c})) AS `{k}__lmax`",
+            f"sum(CASE WHEN {c} RLIKE {url} THEN 0 ELSE 1 END)"
+            f" AS `{k}__url_fail`",
         ]
     elif isinstance(dt, T.BinaryType):
-        ln = F.length(c)
-        exprs += [F.min(ln).alias(f"{k}__lmin"),
-                  F.max(ln).alias(f"{k}__lmax")]
+        exprs += [f"min(length({c})) AS `{k}__lmin`",
+                  f"max(length({c})) AS `{k}__lmax`"]
     return exprs
 
 
-def _string_minmax_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
-    """String (and binary-free) min/max — immutable aggregation
-    buffers, executed as a keyless SortAggregate in a separate job so
-    they never demote the hash-aggregable job out of codegen."""
+def _string_minmax_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[str]:
+    """String min/max — immutable aggregation buffers, so they ride the
+    imperative sketch job and never demote the hash-aggregable job
+    out of codegen."""
     if not isinstance(leaf.dtype, T.StringType):
         return []
-    c = F.expr(leaf.expr)
-    k = leaf.key
-    return [F.min(c).alias(f"{k}__min"), F.max(c).alias(f"{k}__max")]
+    c, k = leaf.expr, leaf.key
+    return [f"min({c}) AS `{k}__min`", f"max({c}) AS `{k}__max`"]
 
 
 _HLL_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -333,7 +343,10 @@ def _hll_lg_k(rsd: float) -> int:
     return min(21, max(8, math.ceil(2 * math.log2(1.04 / rsd))))
 
 
-def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
+_QUARTILES = "array(0.25D, 0.5D, 0.75D)"
+
+
+def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[str]:
     """Imperative (ObjectHashAggregate) phase-A aggregates: distinct
     sketches and quartiles. Kept in their own job so the codegen-able
     aggregates above stay inside whole-stage codegen — one
@@ -349,10 +362,9 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
     hll_sketch_agg is a TypedImperativeAggregate with ONE binary
     buffer per leaf; its generated code is O(leaves), not
     O(leaves x registers)."""
-    c = F.expr(leaf.expr)
-    k = leaf.key
+    c, k = leaf.expr, leaf.key
     if cfg.exact:
-        exprs = [F.count_distinct(c).alias(f"{k}__distinct")]
+        exprs = [f"count(DISTINCT {c}) AS `{k}__distinct`"]
     else:
         hc = c
         if not isinstance(leaf.dtype, _HLL_TYPES):
@@ -364,21 +376,19 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
             # is far cheaper than rendering doubles/timestamps to
             # strings. Guard nulls: xxhash64(NULL) is the seed, not
             # NULL, and distinct counts must ignore nulls.
-            hc = F.when(c.isNotNull(), F.xxhash64(c))
-        exprs = [F.hll_sketch_estimate(
-            F.hll_sketch_agg(hc, F.lit(_hll_lg_k(_DISTINCT_RSD))))
-            .alias(f"{k}__distinct")]
+            hc = f"CASE WHEN {c} IS NOT NULL THEN xxhash64({c}) END"
+        exprs = [f"hll_sketch_estimate(hll_sketch_agg("
+                 f"{hc}, {_hll_lg_k(_DISTINCT_RSD)})) AS `{k}__distinct`"]
 
     dt = leaf.dtype
     qc = None
     if isinstance(dt, _NUMERIC):
         qc = c
     elif isinstance(dt, (T.TimestampType, T.TimestampNTZType, T.DateType)):
-        qc = c.cast("timestamp").cast("double")
+        qc = f"CAST(CAST({c} AS TIMESTAMP) AS DOUBLE)"
     if qc is not None:
         if cfg.exact:
-            exprs.append(F.percentile(qc, F.lit([0.25, 0.5, 0.75]))
-                         .alias(f"{k}__q"))
+            exprs.append(f"percentile({qc}, {_QUARTILES}) AS `{k}__q`")
         else:
             # ONE quantile aggregate per leaf: the displayed quartiles
             # read from the same mergeable KLL sketch that
@@ -388,58 +398,53 @@ def _sketch_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
             # same imperative work twice. KLL k=200 carries ~1.65%
             # rank error, the sketch's documented accuracy for both
             # the single-shard and the shard-fold path.
-            sk = F.kll_sketch_agg_double(qc.cast("double"), F.lit(_KLL_K))
+            sk = f"kll_sketch_agg_double(CAST({qc} AS DOUBLE), {_KLL_K})"
             # the count() gate keeps an all-null column from calling
             # get_quantile on an empty sketch (which raises); the
             # CaseWhen branch is lazy, so the result stays NULL like
             # percentile_approx's
-            exprs.append(F.when(
-                F.count(qc) > 0,
-                F.kll_sketch_get_quantile_double(
-                    sk, F.lit([0.25, 0.5, 0.75]))).alias(f"{k}__q"))
-            exprs.append(sk.alias(f"{k}__qsk"))
+            exprs.append(f"CASE WHEN count({qc}) > 0 THEN "
+                         f"kll_sketch_get_quantile_double({sk}, {_QUARTILES})"
+                         f" END AS `{k}__q`")
+            exprs.append(f"{sk} AS `{k}__qsk`")
     return exprs
 
 
-def _candidate_agg_exprs(key: str, c: Column, weight: Column, row: Dict,
-                         cfg: AnalyzerConfig) -> List[Column]:
+def _candidate_agg_exprs(key: str, c: str, weight: str, row: Dict,
+                         cfg: AnalyzerConfig) -> List[str]:
     """Phase-B aggregation: conversion-candidate failure counts for one
-    length-eligible string leaf ``key`` whose values are ``c``, each
-    value weighing ``weight`` occurrences (reference only attempts
-    conversions when max length <= 30, structa/analyzer.py:642-669).
-    Candidates whose length range cannot overlap the column's phase-A
-    ``lmin``/``lmax`` are skipped entirely — a long-text column costs
-    zero regex evaluations, and e.g. a 1-char flag column never
-    attempts any datetime parse."""
+    length-eligible string leaf ``key`` whose values are the SQL
+    expression ``c``, each value weighing ``weight`` occurrences
+    (reference only attempts conversions when max length <= 30,
+    structa/analyzer.py:642-669). Candidates whose length range cannot
+    overlap the column's phase-A ``lmin``/``lmax`` are skipped
+    entirely — a long-text column costs zero regex evaluations, and
+    e.g. a 1-char flag column never attempts any datetime parse."""
     lmin = row.get(f"{key}__lmin") or 0
     lmax = row.get(f"{key}__lmax")
-    nonblank = c.isNotNull() & (c != "")
-    exprs: List[Column] = []
+    nonblank = f"{c} IS NOT NULL AND {c} != ''"
+    exprs: List[str] = []
     numeric_alive = False
     for cand in conversions.candidates():
         if not cand.possible(lmin, lmax):
             continue
         exprs.append(
-            F.sum(F.when(nonblank & ~cand.ok(c), weight).otherwise(0))
-            .alias(f"{key}__fail__{cand.name}"))
+            f"sum(CASE WHEN {nonblank} AND NOT ({cand.test(c)}) "
+            f"THEN {weight} ELSE 0 END) AS `{key}__fail__{cand.name}`")
         if cand.kind in ("int", "float"):
             numeric_alive = True
     if numeric_alive:
         # numeric min/max for str-of-number stats + timestamp heuristic
-        dnum = F.when(nonblank, c.try_cast("double"))
-        exprs += [F.min(dnum).alias(f"{key}__nmin"),
-                  F.max(dnum).alias(f"{key}__nmax")]
+        dnum = f"CASE WHEN {nonblank} THEN try_cast({c} AS DOUBLE) END"
+        exprs += [f"min({dnum}) AS `{key}__nmin`",
+                  f"max({dnum}) AS `{key}__nmax`"]
     return exprs
 
 
-def _length_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[Column]:
-    c = F.expr(leaf.expr)
-    k = leaf.key
-    return [
-        F.count(c).alias(f"{k}__card"),
-        F.min(c).alias(f"{k}__min"),
-        F.max(c).alias(f"{k}__max"),
-    ]
+def _length_agg_exprs(leaf: _Leaf, cfg: AnalyzerConfig) -> List[str]:
+    c, k = leaf.expr, leaf.key
+    return [f"count({c}) AS `{k}__card`", f"min({c}) AS `{k}__min`",
+            f"max({c}) AS `{k}__max`"]
 
 
 # ---------------------------------------------------------------------------
@@ -621,16 +626,18 @@ def _maybe_numeric_timestamp(node: Node, cfg: AnalyzerConfig) -> Node:
 # auxiliary jobs: top-k samples and pattern induction
 # ---------------------------------------------------------------------------
 
+def _key_in(keys) -> str:
+    """SQL filter: the leaf key ``k`` is one of ``keys``."""
+    return "k IN ({})".format(", ".join(map(sql_str, keys)))
+
+
 def _unpivot(df: DataFrame, keys: Dict[str, _Leaf]) -> DataFrame:
     """``(k, v)`` rows: one per non-null occurrence of each given leaf,
     the value rendered as a string."""
-    pairs = [
-        F.struct(F.lit(key).alias("k"),
-                 F.expr(leaf.expr).cast("string").alias("v"))
-        for key, leaf in keys.items()
-    ]
-    return (df.select(F.explode(F.array(*pairs)).alias("p"))
-            .select("p.k", "p.v").where(F.col("v").isNotNull()))
+    pairs = ", ".join(
+        f"named_struct('k', {sql_str(key)}, 'v', CAST({leaf.expr} AS STRING))"
+        for key, leaf in keys.items())
+    return df.selectExpr(f"inline(array({pairs}))").where("v IS NOT NULL")
 
 
 def _counted_values(ctx: _Context, keys: Dict[str, _Leaf]) -> DataFrame:
@@ -639,7 +646,7 @@ def _counted_values(ctx: _Context, keys: Dict[str, _Leaf]) -> DataFrame:
     (structa's frequency-compressed column, PAPER.md §1.1). Every
     consumer below reads a projection of it."""
     return _unpivot(ctx.df, keys).groupBy("k", "v").agg(
-        F.count("*").alias("n"))
+        F.expr("count(1) AS n"))
 
 
 def _topk_query(counted: DataFrame, keys: Dict[str, _Leaf]) -> DataFrame:
@@ -651,17 +658,15 @@ def _topk_query(counted: DataFrame, keys: Dict[str, _Leaf]) -> DataFrame:
     WindowGroupLimit below the exchange, so each map task ships at
     most ``_TOP_K`` rows per leaf and side. One filter over two windows
     (``rt <= k OR rb <= k``) cannot be limited that way."""
-    from pyspark.sql.window import Window
-
-    counted = counted.where(F.col("k").isin(list(keys)))
-    sides = []
-    for side, order in (("top", (F.desc("n"), F.asc("v"))),
-                        ("bottom", (F.asc("n"), F.desc("v")))):
-        w = Window.partitionBy("k").orderBy(*order)
-        sides.append(counted
-                     .withColumn("r", F.row_number().over(w))
-                     .where(F.col("r") <= _TOP_K)
-                     .select(F.lit(side).alias("side"), "k", "v", "n"))
+    counted = counted.where(_key_in(keys))
+    sides = [
+        counted.selectExpr(
+            "k", "v", "n",
+            f"row_number() OVER (PARTITION BY k ORDER BY {order}) AS r")
+        .where(f"r <= {_TOP_K}")
+        .selectExpr(f"'{side}' AS side", "k", "v", "n")
+        for side, order in (("top", "n DESC, v ASC"),
+                            ("bottom", "n ASC, v DESC"))]
     return sides[0].unionByName(sides[1])
 
 
@@ -697,25 +702,17 @@ def _collect_string_quartiles(
     cardinality column serializes into one task; exact mode is the
     oracle path — sketch mode skips string quartiles (numeric ones
     use the mergeable KLL sketch instead)."""
-    from pyspark.sql.window import Window
-
-    counted = counted.where(F.col("k").isin(list(string_keys)))
-    w_ord = (Window.partitionBy("k").orderBy("v")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    w_all = Window.partitionBy("k")
-    cum = counted.select(
+    cum = counted.where(_key_in(string_keys)).selectExpr(
         "k", "v",
-        F.coalesce(F.sum("n").over(w_ord), F.lit(0)).alias("before"),
-        F.sum("n").over(w_all).alias("total"))
+        "coalesce(sum(n) OVER (PARTITION BY k ORDER BY v ROWS BETWEEN "
+        "UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS `before`",
+        "sum(n) OVER (PARTITION BY k) AS total")
     # reference index rule: idx_k = (k*card)//4; quartile = first
     # value with before >= idx_k, else max
     agg = cum.groupBy("k").agg(*[
-        F.coalesce(
-            F.min(F.when(F.col("before")
-                         >= F.floor(F.col("total") * i / 4), F.col("v"))),
-            F.max("v")).alias(f"q{i}")
-        for i in (1, 2, 3)
-    ])
+        F.expr(f"coalesce(min(CASE WHEN `before` >= floor(total * {i} / 4)"
+               f" THEN v END), max(v)) AS q{i}")
+        for i in (1, 2, 3)])
     return {r["k"]: (r["q1"], r["q2"], r["q3"]) for r in agg.collect()}
 
 
@@ -725,10 +722,9 @@ def _collect_patterns(values: DataFrame) -> Dict[str, list]:
     analyzer.py:685-719). The sets are the same whether ``values``
     holds every occurrence or each distinct value once."""
     chars = (values
-             .select("k", F.posexplode(F.split(F.col("v"), "")).alias(
-                 "pos", "ch"))
-             .where(F.col("ch") != "")
-             .groupBy("k", "pos").agg(F.collect_set("ch").alias("chars")))
+             .selectExpr("k", "posexplode(split(v, '')) AS (pos, ch)")
+             .where("ch != ''")
+             .groupBy("k", "pos").agg(F.expr("collect_set(ch) AS chars")))
     out: Dict[str, list] = {}
     for r in chars.collect():
         out.setdefault(r["k"], []).append((r["pos"], set(r["chars"])))
@@ -872,11 +868,10 @@ def _chunked(seq: List, n: int):
         yield seq[i:i + n]
 
 
-def _phase_a_job_builders(leaves: List[_Leaf],
-                          length_leaves: List[_Leaf],
-                          cfg: AnalyzerConfig):
-    """Phase A as a list of DEFERRED agg-job builders, TWO job
-    families (round 12 halved the old four):
+def _phase_a_jobs(leaves: List[_Leaf], length_leaves: List[_Leaf],
+                  cfg: AnalyzerConfig) -> List[List[str]]:
+    """Phase A as the SQL aggregate expressions of each job, in TWO job
+    families:
 
     * one whole-stage-codegen family — the scalar aggregates
       (counts/min/max) AND the container-length aggregates chunk
@@ -885,70 +880,27 @@ def _phase_a_job_builders(leaves: List[_Leaf],
       string min/max aggregates. A UTF8String min/max buffer would
       demote the CODEGEN job to SortAggregate, which is why it never
       rides there; the sketch job is already imperative
-      (ObjectHashAggregate), so the string min/max rides it for free
-      and the old separate SortAggregate job family is gone.
+      (ObjectHashAggregate), so the string min/max rides it for free.
 
     Each job covers <= _CHUNK_LEAVES leaves so no generated class is
-    ever huge. Each entry is a zero-arg callable returning the job's
-    Column list. Building a Column tree is driver-side py4j chatter
-    (one JVM round trip per functions call — ~0.6 s serialized for a
-    16-column profile, measured in round 11), so the EXPENSIVE part
-    is deferred: the concurrent caller runs each builder inside its
-    pool task, overlapping expression construction across workers
-    and with already-running jobs instead of paying it up front on
-    the submitting thread (guide §7.3: driver planning time is real
-    time). The chunk layout itself is pure Python and stays eager so
-    callers know the job count without building anything.
-
-    The per-leaf expr strings are SNAPSHOT here (leaf copies): the
-    builders run later on worker threads, so a mutation of the
-    planner's _Leaf objects between layout and build (today only
-    strip_whitespace, which runs before this) can never silently
-    change the constructed aggregates."""
-    leaves = [replace(lf) for lf in leaves]
-    length_leaves = [replace(lf) for lf in length_leaves]
-    specs: List[List] = []
-    codegen_items = ([(_agg_exprs, lf) for lf in leaves]
-                     + [(_length_agg_exprs, lf)
-                        for lf in length_leaves])
-    for chunk in _chunked(codegen_items, _CHUNK_LEAVES):
-        specs.append(chunk)
-    for chunk in _chunked(leaves, _CHUNK_LEAVES):
-        items = []
-        for lf in chunk:
-            items.append((_sketch_agg_exprs, lf))
-            if isinstance(lf.dtype, T.StringType):
-                items.append((_string_minmax_exprs, lf))
-        specs.append(items)
-
-    def _make(items, with_rows):
-        def build() -> List[Column]:
-            exprs: List[Column] = (
-                [F.count(F.lit(1)).alias("__rows__")]
-                if with_rows else [])
-            for fn, leaf in items:
-                exprs.extend(fn(leaf, cfg))
-            # d.agg() with zero expressions raises inside a pool
-            # worker with a useless stack; fail at build time with a
-            # clear message instead if a future cfg/expr change ever
-            # yields an empty job
-            assert exprs, (
-                "phase-A builder produced an empty agg job "
-                f"({[lf.key for _, lf in items]})")
-            return exprs
-        return build
-
-    if not specs:
-        return [_make([], True)]
-    return [_make(items, i == 0) for i, items in enumerate(specs)]
+    ever huge; the first job also counts the rows. A job is one
+    ``selectExpr`` call: the driver sends its expressions as text, one
+    py4j round trip each, where a Column tree costs one per function
+    call."""
+    codegen = ([_agg_exprs(lf, cfg) for lf in leaves]
+               + [_length_agg_exprs(lf, cfg) for lf in length_leaves])
+    sketch = [_sketch_agg_exprs(lf, cfg) + _string_minmax_exprs(lf, cfg)
+              for lf in leaves]
+    jobs = [[e for exprs in chunk for e in exprs]
+            for family in (codegen, sketch)
+            for chunk in _chunked(family, _CHUNK_LEAVES)] or [[]]
+    jobs[0].insert(0, "count(1) AS `__rows__`")
+    return jobs
 
 
-def _phase_a_jobs(leaves: List[_Leaf], length_leaves: List[_Leaf],
-                  cfg: AnalyzerConfig) -> List[List[Column]]:
-    """Eager form of :func:`_phase_a_job_builders` for the
-    sequential single-context paths."""
-    return [build() for build in
-            _phase_a_job_builders(leaves, length_leaves, cfg)]
+def _agg_row(df: DataFrame, exprs: List[str]) -> Dict:
+    """Run one global aggregation given as SQL text; its one row."""
+    return df.selectExpr(*exprs).collect()[0].asDict()
 
 
 def _phase_a_row(df: DataFrame, leaves: List[_Leaf],
@@ -956,9 +908,9 @@ def _phase_a_row(df: DataFrame, leaves: List[_Leaf],
                  cfg: AnalyzerConfig) -> Dict:
     """Phase A over one DataFrame, run sequentially (used by the
     auxiliary single-context paths, e.g. tuple induction)."""
-    row: Dict = {"__rows__": None}
+    row: Dict = {}
     for exprs in _phase_a_jobs(leaves, length_leaves, cfg):
-        row.update(df.agg(*exprs).collect()[0].asDict())
+        row.update(_agg_row(df, exprs))
     return row
 
 
@@ -986,9 +938,9 @@ def _phase_b_row(df: DataFrame, leaves: List[_Leaf], row: Dict,
     out: Dict = {}
     for chunk in _phase_b_chunks(leaves, row, cfg):
         exprs = [e for leaf in chunk for e in _candidate_agg_exprs(
-            leaf.key, F.expr(leaf.expr), F.lit(1), row, cfg)]
+            leaf.key, leaf.expr, "1", row, cfg)]
         if exprs:
-            out.update(df.agg(*exprs).collect()[0].asDict())
+            out.update(_agg_row(df, exprs))
     return out
 
 
@@ -1000,11 +952,11 @@ def _phase_b_counted(counted: DataFrame, leaves: List[_Leaf], row: Dict,
     out: Dict = {}
     for chunk in _phase_b_chunks(leaves, row, cfg):
         exprs = [e for leaf in chunk for e in _candidate_agg_exprs(
-            leaf.key, F.when(F.col("k") == leaf.key, F.col("v")),
-            F.col("n"), row, cfg)]
+            leaf.key, f"CASE WHEN k = {sql_str(leaf.key)} THEN v END",
+            "n", row, cfg)]
         if exprs:
-            mine = counted.where(F.col("k").isin([lf.key for lf in chunk]))
-            out.update(mine.agg(*exprs).collect()[0].asDict())
+            mine = counted.where(_key_in(lf.key for lf in chunk))
+            out.update(_agg_row(mine, exprs))
     return out
 
 
@@ -1080,42 +1032,81 @@ def _input_bytes(df: DataFrame) -> Optional[int]:
     return total
 
 
-# Inputs up to this many bytes of local files are cached before
-# analysis (see _prepare_input); the gate makes caching self-disabling
+# Inputs up to this many bytes of local files are copied before
+# analysis (see _prepare_input); the gate makes the copy self-disabling
 # at scale: a 100 TB table streams, a 10 MB file decodes once instead
 # of once per job.
 _CACHE_INPUT_MAX_BYTES = 1 << 30
 
 
+def _hashable(dt: T.DataType) -> bool:
+    """Can ``xxhash64`` take a value of this type? Spark refuses a map
+    or a variant anywhere inside it (DATATYPE_MISMATCH.HASH_MAP_TYPE,
+    HASH_VARIANT_TYPE)."""
+    if isinstance(dt, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _hashable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_hashable(f.dataType) for f in dt.fields)
+    return True
+
+
+@contextmanager
+def _job_phase(spark, phase: str):
+    """Describe the Spark jobs this thread submits as ``analyze:
+    <phase>`` (their description in the UI and the status store); the
+    caller's description comes back after, its job group is kept."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"analyze: {phase}")
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
+
+
 def _prepare_input(df: DataFrame):
-    """Size-gated cache of the analyzer's input: the profile makes
+    """Size-gated copy of the analyzer's input: the profile makes
     several passes, so a small file set is repartitioned to the
     session's parallelism (single-row-group parquet otherwise pins
-    every pass to one scan task) and persisted; anything big, remote
-    or non-file streams unchanged. Returns (df, cached?)."""
+    every pass to one scan task) and checkpointed on the executors;
+    anything big, remote or non-file streams unchanged. Returns
+    ``(df, rdd)``, ``rdd`` the checkpointed JVM RDD to release, or None.
+
+    The copy is a lazy ``localCheckpoint``: no job of its own fills
+    it. The first phase-A jobs write its row blocks while they
+    aggregate, and every later job reads them. Like any local
+    checkpoint (see ``operators.graph.connected_components``), the
+    copy has no lineage to recompute a block from, so a lost executor
+    fails the jobs that read it."""
     nbytes = _input_bytes(df)
     if nbytes is None or nbytes > _CACHE_INPUT_MAX_BYTES:
-        return df, False
+        return df, None
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        # hash-repartition on a deterministic all-column key instead
-        # of round-robin: a keyless repartition(n) first LOCALLY
-        # SORTS its input so retried tasks reproduce the same row
-        # placement (spark.sql.execution.sortBeforeRepartition,
-        # optimization guide §2.5) — on the one scan task holding a
-        # single-row-group file that is a full sort of every row
-        # before the exchange (~1s of the profile at sf0.1). Hash
-        # placement is deterministic per ROW VALUE, so it needs no
-        # such sort, and the rendered profile is partition-order
-        # independent (verified identical at sf0.01/0.1 over
-        # lineitem/documents/events).
-        try:
-            df = df.repartition(
-                par, F.xxhash64(*[F.col(c) for c in df.columns]))
-        except Exception:  # un-hashable column type: keep round-robin
-            df = df.repartition(par)
-    return df.persist(), True
+    with _job_phase(spark, "input"):
+        if df.rdd.getNumPartitions() < par:
+            # hash-repartition on a deterministic key of every column
+            # that can be hashed instead of round-robin: a keyless
+            # repartition(n) first LOCALLY SORTS its input so retried
+            # tasks reproduce the same row placement
+            # (spark.sql.execution.sortBeforeRepartition, optimization
+            # guide §2.5) — on the one scan task holding a
+            # single-row-group file that is a full sort of every row
+            # before the exchange (~1s of the profile at sf0.1). Hash
+            # placement is deterministic per ROW VALUE, so it needs no
+            # such sort, and the rendered profile is partition-order
+            # independent (verified identical at sf0.01/0.1 over
+            # lineitem/documents/events).
+            keys = [f"`{f.name.replace('`', '``')}`"
+                    for f in df.schema.fields if _hashable(f.dataType)]
+            df = (df.repartition(
+                par, F.expr(f"xxhash64({', '.join(keys)})"))
+                if keys else df.repartition(par))
+        # the exchange above runs here, as its own job
+        copy = df.localCheckpoint(eager=False)
+    return copy, copy._jdf.logicalPlan().rdd()
 
 
 def analyze(df: DataFrame, config: Optional[AnalyzerConfig] = None,
@@ -1126,15 +1117,16 @@ def analyze(df: DataFrame, config: Optional[AnalyzerConfig] = None,
     value-count relation and its consumer jobs (top-k samples, phase
     B, char patterns, exact string quartiles); leaves outside the
     relation, and every leaf of a small context, stream phase B and
-    char patterns over the input.
+    char patterns over the input. Every job is described as
+    ``analyze: <phase>``.
     """
     cfg = config or AnalyzerConfig(**kwargs)
-    prep, cached = _prepare_input(df)
+    prep, copy = _prepare_input(df)
     try:
         return _analyze(prep, cfg)
     finally:
-        if cached:
-            prep.unpersist()
+        if copy is not None:
+            copy.unpersist(False)
 
 
 def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
@@ -1155,8 +1147,8 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
     str_q: Dict[str, Tuple[str, str, str]] = {}
     patterns: Dict[str, list] = {}
     in_relation: set = set()
-    # every value-count relation persisted by a pool task; unpersisted
-    # once the pool has drained, also when a job failed
+    # every value-count relation persisted for its consumers;
+    # unpersisted once the pool has drained, also when a job failed
     relations: List[DataFrame] = []
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor
     from concurrent.futures import wait as _fwait
@@ -1175,23 +1167,10 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
     n_workers = 2 if (widest > 128 or len(contexts) > 64) else 4
     spark = df.sparkSession
 
-    def _agg_job(d: DataFrame, build) -> Dict:
-        # the builder runs HERE, inside the pool task: Column
-        # construction is py4j round trips, so deferring it off the
-        # submitting thread overlaps it across workers and with jobs
-        # already executing
-        return d.agg(*build()).collect()[0].asDict()
-
-    def _materialize(ctx: _Context, keys: Dict[str, _Leaf]) -> DataFrame:
-        rel = _counted_values(ctx, keys).persist()
-        relations.append(rel)
-        rel.count()
-        return rel
-
     # Every job runs as a task of ONE pool, fanned out by this thread
     # as the results it depends on land — no task waits on another, so
     # a context's wall-clock is its own critical path (phase A ->
-    # relation -> consumers) and the contexts overlap. `landed` maps a
+    # relation consumers) and the contexts overlap. `landed` maps a
     # pending future to the callback that folds its result in; the
     # callbacks all run on this thread.
     landed = {}
@@ -1199,7 +1178,10 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
     try:
         with ThreadPoolExecutor(max_workers=n_workers) as pool:
 
-            def submit(then, fn, *args):
+            def submit(then, phase, fn, *args):
+                def task():
+                    with _job_phase(spark, phase):
+                        return fn(*args)
                 # pool threads run with the caller's Spark local
                 # properties (job group, description, scheduler
                 # pool). A fresh capture per task: the wrapper
@@ -1209,30 +1191,12 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
                 # other.
                 inherit = inheritable_thread_target(spark)
                 if inherit is not spark:    # pinned-thread mode is on
-                    fn = inherit(fn)
-                landed[pool.submit(fn, *args)] = then
+                    task = inherit(task)
+                landed[pool.submit(task)] = then
 
             def topk_landed(top_bottom):
                 topk.update(top_bottom[0])
                 botk.update(top_bottom[1])
-
-            def relation_landed(ctx, sampled, keys, row, shared, rel):
-                strings = {k: lf for k, lf in keys.items()
-                           if isinstance(lf.dtype, T.StringType)}
-                if sampled:
-                    submit(topk_landed, _collect_topk, rel, sampled)
-                if strings and cfg.exact:
-                    submit(str_q.update, _collect_string_quartiles,
-                           rel, strings)
-                if not shared:
-                    return
-                if strings:
-                    submit(rows[ctx.id].update, _phase_b_counted,
-                           rel, list(strings.values()), row, cfg)
-                fixed = _fixed_width(strings, row)
-                if fixed:
-                    submit(patterns.update, _collect_patterns,
-                           rel.where(F.col("k").isin(list(fixed))))
 
             def phase_a_landed(ctx, part):
                 rows[ctx.id].update(part)
@@ -1249,27 +1213,43 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
                     in_relation.update(keys)
                 streaming = [lf for lf in ctx.leaves
                              if lf.key not in in_relation]
-                submit(rows[ctx.id].update, _phase_b_row,
+                submit(rows[ctx.id].update, "phase B", _phase_b_row,
                        ctx.df, streaming, row, cfg)
+                if not keys:
+                    return
+                rel = _counted_values(ctx, keys)
                 if shared:
-                    submit(lambda rel: relation_landed(
-                        ctx, sampled, keys, row, True, rel),
-                        _materialize, ctx, keys)
-                elif keys:
-                    relation_landed(ctx, sampled, keys, row, False,
-                                    _counted_values(ctx, keys))
+                    # no job of its own: the consumers' concurrent
+                    # jobs build the cached relation once
+                    rel = rel.persist()
+                    relations.append(rel)
+                strings = {k: lf for k, lf in keys.items()
+                           if isinstance(lf.dtype, T.StringType)}
+                if sampled:
+                    submit(topk_landed, "top-k", _collect_topk, rel, sampled)
+                if strings and cfg.exact:
+                    submit(str_q.update, "string quartiles",
+                           _collect_string_quartiles, rel, strings)
+                if not shared:
+                    return
+                if strings:
+                    submit(rows[ctx.id].update, "phase B", _phase_b_counted,
+                           rel, list(strings.values()), row, cfg)
+                fixed = _fixed_width(strings, row)
+                if fixed:
+                    submit(patterns.update, "char patterns",
+                           _collect_patterns, rel.where(_key_in(fixed)))
 
-            # phase A of every context launches at once, also on a
-            # freshly persisted input: concurrent jobs on a cache that
-            # is not yet materialized still build it once
+            # phase A of every context launches at once, also on the
+            # unfilled input copy: concurrent jobs on it still fill
+            # each block once
             for ctx in contexts:
-                builders = _phase_a_job_builders(
-                    ctx.leaves, ctx.length_leaves, cfg)
-                remaining[ctx.id] = len(builders)
-                rows[ctx.id] = {"__rows__": None}
-                for build in builders:
+                jobs = _phase_a_jobs(ctx.leaves, ctx.length_leaves, cfg)
+                remaining[ctx.id] = len(jobs)
+                rows[ctx.id] = {}
+                for exprs in jobs:
                     submit(lambda part, ctx=ctx: phase_a_landed(ctx, part),
-                           _agg_job, ctx.df, build)
+                           "phase A", _agg_row, ctx.df, exprs)
             while landed:
                 done, _ = _fwait(landed, return_when=FIRST_COMPLETED)
                 for fut in done:
@@ -1319,7 +1299,8 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
                 fixed[leaf.key] = leaf
         stream = {k: lf for k, lf in fixed.items() if k not in in_relation}
         if stream:
-            patterns.update(_collect_patterns(_unpivot(ctx.df, stream)))
+            with _job_phase(spark, "char patterns"):
+                patterns.update(_collect_patterns(_unpivot(ctx.df, stream)))
         for key, leaf in fixed.items():
             if key in patterns:
                 leaf_nodes[leaf.path] = replace(
@@ -1327,7 +1308,9 @@ def _analyze(df: DataFrame, cfg: AnalyzerConfig) -> Profile:
                     pattern=tuple(induce_pattern(patterns[key])))
 
     # tuple induction: fixed-width short arrays -> positional tuples
-    tuple_nodes = _induce_tuples(contexts, array_srcs, length_stats, cfg)
+    with _job_phase(spark, "tuples"):
+        tuple_nodes = _induce_tuples(contexts, array_srcs, length_stats,
+                                     cfg)
 
     # assemble the tree from the schema
     row0 = rows[0]

@@ -1,4 +1,4 @@
-"""Candidate string-representation conversions as Spark expressions.
+"""Candidate string-representation conversions as Spark SQL text.
 
 The reference tries conversions one-by-one per type candidate,
 re-walking the data each time (reference: structa/analyzer.py:722-740,
@@ -12,19 +12,37 @@ Each candidate carries:
 * ``name``      - stable agg-column suffix
 * ``pattern``   - the display pattern (structa-style: base char, bool
                   word pair, or strptime-ish datetime format)
-* ``ok(col)``   - Column<bool>: does this value parse?
-* ``cast(col)`` - Column: the logical-value expression (the compiled
-                  cast chain for plans/validation)
+* ``ok``        - SQL template of a BOOLEAN expression, does the value
+                  ``{v}`` parse? (see :meth:`Candidate.test`)
 * ``kind``      - 'bool' | 'int' | 'float' | 'datetime'
+
+The logical-value expression of a chosen pattern (the compiled cast
+chain) lives in :func:`structa_spark.plans.cast_expr`.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
-from typing import Callable, List
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def sql_str(s: str) -> str:
+    """SQL text of the string literal ``s``, read the same under either
+    value of ``spark.sql.parser.escapedStringLiterals``. That setting
+    changes what a backslash or a doubled quote inside quotes means
+    (and breaks ``R'...'`` raw literals), so both characters are
+    spelled ``chr(92)`` / ``chr(39)`` outside any quotes and joined to
+    the plain runs by a ``concat`` of literals, which the optimizer
+    folds back into one literal."""
+    pieces = [f"chr({ord(p)})" if p in ("\\", "'") else f"'{p}'"
+              for p in re.split(r"([\\'])", s) if p]
+    if len(pieces) == 1:
+        return pieces[0]
+    return f"concat({', '.join(pieces)})" if pieces else "''"
 
 
 @dataclass(frozen=True)
@@ -32,8 +50,7 @@ class Candidate:
     name: str
     pattern: str
     kind: str
-    ok: Callable[[Column], Column]
-    cast: Callable[[Column], Column]
+    ok: str
     fixed_len: bool = False
     # length range a value must have to possibly parse — lets the
     # analyzer skip whole candidates per column from min/max(length)
@@ -49,14 +66,10 @@ class Candidate:
             return False
         return True
 
-
-def _regex_candidate(name, pattern, kind, regex, cast,
-                     min_len=1, max_len=None):
-    return Candidate(
-        name=name, pattern=pattern, kind=kind,
-        ok=lambda c, r=regex: c.rlike(r),
-        cast=cast, min_len=min_len, max_len=max_len,
-    )
+    def test(self, value: str) -> str:
+        """SQL text: does the value of the SQL expression ``value``
+        parse?"""
+        return self.ok.replace("{v}", value)
 
 
 # -- bool word pairs (false|true ordered) — reference analyzer.py:54-62
@@ -80,33 +93,27 @@ def _bool_candidates() -> List[Candidate]:
             name="bool_" + (false_w or "blank") + "_" + true_w,
             pattern=pat,
             kind="bool",
-            ok=lambda c, ws=tuple(words): F.lower(c).isin(list(ws)),
-            cast=lambda c, t=true_w: (F.lower(c) == t),
+            ok="lower({v}) IN (%s)" % ", ".join(map(sql_str, words)),
             min_len=min((len(w) for w in words if w), default=1),
             max_len=max(len(w) for w in words),
         ))
     return out
 
 
-# -- int bases — reference analyzer.py:63, types.py:784-801
-_INT_CANDIDATES = [
-    _regex_candidate(
-        "int_o", "o", "int", r"^[-+]?0?[oO]?[0-7]+$",
-        lambda c: F.conv(F.regexp_replace(c, r"^[-+]?0?[oO]?", ""), 8, 10)
-        .try_cast("long"), max_len=24),
-    _regex_candidate(
-        "int_d", "d", "int", r"^[-+]?[0-9]+$",
-        lambda c: c.try_cast("long"), max_len=20),
-    _regex_candidate(
-        "int_x", "x", "int", r"^[-+]?(0[xX])?[0-9a-fA-F]+$",
-        lambda c: F.conv(F.regexp_replace(c, r"^[-+]?(0[xX])?", ""), 16, 10)
-        .try_cast("long"), max_len=19),
+# -- int bases and float: (name, display pattern, kind, regex,
+#    max_len) — reference analyzer.py:63, types.py:784-801
+_NUMBER_FORMATS = [
+    ("int_o", "o", "int", r"^[-+]?0?[oO]?[0-7]+$", 24),
+    ("int_d", "d", "int", r"^[-+]?[0-9]+$", 20),
+    ("int_x", "x", "int", r"^[-+]?(0[xX])?[0-9a-fA-F]+$", 19),
+    ("float_f", "f", "float",
+     r"^[-+]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][-+]?[0-9]+)?$", 30),
 ]
 
-_FLOAT_CANDIDATE = _regex_candidate(
-    "float_f", "f", "float",
-    r"^[-+]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][-+]?[0-9]+)?$",
-    lambda c: c.try_cast("double"), max_len=30)
+_NUMBER_CANDIDATES = [
+    Candidate(name=name, pattern=pattern, kind=kind,
+              ok="{v} RLIKE " + sql_str(regex), max_len=max_len)
+    for name, pattern, kind, regex, max_len in _NUMBER_FORMATS]
 
 
 # -- datetime formats: (display strptime-ish pattern, Spark/Java
@@ -168,45 +175,56 @@ _DT_FORMATS = [
 _RFC1123_JAVA = "dd MMM yyyy HH:mm:ss"
 
 
-def datetime_cast(disp: str, col: Column) -> Column:
-    """The Spark parse expression for one display pattern — the single
-    place (shared by the candidate ladder and plans.cast_expr) that
-    knows how each structa-style pattern maps onto Spark parsing,
-    including the RFC-1123 rewrite."""
+def _dt_parse(disp: str) -> Optional[Tuple[str, List[Tuple[str, str]],
+                                            str]]:
+    """How one display pattern maps onto Spark parsing: the gate regex,
+    the ``regexp_replace`` rewrites applied before parsing, and the
+    Java format; None for a pattern outside the ladder. The single
+    description read by both renderings below."""
     row = next((t for t in _DT_FORMATS if t[0] == disp), None)
     if row is None:
-        return F.try_to_timestamp(col)
+        return None
     _, java_fmt, rx, *_ = row
     if java_fmt is None:                      # RFC-1123 family
-        clean = F.regexp_replace(
-            F.regexp_replace(col, rf"^{_DOW}, ", ""),
-            r" (GMT|UTC)$", "")
-        parsed = F.try_to_timestamp(clean, F.lit(_RFC1123_JAVA))
-    elif disp.endswith("%z"):
+        return rx, [(rf"^{_DOW}, ", ""), (r" (GMT|UTC)$", "")], _RFC1123_JAVA
+    if disp.endswith("%z"):
         # strptime %z accepts +HHMM *and* +HH:MM; Java XXX only the
         # colon form — normalize the offset before parsing
-        clean = F.regexp_replace(col, r"([+-]\d{2})(\d{2})$", "$1:$2")
-        parsed = F.try_to_timestamp(clean, F.lit(java_fmt))
-    else:
-        parsed = F.try_to_timestamp(col, F.lit(java_fmt))
-    return F.when(col.rlike(rx), parsed)
+        return rx, [(r"([+-]\d{2})(\d{2})$", "$1:$2")], java_fmt
+    return rx, [], java_fmt
+
+
+def datetime_cast(disp: str, col: Column) -> Column:
+    """The Spark parse expression for one display pattern as a Column
+    (used by plans.cast_expr); :func:`_datetime_sql` is the same
+    expression as SQL text."""
+    spec = _dt_parse(disp)
+    if spec is None:
+        return F.try_to_timestamp(col)
+    rx, rewrites, java_fmt = spec
+    clean = col
+    for pat, rep in rewrites:
+        clean = F.regexp_replace(clean, pat, rep)
+    return F.when(col.rlike(rx), F.try_to_timestamp(clean, F.lit(java_fmt)))
+
+
+def _datetime_sql(disp: str, value: str) -> str:
+    """SQL text of :func:`datetime_cast` over the SQL expression
+    ``value``, for a pattern of the ladder."""
+    rx, rewrites, java_fmt = _dt_parse(disp)
+    clean = value
+    for pat, rep in rewrites:
+        clean = f"regexp_replace({clean}, {sql_str(pat)}, {sql_str(rep)})"
+    return (f"CASE WHEN {value} RLIKE {sql_str(rx)} "
+            f"THEN try_to_timestamp({clean}, {sql_str(java_fmt)}) END")
 
 
 def _dt_candidates() -> List[Candidate]:
-    out = []
-    for i, (disp, _java, _rx, fixed, lmin, lmax) in enumerate(_DT_FORMATS):
-        def ok(c, d=disp):
-            return datetime_cast(d, c).isNotNull()
-
-        def cast(c, d=disp):
-            return datetime_cast(d, c)
-
-        out.append(Candidate(
-            name=f"dt_{i}", pattern=disp, kind="datetime",
-            ok=ok, cast=cast, fixed_len=fixed,
-            min_len=lmin, max_len=lmax,
-        ))
-    return out
+    return [Candidate(name=f"dt_{i}", pattern=disp, kind="datetime",
+                      ok=f"({_datetime_sql(disp, '{v}')}) IS NOT NULL",
+                      fixed_len=fixed, min_len=lmin, max_len=lmax)
+            for i, (disp, _java, _rx, fixed, lmin, lmax)
+            in enumerate(_DT_FORMATS)]
 
 
 URL_REGEX = r"^https?://"
@@ -215,5 +233,4 @@ URL_REGEX = r"^https?://"
 def candidates() -> List[Candidate]:
     """All candidates in priority order: bool pairs, int bases, float,
     datetimes (the reference's ladder order, analyzer.py:622-640)."""
-    return (_bool_candidates() + _INT_CANDIDATES
-            + [_FLOAT_CANDIDATE] + _dt_candidates())
+    return _bool_candidates() + _NUMBER_CANDIDATES + _dt_candidates()

@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 import structa_spark.analyzer as A
 from structa_spark import analyze
 from structa_spark.model import (
-    BoolT, DateTimeT, FloatT, IntT, StrReprT, StrT, URLT, node_to_dict)
+    BoolT, DateTimeT, FloatT, IntT, StrReprT, StrT, TableT, URLT, node_to_dict)
 
 # more rows than the sampling gate's 10,000-occurrence floor, so the
 # unique `uid` and `serial` columns stay off the relation in sketch
@@ -217,6 +217,11 @@ def test_analyze_leaves_nothing_persisted(spark, mixed_table, monkeypatch):
     assert _persisted_rdds(spark) == before
 
 
+# the phases an analyzer job is described by
+_PHASES = ("input", "phase A", "phase B", "top-k", "char patterns",
+           "string quartiles", "tuples")
+
+
 def test_pool_jobs_carry_callers_job_group(spark, tmp_path):
     # several repetition contexts (array, map, nested array, a
     # fixed-width array for tuple induction), read from a file so the
@@ -227,7 +232,8 @@ def test_pool_jobs_carry_callers_job_group(spark, tmp_path):
     schema = ("id long, tags array<string>, attrs map<string,string>, "
               "rec struct<a: string, b: array<int>>, pair array<long>")
     path = str(tmp_path / "nested.parquet")
-    spark.createDataFrame(rows, schema).write.parquet(path)
+    # one file: the input is repartitioned, in a job of its own
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
     df = spark.read.parquet(path)
 
     sc = spark.sparkContext
@@ -237,6 +243,7 @@ def test_pool_jobs_carry_callers_job_group(spark, tmp_path):
     sc.setJobGroup(group, "profile")
     try:
         p = analyze(df)
+        after = sc.getLocalProperty("spark.job.description")
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
@@ -246,11 +253,42 @@ def test_pool_jobs_carry_callers_job_group(spark, tmp_path):
 
     jsc.listenerBus().waitUntilEmpty()
     jobs = jsc.statusStore().jobsList(None)
-    groups = {}
+    groups, phases = {}, {}
     for i in range(jobs.size()):
         j = jobs.apply(i)
         if lo <= int(j.jobId()) < hi:
-            g = j.jobGroup()
+            g, d = j.jobGroup(), j.description()
             groups[int(j.jobId())] = g.get() if g.isDefined() else None
+            phases[int(j.jobId())] = d.get() if d.isDefined() else None
     assert len(groups) == hi - lo > 8
     assert {g for g in groups.values()} == {group}, groups
+    # ... and each is described by the analyzer phase that ran it
+    assert set(phases.values()) <= {f"analyze: {p}" for p in _PHASES}, phases
+    assert {"analyze: input", "analyze: phase A", "analyze: phase B",
+            "analyze: top-k", "analyze: tuples"} <= set(phases.values())
+    # the caller's own description comes back after the profile
+    assert after == "profile"
+
+
+def test_map_typed_input_is_hash_partitioned(spark, tmp_path,
+                                             monkeypatch):
+    # xxhash64 refuses a map, so the input copy hashes the columns
+    # that hold none instead of falling back to a keyless repartition,
+    # which sorts every input partition first
+    path = str(tmp_path / "maps.parquet")
+    (spark.createDataFrame([(i, {"k": str(i % 3)}) for i in range(200)],
+                           "id long, m map<string,string>")
+     .coalesce(1).write.parquet(path))
+    df = spark.read.parquet(path)
+    keys = []
+    repartition = type(df).repartition
+
+    def spy(self, n, *cols):
+        keys.append([str(c) for c in cols])
+        return repartition(self, n, *cols)
+
+    monkeypatch.setattr(type(df), "repartition", spy)
+    fields = {f.key: f.value for f in analyze(df).root.fields}
+    assert keys == [["Column<'xxhash64(`id`)'>"]]
+    assert isinstance(fields["m"], TableT)
+    assert fields["id"].stats.card == 200

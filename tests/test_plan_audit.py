@@ -164,7 +164,7 @@ def test_profile_jobs_stay_whole_stage_codegen(spark):
     contexts, _arrs, _tabs = A._plan(df, cfg)
     ctx = contexts[0]
     jobs = A._phase_a_jobs(ctx.leaves, ctx.length_leaves, cfg)
-    scalar_job = df.agg(*jobs[0])
+    scalar_job = df.selectExpr(*jobs[0])
     scalar_job.collect()          # resolve AQE to the final plan
     plan = scalar_job._jdf.queryExecution().executedPlan().toString()
     # invariants: no imperative sketch leaked into the scalar job
@@ -208,18 +208,13 @@ def test_profile_topk_limits_before_the_exchange(spark):
 
 
 def test_phase_a_builders_match_eager_jobs(spark):
-    # round 11 defers the phase-A Column construction into the pool
-    # workers; round 12 pins the expectations INDEPENDENTLY of the
-    # refactored code (ADVICE r11): the job count comes from the
-    # chunk math, the expression strings from a per-leaf
-    # reconstruction of the two job families — never from a function
-    # that delegates to the same builders. Builders must also build
-    # identically from a worker thread (where they actually run) and
-    # be insensitive to leaf mutation after layout.
+    # the phase-A job layout is pinned INDEPENDENTLY of the code that
+    # lays it out (ADVICE r11): the job count comes from the chunk
+    # math, the expressions from a per-leaf reconstruction of the two
+    # job families — never from a function that delegates to the
+    # same layout
     import math
-    from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import functions as _F
     from pyspark.sql import types as _T
 
     import structa_spark.analyzer as A
@@ -232,13 +227,8 @@ def test_phase_a_builders_match_eager_jobs(spark):
     n_codegen_items = n_leaves + len(ctx.length_leaves)
     expected_count = (math.ceil(n_codegen_items / A._CHUNK_LEAVES)
                       + math.ceil(n_leaves / A._CHUNK_LEAVES))
-    builders = A._phase_a_job_builders(
-        ctx.leaves, ctx.length_leaves, cfg)
-    assert len(builders) == expected_count
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        built = [f.result()
-                 for f in [pool.submit(b) for b in builders]]
-    built_strs = [[str(c) for c in job] for job in built]
+    jobs = A._phase_a_jobs(ctx.leaves, ctx.length_leaves, cfg)
+    assert len(jobs) == expected_count
     # independent reconstruction: the codegen family (scalar +
     # length aggregates chunked together), then the sketch family
     # with the string min/max riding each string leaf's sketch job
@@ -250,33 +240,24 @@ def test_phase_a_builders_match_eager_jobs(spark):
         job = []
         for fn, lf in items[i:i + A._CHUNK_LEAVES]:
             job.extend(fn(lf, cfg))
-        expected.append([str(c) for c in job])
+        expected.append(job)
     for i in range(0, n_leaves, A._CHUNK_LEAVES):
         job = []
         for lf in ctx.leaves[i:i + A._CHUNK_LEAVES]:
             job.extend(A._sketch_agg_exprs(lf, cfg))
             if isinstance(lf.dtype, _T.StringType):
                 job.extend(A._string_minmax_exprs(lf, cfg))
-        expected.append([str(c) for c in job])
-    expected[0] = ([str(_F.count(_F.lit(1)).alias("__rows__"))]
-                   + expected[0])
-    assert built_strs == expected
-    flat = [s for job in built_strs for s in job]
+        expected.append(job)
+    expected[0] = ["count(1) AS `__rows__`"] + expected[0]
+    assert jobs == expected
+    flat = [s for job in jobs for s in job]
     assert len([s for s in flat if "__rows__" in s]) == 1
-    assert any("__rows__" in s for s in built_strs[0])
-    # eager form stays a faithful wrapper (aux single-context paths)
-    eager = A._phase_a_jobs(ctx.leaves, ctx.length_leaves, cfg)
-    assert [[str(c) for c in job] for job in eager] == expected
-    # leaf snapshot: mutating a planner leaf AFTER layout must not
-    # change what a deferred builder constructs (ADVICE r11)
-    builders2 = A._phase_a_job_builders(
-        ctx.leaves, ctx.length_leaves, cfg)
-    old_expr = ctx.leaves[0].expr
-    try:
-        ctx.leaves[0].expr = f"upper({old_expr})"
-        assert [str(c) for c in builders2[0]()] == built_strs[0]
-    finally:
-        ctx.leaves[0].expr = old_expr
+    # every job is one aggregation over the table, each expression a
+    # named output column
+    for job in jobs:
+        names = df.selectExpr(*job).columns
+        assert len(names) == len(job)
+        assert all(s.endswith(f"AS `{n}`") for s, n in zip(job, names))
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
